@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -12,14 +15,15 @@ import graft.functions.VectorOps
   * exact (hash group-by), MinHash+LSH banding, SimHash, n-gram
   * Jaccard, embedding-cosine near-dup.
   *
-  * Design for scale: the near-dup operators are built on
-  * explode → codegen'd hash aggregation, NOT nested higher-order
-  * functions. Spark HOFs are `CodegenFallback` (interpreted) and
-  * re-evaluate inner expressions per lambda element, which turns
-  * nested token pipelines into O(n²) row work — measured as a hang
-  * at sf0.001 before this design. The explode shape keeps every hot
-  * expression inside whole-stage codegen, does map-side partial
-  * aggregation, and shuffles only (doc_id)-keyed or
+  * Design for scale: the near-dup operators are built on per-row
+  * kernels and explode → codegen'd hash aggregation, NOT nested
+  * higher-order functions. Spark HOFs are `CodegenFallback`
+  * (interpreted) and re-evaluate inner expressions per lambda
+  * element, which turns nested token pipelines into O(n²) row work —
+  * measured as a hang at sf0.001 before this design. Text shingles,
+  * MinHash signatures and band keys come from ONE per-row kernel
+  * ([[MinHash]]) with no shuffle; the pair operators do map-side
+  * partial aggregation and shuffle only (doc_id)-keyed or
   * (band-bucket)-keyed rows — never a cross product.
   */
 object Dedup {
@@ -122,78 +126,111 @@ object Dedup {
         (col("status") === Novel).as("keep"))
   }
 
-  /** Incremental NEAR-dup admission — the fuzzy twin of
-    * [[incremental]]: classify each batch doc against the curated
-    * corpus through its MinHash BAND-KEY index. The band keys
-    * (`numBands` ints per corpus doc — what a real deployment
-    * persists; recomputed here from `index` for self-containment)
-    * generate candidates via a (band, band-hash) equi-join, and only
-    * CANDIDATE corpus docs are re-shingled for the exact-Jaccard
-    * verify — per ingest the cost is O(batch + candidates), never
-    * O(corpus). Flagged docs are structurally SOUND (every
-    * `near_dup` verdict carries an exact-verified Jaccard ≥
-    * `minJaccard` witness in `match_id`); recall is the LSH catch
-    * probability 1-(1-J^rows)^bands, so recall-oriented admission
-    * wants many short bands (16×2 catches J=0.5 pairs w.p. 0.99).
+  /** Verdict row of text near-dup admission ([[incrementalNearDup]]). */
+  final case class NearDupVerdict(doc_id: Long, status: String,
+                                  match_id: Option[Long], keep: Boolean)
+
+  /** Internal vote row (public: encoder codegen needs member access). */
+  final case class CandVote(doc_id: Long, index_id: Option[Long],
+                            verified: Boolean)
+
+  /** The verdict fold every near-dup admission shares (text here, and
+    * the image/audio/video/semantic/embedding streaming twins): a key's
+    * candidate votes become ONE verdict — the minimum verified witness
+    * id as `match_id` with status `near_dup`, else `novel`. `witness`
+    * gives a vote's witness id when the vote is verified.
     *
-    * Hot-bucket guard on the index side as in [[minhashCandidates]]:
-    * deterministic lowest-id cap bounds a degenerate bucket's join
-    * fan-out at bands·cap·|batch-side of that bucket|. */
+    * It runs as a `flatMapGroupsWithState` that never touches its
+    * state (a key's votes all derive from its own input row), so the
+    * same fold is legal on a stream and on a batch, and a streaming
+    * query keeps zero state rows. */
+  def foldVerdicts[V, O <: Product : TypeTag](votes: Dataset[V])(
+      key: V => Long, witness: V => Option[Long])(
+      verdict: (Long, String, Option[Long], Boolean) => O): Dataset[O] =
+    votes.groupByKey(key)(Encoders.scalaLong)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        (id: Long, rows: Iterator[V], _: GroupState[Boolean]) => {
+          val best = rows.flatMap(witness).minOption
+          Iterator.single(verdict(id, if (best.isDefined) NearDup else Novel,
+            best, best.isEmpty))
+        })(Encoders.scalaBoolean, Encoders.product[O])
+
+  /** Incremental NEAR-dup admission — the fuzzy twin of
+    * [[incremental]]: classify each doc of `batch` (doc_id, text)
+    * against the curated corpus `index` (same columns) through its
+    * MinHash band-key index. ONE plan serves a batch and a stream:
+    * `batch` may be a streaming DataFrame
+    * (`streaming.StreamingNearDupAdmission` is exactly that); `index`
+    * is static.
+    *
+    *  1. one per-row [[MinHash]] kernel pass per side gives each doc's
+    *     distinct shingles and band keys — no shuffle;
+    *  2. the band index of the corpus, hot buckets capped to the
+    *     `maxBucketSize` lowest ids (deterministic; the number of
+    *     capped-out rows is the `lsh_bucket_truncated_N` observe
+    *     metric, as in [[minhashCandidates]]) — the cap window is the
+    *     only shuffle of the corpus side;
+    *  3. the batch's band keys LEFT-join the band index (candidates
+    *     only, never O(corpus); zero-candidate docs stay alive) and
+    *     the candidates' shingle sets, and the exact Jaccard is
+    *     computed per row (`array_intersect`) before the arrays are
+    *     dropped;
+    *  4. [[foldVerdicts]] folds each doc's votes to one verdict.
+    *
+    * Flagged docs are structurally SOUND (every `near_dup` verdict
+    * carries an exact-verified Jaccard ≥ `minJaccard` witness in
+    * `match_id`); recall is the LSH catch probability
+    * 1-(1-J^rows)^bands, so recall-oriented admission wants many short
+    * bands (16×2 catches J=0.5 pairs w.p. 0.99). A doc with no
+    * shingles (fewer than 3 tokens, or null text) is `novel`. Pairs
+    * within `batch` are not compared. Output: (doc_id, status,
+    * match_id, keep). */
   def incrementalNearDup(batch: DataFrame, index: DataFrame,
                          minJaccard: Double = 0.5,
                          numBands: Int = 16, rowsPerBand: Int = 2,
                          maxBucketSize: Int = 1000): DataFrame = {
-    val bBands = minhash(batch, numBands, rowsPerBand)
-      .select(col("doc_id").as("batch_id"), posexplode(col("bands")).as(Seq("band", "bh")))
-    val iBands = minhash(index, numBands, rowsPerBand)
-      .select(col("doc_id").as("index_id"), posexplode(col("bands")).as(Seq("band", "bh")))
+    val spark = batch.sparkSession
+    import spark.implicits._
+    def sketched(docs: DataFrame): DataFrame =
+      docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+        .map { case (id, text) =>
+          val sh = MinHash.shingles(text)
+          (id, sh, MinHash.bandKeys(MinHash.signature(sh, numBands * rowsPerBand),
+            numBands, rowsPerBand))
+        }
+        .toDF("doc_id", "shingles", "bands")
+    val indexed = sketched(index).withColumnRenamed("doc_id", "index_id")
+    val bandIndex = indexed
+      .select(col("index_id"), posexplode(col("bands")).as(Seq("band", "bh")))
       .withColumn("r", row_number().over(
         Window.partitionBy(col("band"), col("bh")).orderBy(col("index_id"))))
-      // same no-silent-caps contract as [[minhashCandidates]]: the
-      // number of capped-out index rows is an observe metric, so a
-      // caller can detect that admission ran against a truncated
-      // bucket instead of discovering missed dups downstream
       .observe(s"lsh_bucket_truncated_${lshObserveSeq.incrementAndGet()}",
         sum(when(col("r") > maxBucketSize, 1L).otherwise(0L)).as("n_dropped"))
       .filter(col("r") <= maxBucketSize).drop("r")
-    val candidates = bBands.join(iBands, Seq("band", "bh"))
-      .select(col("batch_id"), col("index_id")).distinct()
-    // exact verify on candidates only: re-shingle just the corpus
-    // docs some batch doc collided with
-    val candIndexDocs = index.join(
-      candidates.select(col("index_id").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-    val bsh = shingleRows(batch).select(col("doc_id").as("batch_id"), col("s"))
-    val ish = shingleRows(candIndexDocs).select(col("doc_id").as("index_id"), col("s"))
-    val bsz = bsh.groupBy("batch_id").agg(count(lit(1)).as("nb"))
-    val isz = ish.groupBy("index_id").agg(count(lit(1)).as("ni"))
-    val verified = bsh.join(ish, "s")
-      .join(candidates, Seq("batch_id", "index_id"), "left_semi")
-      .groupBy("batch_id", "index_id").agg(count(lit(1)).as("inter"))
-      .join(bsz, "batch_id").join(isz, "index_id")
-      .filter(col("inter").cast("double")
-        / (col("nb") + col("ni") - col("inter")) >= minJaccard)
-    val matches = verified.groupBy("batch_id").agg(min("index_id").as("match_id"))
-    batch.select(col("doc_id"))
-      .join(matches.withColumnRenamed("batch_id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("match_id").isNotNull, lit("near_dup")).otherwise(lit("novel")).as("status"),
-        col("match_id"), col("match_id").isNull.as("keep"))
+    val indexShingles = indexed.select(col("index_id"),
+      col("shingles").as("ishingles"), size(col("shingles")).as("ni"))
+    val votes = sketched(batch)
+      .select(col("doc_id"), col("shingles"), size(col("shingles")).as("nb"),
+        posexplode_outer(col("bands")).as(Seq("band", "bh")))
+      .join(bandIndex, Seq("band", "bh"), "left")
+      .join(indexShingles, Seq("index_id"), "left")
+      .withColumn("inter", size(array_intersect(col("shingles"), col("ishingles"))))
+      .select(col("doc_id"), col("index_id"),
+        (col("index_id").isNotNull &&
+          col("inter").cast("double") / (col("nb") + col("ni") - col("inter"))
+            >= minJaccard).as("verified"))
+      .as[CandVote]
+    foldVerdicts(votes)(_.doc_id, v => v.index_id.filter(_ => v.verified))(
+      NearDupVerdict.apply _).toDF()
   }
 
-  /** Distinct word-3-shingles, one row per (doc_id, shingle).
-    * posexplode + lead window: one shuffle by doc_id, all shingle
-    * construction codegen'd. */
-  def shingleRows(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    docs.select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w0")))
-      .withColumn("w1", lead(col("w0"), 1).over(w))
-      .withColumn("w2", lead(col("w0"), 2).over(w))
-      .filter(col("w2").isNotNull)
-      .select(col("doc_id"), concat_ws(" ", col("w0"), col("w1"), col("w2")).as("s"))
-      .distinct()
-  }
+  /** Distinct word-3-shingles, one row per (doc_id, shingle) with
+    * doc_id a key: the [[MinHash.shingles]] kernel per row, exploded —
+    * no shuffle. */
+  def shingleRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(shinglesUdf(col("text"))).as("s"))
 
-  private val MinhashPrime = 2147483647L // 2^31 - 1
+  private val shinglesUdf = udf(MinHash.shingles _)
 
   /** nlist at or above which [[semanticDedup]] switches from the
     * flat centroid fit+assign to the two-level hierarchy. The flat
@@ -208,25 +245,21 @@ object Dedup {
     * vectors rides the linear-at-100-TB path. */
   private val HierNlist = 256
 
-  /** MinHash signatures via grouped min-aggregates: permutation k is
-    * h_k(s) = (base·(2k+1) + k·c) mod p over base = murmur3(s)&maxint.
-    * One groupBy(doc_id) with numHashes min() columns — map-side
-    * combine, fully codegen'd. */
+  /** MinHash signatures and LSH band keys, one row per doc with at
+    * least one shingle: (doc_id, sig, bands) from the [[MinHash]]
+    * kernel per row — `numBands·rowsPerBand` permutations, band b the
+    * hash of the b-th `rowsPerBand`-slice of `sig`. No shuffle. */
   def minhash(docs: DataFrame, numBands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
-    val numHashes = numBands * rowsPerBand
-    val sh = shingleRows(docs)
-      .withColumn("h", hash(col("s")).cast("long").bitwiseAND(lit(0x7fffffffL)))
-    val sigCol = array((0 until numHashes).map(k =>
-      min(pmod(col("h") * (2 * k + 1) + lit(k * 40503L), lit(MinhashPrime)))): _*)
-    sh.groupBy(col("doc_id")).agg(sigCol.as("sig"))
-      .withColumn("bands", lshBands(col("sig"), numBands, rowsPerBand))
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+      .flatMap { case (id, text) =>
+        val sig = MinHash.signature(MinHash.shingles(text), numBands * rowsPerBand)
+        if (sig.isEmpty) None
+        else Some((id, sig, MinHash.bandKeys(sig, numBands, rowsPerBand)))
+      }
+      .toDF("doc_id", "sig", "bands")
   }
-
-  /** LSH band keys: hash of each `rowsPerBand`-slice of the signature
-    * (cheap HOF over an already-materialized attribute). */
-  def lshBands(sig: Column, numBands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(numBands - 1)),
-      b => hash(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))))
 
   private val lshObserveSeq = new java.util.concurrent.atomic.AtomicLong()
 

@@ -43,8 +43,7 @@ object ModelSelection {
     * [[TextOps.repetitionStats]].
     *
     * Scale shape (100 TB): document bigrams are built with ONE
-    * doc_id exchange (posexplode + lead window — the
-    * [[Dedup.shingleRows]] mechanics; a `transform(sequence(...))`
+    * doc_id exchange (posexplode + lead window; a `transform(sequence(...))`
     * HOF over split would be a CodegenFallback that re-splits per
     * element, O(tokens²) per doc). The LM tables shuffle only
     * vocabulary-sized partial counts (map-side combine on (w0,w1)

@@ -116,8 +116,8 @@ object TextOps {
     * of either mark templated or looping text a pretraining run
     * filters out.
     *
-    * Mechanics: posexplode + lead window builds the bigrams (the
-    * [[Dedup.shingleRows]] shape — a `transform(sequence(...))` over
+    * Mechanics: posexplode + lead window builds the bigrams (a
+    * `transform(sequence(...))` over
     * `split` would be a CodegenFallback that re-splits the text per
     * element, O(tokens²) per doc; measured 4× slower at sf0.1), then
     * (doc, gram) counts with map-side partial agg → per-doc window

@@ -1112,11 +1112,12 @@ object PipelineQueries {
       val reuseOk = reused2 && dir1 == dir2
       val batch = graft.MediaFixtures.memo(s, "img_recrawl", d)(
         ImageDedup.plantedRecrawlBatch(docs)).cache()
-      // eager cache fill: the admission future and the truth branch
-      // read the batch concurrently — a cold cache would make both
-      // recompute the recrawl fixture (ADVICE r16)
-      batch.count()
       try {
+        // eager cache fill, inside the try so the finally unpersists
+        // on a throw too: the admission future and the truth branch
+        // read the batch concurrently — a cold cache would make both
+        // recompute the recrawl fixture
+        batch.count()
         // the admission (stored-index reads + candidate verify) and
         // the exact bipartite truth branch are INDEPENDENT pipelines
         // joined only at the final contract aggregation — run the
@@ -1208,11 +1209,12 @@ object PipelineQueries {
       val reuseOk = reused2 && dir1 == dir2
       val batch = graft.MediaFixtures.memo(s, "vid_recrawl", d)(
         VideoDedup.plantedRecrawlBatch(docs)).cache()
-      // eager cache fill: the admission future and the truth branch
-      // read the batch concurrently — a cold cache would make both
-      // recompute the recrawl fixture (ADVICE r16)
-      batch.count()
       try {
+        // eager cache fill, inside the try so the finally unpersists
+        // on a throw too: the admission future and the truth branch
+        // read the batch concurrently — a cold cache would make both
+        // recompute the recrawl fixture
+        batch.count()
         // admission concurrent with the truth branch (the
         // q_dedup_incr_image overlap rule)
         import scala.concurrent.{Await, Future}
@@ -1286,11 +1288,12 @@ object PipelineQueries {
       val reuseOk = reused2 && dir1 == dir2
       val batch = graft.MediaFixtures.memo(s, "aud_recrawl", d)(
         AudioDedup.plantedRecrawlBatch(docs)).cache()
-      // eager cache fill: the admission future and the truth branch
-      // read the batch concurrently — a cold cache would make both
-      // recompute the recrawl fixture (ADVICE r16)
-      batch.count()
       try {
+        // eager cache fill, inside the try so the finally unpersists
+        // on a throw too: the admission future and the truth branch
+        // read the batch concurrently — a cold cache would make both
+        // recompute the recrawl fixture
+        batch.count()
         // admission concurrent with the truth branch (the
         // q_dedup_incr_image overlap rule)
         import scala.concurrent.{Await, Future}

@@ -2,10 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.VectorOps
-import graft.operators.Similarity
+import graft.operators.{Dedup, Similarity}
 
 /** Streaming twin of [[graft.operators.Dedup.incrementalEmbeddingAdmission]]
   * — live-ingest admission in VECTOR space: a stream of new embeddings
@@ -25,11 +24,11 @@ import graft.operators.Similarity
   *     codegen'd dot/norm expressions as the batch side), after which
   *     the carried arrays are DROPPED — only (vec_id, index_id,
   *     verified) enters the stateful fold;
-  *  4. `flatMapGroupsWithState` keyed by vec_id folds a vector's
-  *     candidate rows to one verdict: min verified index id, else
-  *     novel. State is never read across batches (each vector arrives
-  *     once), so the state store stays EMPTY — admission state lives
-  *     in the persisted bucket index, exactly like the text twin.
+  *  4. the shared [[graft.operators.Dedup.foldVerdicts]] folds a
+  *     vector's candidate rows to one verdict: min verified index id,
+  *     else novel. State is never read across batches (each vector
+  *     arrives once), so the state store stays EMPTY — admission state
+  *     lives in the persisted bucket index, as in text admission.
   *
   * Verdict parity with the batch operator is EXACT: [[bucketsOf]]
   * replays `Similarity.lshBucket`'s sign computation per row — same
@@ -39,7 +38,7 @@ import graft.operators.Similarity
   * columnar cosine (`StreamingEmbeddingAdmissionSpec` asserts
   * identical verdicts per micro-batch arrival pattern).
   *
-  * Same deployment caveat as the text twin: admitted vectors fold
+  * Same deployment caveat as text admission: admitted vectors fold
   * into the stored index periodically; within-stream pairs are not
   * compared — the batch operator's contract. */
 object StreamingEmbeddingAdmission {
@@ -91,18 +90,6 @@ object StreamingEmbeddingAdmission {
         VectorOps.asDoubleArray(col("embedding")).as("iv"))
       .withColumn("in_norm", VectorOps.l2Norm(col("iv")))
 
-  /** No-op-state group fold: a vector's candidate rows → one verdict. */
-  private def foldVerdict(vecId: Long, rows: Iterator[EmbedVote],
-                          state: GroupState[Boolean]): Iterator[EmbedVerdict] = {
-    var best: Option[Long] = None
-    rows.foreach { r =>
-      if (r.verified && r.index_id.isDefined &&
-          best.forall(_ > r.index_id.get)) best = r.index_id
-    }
-    val status = if (best.isDefined) "near_dup" else "novel"
-    Iterator.single(EmbedVerdict(vecId, status, best, best.isEmpty))
-  }
-
   /** Streaming (or batch) embedding admission verdicts. `vecs`
     * carries (vec_id, embedding: array<float>); `index` is the static
     * curated corpus with the same columns. Output matches
@@ -148,8 +135,7 @@ object StreamingEmbeddingAdmission {
             > threshold).as("verified"))
       .as[EmbedVote](Encoders.product[EmbedVote])
     // 4. per-vector fold to a single verdict
-    votes.groupByKey(_.vec_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        foldVerdict)(Encoders.scalaBoolean, Encoders.product[EmbedVerdict])
+    Dedup.foldVerdicts(votes)(_.vec_id, v => v.index_id.filter(_ => v.verified))(
+      EmbedVerdict.apply _)
   }
 }

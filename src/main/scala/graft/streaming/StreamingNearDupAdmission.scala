@@ -1,193 +1,32 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 
 import graft.operators.Dedup
+import graft.operators.Dedup.NearDupVerdict
 
-/** Streaming twin of [[Dedup.incrementalNearDup]] — FUZZY live-ingest
-  * admission: a stream of new documents is classified against the
-  * static curated corpus through its MinHash band-key index, with the
-  * exact-Jaccard verify run only on LSH candidates.
+/** FUZZY live-ingest admission: a stream of new documents classified
+  * against the static curated corpus through its MinHash band-key
+  * index, with the exact-Jaccard verify run only on LSH candidates.
   *
-  * Streaming-legal shape (append mode, no stream aggregation):
-  *  1. a STATELESS per-row step shingles each doc and computes its
-  *     MinHash band keys ([[signatureOf]] — bit-identical to the
-  *     batch `Dedup.minhash`, see below);
-  *  2. band keys stream-static LEFT-join the stored band index
-  *     ([[bandIndex]], hot-bucket-capped like the batch side) —
-  *     candidates only, never O(corpus); the left join keeps
-  *     zero-candidate docs alive;
-  *  3. candidates stream-static join the per-candidate shingle sets
-  *     ([[indexShingles]]) and the exact Jaccard is computed
-  *     columnar per row (`array_intersect`), after which the carried
-  *     arrays are DROPPED — only (doc_id, index_id, verified) enters
-  *     the stateful fold;
-  *  4. `flatMapGroupsWithState` keyed by doc_id folds a doc's
-  *     candidate rows to one verdict: min verified index_id, else
-  *     novel (no cross-batch state is needed — a doc's rows all
-  *     derive from its own input row — the operator is simply the
-  *     sanctioned streaming group-fold).
+  * This is [[Dedup.incrementalNearDup]]'s plan over a streaming
+  * `docs` — one plan for batch and stream, not a twin. The plan is
+  * streaming-legal as it stands: per-row kernel steps, stream-static
+  * left joins, and the state-free [[Dedup.foldVerdicts]] group fold
+  * in append mode, so state rows stay zero.
   *
-  * Verdict parity with the batch operator is EXACT, not approximate:
-  * [[signatureOf]] reproduces Spark's `hash()` (Murmur3 seed 42, the
-  * public `Murmur3_x86_32` in spark-unsafe) over shingle strings and
-  * band slices, so the candidate sets match, and the verify is the
-  * same exact Jaccard over distinct word-3-shingles
-  * (`StreamingNearDupSpec` asserts identical verdicts per micro-batch
-  * arrival pattern).
-  *
-  * Same deployment caveat as [[StreamingAdmission]]: admitted docs
-  * are folded into the stored index periodically (restart against the
-  * enlarged index); within-stream pairs are not compared — exactly
-  * the batch operator's contract.
+  * Deployment caveat as in [[StreamingAdmission]]: admitted docs are
+  * folded into the stored index periodically (restart against the
+  * enlarged index); within-stream pairs are not compared.
   */
 object StreamingNearDupAdmission {
 
-  final case class NearDupVerdict(doc_id: Long, status: String,
-                                  match_id: Option[Long], keep: Boolean)
-
-  /** Internal fold row (public: encoder codegen needs member access). */
-  final case class CandVote(doc_id: Long, index_id: Option[Long],
-                            verified: Boolean)
-
-  /** Murmur3 seed Spark's `hash()` uses. */
-  private val HashSeed = 42
-
-  private def murmurString(s: String): Int = {
-    val u = UTF8String.fromString(s)
-    Murmur3_x86_32.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset,
-      u.numBytes, HashSeed)
-  }
-
-  /** Spark's `hash()` over an array<long> column: fold the elements
-    * through hashLong, seeding with 42 — replicated so a band key
-    * computed per-row here equals `Dedup.lshBands`' columnar value. */
-  private def murmurLongs(xs: Array[Long]): Int =
-    xs.foldLeft(HashSeed)((h, v) => Murmur3_x86_32.hashLong(v, h))
-
-  private val MinhashPrime = 2147483647L // 2^31 - 1, as in Dedup
-
-  /** Distinct word-3-shingles of one document — the per-row image of
-    * `Dedup.shingleRows` (split on single spaces keeping empties,
-    * 3-gram windows, space-joined, distinct; order-insensitive
-    * downstream). */
-  def shinglesOf(text: String): Array[String] = {
-    val toks = text.split(" ", -1)
-    if (toks.length < 3) Array.empty
-    else {
-      val seen = new scala.collection.mutable.LinkedHashSet[String]
-      var i = 0
-      while (i + 2 < toks.length) {
-        seen += (toks(i) + " " + toks(i + 1) + " " + toks(i + 2))
-        i += 1
-      }
-      seen.toArray
-    }
-  }
-
-  /** MinHash signature + band keys of one document, bit-identical to
-    * batch `Dedup.minhash(numBands, rowsPerBand)`: permutation k is
-    * min over shingles of (base·(2k+1) + k·40503) mod p with base =
-    * murmur3(shingle) & 0x7fffffff; band b is Spark-hash of the b-th
-    * rowsPerBand slice. Empty-shingle docs get no bands (batch drops
-    * them from the groupBy — both sides classify them novel). */
-  def signatureOf(text: String, numBands: Int, rowsPerBand: Int): Array[Int] = {
-    val sh = shinglesOf(text)
-    if (sh.isEmpty) return Array.empty
-    val numHashes = numBands * rowsPerBand
-    val bases = sh.map(s => murmurString(s).toLong & 0x7fffffffL)
-    val sig = Array.tabulate(numHashes) { k =>
-      var m = Long.MaxValue
-      var i = 0
-      while (i < bases.length) {
-        val v = (bases(i) * (2 * k + 1) + k * 40503L) % MinhashPrime
-        val p = if (v < 0) v + MinhashPrime else v // pmod parity
-        if (p < m) m = p
-        i += 1
-      }
-      m
-    }
-    Array.tabulate(numBands)(b =>
-      murmurLongs(java.util.Arrays.copyOfRange(sig, b * rowsPerBand,
-        (b + 1) * rowsPerBand)))
-  }
-
-  /** Static band-key index of the curated corpus: (band, bh,
-    * index_id), hot buckets capped to the `maxBucketSize` lowest ids
-    * — the deterministic cap the batch side applies. A real
-    * deployment PERSISTS this (it is exactly what
-    * `Dedup.incrementalNearDup` recomputes per run). */
-  def bandIndex(index: DataFrame, numBands: Int, rowsPerBand: Int,
-                maxBucketSize: Int): DataFrame =
-    Dedup.minhash(index, numBands, rowsPerBand)
-      .select(col("doc_id").as("index_id"),
-        posexplode(col("bands")).as(Seq("band", "bh")))
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("band"), col("bh")).orderBy(col("index_id"))))
-      .filter(col("r") <= maxBucketSize).drop("r")
-
-  /** Static per-corpus-doc distinct shingle sets (index_id, ishingles,
-    * ni) for the candidate verify. */
-  def indexShingles(index: DataFrame): DataFrame =
-    Dedup.shingleRows(index)
-      .groupBy(col("doc_id").as("index_id"))
-      .agg(collect_set(col("s")).as("ishingles"))
-      .withColumn("ni", size(col("ishingles")))
-
-  /** No-op-state group fold: a doc's candidate rows → one verdict.
-    * State is never read across batches (each doc arrives once); the
-    * operator is used as the sanctioned streaming per-key fold. */
-  private def foldVerdict(docId: Long, rows: Iterator[CandVote],
-                          state: GroupState[Boolean]): Iterator[NearDupVerdict] = {
-    var best: Option[Long] = None
-    rows.foreach { r =>
-      if (r.verified && r.index_id.isDefined &&
-          best.forall(_ > r.index_id.get)) best = r.index_id
-    }
-    val status = if (best.isDefined) "near_dup" else "novel"
-    Iterator.single(NearDupVerdict(docId, status, best, best.isEmpty))
-  }
-
-  /** Streaming (or batch) fuzzy admission verdicts. `docs` carries
-    * (doc_id, text); `index` is the static curated corpus with the
-    * same columns. Output matches `Dedup.incrementalNearDup`'s
-    * verdict columns (status / match_id / keep). */
+  /** Fuzzy admission verdicts of `docs` (doc_id, text), streaming or
+    * batch, against the static corpus `index` (same columns). */
   def admission(docs: DataFrame, index: DataFrame,
                 minJaccard: Double = 0.5,
                 numBands: Int = 16, rowsPerBand: Int = 2,
-                maxBucketSize: Int = 1000): Dataset[NearDupVerdict] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bIdx = bandIndex(index, numBands, rowsPerBand, maxBucketSize)
-    val iSh = indexShingles(index)
-    // 1. stateless per-row shingle + band computation
-    val banded = docs.select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        (id, shinglesOf(text), signatureOf(text, numBands, rowsPerBand))
-      })
-      .toDF("doc_id", "shingles", "bands")
-      .select(col("doc_id"), col("shingles"), size(col("shingles")).as("nb"),
-        posexplode_outer(col("bands")).as(Seq("band", "bh")))
-    // 2. + 3. candidates by band equi-join, exact verify columnar,
-    // arrays dropped before the fold
-    val votes = banded
-      .join(bIdx, Seq("band", "bh"), "left")
-      .join(iSh, Seq("index_id"), "left")
-      .withColumn("inter", size(array_intersect(col("shingles"), col("ishingles"))))
-      .select(col("doc_id"), col("index_id"),
-        (col("index_id").isNotNull &&
-          col("inter").cast("double") / (col("nb") + col("ni") - col("inter"))
-            >= minJaccard).as("verified"))
-      .as[CandVote](Encoders.product[CandVote])
-    // 4. per-doc fold to a single verdict
-    votes.groupByKey(_.doc_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        foldVerdict)(Encoders.scalaBoolean, Encoders.product[NearDupVerdict])
-  }
+                maxBucketSize: Int = 1000): Dataset[NearDupVerdict] =
+    Dedup.incrementalNearDup(docs, index, minJaccard, numBands, rowsPerBand,
+      maxBucketSize).as(Encoders.product[NearDupVerdict])
 }

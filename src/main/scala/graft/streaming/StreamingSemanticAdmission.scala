@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.{DotProductInt8, VectorOps}
 import graft.operators.{Dedup, Similarity}
@@ -49,18 +48,6 @@ object StreamingSemanticAdmission {
   /** Internal fold row (public: encoder codegen needs member access). */
   final case class SemVote(vec_id: Long, index_id: Option[Long],
                            verified: Boolean)
-
-  /** No-op-state group fold: a vector's candidate rows → one verdict. */
-  private def foldVerdict(vecId: Long, rows: Iterator[SemVote],
-                          state: GroupState[Boolean]): Iterator[SemVerdict] = {
-    var best: Option[Long] = None
-    rows.foreach { r =>
-      if (r.verified && r.index_id.isDefined &&
-          best.forall(_ > r.index_id.get)) best = r.index_id
-    }
-    val status = if (best.isDefined) Dedup.NearDup else Dedup.Novel
-    Iterator.single(SemVerdict(vecId, status, best, best.isEmpty))
-  }
 
   /** Streaming (or batch) semantic admission verdicts. `vecs` carries
     * (vec_id, embedding: array<float|double>); `dir` is a
@@ -122,8 +109,7 @@ object StreamingSemanticAdmission {
             > threshold).as("verified"))
       .as[SemVote](Encoders.product[SemVote])
     // 5. per-vector fold to a single verdict
-    votes.groupByKey(_.vec_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        foldVerdict)(Encoders.scalaBoolean, Encoders.product[SemVerdict])
+    Dedup.foldVerdicts(votes)(_.vec_id, v => v.index_id.filter(_ => v.verified))(
+      SemVerdict.apply _)
   }
 }

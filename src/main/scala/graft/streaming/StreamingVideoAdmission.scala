@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.{Dedup, ImageDedup, VideoDedup}
 
@@ -35,19 +34,6 @@ object StreamingVideoAdmission {
   /** Internal vote row (public: encoder codegen needs member access). */
   final case class ClipVote(doc_id: Long, rep: Option[Long],
                             verified: Boolean)
-
-  /** No-op-state group fold: a clip's candidate rows → one verdict
-    * (min verified rep as the witness — the batch operator's rule). */
-  private def foldVerdict(docId: Long, rows: Iterator[ClipVote],
-                          state: GroupState[Boolean]): Iterator[ClipVerdict] = {
-    var best: Option[Long] = None
-    rows.foreach { r =>
-      if (r.verified && r.rep.isDefined && best.forall(_ > r.rep.get))
-        best = r.rep
-    }
-    val status = if (best.isDefined) Dedup.NearDup else Dedup.Novel
-    Iterator.single(ClipVerdict(docId, status, best, best.isEmpty))
-  }
 
   /** Streaming (or batch) video admission verdicts. `media` carries
     * (doc_id, media: binary); `dir` is a
@@ -110,8 +96,7 @@ object StreamingVideoAdmission {
         ClipVote(id, rep, verified)
       })
     // 5. per-clip fold to a single verdict
-    votes.groupByKey(_.doc_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        foldVerdict)(Encoders.scalaBoolean, Encoders.product[ClipVerdict])
+    Dedup.foldVerdicts(votes)(_.doc_id, v => v.rep.filter(_ => v.verified))(
+      ClipVerdict.apply _)
   }
 }

@@ -10,6 +10,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Plans {
 
+  /** Exchange operators in a physical-plan string; a ReusedExchange
+    * re-reads an exchange already counted. */
+  def exchangeCount(plan: String): Int =
+    plan.linesIterator.count(l => l.contains("Exchange") && !l.contains("ReusedExchange"))
+
   // query -> why this physical plan is the one we want at 100 TB
   private val rationale: Seq[(String, String)] = Seq(
     "q_scan_filter" ->

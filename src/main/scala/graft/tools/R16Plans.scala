@@ -31,7 +31,7 @@ object R16Plans {
         org.apache.spark.sql.execution.FormattedMode)
       val w = new PrintWriter(s"plans/r16/${name}_$tag.txt", "UTF-8")
       try w.println(plan) finally w.close()
-      val exchanges = plan.linesIterator.count(_.contains("Exchange"))
+      val exchanges = Plans.exchangeCount(plan)
       println(s"[r16plans] $name ($tag): $exchanges Exchange lines")
     }
 

@@ -36,7 +36,7 @@ object R17Plans {
         org.apache.spark.sql.execution.FormattedMode)
       val w = new PrintWriter(s"plans/r17/${name}_$tag.txt", "UTF-8")
       try w.println(plan) finally w.close()
-      val exchanges = plan.linesIterator.count(_.contains("Exchange"))
+      val exchanges = Plans.exchangeCount(plan)
       println(s"[r17plans] $name ($tag): $exchanges Exchange lines")
     }
 

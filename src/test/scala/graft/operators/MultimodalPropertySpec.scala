@@ -77,11 +77,13 @@ class MultimodalPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("streaming signatureOf is total on arbitrary strings") {
-    forAll(Gen.asciiPrintableStr) { s =>
-      val sig = graft.streaming.StreamingNearDupAdmission
-        .signatureOf(s, numBands = 16, rowsPerBand = 2)
-      assert(sig.length == 16 || sig.isEmpty)
+  test("MinHash kernel is total on arbitrary strings") {
+    forAll(Gen.option(Gen.asciiPrintableStr)) { s =>
+      val sh = MinHash.shingles(s.orNull)
+      val sig = MinHash.signature(sh, numHashes = 32)
+      val bands = MinHash.bandKeys(sig, numBands = 16, rowsPerBand = 2)
+      if (sh.isEmpty) assert(sig.isEmpty && bands.isEmpty)
+      else assert(sig.length == 32 && bands.length == 16)
     }
   }
 }

@@ -47,6 +47,48 @@ class PlanShapeSpec extends SparkTestBase {
     plans.synchronized(plans.toList)
   }
 
+  /** Jobs the body launches from this thread. Listener delivery is
+    * async, so a marker job submitted last flushes it: events arrive
+    * in order, so once the marker's start is seen every earlier one
+    * has been. */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"plan-shape-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          seen.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "plan building")
+    try {
+      body
+      val marker = sc.submitJob(sc.parallelize(Seq(0), 1), (_: Iterator[Int]) => (),
+        Seq(0), (_: Int, _: Unit) => (), ())
+      scala.concurrent.Await.ready(marker, scala.concurrent.duration.Duration(60, "s"))
+      val markerId = marker.jobIds.head
+      val deadline = System.nanoTime() + 10000000000L
+      while (!seen.contains(markerId) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(markerId), "listener never saw the marker job")
+      seen.size - 1
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Near-dup text fixture: overlapping 12-word windows over a
+    * 17-word vocabulary, every fourth doc in the batch. */
+  private def nearDupDocs = (1 to 40).map(i =>
+    (i.toLong, (0 until 12).map(k => s"w${(i + k) % 17}").mkString(" "))).toDF("doc_id", "text")
+  private def nearDupAdmission = {
+    val docs = nearDupDocs
+    Dedup.incrementalNearDup(docs.filter(col("doc_id") % 4 === 0),
+      docs.filter(col("doc_id") % 4 =!= 0))
+  }
+
   test("filteredTopK joins on the constraint key — hash join, no nested loop") {
     val emb = (0 until 20).map(i =>
       (i.toLong, Array.fill(4)(i.toFloat), s"l${i % 2}")).toDF("vec_id", "embedding", "label")
@@ -211,5 +253,27 @@ class PlanShapeSpec extends SparkTestBase {
         s"graph build and traversal must be equi-joins, never pair cross products:\n$p"))
     assert(ps.exists(_.contains("WindowGroupLimit")),
       s"the per-query beam (rank <= beam) must prune map-side:\n${ps.size} plans, none had WindowGroupLimit")
+  }
+
+  test("Dedup.minhash applies the kernel per row — no Exchange") {
+    val p = plan(Dedup.minhash(nearDupDocs))
+    assert(graft.tools.Plans.exchangeCount(p) == 0, s"minhash must not shuffle:\n$p")
+  }
+
+  test("near-dup admission plan: pinned Exchange count") {
+    // the corpus band index's bucket-cap window, the two small static
+    // sides broadcast into the candidate joins, and the per-doc fold
+    val p = plan(nearDupAdmission)
+    assert(graft.tools.Plans.exchangeCount(p) == 4, s"the admission plan's exchanges moved:\n$p")
+    assert("Exchange hashpartitioning".r.findAllIn(p).size == 2 &&
+      "BroadcastExchange".r.findAllIn(p).size == 2, s"expected 2 shuffles + 2 broadcasts:\n$p")
+  }
+
+  test("building the minhash and admission plans runs no job") {
+    val n = jobsLaunchedBy {
+      Dedup.minhash(nearDupDocs).queryExecution.executedPlan
+      nearDupAdmission.queryExecution.executedPlan
+    }
+    assert(n == 0, s"building the plans ran $n jobs")
   }
 }

@@ -8,23 +8,36 @@ import graft.sketch.GradientCodec
   * gradient sum + row count + loss sum (the loss pass of
   * `SketchGradientDescent.scala:371-383` fused into the same scan).
   *
+  * INPUT is a whole [[RowBlock]] per call: the cached partition's
+  * labels, CSR rows and sorted distinct keys. [[add]] walks the rows
+  * in order, and each row's margin → pointwise (scale, loss) → axpy
+  * goes into one of two targets:
+  *
+  *  - a `dim`-length dense array, when dim ≤ [[GradientAccumulator.DenseDim]]
+  *    (allocation and axpy beat anything sparse) or the block has more
+  *    than dim / [[GradientAccumulator.DensifyDenom]] keys;
+  *  - otherwise an array over the block's keys, addressed by the
+  *    block's per-nonzero slots — no hashing, and the result is
+  *    already key-ascending.
+  *
   * BUFFER SHAPE mirrors the reference's dense/sparse gradient split
   * (`SketchGradientDescent.scala:205-217` carries
   * `DenseDoubleGradient` for dense rows and `SparseDoubleGradient`
-  * for sparse ones): at ordinary dims the buffer is a plain dense
-  * array (fastest axpy, allocation is noise); past [[GradientAccumulator.DenseDim]]
-  * it starts as an open-addressed (index → sum) map and DENSIFIES
-  * only when the accumulated nonzero count passes dim /
-  * [[GradientAccumulator.DensifyDenom]] (or a dense data row forces
-  * it). A task over sparse rows at dim = 10⁷ therefore holds
-  * O(task-nnz) instead of an 80 MB dense buffer — and the wire stays
-  * sparse end to end: serialization calls the codec's
-  * `encodeSparse` (no dim-length materialization) and
-  * deserialization reloads through `decodeSparse`, so every
-  * tree-merge level is O(nnz) too. The sparse and dense paths
-  * produce byte-identical codec frames for the same logical
-  * gradient, so fitted weights match the dense path's up to
-  * treeAggregate's task-arrival float merge order (`SgdSpec`).
+  * for sparse ones): the sparse state is a key-ascending
+  * (`keys`, `vals`) pair, so a task over sparse rows at dim = 10⁷
+  * holds O(partition keys) instead of an 80 MB dense buffer. Merging
+  * into an empty buffer takes the other side's arrays over without a
+  * copy; sparse ∪ sparse is a linear merge of the two sorted runs and
+  * densifies once the union passes the same dim / DensifyDenom bound.
+  * The arrays of a merged-in buffer may be shared afterwards, so
+  * [[merge]] consumes its argument, and the state arrays are replaced,
+  * never written, while sparse (the keys may be the cached block's).
+  *
+  * Every per-key sum is added in row order, as a row-at-a-time pass
+  * over the same partition adds it, so a partial's codec frame does
+  * not depend on the dense/sparse choice: [[graft.sketch.SketchCodec]]
+  * frames are byte-identical either way (`SgdSpec`), and fitted weights
+  * repeat up to treeAggregate's task-arrival float merge order.
   *
   * The gradient buffer is `@transient` and (de)serialized through
   * the configured [[GradientCodec]] — so when Spark ships partial
@@ -32,8 +45,11 @@ import graft.sketch.GradientCodec
   * wire are the *compressed* gradient, exactly where the reference
   * compresses before its shuffle
   * (`/root/reference/.../SketchGradientDescent.scala:220-233`).
-  * Each merge decodes → `plusBy` → next serialization re-encodes,
-  * reproducing the Reduce path's re-compression of partial sums
+  * A sparse state goes out through `encodeSparse` (no dim-length
+  * materialization) and comes back through `decodeSparse` in key
+  * order, so every tree-merge level is O(nnz) too. Each merge
+  * decodes → `plusBy` → next serialization re-encodes, reproducing
+  * the Reduce path's re-compression of partial sums
   * (`SketchGradientDescent.scala:274`): lossy error compounds along
   * the aggregation tree, as in the reference.
   */
@@ -41,18 +57,17 @@ final class GradientAccumulator(val dim: Int, val codec: GradientCodec,
                                 val loss: PointLoss = SquaredPointLoss)
     extends Serializable {
 
-  @transient private var dense: Array[Double] =
-    if (dim <= GradientAccumulator.DenseDim) new Array[Double](dim) else null
-  // open-addressed linear-probe map; -1 = empty slot (keys are >= 0)
-  @transient private var mapKeys: Array[Int] = _
-  @transient private var mapVals: Array[Double] = _
-  @transient private var mapUsed = 0
+  // exactly one live representation: `dense` when non-null, else the
+  // key-ascending sparse pair (empty for a zero gradient)
+  @transient private var dense: Array[Double] = _
+  @transient private var keys: Array[Int] = Array.emptyIntArray
+  @transient private var vals: Array[Double] = Array.emptyDoubleArray
 
   var interceptGrad: Double = 0.0
   var count: Long = 0L
   var lossSum: Double = 0.0
 
-  /** True while the buffer is still the sparse map (spec hook). */
+  /** True while the buffer is still the sparse pair (spec hook). */
   private[ml] def isSparse: Boolean = dense == null
 
   /** The gradient as a dense array (densifies a sparse buffer —
@@ -60,97 +75,84 @@ final class GradientAccumulator(val dim: Int, val codec: GradientCodec,
     * are dense anyway). */
   def grad: Array[Double] = { densify(); dense }
 
-  private def ensureMap(): Unit =
-    if (mapKeys == null) {
-      mapKeys = Array.fill(GradientAccumulator.InitialMapCap)(-1)
-      mapVals = new Array[Double](GradientAccumulator.InitialMapCap)
-      mapUsed = 0
-    }
-
-  private def addAt(i: Int, v: Double): Unit =
-    if (dense != null) dense(i) += v
-    else {
-      ensureMap()
-      val mask = mapKeys.length - 1
-      var s = scala.util.hashing.byteswap32(i) & mask
-      while (mapKeys(s) != -1 && mapKeys(s) != i) s = (s + 1) & mask
-      if (mapKeys(s) == i) mapVals(s) += v
-      else {
-        mapKeys(s) = i; mapVals(s) = v; mapUsed += 1
-        if (mapUsed > dim / GradientAccumulator.DensifyDenom) densify()
-        else if (mapUsed * 2 >= mapKeys.length) growMap()
-      }
-    }
-
-  private def growMap(): Unit = {
-    val ok = mapKeys; val ov = mapVals
-    mapKeys = Array.fill(ok.length * 2)(-1)
-    mapVals = new Array[Double](ok.length * 2)
-    val mask = mapKeys.length - 1
-    var j = 0
-    while (j < ok.length) {
-      val key = ok(j)
-      if (key != -1) {
-        var s = scala.util.hashing.byteswap32(key) & mask
-        while (mapKeys(s) != -1) s = (s + 1) & mask
-        mapKeys(s) = key; mapVals(s) = ov(j)
-      }
-      j += 1
-    }
-  }
-
   private def densify(): Unit =
     if (dense == null) {
       dense = new Array[Double](dim)
-      if (mapKeys != null) {
-        var j = 0
-        while (j < mapKeys.length) {
-          if (mapKeys(j) != -1) dense(mapKeys(j)) += mapVals(j)
-          j += 1
-        }
-      }
-      mapKeys = null; mapVals = null; mapUsed = 0
+      var j = 0
+      while (j < keys.length) { dense(keys(j)) = vals(j); j += 1 }
+      keys = Array.emptyIntArray; vals = Array.emptyDoubleArray
     }
 
-  /** Add one data point's gradient at weights (w, b): margin →
+  /** Add a key-ascending sparse gradient (taken over when the buffer
+    * is empty). */
+  private def addSparse(bk: Array[Int], bv: Array[Double]): Unit =
+    if (dense != null) {
+      var j = 0
+      while (j < bk.length) { dense(bk(j)) += bv(j); j += 1 }
+    } else {
+      if (keys.length == 0) { keys = bk; vals = bv }
+      else {
+        val ak = keys; val av = vals
+        val mk = new Array[Int](ak.length + bk.length)
+        val mv = new Array[Double](mk.length)
+        var i = 0; var j = 0; var n = 0
+        while (i < ak.length || j < bk.length) {
+          if (j == bk.length || (i < ak.length && ak(i) < bk(j))) {
+            mk(n) = ak(i); mv(n) = av(i); i += 1
+          } else if (i == ak.length || bk(j) < ak(i)) {
+            mk(n) = bk(j); mv(n) = bv(j); j += 1
+          } else {
+            mk(n) = ak(i); mv(n) = av(i) + bv(j); i += 1; j += 1
+          }
+          n += 1
+        }
+        keys = java.util.Arrays.copyOf(mk, n); vals = java.util.Arrays.copyOf(mv, n)
+      }
+      if (keys.length > dim / GradientAccumulator.DensifyDenom) densify()
+    }
+
+  /** Add every row of `blk` at weights (w, b), in row order: margin →
     * pointwise (scale, loss) → axpy. For [[SquaredPointLoss]] this is
     * arithmetically identical to the fused residual form. */
-  def add(w: Array[Double], b: Double,
-          x: org.apache.spark.ml.linalg.Vector, y: Double): GradientAccumulator = {
-    val z = LinearLoss.predict(w, b, x)
-    val (g, l) = loss.scaleAndLoss(z, y)
-    if (dense != null) LinearLoss.addScaled(x, g, dense)
-    else x match {
-      case s: org.apache.spark.ml.linalg.SparseVector =>
-        var j = 0
-        while (j < s.indices.length) {
-          addAt(s.indices(j), g * s.values(j)); j += 1
-        }
-      case _ => // a dense row touches every index: the map buys nothing
-        densify()
-        LinearLoss.addScaled(x, g, dense)
+  def add(w: Array[Double], b: Double, blk: RowBlock): GradientAccumulator = {
+    val sparse = dense == null && dim > GradientAccumulator.DenseDim &&
+      blk.keys.length <= dim / GradientAccumulator.DensifyDenom
+    if (!sparse) densify()
+    val sums = if (sparse) new Array[Double](blk.keys.length) else dense
+    val at = if (sparse) blk.slots else blk.cols
+    val cols = blk.cols; val xs = blk.values; val ends = blk.rowEnds
+    var start = 0
+    var r = 0
+    while (r < blk.numRows) {
+      val end = ends(r)
+      var z = b
+      var j = start
+      while (j < end) { z += w(cols(j)) * xs(j); j += 1 }
+      val gl = loss.scaleAndLoss(z, blk.labels(r))
+      val g = gl._1
+      j = start
+      while (j < end) { sums(at(j)) += g * xs(j); j += 1 }
+      interceptGrad += g
+      lossSum += gl._2
+      start = end
+      r += 1
     }
-    interceptGrad += g
-    lossSum += l
-    count += 1
+    if (sparse) addSparse(blk.keys, sums)
+    count += blk.numRows
     this
   }
 
-  /** Merge another partial (plusBy, `SketchGradientDescent.scala:244,262,267`).
-    * Sparse ∪ sparse stays sparse (until the density bound); a dense
-    * side densifies the merge. */
+  /** Merge another partial (plusBy, `SketchGradientDescent.scala:244,262,267`),
+    * consuming it. Sparse ∪ sparse stays sparse (until the density
+    * bound); a dense side densifies the merge. */
   def merge(other: GradientAccumulator): GradientAccumulator = {
-    if (other.dense != null) {
+    if (other.dense == null) addSparse(other.keys, other.vals)
+    else if (dense == null && keys.length == 0) dense = other.dense
+    else {
       densify()
       val og = other.dense
       var i = 0
       while (i < dim) { dense(i) += og(i); i += 1 }
-    } else if (other.mapKeys != null) {
-      var j = 0
-      while (j < other.mapKeys.length) {
-        if (other.mapKeys(j) != -1) addAt(other.mapKeys(j), other.mapVals(j))
-        j += 1
-      }
     }
     interceptGrad += other.interceptGrad
     count += other.count
@@ -158,23 +160,15 @@ final class GradientAccumulator(val dim: Int, val codec: GradientCodec,
     this
   }
 
+  /** The codec frame this buffer ships as. */
+  private[ml] def frame: Array[Byte] =
+    if (dense != null) codec.encode(dense)
+    else codec.encodeSparse(dim, keys.length, keys, vals)
+
   @throws[IOException]
   private def writeObject(out: ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    val bytes =
-      if (dense != null) codec.encode(dense)
-      else if (mapKeys == null) codec.encodeSparse(dim, 0,
-        Array.emptyIntArray, Array.emptyDoubleArray)
-      else { // compact the live slots, then sparse-encode
-        val ks = new Array[Int](mapUsed)
-        val vs = new Array[Double](mapUsed)
-        var j = 0; var w = 0
-        while (j < mapKeys.length) {
-          if (mapKeys(j) != -1) { ks(w) = mapKeys(j); vs(w) = mapVals(j); w += 1 }
-          j += 1
-        }
-        codec.encodeSparse(dim, mapUsed, ks, vs)
-      }
+    val bytes = frame
     out.writeInt(bytes.length)
     out.write(bytes)
   }
@@ -185,21 +179,20 @@ final class GradientAccumulator(val dim: Int, val codec: GradientCodec,
     val n = in.readInt()
     val bytes = new Array[Byte](n)
     in.readFully(bytes)
+    keys = Array.emptyIntArray; vals = Array.emptyDoubleArray
     if (dim <= GradientAccumulator.DenseDim) dense = codec.decode(bytes)
     else {
       val sg = codec.decodeSparse(bytes)
-      var j = 0
-      while (j < sg.keys.length) { addAt(sg.keys(j), sg.vals(j)); j += 1 }
+      addSparse(sg.keys, sg.vals)
     }
   }
 }
 
 object GradientAccumulator {
   /** Dims at or below this always use the dense buffer (≤ 512 KB —
-    * allocation and axpy both beat any map). */
+    * allocation and axpy both beat any sparse form). */
   val DenseDim: Int = 1 << 16
-  /** Densify once accumulated nonzeros exceed dim / this (map entry
-    * ≈ 12 B vs 8 B/slot dense; past ~1/4 density the map loses). */
+  /** Densify once a partial's keys exceed dim / this (a sparse entry
+    * ≈ 12 B vs 8 B/slot dense; past ~1/4 density sparse loses). */
   val DensifyDenom: Int = 4
-  private val InitialMapCap: Int = 1 << 10
 }

@@ -60,17 +60,4 @@ object LinearLoss {
     0.5 * r * r
   }
 
-  /** axpy: gradOut += g·x (sparse-aware — the left-fold-densify trick
-    * of `FlinkGradientDescent.scala:222-230`). */
-  def addScaled(x: Vector, g: Double, gradOut: Array[Double]): Unit = x match {
-    case d: DenseVector =>
-      val v = d.values
-      var i = 0
-      while (i < v.length) { gradOut(i) += g * v(i); i += 1 }
-    case s: SparseVector =>
-      val idx = s.indices; val v = s.values
-      var i = 0
-      while (i < idx.length) { gradOut(idx(i)) += g * v(i); i += 1 }
-  }
-
 }

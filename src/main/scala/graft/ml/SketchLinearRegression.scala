@@ -1,6 +1,5 @@
 package graft.ml
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -35,6 +34,16 @@ import graft.sketch.{GradientCodec, SketchCodec}
   * ([[GradientAccumulator]]). Loss for the convergence test
   * (`SketchGradientDescent.scala:85-146`) is fused into the same
   * pass, so a converging run costs exactly one job per iteration.
+  *
+  * What is persisted is one [[RowBlock]] per non-empty partition —
+  * labels, CSR rows, the partition's sorted distinct feature keys and
+  * a key slot per nonzero — not the (label, Vector) rows. The blocks
+  * are built inside the jobs the fit runs anyway (the dimension probe
+  * builds block 0, the first aggregation the rest), so a fit of k
+  * iterations runs k + 1 jobs. Each task adds its whole block in one
+  * [[GradientAccumulator.add]] call, and its partial comes out
+  * key-sorted, ready for the codec. The block cache and the live
+  * weight broadcast are released on every exit, exceptions included.
   */
 class SketchLinearRegression extends Serializable {
 
@@ -73,13 +82,20 @@ class SketchLinearRegression extends Serializable {
 
   /** Core loop over (label, features) rows. */
   def fitRDD(data: RDD[(Double, Vector)]): LinearModel = {
-    val sc = data.sparkContext
+    // one cached block per non-empty partition, built by the first job
+    // that reads it (Flink bulk iteration's implicit cache, SURVEY §4)
+    val blocks = data
+      .mapPartitions(rows => if (rows.hasNext) Iterator(RowBlock(rows)) else Iterator.empty)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try train(blocks) finally blocks.unpersist(blocking = false)
+  }
+
+  private def train(blocks: RDD[RowBlock]): LinearModel = {
+    val sc = blocks.sparkContext
     val codec: GradientCodec = SketchCodec.forName(compressionType)
-    // persist across iterations (Flink bulk iteration's implicit cache,
-    // SURVEY §4) — unless the caller already chose a storage level
-    val weOwnCache = data.getStorageLevel == StorageLevel.NONE
-    val cached = if (weOwnCache) data.persist(StorageLevel.MEMORY_AND_DISK) else data
-    val dim = cached.first()._2.size
+    // the dimension probe builds block 0; the first aggregation the rest
+    val dim = blocks.map(_.dim).take(1).headOption.getOrElse(
+      throw new IllegalArgumentException("cannot fit a linear model on an empty dataset"))
 
     var weights = new Array[Double](dim) // zeros init (SketchGradientDescent.scala:55)
     var intercept = 0.0
@@ -90,11 +106,12 @@ class SketchLinearRegression extends Serializable {
     while (t <= iterations && !converged) {
       val bcW = sc.broadcast(weights)
       val bcB = intercept
-      val agg = cached.treeAggregate(new GradientAccumulator(dim, codec, pointLoss))(
-        seqOp = (acc, row) => acc.add(bcW.value, bcB, row._2, row._1),
-        combOp = (a, b) => a.merge(b),
-        depth = treeDepth)
-      bcW.destroy()
+      val agg =
+        try blocks.treeAggregate(new GradientAccumulator(dim, codec, pointLoss))(
+          seqOp = (acc, blk) => acc.add(bcW.value, bcB, blk),
+          combOp = (a, b) => a.merge(b),
+          depth = treeDepth)
+        finally bcW.destroy()
       val n = agg.count.toDouble
       // mean data loss + penalty term (SketchGradientDescent.scala:371-383;
       // convergence tracks the regularized objective so an L1/L2 run
@@ -103,8 +120,9 @@ class SketchLinearRegression extends Serializable {
         agg.lossSum / n, weights, regularizationConstant)
       lossHistory += curLoss
       val eta = learningRateMethod.rate(stepSize, t, regularizationConstant)
-      val gradSum = agg.grad // densifies a sparse aggregate once, driver-side
-      val meanGrad = Array.tabulate(dim)(i => gradSum(i) / n)
+      val meanGrad = agg.grad // densifies a sparse aggregate once, driver-side
+      var i = 0
+      while (i < dim) { meanGrad(i) /= n; i += 1 }
       val w2 = weights.clone()
       regularizationPenalty.takeStep(w2, meanGrad, regularizationConstant, eta)
       weights = w2
@@ -120,7 +138,6 @@ class SketchLinearRegression extends Serializable {
       prevLoss = curLoss
       t += 1
     }
-    if (weOwnCache) cached.unpersist(blocking = false)
     LinearModel(weights, intercept, lossHistory.result())
   }
 }

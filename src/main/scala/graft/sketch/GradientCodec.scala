@@ -16,27 +16,40 @@ trait GradientCodec extends Serializable {
   /** Encode an (index → sum) accumulation WITHOUT materializing a
     * dim-length array — the task-memory bound for high-dim sparse
     * SGD (the reference's `SparseDoubleGradient` wire path,
-    * `SketchGradientDescent.scala:215`). `keys` need not be sorted
-    * and may alias scratch storage. Contract: a sparse and a dense
-    * encoding of the same logical gradient decode to the SAME
-    * values (value-identity). Byte-identity is NOT promised at this
-    * level — [[SketchCodec]] additionally guarantees it (eps-filter
-    * + key-sort canonicalize the frame), while [[IdentityCodec]]
-    * deliberately emits a distinct sparse frame (unsorted keys,
-    * exact zeros kept) to stay lossless without a sort. */
+    * `SketchGradientDescent.scala:215`). The first `nnz` entries of
+    * `keys` must be strictly ascending (checked); the arrays may be
+    * longer. Contract: a sparse and a dense encoding of the same
+    * logical gradient decode to the SAME values (value-identity).
+    * Byte-identity is NOT promised at this level — [[SketchCodec]]
+    * additionally guarantees it (its eps-filter canonicalizes the
+    * frame), while [[IdentityCodec]] deliberately emits a distinct
+    * sparse frame (exact zeros kept) to stay lossless. */
   def encodeSparse(dim: Int, nnz: Int, keys: Array[Int],
                    vals: Array[Double]): Array[Byte]
 
-  /** Decode to a sparse view (keys/vals aligned, key order
-    * unspecified) without materializing a dim-length array. */
+  /** Decode to a sparse view (keys/vals aligned, keys ascending)
+    * without materializing a dim-length array. */
   def decodeSparse(bytes: Array[Byte]): SparseGrad
 
   def name: String
 }
 
-/** Sparse decoded gradient: `keys(i)` holds value `vals(i)`; order
-  * unspecified, keys distinct, `dim` is the logical length. */
+/** Sparse decoded gradient: `keys(i)` holds value `vals(i)`; keys
+  * strictly ascending, `dim` is the logical length. */
 final case class SparseGrad(dim: Int, keys: Array[Int], vals: Array[Double])
+
+object GradientCodec {
+  /** The `encodeSparse` precondition, raised as an
+    * IllegalArgumentException naming the first out-of-order key. */
+  private[sketch] def requireAscending(keys: Array[Int], nnz: Int): Unit = {
+    var i = 1
+    while (i < nnz) {
+      if (keys(i) <= keys(i - 1)) throw new IllegalArgumentException(
+        s"encodeSparse needs strictly ascending keys: ${keys(i - 1)} then ${keys(i)} at $i")
+      i += 1
+    }
+  }
+}
 
 /** Lossless raw-doubles codec — the `compressionType=None` /
   * `FlinkGradientDescent` baseline path
@@ -72,6 +85,7 @@ object IdentityCodec extends GradientCodec {
   // distinguishes it from the dense frame's non-negative dim
   def encodeSparse(dim: Int, nnz: Int, keys: Array[Int],
                    vals: Array[Double]): Array[Byte] = {
+    GradientCodec.requireAscending(keys, nnz)
     val bos = new ByteArrayOutputStream(12 * nnz + 12)
     val out = new DataOutputStream(bos)
     out.writeInt(-1); out.writeInt(dim); out.writeInt(nnz)
@@ -159,35 +173,26 @@ final class SketchCodec(
     encodeNonzeros(dim, keys, vals)
   }
 
-  /** Same frame from a sparse accumulation — the eps rule and the
-    * key-ascending order match [[encode]]'s dense scan exactly, so
-    * the bytes (and thus the lossy decode) are identical for the
+  /** Same frame from a sparse accumulation — the keys arrive in the
+    * dense scan's ascending order and the eps rule is [[encode]]'s,
+    * so the bytes (and thus the lossy decode) are identical for the
     * same logical gradient. */
   def encodeSparse(dim: Int, nnz0: Int, keys0: Array[Int],
                    vals0: Array[Double]): Array[Byte] = {
-    // eps-filter, then sort pairs by key (the dense scan's order)
+    GradientCodec.requireAscending(keys0, nnz0)
     var nnz = 0
     var i = 0
     while (i < nnz0) { if (math.abs(vals0(i)) > eps) nnz += 1; i += 1 }
     if (nnz == 0) return zeroFrame(dim)
-    val order = new Array[Long](nnz) // (key << 32 | idx) — one sort, no boxing
+    if (nnz == keys0.length && nnz == vals0.length)
+      return encodeNonzeros(dim, keys0, vals0)
+    val keys = new Array[Int](nnz)
+    val vals = new Array[Double](nnz)
     var k = 0
     i = 0
     while (i < nnz0) {
-      if (math.abs(vals0(i)) > eps) {
-        order(k) = (keys0(i).toLong << 32) | (i.toLong & 0xffffffffL)
-        k += 1
-      }
+      if (math.abs(vals0(i)) > eps) { keys(k) = keys0(i); vals(k) = vals0(i); k += 1 }
       i += 1
-    }
-    java.util.Arrays.sort(order)
-    val keys = new Array[Int](nnz)
-    val vals = new Array[Double](nnz)
-    k = 0
-    while (k < nnz) {
-      keys(k) = (order(k) >>> 32).toInt
-      vals(k) = vals0((order(k) & 0xffffffffL).toInt)
-      k += 1
     }
     encodeNonzeros(dim, keys, vals)
   }
@@ -299,7 +304,9 @@ final class SketchCodec(
 
   /** [[decode]] without the dim-length materialization: the frame
     * already carries explicit keys per group, so the sparse view is
-    * a straight read — O(nnz) memory at every tree-merge level. */
+    * a read of each group's ascending key run, then one O(nnz·groupNum)
+    * merge pass over the runs that looks each value up in its group's
+    * sketch — O(nnz) memory at every tree-merge level. */
   def decodeSparse(bytes: Array[Byte]): SparseGrad = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val marker = in.readByte()
@@ -311,29 +318,44 @@ final class SketchCodec(
     val reps = new Array[Double](bn)
     var b = 0
     while (b < bn) { reps(b) = in.readDouble(); b += 1 }
-    val outKeys = new Array[Int](nnz)
-    val outVals = new Array[Double](nnz)
+    val runKeys = new Array[Int](nnz)
+    val runEnds = new Array[Int](gn)
+    val sketches = new Array[MinMaxSketch](gn)
     var w = 0
     var g = 0
     while (g < gn) {
       val cnt = in.readInt()
       if (cnt > 0) {
         val cols = in.readInt()
-        val keys = new Array[Int](cnt)
         var prev = 0
         var k = 0
-        while (k < cnt) { prev += readVarInt(in); keys(k) = prev; k += 1 }
-        val sk = new MinMaxSketch(rn, cols)
-        in.readFully(sk.table)
-        val lo = g * gb
-        k = 0
-        while (k < cnt) {
-          outKeys(w) = keys(k)
-          outVals(w) = reps(lo + math.min(sk.query(keys(k)), gb - 1))
-          w += 1; k += 1
-        }
+        while (k < cnt) { prev += readVarInt(in); runKeys(w) = prev; w += 1; k += 1 }
+        sketches(g) = new MinMaxSketch(rn, cols)
+        in.readFully(sketches(g).table)
       }
+      runEnds(g) = w
       g += 1
+    }
+    // a key sits in exactly one group: repeatedly take the smallest run head
+    val heads = new Array[Int](gn)
+    g = 1
+    while (g < gn) { heads(g) = runEnds(g - 1); g += 1 }
+    val outKeys = new Array[Int](nnz)
+    val outVals = new Array[Double](nnz)
+    w = 0
+    while (w < nnz) {
+      var best = -1
+      g = 0
+      while (g < gn) {
+        if (heads(g) < runEnds(g) &&
+            (best < 0 || runKeys(heads(g)) < runKeys(heads(best)))) best = g
+        g += 1
+      }
+      val key = runKeys(heads(best))
+      outKeys(w) = key
+      outVals(w) = reps(best * gb + math.min(sketches(best).query(key), gb - 1))
+      heads(best) += 1
+      w += 1
     }
     SparseGrad(dim, outKeys, outVals)
   }

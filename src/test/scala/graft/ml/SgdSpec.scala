@@ -291,12 +291,12 @@ class SgdSpec extends SparkTestBase {
     assert(big.weights.count(_ != 0.0) == active.length,
       "inactive coordinates moved in the sparse fit")
 
-    // buffer-level contract: the accumulator stays sparse through
-    // adds, a serialization round-trip, and sparse∪sparse merges —
+    // buffer-level contract: the accumulator stays sparse through a
+    // block add, a serialization round-trip, and sparse∪sparse merges —
     // and densifies when a dense row arrives, with equal sums
     val acc = new GradientAccumulator(dim, graft.sketch.IdentityCodec)
     val w0 = new Array[Double](dim)
-    rows.take(20).foreach { case (y, x) => acc.add(w0, 0.0, x, y) }
+    acc.add(w0, 0.0, RowBlock(rows.take(20).iterator))
     assert(acc.isSparse, "sparse rows densified the buffer")
     val ser = new java.io.ByteArrayOutputStream()
     val oos = new java.io.ObjectOutputStream(ser); oos.writeObject(acc); oos.close()
@@ -307,18 +307,126 @@ class SgdSpec extends SparkTestBase {
       .readObject().asInstanceOf[GradientAccumulator]
     assert(back.isSparse, "deserialization densified the buffer")
     val other = new GradientAccumulator(dim, graft.sketch.IdentityCodec)
-    rows.drop(20).foreach { case (y, x) => other.add(w0, 0.0, x, y) }
+    other.add(w0, 0.0, RowBlock(rows.drop(20).iterator))
     back.merge(other)
     assert(back.isSparse, "sparse ∪ sparse merge densified")
     val direct = new GradientAccumulator(dim, graft.sketch.IdentityCodec)
-    rows.foreach { case (y, x) => direct.add(w0, 0.0, x, y) }
+    direct.add(w0, 0.0, RowBlock(rows.iterator))
     active.foreach { i =>
       assert(math.abs(back.grad(i) - direct.grad(i)) < 1e-12,
         s"merged sparse sum diverged at $i")
     }
     val denseRow = (1.0, Vectors.dense(Array.fill(dim)(0.0).updated(5, 1.0)))
     val forced = new GradientAccumulator(dim, graft.sketch.IdentityCodec)
-    forced.add(w0, 0.0, denseRow._2, denseRow._1)
+    forced.add(w0, 0.0, RowBlock(Iterator(denseRow)))
     assert(!forced.isSparse, "a dense row should densify the buffer")
   }
+
+  test("block partials ship the row-at-a-time reference's exact codec frame") {
+    import org.apache.spark.ml.linalg.SparseVector
+    val rnd = new scala.util.Random(5)
+    // dim 2^20 takes the sparse (slot-array) path, dim 5000 the dense
+    // one; keys repeat across rows so per-key sums have many terms
+    for (dim <- Seq(1 << 20, 5000)) {
+      val rows = (0 until 200).map { _ =>
+        val idx = Array.fill(12)(rnd.nextInt(600) * (dim / 600)).distinct.sorted
+        (rnd.nextGaussian(), Vectors.sparse(dim, idx, idx.map(_ => rnd.nextGaussian()))
+          .asInstanceOf[SparseVector])
+      }
+      val w = Array.tabulate(dim)(i => if (i % 3 == 0) 0.01 * (i % 7) else 0.0)
+      val b = 0.25
+      // reference: a plain map summed one row at a time, in row order
+      val ref = scala.collection.mutable.HashMap.empty[Int, Double]
+      var interceptRef = 0.0
+      rows.foreach { case (y, x) =>
+        val g = LinearLoss.predict(w, b, x) - y
+        x.indices.indices.foreach { j =>
+          ref(x.indices(j)) = ref.getOrElse(x.indices(j), 0.0) + g * x.values(j)
+        }
+        interceptRef += g
+      }
+      val ks = ref.keys.toArray.sorted
+      val vs = ks.map(ref)
+      for (codec <- Seq(new graft.sketch.SketchCodec(), graft.sketch.IdentityCodec)) {
+        val acc = new GradientAccumulator(dim, codec)
+          .add(w, b, RowBlock(rows.iterator))
+        assert(acc.isSparse == (dim > GradientAccumulator.DenseDim))
+        assert(acc.interceptGrad == interceptRef)
+        codec match {
+          case _: graft.sketch.SketchCodec =>
+            assert(acc.frame.sameElements(codec.encodeSparse(dim, ks.length, ks, vs)),
+              s"dim $dim: Sketch frame differs from the row-at-a-time reference")
+          case _ =>
+            val g = acc.grad
+            ks.indices.foreach(k => assert(g(ks(k)) == vs(k), s"dim $dim key ${ks(k)}"))
+            assert(g.count(_ != 0.0) == ks.count(k => ref(k) != 0.0))
+        }
+      }
+    }
+  }
+
+  test("a fit of k iterations runs k + 1 jobs: the dimension probe and one per iteration") {
+    val (data, _, _) = planted(400, 6, seed = 3)
+    for (k <- Seq(1, 4)) {
+      val jobs = jobsLaunchedBy {
+        new SketchLinearRegression().setIterations(k).setStepsize(0.1)
+          .setCompressionType("Sketch").fitRDD(data)
+      }
+      assert(jobs == k + 1, s"$k iterations ran $jobs jobs")
+    }
+  }
+
+  test("a throwing iteration still releases the block cache") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (data, _, _) = planted(200, 4, seed = 8)
+    val err = intercept[org.apache.spark.SparkException] {
+      new ThrowingRegression().setIterations(5).setStepsize(0.1).fitRDD(data)
+    }
+    assert(err.getMessage.contains(ThrowingLoss.Message), err.getMessage)
+    assert(sc.getPersistentRDDs.keySet == before,
+      s"leaked cached RDDs: ${sc.getPersistentRDDs.keySet -- before}")
+  }
+
+  test("partitions without rows add nothing: more partitions than rows fit like two") {
+    val rows = Seq(
+      (1.0, Vectors.dense(2.0, 0.5, -1.0)), (2.0, Vectors.dense(4.0, -0.5, 0.0)),
+      (0.5, Vectors.sparse(3, Array(1), Array(3.0))), (-1.0, Vectors.dense(1.0, 1.0, 1.0)),
+      (3.0, Vectors.sparse(3, Array(0, 2), Array(-2.0, 0.25))))
+    def fit(parts: Int) = new SketchLinearRegression().setIterations(6).setStepsize(0.1)
+      .setCompressionType("None").fitRDD(spark.sparkContext.parallelize(rows, parts))
+    val (two, many) = (fit(2), fit(12))
+    two.weights.indices.foreach { i =>
+      assert(math.abs(two.weights(i) - many.weights(i)) < 1e-9,
+        s"weight $i: ${two.weights(i)} vs ${many.weights(i)}")
+    }
+    assert(math.abs(two.intercept - many.intercept) < 1e-9)
+    two.lossHistory.indices.foreach { t =>
+      assert(math.abs(two.lossHistory(t) - many.lossHistory(t)) < 1e-9)
+    }
+  }
+
+  test("an empty dataset fails with a clear error") {
+    val sc = spark.sparkContext
+    for (empty <- Seq(sc.emptyRDD[(Double, org.apache.spark.ml.linalg.Vector)],
+                      sc.parallelize(Seq.empty[(Double, org.apache.spark.ml.linalg.Vector)], 3))) {
+      val err = intercept[IllegalArgumentException] {
+        new SketchLinearRegression().setIterations(2).fitRDD(empty)
+      }
+      assert(err.getMessage.contains("empty dataset"), err.getMessage)
+    }
+  }
+}
+
+/** Squared loss that throws once the margin leaves zero — i.e. in the
+  * second iteration of a fit from w = 0, b = 0. */
+object ThrowingLoss extends PointLoss {
+  val Message = "loss failed mid-fit"
+  def scaleAndLoss(z: Double, y: Double): (Double, Double) =
+    if (z != 0.0) throw new IllegalStateException(Message)
+    else SquaredPointLoss.scaleAndLoss(z, y)
+}
+
+class ThrowingRegression extends SketchLinearRegression {
+  override protected def pointLoss: PointLoss = ThrowingLoss
 }

@@ -97,4 +97,49 @@ class SketchCodecSpec extends AnyFunSuite {
     // worst-case per-element error is a within-group bin jump
     assert(err < 6.0, s"sum error $err")
   }
+
+  /** A sparse gradient at `dim`: ascending keys, some values under eps. */
+  private def sparseGradient(dim: Int, nnz: Int, seed: Int) = {
+    val rnd = new scala.util.Random(seed)
+    val keys = Array.fill(nnz)(rnd.nextInt(dim)).distinct.sorted
+    val vals = keys.map(_ => if (rnd.nextInt(10) == 0) 1e-12 else rnd.nextGaussian())
+    val dense = new Array[Double](dim)
+    keys.indices.foreach(k => dense(keys(k)) = vals(k))
+    (keys, vals, dense)
+  }
+
+  test("encodeSparse on ascending keys is byte-identical to encode on the dense array") {
+    for ((dim, nnz, seed) <- Seq((10000, 300, 1), (1 << 20, 5000, 2), (50, 50, 3))) {
+      val (keys, vals, dense) = sparseGradient(dim, nnz, seed)
+      assert(codec.encodeSparse(dim, keys.length, keys, vals).sameElements(codec.encode(dense)),
+        s"dim $dim: sparse and dense frames differ")
+      // longer scratch arrays: only the first nnz entries count
+      val padded = codec.encodeSparse(dim, keys.length, keys :+ (dim + 7), vals :+ 1.0)
+      assert(padded.sameElements(codec.encode(dense)), s"dim $dim: padded arrays leaked in")
+    }
+    assert(codec.encodeSparse(100, 0, Array.emptyIntArray, Array.emptyDoubleArray)
+      .sameElements(codec.encode(new Array[Double](100))))
+  }
+
+  test("encodeSparse rejects keys that are not strictly ascending") {
+    for (c <- Seq(codec, IdentityCodec); keys <- Seq(Array(3, 1), Array(2, 2))) {
+      val err = intercept[IllegalArgumentException](c.encodeSparse(10, 2, keys, Array(1.0, 2.0)))
+      assert(err.getMessage.contains("ascending"), err.getMessage)
+    }
+  }
+
+  test("decodeSparse returns keys in ascending order for both codecs") {
+    val (keys, vals, dense) = sparseGradient(1 << 16, 4000, 4)
+    val codecs = Seq(codec, new SketchCodec(groupNum = 8), IdentityCodec)
+    for (c <- codecs; frame <- Seq(c.encode(dense), c.encodeSparse(dense.length, keys.length, keys, vals))) {
+      val sg = c.decodeSparse(frame)
+      assert(sg.dim == dense.length)
+      assert(sg.keys.nonEmpty && sg.keys.sliding(2).forall(p => p(0) < p(1)),
+        s"${c.name}: decoded keys out of order")
+      // the sparse view holds the dense decode's nonzeros, key for key
+      val full = c.decode(frame)
+      sg.keys.indices.foreach(k => assert(full(sg.keys(k)) == sg.vals(k)))
+      assert(full.count(_ != 0.0) == sg.vals.count(_ != 0.0))
+    }
+  }
 }

@@ -4,6 +4,8 @@ import scala.collection.mutable.ArrayBuilder
 
 import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector}
 
+import graft.sketch.RadixArgsort
+
 /** One partition's training rows in the layout the SGD pass scans,
   * built once per fit and cached across its iterations:
   *
@@ -58,21 +60,23 @@ object RowBlock {
       rowEnds += nnz
     }
     val colArr = cols.result()
-    val sorted = colArr.clone()
-    java.util.Arrays.sort(sorted)
-    var k = 0
+    // one argsort of the column ids (non-negative, so their widened
+    // longs sort as ints do); a sweep of the sorted order dedups them
+    // into `keys` and hands every nonzero its slot
+    val sorted = new Array[Long](colArr.length)
     var j = 0
-    while (j < sorted.length) {
-      if (k == 0 || sorted(j) != sorted(k - 1)) { sorted(k) = sorted(j); k += 1 }
-      j += 1
-    }
-    val keys = java.util.Arrays.copyOf(sorted, k)
+    while (j < colArr.length) { sorted(j) = colArr(j).toLong; j += 1 }
+    val perm = RadixArgsort.argsort(sorted, sorted.length)
+    val keys = new ArrayBuilder.ofInt
     val slots = new Array[Int](colArr.length)
-    j = 0
-    while (j < colArr.length) {
-      slots(j) = java.util.Arrays.binarySearch(keys, colArr(j)); j += 1
+    var k = -1
+    var p = 0
+    while (p < sorted.length) {
+      if (p == 0 || sorted(p) != sorted(p - 1)) { keys += sorted(p).toInt; k += 1 }
+      slots(perm(p)) = k
+      p += 1
     }
     new RowBlock(math.max(dim, 0), labels.result(), rowEnds.result(), colArr,
-      values.result(), keys, slots)
+      values.result(), keys.result(), slots)
   }
 }

@@ -322,6 +322,39 @@ class SgdSpec extends SparkTestBase {
     assert(!forced.isSparse, "a dense row should densify the buffer")
   }
 
+  test("RowBlock keys and slots equal a sort plus a binary search per nonzero") {
+    import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector}
+    val rnd = new scala.util.Random(9)
+    def sparseRow(dim: Int, n: Int): (Double, Vector) = {
+      val idx = Array.fill(n)(rnd.nextInt(dim)).distinct.sorted
+      (rnd.nextGaussian(), Vectors.sparse(dim, idx, idx.map(_ => rnd.nextGaussian())))
+    }
+    def emptyRow(dim: Int): (Double, Vector) = (0.0, Vectors.sparse(dim, Array.emptyIntArray, Array.emptyDoubleArray))
+    val blocks = Seq(
+      // dense rows, sparse rows sharing columns, and empty sparse rows
+      Seq.tabulate(30)(r => r % 3 match {
+        case 0 => (1.0, Vectors.dense(Array.fill(50)(rnd.nextGaussian())))
+        case 1 => emptyRow(50)
+        case _ => sparseRow(50, 8)
+      }),
+      Seq.fill(10)(emptyRow(70)),
+      // column ids that need two and three radix digits
+      Seq.fill(2000)(sparseRow(1 << 20, 40)),
+      Seq.fill(500)(sparseRow(1 << 30, 20)))
+    for (rows <- blocks) {
+      val blk = RowBlock(rows.iterator)
+      val expectCols = rows.flatMap {
+        case (_, d: DenseVector) => d.values.indices
+        case (_, s: SparseVector) => s.indices.toSeq
+      }.toArray
+      val keys = expectCols.sorted.distinct
+      assert(blk.cols.sameElements(expectCols))
+      assert(blk.keys.sameElements(keys), s"${rows.length} rows: keys differ")
+      assert(blk.slots.sameElements(expectCols.map(java.util.Arrays.binarySearch(keys, _))),
+        s"${rows.length} rows: slots differ")
+    }
+  }
+
   test("block partials ship the row-at-a-time reference's exact codec frame") {
     import org.apache.spark.ml.linalg.SparseVector
     val rnd = new scala.util.Random(5)

@@ -22,7 +22,9 @@ object MediaFixtures {
     * encode every parameter that matters into `name`. */
   def memo(spark: SparkSession, name: String, sfDir: String)
           (plant: => DataFrame): DataFrame = {
-    val dir = IndexMemo.dir(s"mediafix|$name|$sfDir") { d =>
+    // versioned: a memo written before the doc_id spread below must
+    // not serve the old 1-2-split layout
+    val dir = IndexMemo.dir(s"mediafix2|$name|$sfDir") { d =>
       // spread the fixture across the session's parallelism before
       // writing (r17): the planted tables inherit the source table's
       // 1-2 input splits, so every DOWNSTREAM DECODE of the memo ran

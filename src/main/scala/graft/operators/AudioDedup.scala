@@ -1,50 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Energy-envelope AUDIO near-dup detection — the audio member of
-  * the dedup family ([[ImageDedup]]'s design one modality over:
-  * re-encoded/lightly-noised copies of the same clip are the audio
-  * analogue of mirrored images). Per-window energies → sign-delta
-  * bits, all exact integer math:
-  *
-  *  - decode ([[Multimodal.decodeWav]]) → channel-mean mono → the
-  *    |amplitude| envelope RESAMPLED to a fixed 65-bin summary (the
-  *    9×8-thumbnail rule applied to time) → 64 bits of adjacent-bin
-  *    comparisons. Comparisons are invariant to small additive noise
-  *    and constant gain-independent-ish level shifts, so perturbed
-  *    twins agree on almost every bit while distinct clips (different
-  *    sample streams) disagree on ~half;
-  *  - candidates come from a (band, value, level-cell) EQUI-JOIN over
-  *    4×16-bit Hamming bands × 2 offset mean-level grids — by
-  *    pigeonhole any pair within Hamming distance 3 shares ≥1 band,
-  *    and the quantized mean-level key (the absolute-level complement
-  *    sign-deltas lack) keeps FLAT clips (silence, tones) from
-  *    collapsing the band join into a near-cross-product; never an
-  *    all-pairs scan;
-  *  - the exact verify (mean absolute envelope difference, e2 fixed
-  *    point over the 65 bins) runs on CANDIDATES ONLY through a
-  *    typed `mapPartitions` barrier ([[ImageDedup.pairDistances]]'s
-  *    HOF-trap discipline);
-  *  - and the whole near stage runs over one REPRESENTATIVE per
-  *    exact-identical envelope family, so pair cost scales with
-  *    distinct audio content, not corpus size.
-  * Every emitted drop carries an exact-verified witness, so drops are
-  * SOUND by construction; banding can only cost recall, which the
-  * `q_dedup_audio` contract gates on planted twins.
+/** The AUDIO modality of [[MediaDedup]]: decode
+  * ([[Multimodal.decodeWav]]) → channel-mean mono → the |amplitude|
+  * envelope resampled to 65 bins (one frame of 65 cells, 1 channel —
+  * the 9×8-thumbnail rule applied to time) → 64 sign-delta bits of
+  * adjacent-bin comparisons (invariant to small additive noise, so
+  * perturbed twins agree on almost every bit while distinct clips
+  * disagree on ~half) plus two mean-level grid keys; and the planted
+  * fixtures of the `q_dedup_audio` / `q_dedup_incr_audio` gates. All
+  * integer math.
   */
-object AudioDedup {
+object AudioDedup extends MediaDedup {
 
   /** Envelope geometry: 65 bins → 64 adjacent-bin comparison bits. */
   val EnvBins = 65
 
-  /** Default verify threshold: mean abs envelope difference ≤ 600
-    * sample units (e2 fixed point → 60,000). A ±1-per-sample
-    * perturbed twin lands ≤ ~200 e2; two distinct planted clips
-    * (independent full-range streams) land ~1,000,000 e2. */
+  val Cells: Int = EnvBins
+  val Channels = 1
+  /** Mean abs envelope difference ≤ 600 sample units (e2 fixed point
+    * → 60,000). A ±1-per-sample perturbed twin lands ≤ ~200 e2; two
+    * distinct planted clips (independent full-range streams) land
+    * ~1,000,000 e2. */
   val DefaultMaxMeanDiffE2 = 60000L
+  val MinContainPct = 100
 
   /** Mean-|amplitude| envelope of decoded PCM resampled to
     * [[EnvBins]] fixed bins: channel-mean mono per frame, then each
@@ -90,309 +71,18 @@ object AudioDedup {
     * level). Step 2048 sample units over the 0..32767 mean; a twin
     * with mean shift ≤1 misses only by straddling BOTH grids (the
     * recall contract owns the residual). */
-  private def levelKeys(env: Array[Int]): (Long, Long) = {
-    var s = 0L
-    var k = 0
-    while (k < EnvBins) { s += env(k); k += 1 }
-    val m = s / EnvBins
-    ((m / 2048L), ((m + 1024L) / 2048L))
+  private def levelKeys(envSum: Long): (Long, Long) = {
+    val m = envSum / EnvBins
+    (m / 2048L, (m + 1024L) / 2048L)
   }
 
-  /** Decoded fingerprint row for one media blob — None for
-    * undecodable audio (the corrupt-input rule every decode stage
-    * follows). Shared by [[fingerprints]] and any streaming twin. */
-  private[graft] def printRow(id: Long, bytes: Array[Byte])
-      : Option[(Long, Seq[Int], Long, Long, Long, Long)] =
+  def frames(bytes: Array[Byte]): Seq[MediaDedup.Frame] =
     Multimodal.decodeWav(bytes).map { case (_, ch, samples) =>
       val env = envelope(ch, samples)
-      val (ekA, ekB) = levelKeys(env)
-      var s = 0L
-      var k = 0
-      while (k < EnvBins) { s += env(k); k += 1 }
-      (id, env.toSeq, signBits(env), ekA, ekB, s)
-    }
-
-  /** decode → (doc_id, 65-int envelope, sign-delta hash, two
-    * level-grid keys, exact envelope sum `es` — the verify
-    * pre-filter column) in one zero-shuffle typed per-partition
-    * pass. */
-  def fingerprints(withAudio: DataFrame): DataFrame = {
-    val spark = withAudio.sparkSession
-    import spark.implicits._
-    withAudio.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, bytes) => printRow(id, bytes) })
-      .toDF("doc_id", "env", "abits", "ekA", "ekB", "es")
-  }
-
-  /** Largest Σ|per-bin diff| a pair within `maxMeanDiffE2` can have
-    * (mean_e2 = ⌊Σ·100/65⌋ ≤ m ⟹ Σ ≤ ⌊(m+1)·65/100⌋) — and
-    * |Σa − Σb| ≤ Σ|diff|, so exact envelope-sum distance is a
-    * NECESSARY condition usable as a codegen'd pre-filter ahead of
-    * the typed 65-element verify. */
-  private[graft] def maxSumDiff(maxMeanDiffE2: Long): Long =
-    (maxMeanDiffE2 + 1) * EnvBins / 100
-
-  /** 4×16-bit Hamming bands of the sign-delta hash (the
-    * [[ImageDedup.bands]] rule). */
-  def bands(bitsCol: Column): Column =
-    array((0 until 4).map(b =>
-      shiftright(bitsCol, b * 16).bitwiseAND(lit(0xffffL))): _*)
-
-  /** The 8 bucket entries per clip — 4 bands × 2 level grids, `bk`
-    * the composite band-and-grid id so grids never cross-join. */
-  def bucketEntries(withBands: DataFrame): DataFrame = {
-    val b0 = withBands.select(col("doc_id"), col("ekA"), col("ekB"),
-      posexplode(col("bands")).as(Seq("band", "bv")))
-    b0.select(col("doc_id"), (col("band") * 2).as("bk"),
-        col("bv"), col("ekA").as("ek"))
-      .unionByName(b0.select(col("doc_id"), (col("band") * 2 + 1).as("bk"),
-        col("bv"), col("ekB").as("ek")))
-  }
-
-  private val bucketObserveSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Candidate pairs = clips sharing ≥1 (band, value, level-cell)
-    * bucket, with the hot-bucket guard: a degenerate bucket (hours of
-    * identical silence at crawl scale) is capped at the
-    * `maxBucketSize` lowest ids, surfacing capped-out rows as an
-    * observe metric, never silently. */
-  def candidates(withBands: DataFrame, maxBucketSize: Int = 1000): DataFrame = {
-    val b = bucketEntries(withBands)
-    val ranked = b.withColumn("r", row_number().over(
-        Window.partitionBy(col("bk"), col("bv"), col("ek"))
-          .orderBy(col("doc_id"))))
-      .observe(s"audio_bucket_truncated_${bucketObserveSeq.incrementAndGet()}",
-        sum(when(col("r") > maxBucketSize, 1L).otherwise(0L)).as("n_dropped"))
-      .filter(col("r") <= maxBucketSize)
-    val l = ranked.select(col("bk"), col("bv"), col("ek"), col("doc_id").as("a"))
-    val r = ranked.select(col("bk"), col("bv"), col("ek"), col("doc_id").as("b"))
-    l.join(r, Seq("bk", "bv", "ek")).filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-  }
-
-  /** Exact mean-abs envelope distance (e2) per joined pair row — a
-    * TYPED per-partition loop, never an interpreted HOF above a join
-    * (the [[ImageDedup.pairDistances]] trap and fix, verbatim). */
-  private[graft] def pairDistances(joined: DataFrame): DataFrame = {
-    val spark = joined.sparkSession
-    import spark.implicits._
-    joined.select(col("ida").cast("long"), col("idb").cast("long"),
-        col("ea"), col("eb"))
-      .as[(Long, Long, Array[Int], Array[Int])]
-      .mapPartitions(_.map { case (a, b, ea, eb) =>
-        var s = 0L
-        var i = 0
-        val n = math.min(ea.length, eb.length)
-        while (i < n) { s += math.abs(ea(i) - eb(i)).toLong; i += 1 }
-        (a, b, s * 100L / EnvBins)
-      }).toDF("ida", "idb", "mean_diff_e2")
-  }
-
-  /** Exact-verified near-dup pairs (a < b): banded candidates whose
-    * mean absolute envelope difference is ≤ `maxMeanDiffE2`, the
-    * codegen'd envelope-sum pre-filter gating the typed exact pass. */
-  def nearDupPairs(prints: DataFrame,
-                   maxMeanDiffE2: Long = DefaultMaxMeanDiffE2,
-                   maxBucketSize: Int = 1000): DataFrame = {
-    val cand = candidates(prints.withColumn("bands", bands(col("abits"))),
-      maxBucketSize)
-    val pa = prints.select(col("doc_id").as("a"), col("env").as("env_a"),
-      col("es").as("esa"))
-    val pb = prints.select(col("doc_id").as("b"), col("env").as("env_b"),
-      col("es").as("esb"))
-    val msd = maxSumDiff(maxMeanDiffE2)
-    val joined = cand.join(pa, Seq("a")).join(pb, Seq("b"))
-      .filter(abs(col("esa") - col("esb")) <= msd)
-      .select(col("a").as("ida"), col("b").as("idb"),
-        col("env_a").as("ea"), col("env_b").as("eb"))
-    pairDistances(joined)
-      .filter(col("mean_diff_e2") <= maxMeanDiffE2)
-      .select(col("ida").as("a"), col("idb").as("b"), col("mean_diff_e2"))
-  }
-
-  /** keep/drop verdict over an already-fingerprinted corpus — the
-    * [[ImageDedup.dedupFromThumbs]] two-stage rule one modality over:
-    * identical envelopes collapse to their min-id representative
-    * through ONE hash aggregation, the banded candidate join + verify
-    * run over REPRESENTATIVES only, and the member-level verdict
-    * resolves to `coalesce(nbr_min, rep when rep < d)` (members share
-    * the exact envelope, so member↔member distance IS rep↔rep
-    * distance). `ids` is the full media id list — clips that failed
-    * to decode are kept. */
-  def dedupFromPrints(ids: DataFrame, prints: DataFrame,
-                      maxMeanDiffE2: Long = DefaultMaxMeanDiffE2,
-                      maxBucketSize: Int = 1000): DataFrame = {
-    // family resolution as ONE window over the envelope key (the
-    // [[ImageDedup.dedupFromThumbs]] r16 restructure: the former
-    // groupBy(env) + left_semi + join-back-on-env spent three
-    // exchanges, two keyed on the 65-int array, for what a single
-    // min-over-partition delivers from one shuffle). r17: eager
-    // localCheckpoint — the window output feeds five static
-    // consumers, and without the barrier each re-plans and re-runs
-    // the Sort+Window above the (AQE-reused) exchange
-    // (the [[ImageDedup.dedupFromThumbs]] materialization rule).
-    val withRep = prints.withColumn("rep",
-        min(col("doc_id")).over(Window.partitionBy(col("env"))))
-      .localCheckpoint()
-    val reps = withRep.filter(col("doc_id") === col("rep")).drop("rep")
-    val repMatch = nearDupPairs(reps, maxMeanDiffE2, maxBucketSize)
-      .groupBy(col("b").as("rep")).agg(min(col("a")).as("nbr_min"))
-    val verdict = withRep.select(col("doc_id"), col("rep"))
-      .join(repMatch, Seq("rep"), "left")
-      .select(col("doc_id"),
-        coalesce(col("nbr_min"), when(col("rep") < col("doc_id"), col("rep")))
-          .as("match_id"))
-    ids.select(col("doc_id"))
-      .join(verdict, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("match_id"),
-        col("match_id").isNull.as("keep"))
-  }
-
-  // ---- stored index + incremental admission ----
-
-  /** Directory-partition count for the stored bucket index — the
-    * [[ImageDedup.BucketShards]] rule one modality over: the
-    * (bk, bv, ek) key hashes into this many `shard=` partitions so an
-    * admission batch's touched-shard set (driver-bounded) prunes every
-    * untouched shard's files at the directory level. */
-  val BucketShards = 32
-
-  /** Build the STORED audio-dedup index at `dir` — the persisted form
-    * of [[dedupFromPrints]]'s working state, so a re-crawl admits
-    * against it incrementally ([[incrementalAudioAdmission]]) instead
-    * of re-decoding and re-pairing the whole corpus. Layout (the
-    * [[ImageDedup.buildImageIndex]] design one modality over):
-    *  - `dir/prints` — ONE row per exact-envelope FAMILY
-    *    REPRESENTATIVE (min doc_id): the 65-int envelope + sign-delta
-    *    hash + level keys + envelope sum, id-sharded and id-SORTED
-    *    inside each file so the admission's candidate lookup prunes
-    *    row groups by doc_id min/max stats. Members share their rep's
-    *    exact envelope, so rep↔probe distance IS member↔probe
-    *    distance and storing reps loses nothing;
-    *  - `dir/buckets` — the (bk, bv, ek, doc_id) band/level bucket
-    *    entries of the representatives (8 per rep), hash-sharded on
-    *    the bucket key into [[BucketShards]] directory partitions,
-    *    each bucket capped at `maxBucketSize` lowest ids (the
-    *    [[candidates]] hot-bucket guard, applied once at build).
-    * Typically committed through [[graft.IndexCatalog.openOrBuild]],
-    * which stamps build params + corpus vintage and makes reopen a
-    * pure manifest read. */
-  def buildAudioIndex(withAudio: DataFrame, dir: String,
-                      maxBucketSize: Int = 1000,
-                      filesPerShard: Int = 2): Unit = {
-    val prints = fingerprints(withAudio).cache()
-    // eager cache fill — the [[dedup]] cold-cache rationale
-    prints.count()
-    try {
-      // reps via window-min over the envelope key (the
-      // [[dedupFromPrints]] r16 restructure: one exchange, not three)
-      val reps = prints.withColumn("rep",
-          min(col("doc_id")).over(Window.partitionBy(col("env"))))
-        .filter(col("doc_id") === col("rep")).drop("rep").cache()
-      try {
-        graft.sources.CorpusSink.writeParquet(
-          reps.withColumn("shard", pmod(col("doc_id"), lit(16)).cast("int")),
-          s"$dir/prints", shardCol = "shard", sortCol = "doc_id",
-          filesPerShard = filesPerShard)
-        val entries = bucketEntries(
-          reps.withColumn("bands", bands(col("abits"))))
-        val capped = entries.withColumn("r", row_number().over(
-            Window.partitionBy(col("bk"), col("bv"), col("ek"))
-              .orderBy(col("doc_id"))))
-          .filter(col("r") <= maxBucketSize)
-          .select(col("doc_id"), col("bk"), col("bv"), col("ek"),
-            pmod(hash(col("bk"), col("bv"), col("ek")), lit(BucketShards))
-              .cast("int").as("shard"))
-        graft.sources.CorpusSink.writeParquet(capped, s"$dir/buckets",
-          shardCol = "shard", sortCol = "doc_id",
-          filesPerShard = filesPerShard)
-      } finally reps.unpersist(blocking = false)
-    } finally prints.unpersist(blocking = false)
-  }
-
-  /** Lazy (doc_id, match_id) frame of [[incrementalAudioAdmission]]
-    * for an already-fingerprinted batch `bp` — the candidate-join +
-    * verify dataflow itself, exposed (`private[graft]`) so plan
-    * audits (`tools.Plans`) can capture what the eager admission
-    * wrapper checkpoints away. The two bounded driver collects
-    * (touched shards ≤ [[BucketShards]]; candidate rep ids, the
-    * admission contract's own bound) run at construction — the
-    * [[ImageDedup.admissionMatches]] shape one modality over. */
-  private[graft] def admissionMatches(bp: DataFrame, dir: String,
-                                      maxMeanDiffE2: Long = DefaultMaxMeanDiffE2,
-                                      maxIdPushdown: Int = 10000): DataFrame = {
-    val spark = bp.sparkSession
-    val bEntries = bucketEntries(
-        bp.withColumn("bands", bands(col("abits"))))
-      .select(col("doc_id").as("qid"), col("bk"), col("bv"), col("ek"),
-        pmod(hash(col("bk"), col("bv"), col("ek")), lit(BucketShards))
-          .cast("int").as("shard"))
-    val touched = bEntries.select(col("shard")).distinct()
-      .collect().map(_.getInt(0))
-    val stored = spark.read.parquet(s"$dir/buckets")
-      .filter(col("shard").isin(touched.map(Integer.valueOf): _*))
-    val cand = bEntries.join(stored, Seq("shard", "bk", "bv", "ek"))
-      .select(col("qid"), col("doc_id").as("rep")).distinct()
-    // the driver materialization is bounded BY CONSTRUCTION: the
-    // limit probe collects at most maxIdPushdown+1 ids, so a
-    // pathological batch hitting many hot buckets can overflow the
-    // pushdown budget but never build an unbounded driver array —
-    // overflow falls through to the full-scan join
-    val repIds = cand.select(col("rep")).distinct()
-      .limit(maxIdPushdown + 1).collect().map(_.getLong(0))
-    val repPrints0 = spark.read.parquet(s"$dir/prints")
-    val repPrints =
-      if (repIds.length <= maxIdPushdown)
-        repPrints0.filter(
-          col("doc_id").isin(repIds.map(java.lang.Long.valueOf): _*))
-      else repPrints0
-    val msd = maxSumDiff(maxMeanDiffE2)
-    val joined = cand
-      .join(bp.select(col("doc_id").as("qid"), col("env").as("eb"),
-        col("es").as("esb")), Seq("qid"))
-      .join(repPrints.select(col("doc_id").as("rep"),
-        col("env").as("ea"), col("es").as("esa")), Seq("rep"))
-      .filter(abs(col("esa") - col("esb")) <= msd)
-      .select(col("rep").as("ida"), col("qid").as("idb"),
-        col("ea"), col("eb"))
-    pairDistances(joined)
-      .filter(col("mean_diff_e2") <= maxMeanDiffE2)
-      .groupBy(col("idb").as("doc_id"))
-      .agg(min(col("ida")).as("match_id"))
-  }
-
-  /** Incremental AUDIO admission — [[ImageDedup.incrementalImageAdmission]]
-    * one modality over: each batch clip is admitted unless some
-    * INDEXED representative is within `maxMeanDiffE2` exact envelope
-    * distance. The batch decodes in one zero-shuffle typed pass
-    * (undecodable media stays `novel`); candidates come from the
-    * (bk, bv, ek) equi-join into `dir/buckets` with touched-shard
-    * directory pruning; the exact verify reads `dir/prints` as a
-    * pushed `isin` over the id-sorted files (broadcast-join fallback
-    * above `maxIdPushdown`); the envelope-sum pre-filter gates the
-    * typed 65-element exact pass, and every `near_dup` flag carries
-    * the MIN matching rep as an exact-verified witness. Banding can
-    * only cost recall (gated in `q_dedup_incr_audio`); drops are
-    * SOUND by construction. */
-  def incrementalAudioAdmission(batchMedia: DataFrame, dir: String,
-                                maxMeanDiffE2: Long = DefaultMaxMeanDiffE2,
-                                maxIdPushdown: Int = 10000): DataFrame = {
-    val bp = fingerprints(batchMedia).cache()
-    try {
-      // eager localCheckpoint (not cache): the O(batch)-row match
-      // table materializes NOW so the batch-print cache can release
-      // below, and its blocks free with the frame
-      val matched = admissionMatches(bp, dir, maxMeanDiffE2, maxIdPushdown)
-        .localCheckpoint()
-      batchMedia.select(col("doc_id"))
-        .join(matched, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("match_id").isNotNull, lit(Dedup.NearDup))
-            .otherwise(lit(Dedup.Novel)).as("status"),
-          col("match_id"), col("match_id").isNull.as("keep"))
-    } finally bp.unpersist(blocking = false)
-  }
+      val es = env.foldLeft(0L)(_ + _)
+      val (ekA, ekB) = levelKeys(es)
+      MediaDedup.Frame(env, Array(es), signBits(env), ekA, ekB)
+    }.toSeq
 
   /** Fixture media column: every doc carries its planted WAV — the
     * [[withPlantedTwins]] base universe without the twins; the
@@ -426,25 +116,16 @@ object AudioDedup {
       .filter(id => id % 20 == 0 && id < 2000)
       .mapPartitions(_.flatMap { id =>
         val media = Multimodal.plantWav(id)
-        Multimodal.decodeWav(media) match {
-          case Some((rate, ch, samples)) =>
-            val near = samples.clone()
-            var i = 0
-            while (i < near.length) {
-              if (i % 3 == 0)
-                near(i) = math.min(32767, near(i) + 1).toShort
-              i += 1
-            }
-            val far = samples.clone()
-            var j = 0
-            while (j < far.length) {
-              far(j) = (((far(j).toInt + 32768 + 9973 + (j % 7) * 8191)
-                % 65536) - 32768).toShort
-              j += 1
-            }
-            Iterator((id + 1000000L, wavFromPcm(rate, ch, near)),
-              (id + 2000000L, wavFromPcm(rate, ch, far)))
-          case None => Iterator.empty
+        Multimodal.decodeWav(media).iterator.flatMap { case (rate, ch, samples) =>
+          val far = samples.clone()
+          var j = 0
+          while (j < far.length) {
+            far(j) = (((far(j).toInt + 32768 + 9973 + (j % 7) * 8191)
+              % 65536) - 32768).toShort
+            j += 1
+          }
+          reencodedTwin(media).map(id + 1000000L -> _) ++
+            Iterator(id + 2000000L -> wavFromPcm(rate, ch, far))
         }
       })
       .toDF("doc_id", "media")
@@ -471,16 +152,6 @@ object AudioDedup {
     out.toByteArray
   }
 
-  /** Fixture media column for the `q_dedup_audio` gate: every doc
-    * carries its planted WAV ([[Multimodal.plantWav]] — junk LIST
-    * chunk, varying rate/channels/length), and every doc_id ≡ 0
-    * (mod 20) additionally plants a NEAR-DUPLICATE TWIN under
-    * doc_id + 1,000,000 — the source's DECODED samples nudged +1
-    * (clamped) on every 3rd position, re-encoded as a canonical WAV.
-    * Both sides of the compare go through a REAL decode; the
-    * perturbation stays below both the sign-delta margins and the
-    * verify threshold while any two DISTINCT planted clips differ by
-    * orders of magnitude more. */
   /** Fixture twin: decode `media`, +1 on every 3rd PCM sample (the
     * re-encode/dither artifact an envelope hash must survive),
     * re-encoded as WAV. None when undecodable. */
@@ -496,6 +167,16 @@ object AudioDedup {
       wavFromPcm(rate, ch, p)
     }
 
+  /** Fixture media column for the `q_dedup_audio` gate: every doc
+    * carries its planted WAV ([[Multimodal.plantWav]] — junk LIST
+    * chunk, varying rate/channels/length), and every doc_id ≡ 0
+    * (mod 20) additionally plants a NEAR-DUPLICATE TWIN under
+    * doc_id + 1,000,000 — the source's DECODED samples nudged +1
+    * (clamped) on every 3rd position, re-encoded as a canonical WAV.
+    * Both sides of the compare go through a REAL decode; the
+    * perturbation stays below both the sign-delta margins and the
+    * verify threshold while any two DISTINCT planted clips differ by
+    * orders of magnitude more. */
   def withPlantedTwins(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -508,25 +189,5 @@ object AudioDedup {
         else base
       })
       .toDF("doc_id", "media")
-  }
-
-  /** End-to-end: decode → envelope/hash → banded candidates → exact
-    * verify → verdict. The fingerprint table is cached across its
-    * consumers and released after the verdict materializes; the
-    * RETURNED verdict is cached and caller-owned (the
-    * [[ImageDedup.dedup]] contract). */
-  def dedup(withAudio: DataFrame,
-            maxMeanDiffE2: Long = DefaultMaxMeanDiffE2,
-            maxBucketSize: Int = 1000): DataFrame = {
-    val prints = fingerprints(withAudio).cache()
-    // eager cache fill — the ImageDedup/VideoDedup.dedup cold-cache
-    // rationale (AQE submits the verdict dataflow's leaf exchange
-    // stages concurrently; a cold cache re-decodes per stage)
-    prints.count()
-    val res = dedupFromPrints(withAudio.select(col("doc_id")), prints,
-      maxMeanDiffE2, maxBucketSize).cache()
-    try res.count()
-    finally prints.unpersist(blocking = false)
-    res
   }
 }

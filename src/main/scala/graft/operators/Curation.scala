@@ -86,25 +86,10 @@ object Curation {
       countDistinct(col("chunk_id")).as("n_chunks"))
   }
 
-  /** HOST-governance gate composed into curation — how crawl
-    * curation actually consumes [[UrlOps]]: a host whose URL-alias
-    * pressure (duplicate surplus / raw count) reaches
-    * `maxHostDupE6` is dropped WHOLE, before any doc-level gate (an
-    * alias-farm host poisons every downstream stage and its docs
-    * are near-copies of each other anyway; CommonCrawl-style
-    * curation blocklists it at the frontier). `urls` carries
-    * (doc_id, url) for the same corpus.
-    *
-    * Scale shape: canonicalization is a per-row codegen'd projection
-    * ([[UrlOps.withCanonical]]); the host report aggregates to
-    * |hosts| rows; the over-threshold host set is tiny and
-    * BROADCASTS into an anti-join keyed on the doc's host — one
-    * projection + one broadcast anti-join on top of [[curate]]'s
-    * single-shuffle-per-stage budget, never an extra corpus
-    * shuffle. */
   /** MEDIA-governance gate composed into curation — how a multimodal
     * corpus run consumes the media near-dup verdicts
-    * ([[ImageDedup]]/[[AudioDedup]]/[[VideoDedup]]): a doc whose
+    * ([[MediaDedup.dedup]] of [[ImageDedup]], [[AudioDedup]] and
+    * [[VideoDedup]]): a doc whose
     * attached image/audio/video was judged a near-dup of an earlier
     * doc's media is dropped WHOLE before any doc-level gate (its text
     * is a re-crawl/re-upload shell around duplicated media — the
@@ -147,6 +132,22 @@ object Curation {
     fromGated(kept, evalDocs, contamThresholdE6, targetPerSource, seqLen)
   }
 
+  /** HOST-governance gate composed into curation — how crawl
+    * curation actually consumes [[UrlOps]]: a host whose URL-alias
+    * pressure (duplicate surplus / raw count) reaches
+    * `maxHostDupE6` is dropped WHOLE, before any doc-level gate (an
+    * alias-farm host poisons every downstream stage and its docs
+    * are near-copies of each other anyway; CommonCrawl-style
+    * curation blocklists it at the frontier). `urls` carries
+    * (doc_id, url) for the same corpus.
+    *
+    * Scale shape: canonicalization is a per-row codegen'd projection
+    * ([[UrlOps.withCanonical]]); the host report aggregates to
+    * |hosts| rows; the over-threshold host set is tiny and
+    * BROADCASTS into an anti-join keyed on the doc's host — one
+    * projection + one broadcast anti-join on top of [[curate]]'s
+    * single-shuffle-per-stage budget, never an extra corpus
+    * shuffle. */
   def curateWithHostGate(docs: DataFrame, urls: DataFrame,
                          evalDocs: DataFrame,
                          maxHostDupE6: Long = 500000L,

@@ -1,46 +1,28 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Perceptual-hash IMAGE near-dup detection — the multimodal member
-  * of the dedup family (crawl pipelines run it right after HTML
-  * extraction: mirrored/re-encoded/lightly-edited images are the
-  * image-side analogue of boilerplate text). dHash (difference hash,
-  * the public aHash/dHash family): decode → fixed 9×8 grayscale
-  * thumbnail → 64 bits of adjacent-cell comparisons; near-duplicate
-  * images agree on almost every bit because the comparisons are
-  * invariant to brightness shifts and tiny pixel noise.
-  *
-  * Scale shape (the [[Dedup]] doctrine applied to pixels):
-  *  - decode + thumbnail + hash is ONE zero-shuffle typed pass over
-  *    the media scan ([[Multimodal.decodeFeatures]]'s shape);
-  *  - candidates come from a (band, value, color-cell) EQUI-JOIN
-  *    over 4×16-bit Hamming bands × 2 offset mean-color grids — by
-  *    pigeonhole any pair within Hamming distance 3 shares ≥1 band,
-  *    and the color key (the absolute-level aHash complement that
-  *    keeps FLAT images from collapsing the band join into a
-  *    near-cross-product) loses only pairs straddling both grids in
-  *    different channels; never an all-pairs scan;
-  *  - the exact verify (mean absolute thumbnail difference) runs on
-  *    CANDIDATES ONLY, joining the 216-int thumbnails BY ID — narrow
-  *    rows, bounded pair count, same two-stage discipline as
-  *    [[Dedup.semanticDedup]];
-  *  - and the whole near stage runs over one REPRESENTATIVE per
-  *    exact-identical thumbnail family ([[dedupFromThumbs]] — the
-  *    [[Dedup.exact]]-before-near split applied to pixels), so pair
-  *    cost scales with distinct image content, not corpus size.
-  * Every emitted drop carries an exact-verified witness, so drops are
-  * SOUND by construction; banding can only cost recall, which the
-  * `q_dedup_image` contract gates on planted twins.
+/** The IMAGE modality of [[MediaDedup]]: decode → fixed 9×8 RGB
+  * thumbnail (216 cells, 3 channels) → dHash (difference hash: 64 bits
+  * of adjacent-cell comparisons, invariant to brightness shifts and
+  * small pixel noise, so re-encoded/lightly-edited twins agree on
+  * almost every bit) plus two mean-color grid keys; and the planted
+  * fixtures of the `q_dedup_image` / `q_dedup_incr_image` gates. An
+  * image is one frame; the engine owns candidates, verify, verdict,
+  * stored index and admission.
   */
-object ImageDedup {
+object ImageDedup extends MediaDedup {
 
   /** Thumbnail geometry: 9 columns × 8 rows so each row yields 8
     * adjacent-column comparisons → exactly 64 hash bits. */
   val ThumbW = 9
   val ThumbH = 8
+
+  val Cells: Int = ThumbW * ThumbH * 3
+  val Channels = 3
+  val DefaultMaxMeanDiffE2 = 600L
+  val MinContainPct = 100
 
   /** RGB thumbnail of decoded pixels: nearest-neighbor resample to
     * 9×8 ([[Multimodal.resizePixels]] — the pipeline's one resize
@@ -110,374 +92,21 @@ object ImageDedup {
     (key(0L), key(1152L))
   }
 
-  /** Largest Σ|per-cell diff| a pair within `maxMeanDiffE2` can have
-    * (mean_e2 = ⌊Σ·100/216⌋ ≤ m ⟹ Σ ≤ ⌊(m+1)·216/100⌋) — and
-    * |Σa_c − Σb_c| ≤ Σ|diff| per channel, so exact channel-sum
-    * distance is a NECESSARY condition usable as a codegen'd
-    * pre-filter ahead of the interpreted 216-element verify. */
-  private[graft] def maxSumDiff(maxMeanDiffE2: Long): Long =
-    (maxMeanDiffE2 + 1) * (ThumbW * ThumbH * 3) / 100
-
-  /** Per-FRAME feature kernel over already-decoded pixels — the
-    * [[thumbRow]] math without the container decode, shared with
-    * [[VideoDedup]] (which walks its own container and decodes each
-    * sampled frame before fingerprinting it like a still image):
-    * (216-int RGB thumb, dhash, ckA, ckB, channel sums). */
+  /** One image frame's features over already-decoded pixels: the RGB
+    * thumbnail, its channel sums, dHash and color-grid keys — shared
+    * with [[VideoDedup]], whose sampled frames are images. */
   private[operators] def frameFeatures(px: Array[Byte], w: Int, h: Int)
-      : (Array[Int], Long, Long, Long, Array[Long]) = {
+      : MediaDedup.Frame = {
     val t = rgbThumb(px, w, h)
     val s = channelSums(t)
     val (ckA, ckB) = colorKeys(s)
-    (t, dhash(t), ckA, ckB, s)
+    MediaDedup.Frame(t, s, dhash(t), ckA, ckB)
   }
 
-  /** decode → (doc_id, 216-int RGB thumb, dhash, two color-grid keys,
-    * exact per-channel sums sr/sg/sb — the verify pre-filter columns)
-    * in one zero-shuffle typed per-partition pass. Undecodable media
-    * rows drop out (the corrupt-input rule every decode stage here
-    * follows). */
-  def thumbnails(withMedia: DataFrame): DataFrame = {
-    val spark = withMedia.sparkSession
-    import spark.implicits._
-    withMedia.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, bytes) => thumbRow(id, bytes) })
-      .toDF("doc_id", "thumb", "dhash", "ckA", "ckB", "sr", "sg", "sb")
-  }
-
-  /** Decoded thumbnail row (id, thumb, dhash, ckA, ckB, sr, sg, sb)
-    * for one media blob — the shared per-row kernel of [[thumbnails]]
-    * and the streaming twin's stateless decode; None for undecodable
-    * media. */
-  private[graft] def thumbRow(id: Long, bytes: Array[Byte])
-      : Option[(Long, Seq[Int], Long, Long, Long, Long, Long, Long)] =
+  def frames(bytes: Array[Byte]): Seq[MediaDedup.Frame] =
     Multimodal.decodeImage(bytes).map { case (w, h, px) =>
-      val t = rgbThumb(px, w, h)
-      val s = channelSums(t)
-      val (ckA, ckB) = colorKeys(s)
-      (id, t.toSeq, dhash(t), ckA, ckB, s(0), s(1), s(2))
-    }
-
-  /** 4×16-bit Hamming bands of the dHash (the [[Dedup.simhash]]
-    * banding rule). */
-  def bands(dhashCol: Column): Column =
-    array((0 until 4).map(b =>
-      shiftright(dhashCol, b * 16).bitwiseAND(lit(0xffffL))): _*)
-
-  private val bucketObserveSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Candidate pairs = images sharing ≥1 (dHash band, color cell)
-    * bucket — complete for Hamming distance ≤ 3 among images sharing
-    * a color cell in EITHER grid (the color key is what keeps flat
-    * images from collapsing the band join into a near-cross-product;
-    * see [[colorKeys]]) — with the [[Dedup.minhashCandidates]]
-    * hot-bucket guard: a still-degenerate bucket (identical blank
-    * images at crawl scale) is capped at the `maxBucketSize` lowest
-    * ids, keeping genuine dup clusters connected through the kept
-    * representatives while bounding the pair count; capped-out rows
-    * surface as an observe metric, never silently. */
-  /** The 8 bucket entries per image — 4 dHash bands × 2 color grids,
-    * `bk` the composite band-and-grid id so grids never cross-join —
-    * shared by the self-join candidates (batch dedup) and the stored
-    * bucket index (incremental admission). Input needs a `bands`
-    * column ([[bands]]); output (doc_id, bk, bv, ck). */
-  def bucketEntries(withBands: DataFrame): DataFrame = {
-    val b0 = withBands.select(col("doc_id"), col("ckA"), col("ckB"),
-      posexplode(col("bands")).as(Seq("band", "bv")))
-    b0.select(col("doc_id"), (col("band") * 2).as("bk"),
-        col("bv"), col("ckA").as("ck"))
-      .unionByName(b0.select(col("doc_id"), (col("band") * 2 + 1).as("bk"),
-        col("bv"), col("ckB").as("ck")))
-  }
-
-  def candidates(withBands: DataFrame, maxBucketSize: Int = 1000): DataFrame = {
-    val b = bucketEntries(withBands)
-    val ranked = b.withColumn("r", row_number().over(
-        Window.partitionBy(col("bk"), col("bv"), col("ck"))
-          .orderBy(col("doc_id"))))
-      .observe(s"dhash_bucket_truncated_${bucketObserveSeq.incrementAndGet()}",
-        sum(when(col("r") > maxBucketSize, 1L).otherwise(0L)).as("n_dropped"))
-      .filter(col("r") <= maxBucketSize)
-    val l = ranked.select(col("bk"), col("bv"), col("ck"), col("doc_id").as("a"))
-    val r = ranked.select(col("bk"), col("bv"), col("ck"), col("doc_id").as("b"))
-    l.join(r, Seq("bk", "bv", "ck")).filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-  }
-
-  /** Exact-verified near-dup pairs (a < b): banded candidates whose
-    * mean absolute PER-CHANNEL thumbnail difference (e2 fixed point
-    * over the 216 channel cells) is ≤ `maxMeanDiffE2`. The HOF pair here runs
-    * over two already-materialized 216-int attributes on BOUNDED
-    * candidate rows — not the corpus — which is the one place the
-    * interpreted-HOF cost is acceptable (the [[Dedup.minhashEstimate]]
-    * precedent). */
-  /** Exact mean-abs thumbnail distance (e2) per joined pair row
-    * (`ida`, `idb`, `ta`, `tb`) — a TYPED per-partition loop, not an
-    * `aggregate(zip_with(...))` filter: the HOF form sits directly
-    * above a join, Catalyst merges the filter into the join
-    * CONDITION, and a BroadcastNestedLoopJoin then evaluates the
-    * interpreted 216-element lambda for EVERY pair — measured 27 s of
-    * a 30 s key at sf0.1, with the cheap pre-filter AND'd in but not
-    * saving the eval. `mapPartitions` is a hard optimizer barrier (the
-    * join keeps only the cheap condition) and the loop is JIT'd
-    * scala — the [[Similarity.quantizedCorpus]] precedent. */
-  private[graft] def pairDistances(joined: DataFrame): DataFrame = {
-    val spark = joined.sparkSession
-    import spark.implicits._
-    joined.select(col("ida").cast("long"), col("idb").cast("long"),
-        col("ta"), col("tb"))
-      .as[(Long, Long, Array[Int], Array[Int])]
-      .mapPartitions(_.map { case (a, b, ta, tb) =>
-        var s = 0L
-        var i = 0
-        val n = math.min(ta.length, tb.length)
-        while (i < n) { s += math.abs(ta(i) - tb(i)).toLong; i += 1 }
-        (a, b, s * 100L / (ThumbW * ThumbH * 3))
-      }).toDF("ida", "idb", "mean_diff_e2")
-  }
-
-  def nearDupPairs(thumbs: DataFrame, maxMeanDiffE2: Long = 600L,
-                   maxBucketSize: Int = 1000): DataFrame = {
-    val cand = candidates(thumbs.withColumn("bands", bands(col("dhash"))),
-      maxBucketSize)
-    val ta = thumbs.select(col("doc_id").as("a"), col("thumb").as("thumb_a"),
-      col("sr").as("sra"), col("sg").as("sga"), col("sb").as("sba"))
-    val tb = thumbs.select(col("doc_id").as("b"), col("thumb").as("thumb_b"),
-      col("sr").as("srb"), col("sg").as("sgb"), col("sb").as("sbb"))
-    val msd = maxSumDiff(maxMeanDiffE2)
-    val joined = cand.join(ta, Seq("a")).join(tb, Seq("b"))
-      // codegen'd channel-sum pre-filter (a NECESSARY condition —
-      // see maxSumDiff) gates the exact pass
-      .filter(abs(col("sra") - col("srb")) <= msd &&
-        abs(col("sga") - col("sgb")) <= msd &&
-        abs(col("sba") - col("sbb")) <= msd)
-      .select(col("a").as("ida"), col("b").as("idb"),
-        col("thumb_a").as("ta"), col("thumb_b").as("tb"))
-    pairDistances(joined)
-      .filter(col("mean_diff_e2") <= maxMeanDiffE2)
-      .select(col("ida").as("a"), col("idb").as("b"), col("mean_diff_e2"))
-  }
-
-  /** keep/drop verdict over an already-thumbnailed corpus: a doc is
-    * dropped iff some exact-verified near-dup partner with a SMALLER
-    * id exists (the keep-min survivor convention); `match_id` is the
-    * minimum such witness. `ids` is the full media id list (images
-    * that failed to decode are kept — nothing verified against them).
-    *
-    * TWO-STAGE, exactly like the text side ([[Dedup.exact]] before
-    * the near-dup operators): identical thumbnails first collapse to
-    * their min-id representative through ONE hash aggregation — the
-    * realistic mega-class (the same logo/banner file on millions of
-    * pages) costs its row count — and the banded candidate join +
-    * verify run over REPRESENTATIVES only, so pair cost scales with
-    * DISTINCT image content, not corpus size (the planted fixture's
-    * image universe has period 36,608: at sf10 the rep-level pair
-    * scan is 8× smaller and stops growing with n, where the
-    * member-level scan measured 46M pairs / 124 s). The verdict is
-    * EQUIVALENT to the member-level rule: family members share the
-    * exact thumbnail, so member↔member distance IS rep↔rep distance,
-    * and the minimum partner of member d resolves to
-    * `coalesce(nbr_min, rep when rep < d)` — a verified neighbor
-    * family's min is always smaller than this family's rep when it
-    * exists, and the rep itself witnesses every non-rep member. */
-  def dedupFromThumbs(ids: DataFrame, thumbs: DataFrame,
-                      maxMeanDiffE2: Long = 600L,
-                      maxBucketSize: Int = 1000): DataFrame = {
-    // exact stage: thumbnail → family representative (min doc_id) as
-    // ONE window over the thumbnail key — the r16 restructure: the
-    // former groupBy(thumb) + left_semi re-derive + join-back-on-thumb
-    // spent three exchanges (two of them keyed on the 216-int array)
-    // where a single min-over-partition delivers both the rep ids AND
-    // the member→rep mapping from one shuffle of the table.
-    // r17: the window output feeds FIVE static consumers (candidates'
-    // two self-join sides, the two verify thumb sides, the verdict
-    // map) — without a materialization barrier each one re-plans the
-    // whole window subtree and the stage chain re-runs Sort+Window
-    // per consumer (AQE reuses only the exchange). One eager
-    // localCheckpoint (|corpus| rows of thumbnail width) truncates
-    // the plan at the family boundary (guide §3.3).
-    val withRep = thumbs.withColumn("rep",
-        min(col("doc_id")).over(Window.partitionBy(col("thumb"))))
-      .localCheckpoint()
-    val reps = withRep.filter(col("doc_id") === col("rep")).drop("rep")
-    // near stage over representatives; a rep's minimum verified
-    // neighbor-family min (always < its own rep id, pairs are a < b)
-    val repMatch = nearDupPairs(reps, maxMeanDiffE2, maxBucketSize)
-      .groupBy(col("b").as("rep")).agg(min(col("a")).as("nbr_min"))
-    val verdict = withRep.select(col("doc_id"), col("rep"))
-      .join(repMatch, Seq("rep"), "left")
-      .select(col("doc_id"),
-        coalesce(col("nbr_min"), when(col("rep") < col("doc_id"), col("rep")))
-          .as("match_id"))
-    ids.select(col("doc_id"))
-      .join(verdict, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("match_id"),
-        col("match_id").isNull.as("keep"))
-  }
-
-  // ---- stored index + incremental admission ----
-
-  /** Directory-partition count for the stored bucket index: the
-    * (bk, bv, ck) key hashes into this many `shard=` partitions, so
-    * an admission batch's touched-shard set (≤ BucketShards values,
-    * driver-bounded) prunes every untouched shard's files at the
-    * directory level — the [[Dedup.buildSemanticIndex]] cid-layout
-    * rule applied to perceptual buckets. */
-  val BucketShards = 32
-
-  /** Build the STORED image-dedup index at `dir` — the persisted form
-    * of [[dedupFromThumbs]]'s working state, so a re-crawl admits
-    * against it incrementally ([[incrementalImageAdmission]]) instead
-    * of re-thumbnailing and re-pairing the whole corpus (the
-    * round-14 gap: every other dedup family already had this
-    * lifecycle). Layout:
-    *  - `dir/thumbs` — ONE row per exact-thumbnail FAMILY
-    *    REPRESENTATIVE (min doc_id): the 216-int RGB thumb + dHash +
-    *    color keys + channel sums, id-sharded and id-SORTED inside
-    *    each file so the admission's candidate lookup prunes row
-    *    groups by doc_id min/max stats. Members share their rep's
-    *    exact thumbnail, so rep↔probe distance IS member↔probe
-    *    distance and storing reps loses nothing (the
-    *    [[dedupFromThumbs]] equivalence argument);
-    *  - `dir/buckets` — the (bk, bv, ck, doc_id) band/color bucket
-    *    entries of the representatives (8 per rep), hash-sharded on
-    *    the bucket key into [[BucketShards]] directory partitions,
-    *    each bucket capped at `maxBucketSize` lowest ids (the
-    *    [[candidates]] hot-bucket guard, applied once at build).
-    * Typically committed through [[graft.IndexCatalog.openOrBuild]],
-    * which stamps build params + corpus vintage and makes reopen a
-    * pure manifest read. */
-  def buildImageIndex(withMedia: DataFrame, dir: String,
-                      maxBucketSize: Int = 1000,
-                      filesPerShard: Int = 2): Unit = {
-    val thumbs = thumbnails(withMedia).cache()
-    // eager cache fill — the [[dedup]] cold-cache rationale
-    thumbs.count()
-    try {
-      // reps via window-min over the thumbnail key (the
-      // [[dedupFromThumbs]] r16 restructure: one exchange, not three)
-      val reps = thumbs.withColumn("rep",
-          min(col("doc_id")).over(Window.partitionBy(col("thumb"))))
-        .filter(col("doc_id") === col("rep")).drop("rep").cache()
-      try {
-        graft.sources.CorpusSink.writeParquet(
-          reps.withColumn("shard", pmod(col("doc_id"), lit(16)).cast("int")),
-          s"$dir/thumbs", shardCol = "shard", sortCol = "doc_id",
-          filesPerShard = filesPerShard)
-        val entries = bucketEntries(
-          reps.withColumn("bands", bands(col("dhash"))))
-        val capped = entries.withColumn("r", row_number().over(
-            Window.partitionBy(col("bk"), col("bv"), col("ck"))
-              .orderBy(col("doc_id"))))
-          .filter(col("r") <= maxBucketSize)
-          .select(col("doc_id"), col("bk"), col("bv"), col("ck"),
-            pmod(hash(col("bk"), col("bv"), col("ck")), lit(BucketShards))
-              .cast("int").as("shard"))
-        graft.sources.CorpusSink.writeParquet(capped, s"$dir/buckets",
-          shardCol = "shard", sortCol = "doc_id",
-          filesPerShard = filesPerShard)
-      } finally reps.unpersist(blocking = false)
-    } finally thumbs.unpersist(blocking = false)
-  }
-
-  /** Incremental IMAGE admission — [[Dedup.incrementalSemanticAdmission]]
-    * one modality over: each batch image is admitted unless some
-    * INDEXED representative is within `maxMeanDiffE2` exact thumbnail
-    * distance.
-    *
-    *  1. the batch decodes + thumbnails in one zero-shuffle typed
-    *     pass (undecodable media stays `novel` — nothing verified
-    *     against it);
-    *  2. candidates come from the (bk, bv, ck) equi-join into
-    *     `dir/buckets`, with the batch's DISTINCT touched shards
-    *     (≤ [[BucketShards]] values, driver-bounded collect) filtered
-    *     on the PARTITION column so untouched shards' files never
-    *     open — O(batch + candidates), never O(corpus);
-    *  3. the exact-verify lookup reads `dir/thumbs` filtered to the
-    *     candidate rep ids (driver-bounded by the candidate count —
-    *     the admission contract's own bound) as a PUSHED `isin`
-    *     predicate over the id-sorted files, so row-group min/max
-    *     stats prune the scan; above `maxIdPushdown` candidates it
-    *     falls back to a broadcast join (one streamed scan, no
-    *     shuffle);
-    *  4. the codegen'd channel-sum pre-filter gates the typed
-    *     216-element exact pass ([[pairDistances]] — the HOF-trap
-    *     discipline), and every `near_dup` flag carries the MIN
-    *     matching rep as an exact-verified witness in `match_id`.
-    * Banding can only cost recall (gated in `q_dedup_incr_image`);
-    * drops are SOUND by construction. Output: (doc_id, status,
-    * match_id, keep). */
-  /** Lazy (doc_id, match_id) frame of [[incrementalImageAdmission]]
-    * for an already-thumbnailed batch `bt` — the candidate-join +
-    * verify dataflow itself, exposed (`private[graft]`) so plan
-    * audits (`tools.Plans`) can capture what the eager admission
-    * wrapper checkpoints away. The two bounded driver collects
-    * (touched shards ≤ [[BucketShards]]; candidate rep ids, the
-    * admission contract's own bound) run at construction. */
-  private[graft] def admissionMatches(bt: DataFrame, dir: String,
-                                      maxMeanDiffE2: Long = 600L,
-                                      maxIdPushdown: Int = 10000): DataFrame = {
-    val spark = bt.sparkSession
-    val bEntries = bucketEntries(
-        bt.withColumn("bands", bands(col("dhash"))))
-      .select(col("doc_id").as("qid"), col("bk"), col("bv"), col("ck"),
-        pmod(hash(col("bk"), col("bv"), col("ck")), lit(BucketShards))
-          .cast("int").as("shard"))
-    val touched = bEntries.select(col("shard")).distinct()
-      .collect().map(_.getInt(0))
-    val stored = spark.read.parquet(s"$dir/buckets")
-      .filter(col("shard").isin(touched.map(Integer.valueOf): _*))
-    val cand = bEntries.join(stored, Seq("shard", "bk", "bv", "ck"))
-      .select(col("qid"), col("doc_id").as("rep")).distinct()
-    // limit probe: at most maxIdPushdown+1 ids ever ride the driver —
-    // overflow falls through to the full-scan join (see the
-    // AudioDedup twin for the rationale)
-    val repIds = cand.select(col("rep")).distinct()
-      .limit(maxIdPushdown + 1).collect().map(_.getLong(0))
-    val repThumbs0 = spark.read.parquet(s"$dir/thumbs")
-    val repThumbs =
-      if (repIds.length <= maxIdPushdown)
-        repThumbs0.filter(
-          col("doc_id").isin(repIds.map(java.lang.Long.valueOf): _*))
-      else repThumbs0
-    val msd = maxSumDiff(maxMeanDiffE2)
-    val joined = cand
-      .join(bt.select(col("doc_id").as("qid"), col("thumb").as("tb"),
-        col("sr").as("srb"), col("sg").as("sgb"), col("sb").as("sbb")),
-        Seq("qid"))
-      .join(repThumbs.select(col("doc_id").as("rep"),
-        col("thumb").as("ta"), col("sr").as("sra"),
-        col("sg").as("sga"), col("sb").as("sba")), Seq("rep"))
-      .filter(abs(col("sra") - col("srb")) <= msd &&
-        abs(col("sga") - col("sgb")) <= msd &&
-        abs(col("sba") - col("sbb")) <= msd)
-      .select(col("rep").as("ida"), col("qid").as("idb"),
-        col("ta"), col("tb"))
-    pairDistances(joined)
-      .filter(col("mean_diff_e2") <= maxMeanDiffE2)
-      .groupBy(col("idb").as("doc_id"))
-      .agg(min(col("ida")).as("match_id"))
-  }
-
-  def incrementalImageAdmission(batchMedia: DataFrame, dir: String,
-                                maxMeanDiffE2: Long = 600L,
-                                maxIdPushdown: Int = 10000): DataFrame = {
-    val bt = thumbnails(batchMedia).cache()
-    try {
-      // eager localCheckpoint (not cache): the O(batch)-row match
-      // table materializes NOW so the wide batch-thumb cache can
-      // release below, and its blocks free with the frame — no
-      // session-lifetime cache entry per admission call
-      val matched = admissionMatches(bt, dir, maxMeanDiffE2, maxIdPushdown)
-        .localCheckpoint()
-      batchMedia.select(col("doc_id"))
-        .join(matched, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("match_id").isNotNull, lit(Dedup.NearDup))
-            .otherwise(lit(Dedup.Novel)).as("status"),
-          col("match_id"), col("match_id").isNull.as("keep"))
-    } finally bt.unpersist(blocking = false)
-  }
+      frameFeatures(px, w, h)
+    }.toSeq
 
   /** Fixture media column: every doc carries its planted image — the
     * [[withPlantedTwins]] base universe without the twins; the
@@ -509,26 +138,16 @@ object ImageDedup {
       .filter(id => id % 20 == 0 && id < 2000)
       .mapPartitions(_.flatMap { id =>
         val media = Multimodal.plantHeader(id, Array.emptyByteArray)
-        Multimodal.decodeImage(media) match {
-          case Some((w, h, px)) =>
-            val near = px.clone()
-            var i = 0
-            while (i < near.length) {
-              val xy = (i / 3) % w + (i / 3) / w
-              if (xy % 3 == 0)
-                near(i) = math.min(255, (near(i) & 0xff) + 1).toByte
-              i += 1
-            }
-            val far = px.clone()
-            var j = 0
-            while (j < far.length) {
-              far(j) = (((far(j) & 0xff) + 97 + (j % 3) * 53 +
-                ((j / 3) % 7) * 31) % 256).toByte
-              j += 1
-            }
-            Iterator((id + 1000000L, pngFromPixels(w, h, near)),
-              (id + 2000000L, pngFromPixels(w, h, far)))
-          case None => Iterator.empty
+        Multimodal.decodeImage(media).iterator.flatMap { case (w, h, px) =>
+          val far = px.clone()
+          var j = 0
+          while (j < far.length) {
+            far(j) = (((far(j) & 0xff) + 97 + (j % 3) * 53 +
+              ((j / 3) % 7) * 31) % 256).toByte
+            j += 1
+          }
+          reencodedTwin(media).map(id + 1000000L -> _) ++
+            Iterator(id + 2000000L -> pngFromPixels(w, h, far))
         }
       })
       .toDF("doc_id", "media")
@@ -565,19 +184,6 @@ object ImageDedup {
     out.toByteArray
   }
 
-  /** Fixture media column for the `q_dedup_image` gate: every doc
-    * carries its planted image ([[Multimodal.withPlantedMedia]]'s
-    * PNG/JPEG mix), and every doc_id ≡ 0 (mod 20) additionally plants
-    * a NEAR-DUPLICATE TWIN under doc_id + 1,000,000 — the source's
-    * DECODED pixels nudged +1 (clamped) on every (x+y) % 3 == 0
-    * position, re-encoded as PNG. Even-id sources pair PNG↔PNG; the
-    * fixture's id%20==0 stratum is all even, so cross-codec pairing
-    * (JPEG source, PNG twin) is exercised separately in
-    * `ImageDedupSpec` — either way both sides of the compare go
-    * through a REAL decode, and the perturbation stays below both
-    * the dHash comparison margins and the verify threshold while any
-    * two DISTINCT planted images differ by two orders of magnitude
-    * more. */
   /** Fixture twin: decode `media`, +1 on every pixel whose
     * (x+y) ≡ 0 (mod 3) — the re-encode/levels-shift artifact a
     * perceptual hash must survive — re-encoded as PNG. None when
@@ -595,6 +201,19 @@ object ImageDedup {
       pngFromPixels(w, h, p)
     }
 
+  /** Fixture media column for the `q_dedup_image` gate: every doc
+    * carries its planted image ([[Multimodal.withPlantedMedia]]'s
+    * PNG/JPEG mix), and every doc_id ≡ 0 (mod 20) additionally plants
+    * a NEAR-DUPLICATE TWIN under doc_id + 1,000,000 — the source's
+    * DECODED pixels nudged +1 (clamped) on every (x+y) % 3 == 0
+    * position, re-encoded as PNG. Even-id sources pair PNG↔PNG; the
+    * fixture's id%20==0 stratum is all even, so cross-codec pairing
+    * (JPEG source, PNG twin) is exercised separately in
+    * `ImageDedupSpec` — either way both sides of the compare go
+    * through a REAL decode, and the perturbation stays below both
+    * the dHash comparison margins and the verify threshold while any
+    * two DISTINCT planted images differ by two orders of magnitude
+    * more. */
   def withPlantedTwins(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -607,30 +226,5 @@ object ImageDedup {
         else base
       })
       .toDF("doc_id", "media")
-  }
-
-  /** End-to-end: decode → thumbnail/hash → banded candidates →
-    * exact verify → verdict. The thumbnail table is cached across its
-    * three consumers (two candidate join sides + the verify) and
-    * released after the verdict materializes (the
-    * [[Dedup.semanticDedup]] eager-finish discipline). The RETURNED
-    * verdict is cached and already materialized — the CALLER owns its
-    * `unpersist()` (without the cache, any downstream action would
-    * re-decode the corpus through the released thumbnail lineage);
-    * `q_dedup_image` composes [[thumbnails]]/[[dedupFromThumbs]]
-    * directly and manages its own caches. */
-  def dedup(withMedia: DataFrame, maxMeanDiffE2: Long = 600L,
-            maxBucketSize: Int = 1000): DataFrame = {
-    val thumbs = thumbnails(withMedia).cache()
-    // eager cache fill: the verdict dataflow's leaf exchange stages
-    // are submitted concurrently by AQE, and a cold cache makes every
-    // one re-run the image decode (the VideoDedup.dedup rationale —
-    // measured there via tools.JobProf)
-    thumbs.count()
-    val res = dedupFromThumbs(withMedia.select(col("doc_id")), thumbs,
-      maxMeanDiffE2, maxBucketSize).cache()
-    try res.count()
-    finally thumbs.unpersist(blocking = false)
-    res
   }
 }

@@ -1,560 +1,39 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Perceptual VIDEO near-dup detection — the temporal member of the
-  * dedup family, completing the modality matrix (text / embedding /
-  * semantic / image / audio / video). Re-encoded, re-muxed, and
-  * frame-dropped copies of the same footage are the video-side
-  * analogue of boilerplate text; a pretraining ingest detects them on
-  * SAMPLED FRAMES, not full streams (the [[Multimodal.videoFrames]]
-  * rate-reduction rule), so the whole operator is the
-  * [[ImageDedup]] design with a temporal axis:
-  *
-  *  - FINGERPRINT: one zero-shuffle typed pass walks each RIFF/AVI
-  *    container ([[Multimodal.decodeAvi]]), decodes every `everyN`-th
-  *    frame with the general image decoder (MJPEG or re-encoded PNG
-  *    frames both land on [[Multimodal.decodeImage]]), and emits one
-  *    row per sampled frame carrying the image family's features —
-  *    216-int RGB thumb, 64-bit dHash, two offset color-grid keys
-  *    ([[ImageDedup.frameFeatures]]);
-  *  - CANDIDATES: stream pairs sharing ≥1 (dHash band, color cell)
-  *    bucket through ANY sampled frame — order-independent on
-  *    purpose, so a frame-dropped twin (whose frame ORDINALS shift)
-  *    still collides with its source; per-bucket hot cap with an
-  *    observe metric, the [[ImageDedup.candidates]] guard;
-  *  - VERIFY on candidates only: CONTAINMENT, not symmetric
-  *    distance — the later stream `b` is a near-dup of `a` iff
-  *    ≥ `minContainPct`% of b's sampled frames have an exact
-  *    mean-abs-thumb-diff ≤ `maxMeanDiffE2` partner SOMEWHERE in a
-  *    (set semantics; a sub-stream adds nothing new). The exact
-  *    per-frame math runs in a typed `mapPartitions` barrier
-  *    ([[pairContainment]]) — never in a join condition (the
-  *    interpreted-HOF-into-join trap, `ImageDedup.pairDistances`);
-  *  - TWO-STAGE like every dedup family here: streams with
-  *    byte-identical sampled-thumb SEQUENCES collapse to their min-id
-  *    representative first (one hash aggregation), and the banded
-  *    candidate join + containment verify run over representatives
-  *    only, so pair cost scales with distinct footage, not corpus
-  *    size.
-  *
-  * Reference scope note: the reference engine (SketchMLFlink) has no
-  * media operators at all — this file extends the Group-B pipeline
-  * surface; the dedup doctrine it follows is
-  * `Dedup.scala`'s (banded candidates, exact verify, keep-min).
+/** The VIDEO modality of [[MediaDedup]]: walk the RIFF/AVI container
+  * ([[Multimodal.decodeAvi]]), decode every [[SampleEveryN]]-th frame
+  * with the general image decoder (MJPEG or re-encoded PNG frames both
+  * land on [[Multimodal.decodeImage]]) and take each sampled frame's
+  * image features ([[ImageDedup.frameFeatures]]: 216 cells, 3
+  * channels). A stream is its sampled frames in order; bucket keys are
+  * the union over frames, so a frame-dropped twin (whose frame ordinals
+  * shift) still collides with its source, and the verify is
+  * containment: the later stream is a near-dup when ≥ 70% of its
+  * sampled frames have a partner in the earlier one (set semantics — a
+  * sub-stream adds nothing new). Plus the planted fixtures of the
+  * `q_dedup_video` / `q_dedup_incr_video` gates.
   */
-object VideoDedup {
+object VideoDedup extends MediaDedup {
 
   /** Temporal sampling rate: fingerprint every 2nd frame (the
     * [[Multimodal.videoFrames]] default — pretraining video ingest
     * rate-reduces before any per-frame work). */
   val SampleEveryN = 2
 
-  /** One row per SAMPLED DECODABLE frame: (doc_id, fidx, thumb,
-    * dhash, ckA, ckB) — the [[ImageDedup.thumbnails]] schema plus the
-    * frame ordinal. Undecodable containers and frames emit nothing
-    * (the corrupt-input rule every decode stage follows). */
-  def fingerprints(withVideo: DataFrame,
-                   everyN: Int = SampleEveryN): DataFrame = {
-    require(everyN > 0, s"everyN must be positive, got $everyN")
-    val spark = withVideo.sparkSession
-    import spark.implicits._
-    withVideo.select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, bytes) =>
-        Multimodal.decodeAvi(bytes).toSeq.flatMap { frames =>
-          frames.zipWithIndex
-            .filter { case (_, f) => f % everyN == 0 }
-            .flatMap { case (fb, f) =>
-              Multimodal.decodeImage(fb).map { case (w, h, px) =>
-                val (t, dh, ckA, ckB, s) = ImageDedup.frameFeatures(px, w, h)
-                (id, f.toLong, t.toSeq, dh, ckA, ckB, s(0), s(1), s(2))
-              }
-            }
-        }
-      })
-      .toDF("doc_id", "fidx", "thumb", "dhash", "ckA", "ckB",
-        "sr", "sg", "sb")
-  }
+  val Cells: Int = ImageDedup.Cells
+  val Channels: Int = ImageDedup.Channels
+  val DefaultMaxMeanDiffE2 = 600L
+  val MinContainPct = 70
 
-  /** Exact per-FRAME mean-abs thumb distance with the b-side frame
-    * ordinal carried through — the [[ImageDedup.pairDistances]]
-    * kernel plus `fy`, so a truth branch can count DISTINCT matched
-    * b-frames per stream pair (the containment numerator) from
-    * frame-level rows. Same typed-barrier discipline. */
-  private[graft] def frameDistances(joined: DataFrame): DataFrame = {
-    val spark = joined.sparkSession
-    import spark.implicits._
-    val cells = ImageDedup.ThumbW * ImageDedup.ThumbH * 3
-    joined.select(col("ida").cast("long"), col("idb").cast("long"),
-        col("fy").cast("long"), col("ta"), col("tb"))
-      .as[(Long, Long, Long, Array[Int], Array[Int])]
-      .mapPartitions(_.map { case (a, b, fy, ta, tb) =>
-        var s = 0L
-        var i = 0
-        val n = math.min(ta.length, tb.length)
-        while (i < n) { s += math.abs(ta(i) - tb(i)).toLong; i += 1 }
-        (a, b, fy, s * 100L / cells)
-      }).toDF("ida", "idb", "fy", "mean_diff_e2")
-  }
-
-  /** Stream-level frame table: (doc_id, fr) with `fr` the sampled
-    * thumbs in frame order FLATTENED into one primitive int array
-    * (every thumb is exactly ThumbW·ThumbH·3 = 216 cells, so the
-    * frame boundaries are implicit) — the join side of the
-    * containment verify AND the exact-family signature. Flat on
-    * purpose: `ArrayType(int)` deserializes through the unsafe
-    * primitive fast path (one memcpy per row), where a nested
-    * `Seq[Seq[Int]]` walks an interpreted per-element converter —
-    * measured ~1 ms/row × 250k candidate pairs ≈ 4 min at sf0.1
-    * before this flattening, ~2 s after. ≤ ⌈maxFrames/everyN⌉ · 216
-    * ints per stream: narrow by construction. */
-  private[graft] def streamFrames(prints: DataFrame): DataFrame =
-    streamTables(prints).select(col("doc_id"), col("fr"))
-
-  /** [[streamFrames]] and [[streamSums]] from ONE aggregation pass —
-    * both are per-stream frame-ordered flattenings of the same
-    * grouped rows, so computing them together halves the shuffle
-    * over the fingerprint table. */
-  private[graft] def streamTables(prints: DataFrame): DataFrame =
-    prints.groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("fidx"), col("thumb"), col("sr"),
-        col("sg"), col("sb"))).as("f0"))
-      .select(col("doc_id"),
-        array_sort(col("f0")).as("f0"))
-      .select(col("doc_id"),
-        flatten(transform(col("f0"), f => f.getField("thumb"))).as("fr"),
-        flatten(transform(col("f0"),
-          f => array(f.getField("sr"), f.getField("sg"), f.getField("sb"))))
-          .as("sm"))
-
-  /** Stream-level compact sum table: (doc_id, sm) with `sm` the
-    * per-frame channel sums (sr, sg, sb) in frame order, flattened
-    * with stride 3 — ~100 bytes per stream vs ~3.5 KB for the full
-    * thumb arrays. The [[sumGate]] side. */
-  private[graft] def streamSums(prints: DataFrame): DataFrame =
-    streamTables(prints).select(col("doc_id"), col("sm"))
-
-  /** Cheap containment NECESSARY condition over the compact
-    * [[streamSums]] arrays: a b-frame with mean-abs thumb diff ≤ the
-    * e2 bound against some a-frame must have |Σch_a − Σch_b| ≤
-    * `maxSumDiff` on every channel (triangle inequality per channel),
-    * so a pair whose sum-level containment count already misses
-    * `minContainPct` can never pass the exact verify. Runs BEFORE the
-    * fat thumb arrays are joined in — 48 long ops per pair vs ~3.5 KB
-    * of shuffle + 216-cell diffs — so candidate-bucket volume (which
-    * grows with corpus size under the hot-bucket cap) never reaches
-    * the expensive stage. Typed barrier like every exact kernel
-    * here. */
-  private[graft] def sumGate(joined: DataFrame, maxSumDiff: Long,
-                             minContainPct: Int): DataFrame = {
-    val spark = joined.sparkSession
-    import spark.implicits._
-    joined.select(col("a").cast("long"), col("b").cast("long"),
-        col("sa"), col("sb"))
-      .as[(Long, Long, Array[Long], Array[Long])]
-      .mapPartitions(_.flatMap { case (a, b, sa, sb) =>
-        val na = sa.length / 3
-        val nb = sb.length / 3
-        var matched = 0
-        var kb = 0
-        while (kb < nb) {
-          var ok = false
-          var ka = 0
-          while (ka < na && !ok) {
-            if (math.abs(sa(ka * 3) - sb(kb * 3)) <= maxSumDiff &&
-                math.abs(sa(ka * 3 + 1) - sb(kb * 3 + 1)) <= maxSumDiff &&
-                math.abs(sa(ka * 3 + 2) - sb(kb * 3 + 2)) <= maxSumDiff)
-              ok = true
-            ka += 1
-          }
-          if (ok) matched += 1
-          kb += 1
-        }
-        if (nb > 0 && matched * 100 >= nb * minContainPct) Iterator((a, b))
-        else Iterator.empty
-      }).toDF("a", "b")
-  }
-
-  private val bucketObserveSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** The bucket entries of every sampled frame — 4 dHash bands × 2
-    * color grids per frame ([[ImageDedup.bucketEntries]] one level
-    * down), deduped per stream so a stream joins each bucket once
-    * regardless of how many of its frames share it. */
-  def bucketEntries(prints: DataFrame): DataFrame = {
-    val b0 = prints.withColumn("bands", ImageDedup.bands(col("dhash")))
-      .select(col("doc_id"), col("ckA"), col("ckB"),
-        posexplode(col("bands")).as(Seq("band", "bv")))
-    b0.select(col("doc_id"), (col("band") * 2).as("bk"),
-        col("bv"), col("ckA").as("ck"))
-      .unionByName(b0.select(col("doc_id"), (col("band") * 2 + 1).as("bk"),
-        col("bv"), col("ckB").as("ck")))
-      .distinct()
-  }
-
-  /** Candidate stream pairs (a < b) = streams sharing ≥1 frame
-    * bucket, hot buckets capped at the `maxBucketSize` lowest ids
-    * (capped-out rows surface as an observe metric, never
-    * silently). */
-  def candidates(prints: DataFrame, maxBucketSize: Int = 1000): DataFrame = {
-    val ranked = bucketEntries(prints)
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("bk"), col("bv"), col("ck"))
-          .orderBy(col("doc_id"))))
-      .observe(s"video_bucket_truncated_${bucketObserveSeq.incrementAndGet()}",
-        sum(when(col("r") > maxBucketSize, 1L).otherwise(0L)).as("n_dropped"))
-      .filter(col("r") <= maxBucketSize)
-    val l = ranked.select(col("bk"), col("bv"), col("ck"), col("doc_id").as("a"))
-    val r = ranked.select(col("bk"), col("bv"), col("ck"), col("doc_id").as("b"))
-    l.join(r, Seq("bk", "bv", "ck")).filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-  }
-
-  /** Exact containment of `fb` in `fa` per joined pair row (`ida`,
-    * `idb`, `fa`, `fb` — both sides FLAT [[streamFrames]] arrays,
-    * frame k = cells [k·216, (k+1)·216)): n_matched = how many of b's
-    * sampled frames have a mean-abs-diff ≤ `maxMeanDiffE2` partner
-    * among a's frames (e2 fixed point over the 216 channel cells —
-    * the [[ImageDedup.pairDistances]] metric, frame-wise). A TYPED
-    * per-partition loop for the same reason as the image twin: the
-    * interpreted per-element math must not merge into a join
-    * condition. ≤ |fa|·|fb| ≤ 16 frame diffs per pair. */
-  private[graft] def pairContainment(joined: DataFrame,
-                                     maxMeanDiffE2: Long): DataFrame = {
-    val spark = joined.sparkSession
-    import spark.implicits._
-    val cells = ImageDedup.ThumbW * ImageDedup.ThumbH * 3
-    joined.select(col("ida").cast("long"), col("idb").cast("long"),
-        col("fa"), col("fb"))
-      .as[(Long, Long, Array[Int], Array[Int])]
-      .mapPartitions(_.map { case (a, b, fa, fb) =>
-        val na = fa.length / cells
-        val nb = fb.length / cells
-        var matched = 0
-        var kb = 0
-        while (kb < nb) {
-          var ok = false
-          var ka = 0
-          while (ka < na && !ok) {
-            var s = 0L
-            var i = 0
-            val oa = ka * cells
-            val ob = kb * cells
-            while (i < cells) {
-              s += math.abs(fa(oa + i) - fb(ob + i)).toLong
-              i += 1
-            }
-            if (s * 100L / cells <= maxMeanDiffE2) ok = true
-            ka += 1
-          }
-          if (ok) matched += 1
-          kb += 1
-        }
-        (a, b, nb.toLong, matched.toLong)
-      }).toDF("ida", "idb", "n_b", "n_matched")
-  }
-
-  /** Verified near-dup pairs (a < b): banded candidates whose later
-    * stream is ≥ `minContainPct`% frame-contained in the earlier
-    * one. */
-  def nearDupPairs(prints: DataFrame, maxMeanDiffE2: Long = 600L,
-                   minContainPct: Int = 70,
-                   maxBucketSize: Int = 1000): DataFrame =
-    nearDupPairsFromTables(prints,
-      streamTables(prints).localCheckpoint(), maxMeanDiffE2,
-      minContainPct, maxBucketSize)
-
-  /** [[nearDupPairs]] over a PRE-MATERIALIZED stream table `st`
-    * (⊇ the streams of `prints` — extra rows are inert: every join
-    * below keys on candidate ids, which come from `prints`). Callers
-    * that already hold the [[streamTables]] aggregation
-    * ([[dedupFromPrints]]) pass it in so the four join sides (sum
-    * gate a/b, frame verify a/b) read ONE materialization instead of
-    * re-planning the aggregation subtree per side (r17 — the
-    * [[ImageDedup.dedupFromThumbs]] materialization rule). */
-  private[graft] def nearDupPairsFromTables(prints: DataFrame,
-                                            st: DataFrame,
-                                            maxMeanDiffE2: Long = 600L,
-                                            minContainPct: Int = 70,
-                                            maxBucketSize: Int = 1000): DataFrame = {
-    val gated = sumGate(
-      candidates(prints, maxBucketSize)
-        .join(st.select(col("doc_id").as("a"), col("sm").as("sa")), Seq("a"))
-        .join(st.select(col("doc_id").as("b"), col("sm").as("sb")), Seq("b")),
-      ImageDedup.maxSumDiff(maxMeanDiffE2), minContainPct)
-    val joined = gated
-      .join(st.select(col("doc_id").as("a"), col("fr").as("fa")), Seq("a"))
-      .join(st.select(col("doc_id").as("b"), col("fr").as("fb")), Seq("b"))
-      .select(col("a").as("ida"), col("b").as("idb"), col("fa"), col("fb"))
-    pairContainment(joined, maxMeanDiffE2)
-      .filter(col("n_b") > 0 &&
-        col("n_matched") * 100 >= col("n_b") * minContainPct)
-      .select(col("ida").as("a"), col("idb").as("b"),
-        col("n_b"), col("n_matched"))
-  }
-
-  /** keep/drop verdict over an already-fingerprinted corpus: a stream
-    * is dropped iff some verified earlier near-dup container exists
-    * (keep-min); `match_id` is the minimum witness. Two-stage exactly
-    * like [[ImageDedup.dedupFromThumbs]]: streams with identical
-    * sampled-thumb sequences collapse to their min-id representative
-    * through one hash aggregation, the banded candidates + containment
-    * verify run over representatives only, and the member-level
-    * verdict is recovered through `coalesce(nbr_min, rep when rep <
-    * id)` — family members share the exact frame sequence, so
-    * member↔member containment IS rep↔rep containment. Streams whose
-    * container yielded no decodable sampled frame are kept (nothing
-    * was verified against them). */
-  def dedupFromPrints(ids: DataFrame, prints: DataFrame,
-                      maxMeanDiffE2: Long = 600L,
-                      minContainPct: Int = 70,
-                      maxBucketSize: Int = 1000): DataFrame = {
-    // family resolution as ONE window over the flattened frame
-    // signature (the [[ImageDedup.dedupFromThumbs]] r16 restructure:
-    // the former groupBy(fr) + left_semi + join-back-on-fr spent
-    // three exchanges, two of them keyed on the up-to-3456-int flat
-    // array — the widest key in the repo — for what a single
-    // min-over-partition delivers from one shuffle). r17: the
-    // per-stream aggregation is computed ONCE and materialized
-    // (eager localCheckpoint) — it feeds the family window AND all
-    // four verify join sides, which previously each re-planned the
-    // whole groupBy subtree; the member→rep map is materialized too
-    // (three consumers, tiny rows).
-    val st = streamTables(prints).localCheckpoint()
-    val withRep = st.select(col("doc_id"), col("fr"))
-      .withColumn("rep",
-        min(col("doc_id")).over(Window.partitionBy(col("fr"))))
-      .select(col("doc_id"), col("rep"))
-      .localCheckpoint()
-    val repIds = withRep.filter(col("doc_id") === col("rep"))
-      .select(col("doc_id"))
-    val repPrints = prints.join(repIds, Seq("doc_id"), "left_semi")
-    val repMatch = nearDupPairsFromTables(repPrints, st, maxMeanDiffE2,
-        minContainPct, maxBucketSize)
-      .groupBy(col("b").as("rep")).agg(min(col("a")).as("nbr_min"))
-    val verdict = withRep
-      .join(repMatch, Seq("rep"), "left")
-      .select(col("doc_id"),
-        coalesce(col("nbr_min"), when(col("rep") < col("doc_id"), col("rep")))
-          .as("match_id"))
-    ids.select(col("doc_id"))
-      .join(verdict, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("match_id"),
-        col("match_id").isNull.as("keep"))
-  }
-
-  /** End-to-end: fingerprint → two-stage verdict. The RETURNED
-    * verdict is cached and already materialized — the CALLER owns its
-    * `unpersist()` (the [[ImageDedup.dedup]] contract: without the
-    * cache, any downstream action would re-decode the corpus through
-    * the released fingerprint lineage). */
-  def dedup(withVideo: DataFrame, maxMeanDiffE2: Long = 600L,
-            minContainPct: Int = 70,
-            maxBucketSize: Int = 1000): DataFrame = {
-    val prints = fingerprints(withVideo).cache()
-    // eager cache fill: the verdict dataflow's leaf exchange stages
-    // are submitted concurrently by AQE, and a cold cache makes every
-    // one re-run the container decode (measured 17 recomputes × ~0.65 s
-    // inside one action at sf0.1 — tools.JobProf)
-    prints.count()
-    val res = dedupFromPrints(withVideo.select(col("doc_id")), prints,
-      maxMeanDiffE2, minContainPct, maxBucketSize).cache()
-    try res.count()
-    finally prints.unpersist(blocking = false)
-    res
-  }
-
-  // ---- stored lifecycle (the ImageDedup/AudioDedup design with a
-  // temporal axis: per-rep STREAM tables + frame-level bucket index,
-  // admission = shard-pruned candidates → sum gate → containment) ----
-
-  /** Bucket-index shard fan-out — bounds an admission batch's
-    * touched-shard set (≤ BucketShards values, driver-collected). */
-  val BucketShards = 32
-
-  /** Build the STORED video near-dup index under `dir`:
-    * `dir/streams` = one row per exact-family REPRESENTATIVE stream
-    * (doc_id, fr, sm — the flat [[streamTables]] arrays), id-sharded
-    * (pmod 16) and id-sorted so admission's pushed `isin` lookups
-    * prune row groups; `dir/buckets` = the reps' frame-level
-    * (bk, bv, ck) entries, capped per bucket, hash-sharded into
-    * [[BucketShards]] directory partitions for touched-shard pruning.
-    * One fingerprint scan; the corpus never moves again. */
-  def buildVideoIndex(withMedia: DataFrame, dir: String,
-                      maxBucketSize: Int = 1000,
-                      filesPerShard: Int = 2): Unit = {
-    val prints = fingerprints(withMedia).cache()
-    // eager cache fill — the [[dedup]] cold-cache rationale
-    prints.count()
-    try {
-      val st = streamTables(prints)
-      // reps via window-min over the frame signature (the
-      // [[dedupFromPrints]] r16 restructure: one exchange, not
-      // three); materialized once (r17) — the streams write and the
-      // bucket write would otherwise each re-run the aggregation +
-      // window chain
-      val reps = st.withColumn("rep",
-          min(col("doc_id")).over(Window.partitionBy(col("fr"))))
-        .filter(col("doc_id") === col("rep")).drop("rep")
-        .localCheckpoint()
-      val repIds = reps.select(col("doc_id"))
-      graft.sources.CorpusSink.writeParquet(
-        reps.withColumn("shard", pmod(col("doc_id"), lit(16)).cast("int")),
-        s"$dir/streams", shardCol = "shard", sortCol = "doc_id",
-        filesPerShard = filesPerShard)
-      val repPrints = prints.join(repIds, Seq("doc_id"), "left_semi")
-      val capped = bucketEntries(repPrints)
-        .withColumn("r", row_number().over(
-          Window.partitionBy(col("bk"), col("bv"), col("ck"))
-            .orderBy(col("doc_id"))))
-        .filter(col("r") <= maxBucketSize)
-        .select(col("doc_id"), col("bk"), col("bv"), col("ck"),
-          pmod(hash(col("bk"), col("bv"), col("ck")), lit(BucketShards))
-            .cast("int").as("shard"))
-      graft.sources.CorpusSink.writeParquet(capped, s"$dir/buckets",
-        shardCol = "shard", sortCol = "doc_id",
-        filesPerShard = filesPerShard)
-    } finally prints.unpersist(blocking = false)
-  }
-
-  /** Lazy (doc_id, match_id) frame of [[incrementalVideoAdmission]]
-    * for an already-fingerprinted batch `bPrints` — exposed
-    * (`private[graft]`) for plan audits. Bounded driver collects:
-    * touched shards ≤ [[BucketShards]]; candidate rep ids through a
-    * limit probe (overflow falls through to the full-scan join — the
-    * [[AudioDedup.admissionMatches]] rationale). */
-  private[graft] def admissionMatches(bPrints: DataFrame, dir: String,
-                                      maxMeanDiffE2: Long = 600L,
-                                      minContainPct: Int = 70,
-                                      maxIdPushdown: Int = 10000): DataFrame = {
-    val spark = bPrints.sparkSession
-    val bEntries = bucketEntries(bPrints)
-      .select(col("doc_id").as("qid"), col("bk"), col("bv"), col("ck"),
-        pmod(hash(col("bk"), col("bv"), col("ck")), lit(BucketShards))
-          .cast("int").as("shard"))
-    val touched = bEntries.select(col("shard")).distinct()
-      .collect().map(_.getInt(0))
-    val stored = spark.read.parquet(s"$dir/buckets")
-      .filter(col("shard").isin(touched.map(Integer.valueOf): _*))
-    val cand = bEntries.join(stored, Seq("shard", "bk", "bv", "ck"))
-      .select(col("qid"), col("doc_id").as("rep")).distinct()
-    val repIds = cand.select(col("rep")).distinct()
-      .limit(maxIdPushdown + 1).collect().map(_.getLong(0))
-    val repStreams0 = spark.read.parquet(s"$dir/streams")
-    val repStreams =
-      if (repIds.length <= maxIdPushdown)
-        repStreams0.filter(
-          col("doc_id").isin(repIds.map(java.lang.Long.valueOf): _*))
-      else repStreams0
-    // materialized once (r17): the sum-gate side and the frame-verify
-    // side below would otherwise each re-run the per-stream
-    // aggregation over the batch prints
-    val bTables = streamTables(bPrints).localCheckpoint()
-    val gated = sumGate(cand
-        .select(col("rep").as("a"), col("qid").as("b"))
-        .join(repStreams.select(col("doc_id").as("a"), col("sm").as("sa")),
-          Seq("a"))
-        .join(bTables.select(col("doc_id").as("b"), col("sm").as("sb")),
-          Seq("b")),
-      ImageDedup.maxSumDiff(maxMeanDiffE2), minContainPct)
-    val joined = gated
-      .join(repStreams.select(col("doc_id").as("a"), col("fr").as("fa")),
-        Seq("a"))
-      .join(bTables.select(col("doc_id").as("b"), col("fr").as("fb")),
-        Seq("b"))
-      .select(col("a").as("ida"), col("b").as("idb"), col("fa"), col("fb"))
-    pairContainment(joined, maxMeanDiffE2)
-      .filter(col("n_b") > 0 &&
-        col("n_matched") * 100 >= col("n_b") * minContainPct)
-      .groupBy(col("idb").as("doc_id"))
-      .agg(min(col("ida")).as("match_id"))
-  }
-
-  /** Incremental VIDEO admission — each batch stream is admitted
-    * unless it is ≥ `minContainPct`% frame-contained in some INDEXED
-    * representative (exact thumb math on candidates only; banding
-    * can only cost recall — gated in `q_dedup_incr_video` — drops
-    * are SOUND by construction). Undecodable containers stay
-    * `novel`. Output: (doc_id, status, match_id, keep). */
-  def incrementalVideoAdmission(batchMedia: DataFrame, dir: String,
-                                maxMeanDiffE2: Long = 600L,
-                                minContainPct: Int = 70,
-                                maxIdPushdown: Int = 10000): DataFrame = {
-    val bp = fingerprints(batchMedia).cache()
-    try {
-      // eager localCheckpoint (not cache): the O(batch)-row match
-      // table materializes NOW so the batch-print cache can release
-      // below (the incrementalAudioAdmission discipline)
-      val matched = admissionMatches(bp, dir, maxMeanDiffE2,
-        minContainPct, maxIdPushdown).localCheckpoint()
-      batchMedia.select(col("doc_id"))
-        .join(matched, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("match_id").isNotNull, lit(Dedup.NearDup))
-            .otherwise(lit(Dedup.Novel)).as("status"),
-          col("match_id"), col("match_id").isNull.as("keep"))
-    } finally bp.unpersist(blocking = false)
-  }
-
-  /** Whole-stream features from one container's bytes — the
-    * [[fingerprints]] kernel as a per-ROW projection for the
-    * streaming twin: the flat [[streamTables]] arrays (fr, sm) plus
-    * each sampled frame's (dhash, ckA, ckB) bucket keys, in frame
-    * order. None when no sampled frame decodes. */
-  private[graft] def streamRow(bytes: Array[Byte],
-                               everyN: Int = SampleEveryN)
-      : Option[(Array[Int], Array[Long], Seq[(Long, Long, Long)])] =
-    Multimodal.decodeAvi(bytes).flatMap { frames =>
-      val feats = frames.zipWithIndex
-        .filter { case (_, f) => f % everyN == 0 }
-        .flatMap { case (fb, _) =>
-          Multimodal.decodeImage(fb).map { case (w, h, px) =>
-            ImageDedup.frameFeatures(px, w, h)
-          }
-        }
-      if (feats.isEmpty) None
-      else Some((
-        feats.toArray.flatMap(_._1),
-        feats.toArray.flatMap(f => Array(f._5(0), f._5(1), f._5(2))),
-        feats.map(f => (f._2, f._3, f._4))))
+  def frames(bytes: Array[Byte]): Seq[MediaDedup.Frame] =
+    Multimodal.decodeAvi(bytes).toSeq.flatMap { frames =>
+      frames.zipWithIndex.collect {
+        case (fb, f) if f % SampleEveryN == 0 => Multimodal.decodeImage(fb)
+      }.flatten.map { case (w, h, px) => ImageDedup.frameFeatures(px, w, h) }
     }
-
-  /** Exact frame-containment of `fb` in `fa` (both flat 216-cell
-    * frame arrays) — the [[pairContainment]] kernel as a plain
-    * function for per-row callers (the streaming twin's typed
-    * vote). */
-  private[graft] def isContained(fa: Array[Int], fb: Array[Int],
-                                 maxMeanDiffE2: Long,
-                                 minContainPct: Int): Boolean = {
-    val cells = ImageDedup.ThumbW * ImageDedup.ThumbH * 3
-    val na = fa.length / cells
-    val nb = fb.length / cells
-    if (nb == 0) return false
-    var matched = 0
-    var kb = 0
-    while (kb < nb) {
-      var ok = false
-      var ka = 0
-      while (ka < na && !ok) {
-        var s = 0L
-        var i = 0
-        val oa = ka * cells
-        val ob = kb * cells
-        while (i < cells) {
-          s += math.abs(fa(oa + i) - fb(ob + i)).toLong
-          i += 1
-        }
-        if (s * 100L / cells <= maxMeanDiffE2) ok = true
-        ka += 1
-      }
-      if (ok) matched += 1
-      kb += 1
-    }
-    matched * 100 >= nb * minContainPct
-  }
 
   /** Fixture media column: every doc carries its planted AVI — the
     * [[withPlantedTwins]] base universe without the twins; the
@@ -586,26 +65,48 @@ object VideoDedup {
         val media = Multimodal.plantAvi(id)
         val near = reencodedTwin(media).iterator
           .map(m => (id + 1000000L, m))
-        val far = Multimodal.decodeAvi(media).flatMap { frames =>
-          val enc = frames.flatMap(fb =>
-            Multimodal.decodeJpeg(fb).map { case (w, h, px) =>
-              val p = px.clone()
-              var j = 0
-              while (j < p.length) {
-                p(j) = (((p(j) & 0xff) + 97 + (j % 3) * 53 +
-                  ((j / 3) % 7) * 31) % 256).toByte
-                j += 1
-              }
-              (ImageDedup.pngFromPixels(w, h, p), w, h)
-            })
-          if (enc.isEmpty) None
-          else Some(Multimodal.aviFromFrames(enc.map(_._1),
-            enc.head._2, enc.head._3))
+        val far = remux(media) { p =>
+          var j = 0
+          while (j < p.length) {
+            p(j) = (((p(j) & 0xff) + 97 + (j % 3) * 53 + ((j / 3) % 7) * 31) % 256).toByte
+            j += 1
+          }
         }.iterator.map(m => (id + 2000000L, m))
         near ++ far
       })
       .toDF("doc_id", "media")
   }
+
+  /** Fixture twin: decode every frame, brighten uniformly +1 (the
+    * re-encode/levels-shift artifact; uniform because the planted
+    * MJPEG frames are DC-flat, where a scattered perturbation breaks
+    * dHash's comparison TIES and the twin stops colliding —
+    * brightness shifts are exactly what dHash is invariant to),
+    * re-encode each frame as PNG and re-mux the container. None when
+    * no frame decodes. */
+  private[graft] def reencodedTwin(media: Array[Byte]): Option[Array[Byte]] =
+    remux(media) { p =>
+      var i = 0
+      while (i < p.length) {
+        p(i) = math.min(255, (p(i) & 0xff) + 1).toByte
+        i += 1
+      }
+    }
+
+  /** Decode every MJPEG frame of `media`, rewrite its pixels in place
+    * with `edit`, re-encode each as PNG and re-mux the container. None
+    * when no frame decodes. */
+  private def remux(media: Array[Byte])(edit: Array[Byte] => Unit): Option[Array[Byte]] =
+    Multimodal.decodeAvi(media).flatMap { frames =>
+      val enc = frames.flatMap(fb =>
+        Multimodal.decodeJpeg(fb).map { case (w, h, px) =>
+          val p = px.clone()
+          edit(p)
+          (ImageDedup.pngFromPixels(w, h, p), w, h)
+        })
+      if (enc.isEmpty) None
+      else Some(Multimodal.aviFromFrames(enc.map(_._1), enc.head._2, enc.head._3))
+    }
 
   /** Fixture: every doc carries its planted MJPEG/AVI stream
     * ([[Multimodal.plantAvi]]); ids ≡ 0 (mod 20) additionally plant a
@@ -619,30 +120,6 @@ object VideoDedup {
     * FRAME-DROPPED twin at id + 2,000,000 (the same stream minus its
     * last frame, the partial-re-upload case). Both twins must be
     * caught by sampled-frame containment, neither by byte equality. */
-  /** Fixture twin: decode every frame, brighten uniformly +1 (the
-    * re-encode/levels-shift artifact; uniform because the planted
-    * MJPEG frames are DC-flat, where a scattered perturbation breaks
-    * dHash's comparison TIES and the twin stops colliding —
-    * brightness shifts are exactly what dHash is invariant to),
-    * re-encode each frame as PNG and re-mux the container. None when
-    * no frame decodes. */
-  private[graft] def reencodedTwin(media: Array[Byte]): Option[Array[Byte]] =
-    Multimodal.decodeAvi(media).flatMap { frames =>
-      val enc = frames.flatMap(fb =>
-        Multimodal.decodeJpeg(fb).map { case (w, h, px) =>
-          val p = px.clone()
-          var i = 0
-          while (i < p.length) {
-            p(i) = math.min(255, (p(i) & 0xff) + 1).toByte
-            i += 1
-          }
-          (ImageDedup.pngFromPixels(w, h, p), w, h)
-        })
-      if (enc.isEmpty) None
-      else Some(Multimodal.aviFromFrames(enc.map(_._1),
-        enc.head._2, enc.head._3))
-    }
-
   def withPlantedTwins(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{AnnIndex, AudioDedup, Contamination, Curation, Dedup, EmbeddingOps, EmbeddingQuant, Html, ImageDedup, ModelSelection, Multimodal, Packing, Retrieval, Sampling, Similarity, TextOps, Tokenizer, Unigram, UrlOps, VideoDedup}
+import graft.operators.{AnnIndex, AudioDedup, Contamination, Curation, Dedup, EmbeddingOps, EmbeddingQuant, Html, ImageDedup, MediaDedup, ModelSelection, Multimodal, Packing, Retrieval, Sampling, Similarity, TextOps, Tokenizer, Unigram, UrlOps, VideoDedup}
 
 /** Group B (LLM training-data pipeline) — SURVEY.md §2.5 north star:
   * dedup (exact / MinHash / SimHash / n-gram Jaccard / embedding),
@@ -68,6 +68,130 @@ object PipelineQueries {
         }
       })
       .toDF("doc_id", "img", "aud", "vid")
+  }
+
+  /** Exact truth of the media contract keys: ids of `probes`
+    * (doc_id, fr, sm) contained in some print of `corpus` (same
+    * columns) — the engine's verify over EVERY (corpus, probe) pair,
+    * corpus id < probe id when `earlierOnly`; no banding anywhere.
+    * One path for every modality: one row per frame on each side, the
+    * bounded probe side broadcast into a scan of the corpus whose
+    * codegen'd condition is a necessary one (a contained probe has a
+    * frame whose channel sums all lie within `maxSumDiff` of some
+    * corpus frame's), and the surviving rows carry both prints
+    * straight into the verify — a pair that several frames put
+    * forward is verified once per such row. */
+  private def containedTruth(m: MediaDedup, probes: org.apache.spark.sql.DataFrame,
+                             corpus: org.apache.spark.sql.DataFrame,
+                             earlierOnly: Boolean): org.apache.spark.sql.DataFrame = {
+    val thr = m.DefaultMaxMeanDiffE2
+    val msd = m.maxSumDiff(thr)
+    // one row per frame: (id, sm‹id›, fr‹id›, id‹c›) with id‹c› the
+    // frame's channel sums
+    def frameRows(df: org.apache.spark.sql.DataFrame, id: String) =
+      df.select(col("doc_id").as(id), col("sm").as("sm" + id), col("fr").as("fr" + id),
+          explode(sequence(lit(0), (size(col("sm")) / m.Channels - 1).cast("int"))).as("k"))
+        .select(Seq(col(id), col("sm" + id), col("fr" + id)) ++ (0 until m.Channels).map(c =>
+          col("sm" + id).getItem(col("k") * m.Channels + c).as(s"$id$c")): _*)
+    val near = (0 until m.Channels).map(c =>
+      abs(col(s"a$c") - col(s"b$c")) <= msd).reduce(_ && _)
+    val order = if (earlierOnly) col("a") < col("b") else lit(true)
+    m.verify(broadcast(frameRows(probes, "b")).join(frameRows(corpus, "a"), order && near), thr)
+      .select(col("b").as("doc_id")).distinct()
+  }
+
+  /** The `q_dedup_{image,audio,video}` contract over a planted-twin
+    * `corpus` (doc_id, media): the engine's verdict, plus sound = a
+    * deterministic ≤256-drop panel (mod-7 thinning, id order — the
+    * q_dedup_semantic truth rule, ≤ 256·n pairs at any scale)
+    * re-verified against EVERY earlier print without banding, and
+    * recall_ok = ≥80% of planted twins (ids ≥ 1,000,000) dropped.
+    * Eager finish: the contract row is computed while the print and
+    * verdict caches are hot ([[MediaDedup.withVerdict]]), then both
+    * are released. */
+  private def mediaDedupContract(s: org.apache.spark.sql.SparkSession, m: MediaDedup,
+                                 corpus: org.apache.spark.sql.DataFrame,
+                                 countCol: String): org.apache.spark.sql.DataFrame =
+    m.withVerdict(corpus) { (prints, res) =>
+      import s.implicits._
+      try {
+        // the panel is collected once: ≤256 ids
+        val panel = res.filter(!col("keep") && pmod(col("doc_id"), lit(7)) === 0)
+          .select(col("doc_id")).orderBy(col("doc_id")).limit(256).as[Long].collect()
+        val nConfirmed = containedTruth(m, prints.filter(col("doc_id").isin(panel: _*)),
+          prints, earlierOnly = true).count()
+        val row = res.agg(
+            count(lit(1)),
+            sum(when(col("doc_id") >= 1000000L, 1L).otherwise(0L)),
+            sum(when(!col("keep") && col("doc_id") >= 1000000L, 1L).otherwise(0L)))
+          .head()
+        Seq((row.getLong(0), row.getLong(1), nConfirmed == panel.length,
+            row.getLong(2) >= row.getLong(1) * 0.8))
+          .toDF(countCol, "n_planted", "sound", "recall_ok")
+      } finally res.unpersist(blocking = false)
+    }
+
+  /** The `q_dedup_incr_{image,audio,video}` contract: build (once per
+    * catalog vintage) the stored index of `corpus` (doc_id, media),
+    * admit the planted re-crawl `batch` against it, and judge the
+    * verdicts against the exact bipartite truth (batch × corpus, no
+    * banding): n_batch, sound (no flag without a truth match),
+    * recall_ok (≥80% of truth matches flagged), reuse_ok (the second
+    * catalog open resolves from its manifest alone — its build
+    * closure THROWS). The catalog params carry the stored layout, so
+    * an index in an older layout is rebuilt, never misread. */
+  private def mediaAdmissionContract(s: org.apache.spark.sql.SparkSession, d: String,
+                                     m: MediaDedup, family: String,
+                                     extra: Map[String, String],
+                                     corpus: org.apache.spark.sql.DataFrame,
+                                     batchMedia: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val n = Tables.documents(s, d).count()
+    val params = Map("family" -> family, "sf" -> d, "n" -> n.toString,
+      "thr" -> m.DefaultMaxMeanDiffE2.toString, "layout" -> "media1") ++ extra
+    val (dir1, _) = graft.IndexCatalog.openOrBuild(s,
+      graft.IndexMemo.catalogRoot, s"${family}_incr", params)(stg =>
+      m.buildIndex(corpus, stg))
+    val (dir2, reused2) = graft.IndexCatalog.openOrBuild(s,
+      graft.IndexMemo.catalogRoot, s"${family}_incr", params)(_ =>
+      throw new IllegalStateException(
+        "catalog reopen must not rebuild a vintage-matched index"))
+    val reuseOk = reused2 && dir1 == dir2
+    val batch = batchMedia.cache()
+    try {
+      // eager cache fill, inside the try so the finally unpersists on
+      // a throw too: the admission and the truth branch read the batch
+      // concurrently — a cold cache would make both re-plant it
+      batch.count()
+      // the admission and the exact truth are INDEPENDENT pipelines
+      // joined only at the final contract aggregation: the admission
+      // runs as a concurrent job group (its narrow verdict
+      // checkpointed there) while this thread materializes the truth
+      import scala.concurrent.Await
+      import scala.concurrent.duration.Duration
+      val fRes = bgJob(m.admission(batch, dir2).toDF().localCheckpoint())
+      val truth = containedTruth(m, m.prints(batch), m.prints(corpus), earlierOnly = false)
+        .withColumn("t", lit(1))
+        .localCheckpoint() // eager: truth computes WHILE fRes runs
+      val flagged = Await.result(fRes, Duration.Inf)
+        .filter(col("status") === Dedup.NearDup)
+        .select(col("doc_id"), lit(1).as("f"))
+      batch.select(col("doc_id"))
+        .join(flagged, Seq("doc_id"), "left")
+        .join(truth, Seq("doc_id"), "left")
+        .agg(
+          count(lit(1)).as("n_batch"),
+          coalesce(max(when(col("f") === 1 && col("t").isNull, 1)
+            .otherwise(0)), lit(0)).as("unsound"),
+          coalesce(sum(coalesce(col("t"), lit(0))), lit(0))
+            .cast("double").as("n_exact"),
+          coalesce(sum(when(col("f") === 1 && col("t") === 1, 1)
+            .otherwise(0)), lit(0)).cast("double").as("n_hit"))
+        .select(col("n_batch"), (col("unsound") === 0).as("sound"),
+          (col("n_hit") >= col("n_exact") * 0.8).as("recall_ok"),
+          lit(reuseOk).as("reuse_ok"))
+        .localCheckpoint()
+    } finally batch.unpersist(blocking = false)
   }
 
   private def ivfqBaseKey(d: String) =
@@ -869,69 +993,7 @@ object PipelineQueries {
       // construction, paid once per session instead of per attempt
       val corpus = graft.MediaFixtures.memo(s, "img_twins", d)(
         ImageDedup.withPlantedTwins(Tables.documents(s, d)))
-      val thumbs = ImageDedup.thumbnails(corpus).cache()
-      // eager cache fill — the VideoDedup.dedup cold-cache rationale
-      thumbs.count()
-      val res = ImageDedup.dedupFromThumbs(
-        corpus.select(col("doc_id")), thumbs).cache()
-      res.count() // materialize while thumbs is hot (both reads below)
-      // truth branch: capped drop panel vs ALL thumbnails, exact
-      // mean-abs-diff — mod-7 thinning (planted ids ≡ 0 mod 20), id
-      // order, cap 256, so the branch costs ≤ 256·n at any scale
-      val drops = res.filter(!col("keep")
-          && pmod(col("doc_id"), lit(7)) === 0)
-        .select(col("doc_id").as("y"))
-        .orderBy(col("y")).limit(256)
-      val py = broadcast(drops.join(
-        thumbs.select(col("doc_id").as("y"), col("thumb").as("ty"),
-          col("sr").as("sry"), col("sg").as("sgy"), col("sb").as("sby")),
-        Seq("y")))
-      // the join carries only the codegen'd channel-sum pre-filter (a
-      // necessary condition); the exact 216-element distance runs in
-      // ImageDedup.pairDistances — a typed barrier the optimizer
-      // cannot merge into the nested-loop join's interpreted
-      // condition (that merge was 27 s of a 30 s key at sf0.1)
-      val msd = 601L * (ImageDedup.ThumbW * ImageDedup.ThumbH * 3) / 100L
-      val confirmed = ImageDedup.pairDistances(py
-          .join(thumbs.select(col("doc_id").as("x"), col("thumb").as("tx"),
-              col("sr").as("srx"), col("sg").as("sgx"), col("sb").as("sbx")),
-            col("x") < col("y") &&
-              abs(col("srx") - col("sry")) <= msd &&
-              abs(col("sgx") - col("sgy")) <= msd &&
-              abs(col("sbx") - col("sby")) <= msd)
-          .select(col("x").as("ida"), col("y").as("idb"),
-            col("tx").as("ta"), col("ty").as("tb")))
-        .filter(col("mean_diff_e2") <= 600L)
-        .select(col("idb")).distinct()
-        .agg(count(lit(1)).as("n_confirmed"))
-      val nPanel = drops.agg(count(lit(1)).as("n_panel"))
-      // eager finish (the q_ann_append pattern): the contract row is
-      // collected while both caches are hot, then the caches are
-      // released — a lazily-returned plan would either pin the wide
-      // thumbnail cache for the session or re-decode the corpus on
-      // every downstream action
-      try {
-        val row = res.agg(
-            count(lit(1)).as("n_images"),
-            sum(when(col("doc_id") >= 1000000L, 1L).otherwise(0L))
-              .as("n_planted"),
-            sum(when(!col("keep") && col("doc_id") >= 1000000L, 1L)
-              .otherwise(0L)).as("n_planted_dropped"))
-          .crossJoin(broadcast(nPanel))
-          .crossJoin(broadcast(confirmed))
-          .select(col("n_images"), col("n_planted"),
-            (col("n_panel") === col("n_confirmed")).as("sound"),
-            (col("n_planted_dropped").cast("double")
-              >= col("n_planted") * 0.8).as("recall_ok"))
-          .head()
-        import s.implicits._
-        Seq((row.getAs[Long]("n_images"), row.getAs[Long]("n_planted"),
-          row.getAs[Boolean]("sound"), row.getAs[Boolean]("recall_ok")))
-          .toDF("n_images", "n_planted", "sound", "recall_ok")
-      } finally {
-        thumbs.unpersist(blocking = false)
-        res.unpersist(blocking = false)
-      }
+      mediaDedupContract(s, ImageDedup, corpus, "n_images")
     }),
 
     // energy-envelope AUDIO near-dup as a checked contract — the
@@ -947,56 +1009,7 @@ object PipelineQueries {
       // parquet-memoized plant, the q_dedup_image rationale
       val corpus = graft.MediaFixtures.memo(s, "aud_twins", d)(
         AudioDedup.withPlantedTwins(Tables.documents(s, d)))
-      val prints = AudioDedup.fingerprints(corpus).cache()
-      // eager cache fill — the VideoDedup.dedup cold-cache rationale
-      prints.count()
-      val res = AudioDedup.dedupFromPrints(
-        corpus.select(col("doc_id")), prints).cache()
-      res.count() // materialize while prints is hot (both reads below)
-      // truth branch: capped drop panel vs ALL fingerprints, exact
-      // mean-abs envelope diff — mod-7 thinning, id order, cap 256,
-      // so the branch costs ≤ 256·n at any scale
-      val drops = res.filter(!col("keep")
-          && pmod(col("doc_id"), lit(7)) === 0)
-        .select(col("doc_id").as("y"))
-        .orderBy(col("y")).limit(256)
-      val py = broadcast(drops.join(
-        prints.select(col("doc_id").as("y"), col("env").as("ey"),
-          col("es").as("esy")),
-        Seq("y")))
-      val msd = AudioDedup.maxSumDiff(AudioDedup.DefaultMaxMeanDiffE2)
-      val confirmed = AudioDedup.pairDistances(py
-          .join(prints.select(col("doc_id").as("x"), col("env").as("ex"),
-              col("es").as("esx")),
-            col("x") < col("y") && abs(col("esx") - col("esy")) <= msd)
-          .select(col("x").as("ida"), col("y").as("idb"),
-            col("ex").as("ea"), col("ey").as("eb")))
-        .filter(col("mean_diff_e2") <= AudioDedup.DefaultMaxMeanDiffE2)
-        .select(col("idb")).distinct()
-        .agg(count(lit(1)).as("n_confirmed"))
-      val nPanel = drops.agg(count(lit(1)).as("n_panel"))
-      try {
-        val row = res.agg(
-            count(lit(1)).as("n_clips"),
-            sum(when(col("doc_id") >= 1000000L, 1L).otherwise(0L))
-              .as("n_planted"),
-            sum(when(!col("keep") && col("doc_id") >= 1000000L, 1L)
-              .otherwise(0L)).as("n_planted_dropped"))
-          .crossJoin(broadcast(nPanel))
-          .crossJoin(broadcast(confirmed))
-          .select(col("n_clips"), col("n_planted"),
-            (col("n_panel") === col("n_confirmed")).as("sound"),
-            (col("n_planted_dropped").cast("double")
-              >= col("n_planted") * 0.8).as("recall_ok"))
-          .head()
-        import s.implicits._
-        Seq((row.getAs[Long]("n_clips"), row.getAs[Long]("n_planted"),
-          row.getAs[Boolean]("sound"), row.getAs[Boolean]("recall_ok")))
-          .toDF("n_clips", "n_planted", "sound", "recall_ok")
-      } finally {
-        prints.unpersist(blocking = false)
-        res.unpersist(blocking = false)
-      }
+      mediaDedupContract(s, AudioDedup, corpus, "n_clips")
     }),
 
     // sampled-frame VIDEO near-dup (completes the modality matrix:
@@ -1015,330 +1028,45 @@ object PipelineQueries {
       // is input construction, not operator work (graft.MediaFixtures)
       val corpus = graft.MediaFixtures.memo(s, "vid_twins", d)(
         VideoDedup.withPlantedTwins(Tables.documents(s, d)))
-      val prints = VideoDedup.fingerprints(corpus).cache()
-      // materialize the fingerprint cache BEFORE the verdict dataflow:
-      // its ~20 leaf exchange stages are submitted concurrently by AQE
-      // and a cold cache makes EVERY one re-run the full container
-      // decode (JobProf r16: 17 recomputes × ~0.65 s of the decode
-      // subtree inside one count)
-      prints.count()
-      val res = VideoDedup.dedupFromPrints(
-        corpus.select(col("doc_id")), prints).cache()
-      res.count() // materialize while prints is hot (both reads below)
-      // truth branch: capped drop panel, exact frame containment vs
-      // ALL earlier streams — frame pairs pre-gated by the codegen'd
-      // channel-sum necessary condition, exact math behind the typed
-      // frameDistances barrier (the q_dedup_image truth-branch shape
-      // with a containment aggregation on top)
-      val drops = res.filter(!col("keep")
-          && pmod(col("doc_id"), lit(7)) === 0)
-        .select(col("doc_id").as("y"))
-        .orderBy(col("y")).limit(256)
-      val msd = ImageDedup.maxSumDiff(600L)
-      val yf = broadcast(drops.join(
-        prints.select(col("doc_id").as("y"), col("fidx").as("fy"),
-          col("thumb").as("ty"), col("sr").as("sry"),
-          col("sg").as("sgy"), col("sb").as("sby")), Seq("y")))
-      val fp = prints
-        .select(col("doc_id").as("x"), col("thumb").as("tx"),
-          col("sr").as("srx"), col("sg").as("sgx"), col("sb").as("sbx"))
-        .join(yf, col("x") < col("y") &&
-          abs(col("srx") - col("sry")) <= msd &&
-          abs(col("sgx") - col("sgy")) <= msd &&
-          abs(col("sbx") - col("sby")) <= msd)
-        .select(col("x").as("ida"), col("y").as("idb"), col("fy"),
-          col("tx").as("ta"), col("ty").as("tb"))
-      val nY = prints.groupBy(col("doc_id").as("idb"))
-        .agg(count(lit(1)).as("n_y"))
-      val confirmed = VideoDedup.frameDistances(fp)
-        .filter(col("mean_diff_e2") <= 600L)
-        .select(col("ida"), col("idb"), col("fy")).distinct()
-        .groupBy(col("ida"), col("idb"))
-        .agg(count(lit(1)).as("n_matched"))
-        .join(nY, Seq("idb"))
-        .filter(col("n_matched") * 100 >= col("n_y") * 70)
-        .select(col("idb")).distinct()
-        .agg(count(lit(1)).as("n_confirmed"))
-      val nPanel = drops.agg(count(lit(1)).as("n_panel"))
-      try {
-        val row = res.agg(
-            count(lit(1)).as("n_streams"),
-            sum(when(col("doc_id") >= 1000000L, 1L).otherwise(0L))
-              .as("n_planted"),
-            sum(when(!col("keep") && col("doc_id") >= 1000000L, 1L)
-              .otherwise(0L)).as("n_planted_dropped"))
-          .crossJoin(broadcast(nPanel))
-          .crossJoin(broadcast(confirmed))
-          .select(col("n_streams"), col("n_planted"),
-            (col("n_panel") === col("n_confirmed")).as("sound"),
-            (col("n_planted_dropped").cast("double")
-              >= col("n_planted") * 0.8).as("recall_ok"))
-          .head()
-        import s.implicits._
-        Seq((row.getAs[Long]("n_streams"), row.getAs[Long]("n_planted"),
-          row.getAs[Boolean]("sound"), row.getAs[Boolean]("recall_ok")))
-          .toDF("n_streams", "n_planted", "sound", "recall_ok")
-      } finally {
-        prints.unpersist(blocking = false)
-        res.unpersist(blocking = false)
-      }
+      mediaDedupContract(s, VideoDedup, corpus, "n_streams")
     }),
 
     // incremental IMAGE admission against a STORED index (the
     // round-14 gap: image dedup re-thumbnailed and re-paired the
     // whole corpus on every re-crawl while every other dedup family
-    // had a stored lifecycle): the rep thumbnails + hash-sharded
+    // had a stored lifecycle): the rep prints + hash-sharded
     // (band, value, color-cell) bucket index persist through
-    // IndexCatalog (params include the corpus vintage); the pinned
-    // re-crawl batch of planted near twins (must flag) and scrambled
-    // far variants (must stay novel) is admitted with touched-shard
-    // pruning, the channel-sum pre-filter, and the typed exact verify
-    // on candidates only. sound/recall vs the exact bipartite
-    // thumbnail truth (broadcast bounded batch); reuse_ok = the
-    // second catalog open resolves the index from its manifest alone
-    // — the build closure THROWS if invoked again
+    // IndexCatalog (params include the corpus vintage and the stored
+    // layout); the pinned re-crawl batch of planted near twins (must
+    // flag) and scrambled far variants (must stay novel) is admitted
+    // through the engine's one admission plan (stream-static bucket
+    // and rep joins, typed sum gate + exact verify, per-doc fold).
+    // sound/recall vs the exact bipartite truth (broadcast bounded
+    // batch); reuse_ok = the second catalog open resolves the index
+    // from its manifest alone — the build closure THROWS if invoked
+    // again
     "q_dedup_incr_image" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val n = docs.count()
-      val params = Map("family" -> "imgdedup", "sf" -> d,
-        "n" -> n.toString, "thr" -> "600")
-      val (dir1, _) = graft.IndexCatalog.openOrBuild(s,
-        graft.IndexMemo.catalogRoot, "imgdedup_incr", params)(stg =>
-        ImageDedup.buildImageIndex(ImageDedup.withPlantedImages(docs), stg))
-      val (dir2, reused2) = graft.IndexCatalog.openOrBuild(s,
-        graft.IndexMemo.catalogRoot, "imgdedup_incr", params)(_ =>
-        throw new IllegalStateException(
-          "catalog reopen must not rebuild a vintage-matched index"))
-      val reuseOk = reused2 && dir1 == dir2
-      val batch = graft.MediaFixtures.memo(s, "img_recrawl", d)(
-        ImageDedup.plantedRecrawlBatch(docs)).cache()
-      try {
-        // eager cache fill, inside the try so the finally unpersists
-        // on a throw too: the admission future and the truth branch
-        // read the batch concurrently — a cold cache would make both
-        // recompute the recrawl fixture
-        batch.count()
-        // the admission (stored-index reads + candidate verify) and
-        // the exact bipartite truth branch are INDEPENDENT pipelines
-        // joined only at the final contract aggregation — run the
-        // admission as a concurrent job group while this thread
-        // materializes the truth (the q_curate_media overlap rule)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val fRes = bgJob(ImageDedup.incrementalImageAdmission(batch, dir2))
-        // exact bipartite truth: the bounded batch (broadcast) against
-        // ALL corpus thumbnails — codegen'd channel-sum pre-filter in
-        // the join condition, typed 216-element exact pass behind the
-        // pairDistances barrier (the q_dedup_image truth-branch shape)
-        val bt = ImageDedup.thumbnails(batch)
-        val ct = ImageDedup.thumbnails(
-          graft.MediaFixtures.memo(s, "img_corpus", d)(
-            ImageDedup.withPlantedImages(docs)))
-        val msd = ImageDedup.maxSumDiff(600L)
-        val joined = broadcast(bt.select(col("doc_id").as("idb"),
-            col("thumb").as("tb"), col("sr").as("srb"),
-            col("sg").as("sgb"), col("sb").as("sbb")))
-          .join(ct.select(col("doc_id").as("ida"), col("thumb").as("ta"),
-            col("sr").as("sra"), col("sg").as("sga"), col("sb").as("sba")),
-            abs(col("sra") - col("srb")) <= msd &&
-              abs(col("sga") - col("sgb")) <= msd &&
-              abs(col("sba") - col("sbb")) <= msd)
-          .select(col("ida"), col("idb"), col("ta"), col("tb"))
-        val truth = ImageDedup.pairDistances(joined)
-          .filter(col("mean_diff_e2") <= 600L)
-          .select(col("idb").as("doc_id")).distinct()
-          .withColumn("t", lit(1))
-          .localCheckpoint() // eager: truth computes WHILE fRes runs
-        val res = Await.result(fRes, Duration.Inf)
-        val flagged = res.filter(col("status") === "near_dup")
-          .select(col("doc_id"), lit(1).as("f"))
-        batch.select(col("doc_id"))
-          .join(flagged, Seq("doc_id"), "left")
-          .join(truth, Seq("doc_id"), "left")
-          .agg(
-            count(lit(1)).as("n_batch"),
-            coalesce(max(when(col("f") === 1 && col("t").isNull, 1)
-              .otherwise(0)), lit(0)).as("unsound"),
-            coalesce(sum(coalesce(col("t"), lit(0))), lit(0))
-              .cast("double").as("n_exact"),
-            coalesce(sum(when(col("f") === 1 && col("t") === 1, 1)
-              .otherwise(0)), lit(0)).cast("double").as("n_hit"))
-          .select(col("n_batch"), (col("unsound") === 0).as("sound"),
-            (col("n_hit") >= col("n_exact") * 0.8).as("recall_ok"),
-            lit(reuseOk).as("reuse_ok"))
-          .localCheckpoint()
-      } finally batch.unpersist(blocking = false)
+      mediaAdmissionContract(s, d, ImageDedup, "imgdedup", Map.empty,
+        graft.MediaFixtures.memo(s, "img_corpus", d)(ImageDedup.withPlantedImages(docs)),
+        graft.MediaFixtures.memo(s, "img_recrawl", d)(ImageDedup.plantedRecrawlBatch(docs)))
     }),
 
-    // incremental AUDIO admission against a STORED index — the
-    // q_dedup_incr_image lifecycle one modality over: rep envelopes +
-    // hash-sharded (band, value, level-cell) bucket index persist
-    // through IndexCatalog; the pinned re-crawl batch of planted near
-    // twins (must flag) and sample-scrambled far variants (must stay
-    // novel) is admitted with touched-shard pruning, the envelope-sum
-    // pre-filter, and the typed exact verify on candidates only.
-    // sound/recall vs the exact bipartite envelope truth (broadcast
-    // bounded batch); reuse_ok = the second catalog open resolves the
-    // index from its manifest alone — the build closure THROWS if
-    // invoked again
-    // incremental VIDEO admission against a STORED index — the
-    // lifecycle member completing the q_dedup_video family (the
-    // image/audio stored-lifecycle design with a temporal axis): rep
-    // STREAM tables + frame-level bucket index persist through
-    // IndexCatalog; the pinned re-crawl batch (re-encoded near twins
-    // must flag, pixel-scrambled far variants must stay novel) is
-    // admitted with touched-shard pruning, the channel-sum
-    // containment gate, and the typed exact frame-containment verify
-    // on candidates only. sound/recall vs the exact bipartite
-    // containment truth (broadcast bounded batch, NO banding);
-    // reuse_ok = the second catalog open resolves from the manifest
-    // alone
+    // incremental AUDIO and VIDEO admission against a STORED index —
+    // the q_dedup_incr_image lifecycle one modality over (video: rep
+    // streams and frame-level bucket keys, containment verify)
     "q_dedup_incr_video" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val n = docs.count()
-      val params = Map("family" -> "viddedup", "sf" -> d,
-        "n" -> n.toString, "thr" -> "600", "contain" -> "70")
-      val (dir1, _) = graft.IndexCatalog.openOrBuild(s,
-        graft.IndexMemo.catalogRoot, "viddedup_incr", params)(stg =>
-        VideoDedup.buildVideoIndex(VideoDedup.withPlantedStreams(docs), stg))
-      val (dir2, reused2) = graft.IndexCatalog.openOrBuild(s,
-        graft.IndexMemo.catalogRoot, "viddedup_incr", params)(_ =>
-        throw new IllegalStateException(
-          "catalog reopen must not rebuild a vintage-matched index"))
-      val reuseOk = reused2 && dir1 == dir2
-      val batch = graft.MediaFixtures.memo(s, "vid_recrawl", d)(
-        VideoDedup.plantedRecrawlBatch(docs)).cache()
-      try {
-        // eager cache fill, inside the try so the finally unpersists
-        // on a throw too: the admission future and the truth branch
-        // read the batch concurrently — a cold cache would make both
-        // recompute the recrawl fixture
-        batch.count()
-        // admission concurrent with the truth branch (the
-        // q_dedup_incr_image overlap rule)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val fRes = bgJob(VideoDedup.incrementalVideoAdmission(batch, dir2))
-        // exact bipartite containment truth: the bounded batch
-        // (broadcast stream tables) against ALL corpus streams — the
-        // sum gate is an exact NECESSARY condition (triangle
-        // inequality), so it thins the cross without costing truth;
-        // no banding anywhere in this branch
-        val bt = VideoDedup.streamTables(
-          VideoDedup.fingerprints(batch))
-        val ct = VideoDedup.streamTables(VideoDedup.fingerprints(
-          graft.MediaFixtures.memo(s, "vid_corpus", d)(
-            VideoDedup.withPlantedStreams(docs))))
-        val crossed = broadcast(bt.select(col("doc_id").as("b"),
-            col("sm").as("sb")))
-          .crossJoin(ct.select(col("doc_id").as("a"), col("sm").as("sa")))
-        val gatedIds = VideoDedup.sumGate(
-          crossed.select(col("a"), col("b"), col("sa"), col("sb")),
-          ImageDedup.maxSumDiff(600L), 70)
-        // survivors are few: fetch the fat frame arrays only for them
-        val joined = gatedIds
-          .join(ct.select(col("doc_id").as("a"), col("fr").as("fa")),
-            Seq("a"))
-          .join(broadcast(bt.select(col("doc_id").as("b"),
-            col("fr").as("fb"))), Seq("b"))
-          .select(col("a").as("ida"), col("b").as("idb"),
-            col("fa"), col("fb"))
-        val truth = VideoDedup.pairContainment(joined, 600L)
-          .filter(col("n_b") > 0 &&
-            col("n_matched") * 100 >= col("n_b") * 70)
-          .select(col("idb").as("doc_id")).distinct()
-          .withColumn("t", lit(1))
-          .localCheckpoint() // eager: truth computes WHILE fRes runs
-        val res = Await.result(fRes, Duration.Inf)
-        val flagged = res.filter(col("status") === Dedup.NearDup)
-          .select(col("doc_id"), lit(1).as("f"))
-        batch.select(col("doc_id"))
-          .join(flagged, Seq("doc_id"), "left")
-          .join(truth, Seq("doc_id"), "left")
-          .agg(
-            count(lit(1)).as("n_batch"),
-            coalesce(max(when(col("f") === 1 && col("t").isNull, 1)
-              .otherwise(0)), lit(0)).as("unsound"),
-            coalesce(sum(coalesce(col("t"), lit(0))), lit(0))
-              .cast("double").as("n_exact"),
-            coalesce(sum(when(col("f") === 1 && col("t") === 1, 1)
-              .otherwise(0)), lit(0)).cast("double").as("n_hit"))
-          .select(col("n_batch"), (col("unsound") === 0).as("sound"),
-            (col("n_hit") >= col("n_exact") * 0.8).as("recall_ok"),
-            lit(reuseOk).as("reuse_ok"))
-          .localCheckpoint()
-      } finally batch.unpersist(blocking = false)
+      mediaAdmissionContract(s, d, VideoDedup, "viddedup", Map("contain" -> "70"),
+        graft.MediaFixtures.memo(s, "vid_corpus", d)(VideoDedup.withPlantedStreams(docs)),
+        graft.MediaFixtures.memo(s, "vid_recrawl", d)(VideoDedup.plantedRecrawlBatch(docs)))
     }),
 
     "q_dedup_incr_audio" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val n = docs.count()
-      val params = Map("family" -> "auddedup", "sf" -> d,
-        "n" -> n.toString,
-        "thr" -> AudioDedup.DefaultMaxMeanDiffE2.toString)
-      val (dir1, _) = graft.IndexCatalog.openOrBuild(s,
-        graft.IndexMemo.catalogRoot, "auddedup_incr", params)(stg =>
-        AudioDedup.buildAudioIndex(AudioDedup.withPlantedClips(docs), stg))
-      val (dir2, reused2) = graft.IndexCatalog.openOrBuild(s,
-        graft.IndexMemo.catalogRoot, "auddedup_incr", params)(_ =>
-        throw new IllegalStateException(
-          "catalog reopen must not rebuild a vintage-matched index"))
-      val reuseOk = reused2 && dir1 == dir2
-      val batch = graft.MediaFixtures.memo(s, "aud_recrawl", d)(
-        AudioDedup.plantedRecrawlBatch(docs)).cache()
-      try {
-        // eager cache fill, inside the try so the finally unpersists
-        // on a throw too: the admission future and the truth branch
-        // read the batch concurrently — a cold cache would make both
-        // recompute the recrawl fixture
-        batch.count()
-        // admission concurrent with the truth branch (the
-        // q_dedup_incr_image overlap rule)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val fRes = bgJob(AudioDedup.incrementalAudioAdmission(batch, dir2))
-        // exact bipartite truth: the bounded batch (broadcast) against
-        // ALL corpus envelopes — codegen'd envelope-sum pre-filter in
-        // the join condition, typed 65-element exact pass behind the
-        // pairDistances barrier (the q_dedup_audio truth-branch shape)
-        val bp = AudioDedup.fingerprints(batch)
-        val cp = AudioDedup.fingerprints(
-          graft.MediaFixtures.memo(s, "aud_corpus", d)(
-            AudioDedup.withPlantedClips(docs)))
-        val msd = AudioDedup.maxSumDiff(AudioDedup.DefaultMaxMeanDiffE2)
-        val joined = broadcast(bp.select(col("doc_id").as("idb"),
-            col("env").as("eb"), col("es").as("esb")))
-          .join(cp.select(col("doc_id").as("ida"), col("env").as("ea"),
-            col("es").as("esa")),
-            abs(col("esa") - col("esb")) <= msd)
-          .select(col("ida"), col("idb"), col("ea"), col("eb"))
-        val truth = AudioDedup.pairDistances(joined)
-          .filter(col("mean_diff_e2") <= AudioDedup.DefaultMaxMeanDiffE2)
-          .select(col("idb").as("doc_id")).distinct()
-          .withColumn("t", lit(1))
-          .localCheckpoint() // eager: truth computes WHILE fRes runs
-        val res = Await.result(fRes, Duration.Inf)
-        val flagged = res.filter(col("status") === Dedup.NearDup)
-          .select(col("doc_id"), lit(1).as("f"))
-        batch.select(col("doc_id"))
-          .join(flagged, Seq("doc_id"), "left")
-          .join(truth, Seq("doc_id"), "left")
-          .agg(
-            count(lit(1)).as("n_batch"),
-            coalesce(max(when(col("f") === 1 && col("t").isNull, 1)
-              .otherwise(0)), lit(0)).as("unsound"),
-            coalesce(sum(coalesce(col("t"), lit(0))), lit(0))
-              .cast("double").as("n_exact"),
-            coalesce(sum(when(col("f") === 1 && col("t") === 1, 1)
-              .otherwise(0)), lit(0)).cast("double").as("n_hit"))
-          .select(col("n_batch"), (col("unsound") === 0).as("sound"),
-            (col("n_hit") >= col("n_exact") * 0.8).as("recall_ok"),
-            lit(reuseOk).as("reuse_ok"))
-          .localCheckpoint()
-      } finally batch.unpersist(blocking = false)
+      mediaAdmissionContract(s, d, AudioDedup, "auddedup", Map.empty,
+        graft.MediaFixtures.memo(s, "aud_corpus", d)(AudioDedup.withPlantedClips(docs)),
+        graft.MediaFixtures.memo(s, "aud_recrawl", d)(AudioDedup.plantedRecrawlBatch(docs)))
     }),
 
     // brute-force cosine top-5 for keyed probe queries (exact ANN

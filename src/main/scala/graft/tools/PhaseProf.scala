@@ -3,9 +3,10 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Phase-level timing of the image-dedup dataflow (the template the
-  * audio/video dedups follow) — which sub-plan owns q_dedup_image's
-  * seconds. Each phase runs twice; read the second number. */
+/** Phase-level timing of one media near-dup key's dataflow — which
+  * sub-plan of the engine (graft.operators.MediaDedup) owns the key's
+  * seconds. Each phase runs twice; read the second number. Usage:
+  * `runMain graft.tools.PhaseProf <sfDir> [image|audio|video]`. */
 object PhaseProf {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -18,7 +19,14 @@ object PhaseProf {
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.range(1000000).selectExpr("sum(id)").collect()
-    import graft.operators.ImageDedup
+    import graft.operators.{AudioDedup, ImageDedup, VideoDedup}
+    val kind = args.lift(1).getOrElse("image")
+    val docs = graft.Tables.documents(spark, sfDir)
+    val (m, plant) = kind match {
+      case "audio" => (AudioDedup, AudioDedup.withPlantedTwins _)
+      case "video" => (VideoDedup, VideoDedup.withPlantedTwins _)
+      case _ => (ImageDedup, ImageDedup.withPlantedTwins _)
+    }
 
     def time(label: String)(f: => Long): Unit =
       (1 to 2).foreach { i =>
@@ -27,132 +35,28 @@ object PhaseProf {
         println(f"[phase] $label run$i: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n)")
       }
 
-    val corpus = graft.MediaFixtures.memo(spark, "img_twins", sfDir)(
-      ImageDedup.withPlantedTwins(graft.Tables.documents(spark, sfDir)))
+    val corpus = graft.MediaFixtures.memo(spark, s"phaseprof_$kind", sfDir)(plant(docs))
     time("corpus.count")(corpus.count())
-
-    val thumbs = ImageDedup.thumbnails(corpus).cache()
-    time("thumbnails+cache")(thumbs.count())
-
-    time("fams groupBy(thumb)")(
-      thumbs.groupBy(col("thumb")).agg(min(col("doc_id")).as("rep")).count())
-
-    val fams = thumbs.groupBy(col("thumb")).agg(min(col("doc_id")).as("rep"))
-    time("reps semi-join")(
-      thumbs.join(fams.select(col("rep").as("doc_id")), Seq("doc_id"),
-        "left_semi").count())
-
-    val reps = thumbs.join(fams.select(col("rep").as("doc_id")),
-      Seq("doc_id"), "left_semi")
-    time("candidates over reps")(
-      ImageDedup.candidates(reps.withColumn("bands",
-        ImageDedup.bands(col("dhash")))).count())
-
+    val prints = m.prints(corpus).cache()
+    time("prints+cache")(prints.count())
+    val fams = m.families(prints).cache()
+    time("family window+cache")(fams.count())
     time("nearDupPairs over reps")(
-      ImageDedup.nearDupPairs(reps).count())
-
-    time("withRep join fams on thumb")(
-      thumbs.select(col("doc_id"), col("thumb"))
-        .join(fams, Seq("thumb")).count())
-
-    time("dedupFromThumbs full")(
-      ImageDedup.dedupFromThumbs(corpus.select(col("doc_id")), thumbs).count())
-
-    thumbs.unpersist(blocking = true)
+      m.nearDupPairs(fams.filter(col("doc_id") === col("rep"))).count())
+    time("dedupFromFamilies full")(
+      m.dedupFromFamilies(corpus.select(col("doc_id")), fams).filter(!col("keep")).count())
+    fams.unpersist(blocking = true)
+    prints.unpersist(blocking = true)
     spark.catalog.clearCache()
 
-    // ---- the key exactly as the bench runs it, per-action timers ----
-    (1 to 6).foreach { run =>
-      if (run == 5) spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // the end-to-end verdict as q_curate_media runs it
+    (1 to 4).foreach { run =>
       val t0 = System.nanoTime()
-      val th = ImageDedup.thumbnails(corpus).cache()
-      if (run >= 3) th.count() // eager cache fill: kill the AQE cold-cache herd
-      val res = ImageDedup.dedupFromThumbs(
-        corpus.select(col("doc_id")), th).cache()
-      res.count()
-      val t1 = System.nanoTime()
-      val drops = res.filter(!col("keep")
-          && pmod(col("doc_id"), lit(7)) === 0)
-        .select(col("doc_id").as("y"))
-        .orderBy(col("y")).limit(256)
-      val py = broadcast(drops.join(
-        th.select(col("doc_id").as("y"), col("thumb").as("ty"),
-          col("sr").as("sry"), col("sg").as("sgy"), col("sb").as("sby")),
-        Seq("y")))
-      val msd = 601L * (ImageDedup.ThumbW * ImageDedup.ThumbH * 3) / 100L
-      val confirmed = ImageDedup.pairDistances(py
-          .join(th.select(col("doc_id").as("x"), col("thumb").as("tx"),
-              col("sr").as("srx"), col("sg").as("sgx"), col("sb").as("sbx")),
-            col("x") < col("y") &&
-              abs(col("srx") - col("sry")) <= msd &&
-              abs(col("sgx") - col("sgy")) <= msd &&
-              abs(col("sbx") - col("sby")) <= msd)
-          .select(col("x").as("ida"), col("y").as("idb"),
-            col("tx").as("ta"), col("ty").as("tb")))
-        .filter(col("mean_diff_e2") <= 600L)
-        .select(col("idb")).distinct()
-        .agg(count(lit(1)).as("n_confirmed"))
-      val nPanel = drops.agg(count(lit(1)).as("n_panel"))
-      val row = res.agg(
-          count(lit(1)).as("n_images"),
-          sum(when(col("doc_id") >= 1000000L, 1L).otherwise(0L))
-            .as("n_planted"),
-          sum(when(!col("keep") && col("doc_id") >= 1000000L, 1L)
-            .otherwise(0L)).as("n_planted_dropped"))
-        .crossJoin(broadcast(nPanel))
-        .crossJoin(broadcast(confirmed))
-        .select(col("n_images"), col("n_planted"),
-          (col("n_panel") === col("n_confirmed")).as("sound"),
-          (col("n_planted_dropped").cast("double")
-            >= col("n_planted") * 0.8).as("recall_ok"))
-        .head()
-      val t2 = System.nanoTime()
-      th.unpersist(blocking = false)
+      val res = m.dedup(corpus)
+      println(f"[phase] dedup run$run: ${(System.nanoTime() - t0) / 1e9}%.3f s " +
+        s"(${res.filter(!col("keep")).count()} dropped)")
       res.unpersist(blocking = false)
-      spark.catalog.clearCache()
-      println(f"[phase] FULL KEY run$run: res.count ${(t1 - t0) / 1e9}%.3f s, " +
-        f"truth+agg ${(t2 - t1) / 1e9}%.3f s (sound=${row.getBoolean(2)})")
     }
-
-    // ---- v2 experiment: window-min family resolution (1 exchange)
-    // instead of groupBy(thumb) + semi-join + re-join (3 exchanges) ----
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.expressions.Window
-    def dedupV2(ids: DataFrame, thumbs: DataFrame): DataFrame = {
-      val wf = Window.partitionBy(col("thumb"))
-      val withRep = thumbs.withColumn("rep", min(col("doc_id")).over(wf))
-      val reps = withRep.filter(col("doc_id") === col("rep")).drop("rep")
-      val repMatch = ImageDedup.nearDupPairs(reps)
-        .groupBy(col("b").as("rep")).agg(min(col("a")).as("nbr_min"))
-      val verdict = withRep.select(col("doc_id"), col("rep"))
-        .join(repMatch, Seq("rep"), "left")
-        .select(col("doc_id"),
-          coalesce(col("nbr_min"),
-            when(col("rep") < col("doc_id"), col("rep"))).as("match_id"))
-      ids.select(col("doc_id"))
-        .join(verdict, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("match_id"),
-          col("match_id").isNull.as("keep"))
-    }
-    (1 to 2).foreach { run =>
-      val t0 = System.nanoTime()
-      val th = ImageDedup.thumbnails(corpus).cache()
-      val res = dedupV2(corpus.select(col("doc_id")), th).cache()
-      res.count()
-      val t1 = System.nanoTime()
-      th.unpersist(blocking = false)
-      println(f"[phase] V2 res.count run$run: ${(t1 - t0) / 1e9}%.3f s")
-      if (run == 2) {
-        val v1 = ImageDedup.dedup(corpus)
-        val d1 = v1.exceptAll(res).count()
-        val d2 = res.exceptAll(v1).count()
-        println(s"[phase] V2 equivalence: exceptAll $d1/$d2 (must be 0/0)")
-        v1.unpersist(blocking = false)
-      }
-      res.unpersist(blocking = false)
-      spark.catalog.clearCache()
-    }
-
     spark.stop()
   }
 }

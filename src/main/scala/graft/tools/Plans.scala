@@ -333,12 +333,14 @@ object Plans {
         "never URLs. At 100 TB this is scan-bound by construction."),
     "q_dedup_image" ->
       ("Decode→thumbnail→dHash is one zero-shuffle typed pass over " +
-        "the media scan; candidates are a (band, value) bucket " +
-        "equi-join with a deterministic hot-bucket cap (blank-image " +
-        "mega-buckets bound the pair count instead of squaring it), " +
-        "and the exact per-channel verify joins 216-int thumbnails " +
-        "BY ID for candidates only — the semanticDedup two-stage " +
-        "discipline applied to pixels."),
+        "the media scan; candidates are the pairs within each " +
+        "(band, value, color-cell) bucket, one shuffle grouping each " +
+        "bucket's sorted ids under a deterministic hot-bucket cap " +
+        "(blank-image mega-buckets bound the pair count instead of " +
+        "squaring it), and the typed verify (channel-sum gate, then the " +
+        "exact per-channel distance) joins the 216-int frames BY ID for " +
+        "candidates only — the semanticDedup two-stage discipline " +
+        "applied to pixels."),
     "q_quality_lm" ->
       ("The bigram LM trains and scores in one pipeline: document " +
         "bigrams are built under a single doc_id exchange (posexplode " +
@@ -620,57 +622,47 @@ object Plans {
   private val internals: Seq[(String, String,
       (SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
     ("q_dedup_image", "internal: the near-dup PAIR frame the verdict " +
-      "folds — banded (band, value, color-cell) equi-join with the " +
-      "hot-bucket cap, codegen'd channel-sum pre-filter, and the " +
-      "typed mapPartitions exact verify (SerializeFromObject above " +
-      "MapPartitions in the plan — the optimizer barrier that keeps " +
-      "the 216-element loop out of the join condition).",
+      "folds (graft.operators.MediaDedup, the image modality) — the " +
+      "capped (band, value, color-cell) bucket groups (one shuffle, " +
+      "a typed pass emits each group's pairs), each pair joined BY ID to both sides' channel sums and 216-int frames, " +
+      "and one typed mapPartitions verify — sum gate, then the exact " +
+      "per-channel distance (SerializeFromObject above MapPartitions " +
+      "in the plan — the optimizer barrier that keeps the per-element " +
+      "loops out of every join condition).",
       (s, d) => {
-        val thumbs = graft.operators.ImageDedup.thumbnails(
-          graft.operators.ImageDedup.withPlantedTwins(
-            graft.Tables.documents(s, d)))
-        graft.operators.ImageDedup.nearDupPairs(thumbs)
+        val m = graft.operators.ImageDedup
+        m.nearDupPairs(m.prints(m.withPlantedTwins(graft.Tables.documents(s, d))))
       }),
     ("q_dedup_audio", "internal: the audio near-dup PAIR frame — the " +
-      "same banded-join + typed-verify shape one modality over " +
-      "(65-int envelopes, sign-delta bands, mean-level grids).",
+      "same engine plan over the audio kernel (one 65-int envelope " +
+      "frame, sign-delta bands, mean-level grids).",
       (s, d) => {
-        val prints = graft.operators.AudioDedup.fingerprints(
-          graft.operators.AudioDedup.withPlantedTwins(
-            graft.Tables.documents(s, d)))
-        graft.operators.AudioDedup.nearDupPairs(prints)
+        val m = graft.operators.AudioDedup
+        m.nearDupPairs(m.prints(m.withPlantedTwins(graft.Tables.documents(s, d))))
       }),
-    ("q_dedup_incr_image", "internal: the admission MATCH frame " +
-      "against a freshly built stored index — the batch bucket " +
-      "entries equi-join the shard-PRUNED stored buckets (the isin " +
-      "on the partition column is visible as PartitionFilters), rep " +
-      "thumbnails read under a pushed id isin over the id-sorted " +
-      "files, and the exact verify is the typed barrier again.",
+    ("q_dedup_incr_image", "internal: the ADMISSION plan against a " +
+      "freshly built stored index — one lazy plan for a batch or a " +
+      "stream: the per-row kernel, the batch keys left-join the " +
+      "stored buckets and then the stored rep prints (static sides, " +
+      "full scans, broadcast while the index is under the broadcast " +
+      "threshold), a typed sum-gate + exact-verify vote per " +
+      "candidate, and the per-doc verdict fold " +
+      "(FlatMapGroupsWithState, no state kept).",
       (s, d) => {
+        val m = graft.operators.ImageDedup
         val docs = graft.Tables.documents(s, d)
-        val dir = java.nio.file.Files
-          .createTempDirectory("plans_imgidx").toString
-        graft.operators.ImageDedup.buildImageIndex(
-          graft.operators.ImageDedup.withPlantedImages(docs), dir)
-        val bt = graft.operators.ImageDedup.thumbnails(
-          graft.operators.ImageDedup.plantedRecrawlBatch(docs))
-        graft.operators.ImageDedup.admissionMatches(bt, dir)
+        val dir = java.nio.file.Files.createTempDirectory("plans_imgidx").toString
+        m.buildIndex(m.withPlantedImages(docs), dir)
+        m.admission(m.plantedRecrawlBatch(docs), dir).toDF()
       }),
-    ("q_dedup_incr_audio", "internal: the audio admission MATCH " +
-      "frame against a freshly built stored index — the " +
-      "q_dedup_incr_image dataflow one modality over: batch bucket " +
-      "entries equi-join the shard-PRUNED stored buckets, rep prints " +
-      "read under a pushed id isin over the id-sorted files, and the " +
-      "exact envelope verify is the typed barrier again.",
+    ("q_dedup_incr_audio", "internal: the audio ADMISSION plan — the " +
+      "q_dedup_incr_image plan over the audio kernel.",
       (s, d) => {
+        val m = graft.operators.AudioDedup
         val docs = graft.Tables.documents(s, d)
-        val dir = java.nio.file.Files
-          .createTempDirectory("plans_audidx").toString
-        graft.operators.AudioDedup.buildAudioIndex(
-          graft.operators.AudioDedup.withPlantedClips(docs), dir)
-        val bp = graft.operators.AudioDedup.fingerprints(
-          graft.operators.AudioDedup.plantedRecrawlBatch(docs))
-        graft.operators.AudioDedup.admissionMatches(bp, dir)
+        val dir = java.nio.file.Files.createTempDirectory("plans_audidx").toString
+        m.buildIndex(m.withPlantedClips(docs), dir)
+        m.admission(m.plantedRecrawlBatch(docs), dir).toDF()
       }),
     ("q_quality_classifier", "internal: the featurize frame every " +
       "training iteration and the scoring pass share — one tokenize " +

@@ -24,11 +24,11 @@ class AudioIndexSpec extends SparkTestBase {
     val media = AudioDedup.withPlantedClips(docs)
       .unionByName(Seq((500L, Multimodal.plantWav(7L)))
         .toDF("doc_id", "media"))
-    AudioDedup.buildAudioIndex(media, dir)
-    val prints = spark.read.parquet(s"$dir/prints")
+    AudioDedup.buildIndex(media, dir)
+    val prints = spark.read.parquet(s"$dir/reps")
     // reps only: no two stored rows share an envelope, and the family
     // member 500 collapsed into rep 7
-    assert(prints.count() === prints.select(col("env")).distinct().count())
+    assert(prints.count() === prints.select(col("fr")).distinct().count())
     val ids = prints.select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(ids.contains(7L) && !ids.contains(500L))
     // bucket entries: 8 per rep, directory-sharded on the bucket key
@@ -36,19 +36,19 @@ class AudioIndexSpec extends SparkTestBase {
     assert(buckets.count() === prints.count() * 8)
     val shardDirs = new java.io.File(s"$dir/buckets").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("shard="))
-    assert(shardDirs.nonEmpty && shardDirs.length <= AudioDedup.BucketShards)
+    assert(shardDirs.nonEmpty && shardDirs.length <= MediaDedup.BucketShards)
   }
 
   test("admission: twins flag with their source witness; far, novel and undecodable stay kept") {
     val docs = docsDF(0L to 99L)
     val dir = tempDir("admit")
-    AudioDedup.buildAudioIndex(AudioDedup.withPlantedClips(docs), dir)
+    AudioDedup.buildIndex(AudioDedup.withPlantedClips(docs), dir)
     val batch = AudioDedup.plantedRecrawlBatch(docs)
       .unionByName(Seq(
         (3000006L, Multimodal.plantWav(6L)),         // exact copy of 6
         (999L, "not a wav".getBytes("UTF-8"))        // undecodable
       ).toDF("doc_id", "media"))
-    val res = AudioDedup.incrementalAudioAdmission(batch, dir).collect()
+    val res = AudioDedup.admission(batch, dir).toDF().collect()
       .map(r => r.getLong(0) ->
         ((r.getString(1), Option(r.getAs[java.lang.Long]("match_id")).map(_.toLong),
           r.getBoolean(3)))).toMap

@@ -29,19 +29,20 @@ class FamilyResolutionSpec extends AnyFunSuite {
     // e2 verify bound, channel sums outside the pre-filter margin) so
     // the near stage cannot merge families and the verdict isolates
     // the exact stage under test
+    // (full 216-cell image frames, so the near stage runs for real)
+    def frame(v: Int) = Seq.fill(ImageDedup.Cells)(v)
     val thumbs = Seq(
-      (7L, Seq(0, 0, 0)), (3L, Seq(0, 0, 0)), (9L, Seq(0, 0, 0)),
-      (5L, Seq(1000, 1000, 1000)),
-      (8L, Seq(2000, 2000, 2000)), (2L, Seq(2000, 2000, 2000)))
+      (7L, frame(0)), (3L, frame(0)), (9L, frame(0)),
+      (5L, frame(1000)),
+      (8L, frame(2000)), (2L, frame(2000)))
       .toDF("doc_id", "thumb")
     // the full id universe includes 11, which never decoded (no
     // thumb row) — it must come out keep=true, match_id=null
     val ids = Seq(7L, 3L, 9L, 5L, 8L, 2L, 11L).toDF("doc_id")
 
-    // window form (the shipped implementation's exact-stage shape)
-    val withRep = thumbs.withColumn("rep",
-      min(col("doc_id")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("thumb"))))
+    // window form: the shipped exact stage, MediaDedup.families
+    val withRep = ImageDedup.families(thumbs.withColumnRenamed("thumb", "fr"))
+      .withColumnRenamed("fr", "thumb")
     val repsWindow = withRep.filter(col("doc_id") === col("rep"))
       .select(col("doc_id")).as[Long].collect().sorted
 
@@ -65,12 +66,13 @@ class FamilyResolutionSpec extends AnyFunSuite {
     // and the end-to-end verdict (no near stage fires here: families
     // are exact-only, pairwise distant) keeps exactly the reps plus
     // the undecodable id
-    val verdict = ImageDedup.dedupFromThumbs(ids, thumbs
-        .withColumn("dhash", lit(0L)).withColumn("ckA", lit(0L))
-        .withColumn("ckB", lit(1L))
-        .withColumn("sr", element_at(col("thumb"), 1).cast("long") * 72)
-        .withColumn("sg", element_at(col("thumb"), 2).cast("long") * 72)
-        .withColumn("sb", element_at(col("thumb"), 3).cast("long") * 72))
+    // every print shares all 8 bucket keys (hash 0, grid keys 0/1), so
+    // every rep pair is a candidate and only the verify separates them
+    val keys = MediaDedup.bucketKeys(MediaDedup.Frame(Array.empty, Array.empty, 0L, 0L, 1L))
+    val prints = thumbs.select(col("doc_id"), col("thumb").as("fr"),
+        array((1 to 3).map(c => element_at(col("thumb"), c).cast("long") * 72): _*).as("sm"))
+      .crossJoin(Seq(keys.toArray).toDF("keys"))
+    val verdict = ImageDedup.dedupFromFamilies(ids, ImageDedup.families(prints))
       .collect().map(r => r.getLong(0) ->
         (Option(r.get(1)).map(_.asInstanceOf[Long]), r.getBoolean(2))).toMap
     assert(verdict(11L) == (None, true)) // undecodable: kept

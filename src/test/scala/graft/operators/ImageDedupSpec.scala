@@ -3,10 +3,10 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** dHash image near-dup: thumbnail/hash determinism, twin planting,
-  * band-candidate completeness on planted pairs, exact-verify
-  * rejection of distinct images, cross-codec (JPEG source vs PNG
-  * re-encode) pairing, and the end-to-end verdict. */
+/** dHash image near-dup: the kernel against the pre-engine reference,
+  * twin planting, band-candidate completeness on planted pairs,
+  * exact-verify rejection of distinct images, cross-codec (JPEG
+  * source vs PNG re-encode) pairing, and the end-to-end verdict. */
 class ImageDedupSpec extends SparkTestBase {
 
   private def docsDF(ids: Seq[Long]) = {
@@ -16,9 +16,8 @@ class ImageDedupSpec extends SparkTestBase {
 
   test("planted twin hashes collide; distinct images stay far") {
     val corpus = ImageDedup.withPlantedTwins(docsDF(0L to 60L))
-    val t = ImageDedup.thumbnails(corpus)
-      .select(col("doc_id"), col("dhash")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val t = corpus.collect()
+      .map(r => r.getLong(0) -> ImageDedup.frames(r.getAs[Array[Byte]](1)).head.hash).toMap
     // twins of 0, 20, 40, 60 planted
     Seq(0L, 20L, 40L, 60L).foreach { src =>
       val d = java.lang.Long.bitCount(t(src) ^ t(src + 1000000L))
@@ -105,5 +104,24 @@ class ImageDedupSpec extends SparkTestBase {
     assert(res(2L) === ((1L, false)))
     assert(res(5L) === ((1L, false)))
     assert(res(6L) === ((1L, false)))
+  }
+
+  test("image kernel is bit-identical to the reference thumbRow and bucket entries") {
+    import spark.implicits._
+    val corpus = ImageDedup.withPlantedTwins(docsDF(0L to 60L))
+      .unionByName(Seq((7000L, "junk".getBytes("UTF-8")), (7001L, null: Array[Byte]))
+        .toDF("doc_id", "media"))
+    val ref = corpus.as[(Long, Array[Byte])].collect().flatMap { case (id, b) =>
+      Option(b).flatMap(MediaReference.thumbRow).map(id -> _) }.toMap
+    val refKeys = MediaReference.keysOf(MediaReference.bucketEntries(
+      ref.toSeq.map { case (id, (_, dh, a, b, _, _, _)) => (id, dh, a, b) }
+        .toDF("doc_id", "hash", "gA", "gB")))
+    val got = MediaReference.printsOf(ImageDedup.prints(corpus))
+    assert(got.keySet == ref.keySet && ref.size == corpus.count() - 2, "prints must drop exactly the junk and null rows")
+    ref.foreach { case (id, (t, _, _, _, sr, sg, sb)) =>
+      val (fr, sm, keys) = got(id)
+      assert(fr == t && sm == Seq(sr, sg, sb), s"fr/sm diverge for doc $id")
+      assert(keys == refKeys(id) && keys.size == 8, s"bucket keys diverge for doc $id")
+    }
   }
 }

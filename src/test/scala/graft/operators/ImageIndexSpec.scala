@@ -24,11 +24,11 @@ class ImageIndexSpec extends SparkTestBase {
     val media = ImageDedup.withPlantedImages(docs)
       .unionByName(Seq((500L, Multimodal.plantHeader(7L, Array.emptyByteArray)))
         .toDF("doc_id", "media"))
-    ImageDedup.buildImageIndex(media, dir)
-    val thumbs = spark.read.parquet(s"$dir/thumbs")
+    ImageDedup.buildIndex(media, dir)
+    val thumbs = spark.read.parquet(s"$dir/reps")
     // reps only: no two stored rows share a thumbnail, and the family
     // member 500 collapsed into rep 7
-    assert(thumbs.count() === thumbs.select(col("thumb")).distinct().count())
+    assert(thumbs.count() === thumbs.select(col("fr")).distinct().count())
     val ids = thumbs.select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(ids.contains(7L) && !ids.contains(500L))
     // bucket entries: 8 per rep, directory-sharded on the bucket key
@@ -36,19 +36,19 @@ class ImageIndexSpec extends SparkTestBase {
     assert(buckets.count() === thumbs.count() * 8)
     val shardDirs = new java.io.File(s"$dir/buckets").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("shard="))
-    assert(shardDirs.nonEmpty && shardDirs.length <= ImageDedup.BucketShards)
+    assert(shardDirs.nonEmpty && shardDirs.length <= MediaDedup.BucketShards)
   }
 
   test("admission: twins flag with their source witness; far, novel and undecodable stay kept") {
     val docs = docsDF(0L to 99L)
     val dir = tempDir("admit")
-    ImageDedup.buildImageIndex(ImageDedup.withPlantedImages(docs), dir)
+    ImageDedup.buildIndex(ImageDedup.withPlantedImages(docs), dir)
     val batch = ImageDedup.plantedRecrawlBatch(docs)
       .unionByName(Seq(
         (3000006L, Multimodal.plantHeader(6L, Array.emptyByteArray)), // exact copy of 6
         (999L, "not an image".getBytes("UTF-8"))                      // undecodable
       ).toDF("doc_id", "media"))
-    val res = ImageDedup.incrementalImageAdmission(batch, dir).collect()
+    val res = ImageDedup.admission(batch, dir).toDF().collect()
       .map(r => r.getLong(0) ->
         ((r.getString(1), Option(r.getAs[java.lang.Long]("match_id")).map(_.toLong),
           r.getBoolean(3)))).toMap

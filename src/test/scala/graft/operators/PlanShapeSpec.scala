@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -243,5 +244,48 @@ class PlanShapeSpec extends SparkTestBase {
       nearDupAdmission.queryExecution.executedPlan
     }
     assert(n == 0, s"building the plans ran $n jobs")
+  }
+
+  /** Per modality: the engine, the prints of a 40-doc planted-twin
+    * corpus, and its stored index with the planted re-crawl batch
+    * (index built here, outside any counted block). */
+  private lazy val mediaFixtures = {
+    val docs = (0L until 40L).map(i => (i, s"t$i")).toDF("doc_id", "text")
+    Seq[(MediaDedup, DataFrame => DataFrame, DataFrame => DataFrame, DataFrame => DataFrame)](
+      (ImageDedup, ImageDedup.withPlantedTwins, ImageDedup.withPlantedImages,
+        ImageDedup.plantedRecrawlBatch),
+      (AudioDedup, AudioDedup.withPlantedTwins, AudioDedup.withPlantedClips,
+        AudioDedup.plantedRecrawlBatch),
+      (VideoDedup, VideoDedup.withPlantedTwins, VideoDedup.withPlantedStreams,
+        VideoDedup.plantedRecrawlBatch)).map { case (m, twins, stored, recrawl) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_media_plan").toString
+      m.buildIndex(stored(docs), dir)
+      (m, twins(docs), recrawl(docs), dir)
+    }
+  }
+
+  test("media admission plan: pinned Exchange count") {
+    // the two static sides broadcast into the bucket and rep joins, and
+    // the per-doc fold's hash shuffle — no shuffle of a stored table
+    mediaFixtures.foreach { case (m, _, batch, dir) =>
+      val p = plan(m.admission(batch, dir).toDF())
+      assert(graft.tools.Plans.exchangeCount(p) == 3, s"the admission plan's exchanges moved:\n$p")
+      assert("Exchange hashpartitioning".r.findAllIn(p).size == 1 &&
+        "BroadcastExchange".r.findAllIn(p).size == 2, s"expected 1 shuffle + 2 broadcasts:\n$p")
+    }
+  }
+
+  test("building the media pair, verdict and admission plans runs no job") {
+    val fx = mediaFixtures
+    val n = jobsLaunchedBy {
+      fx.foreach { case (m, corpus, batch, dir) =>
+        val prints = m.prints(corpus)
+        m.nearDupPairs(prints).queryExecution.executedPlan
+        m.dedupFromFamilies(corpus.select(col("doc_id")), m.families(prints))
+          .queryExecution.executedPlan
+        m.admission(batch, dir).queryExecution.executedPlan
+      }
+    }
+    assert(n == 0, s"building the media plans ran $n jobs")
   }
 }

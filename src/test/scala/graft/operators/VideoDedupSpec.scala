@@ -3,10 +3,11 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Sampled-frame video near-dup: fingerprint determinism, twin
-  * planting (re-encoded PNG re-mux + frame-dropped), containment
-  * semantics (asymmetric, order-independent), exact-stage family
-  * collapse, and the end-to-end verdict. */
+/** Sampled-frame video near-dup: the kernel against the pre-engine
+  * columnar reference, fingerprint determinism, twin planting
+  * (re-encoded PNG re-mux + frame-dropped), containment semantics
+  * (asymmetric, order-independent), exact-stage family collapse, and
+  * the end-to-end verdict. */
 class VideoDedupSpec extends SparkTestBase {
 
   private def docsDF(ids: Seq[Long]) = {
@@ -15,22 +16,36 @@ class VideoDedupSpec extends SparkTestBase {
   }
 
   test("fingerprints sample every 2nd decodable frame with stable features") {
+    // the engine's prints against the pre-engine columnar reference
+    import spark.implicits._
     val corpus = VideoDedup.withPlantedTwins(docsDF(0L to 19L))
-    val pr = VideoDedup.fingerprints(corpus)
-      .select(col("doc_id"), col("fidx")).collect()
+      .unionByName(Seq((7000L, "junk".getBytes("UTF-8")), (7001L, null: Array[Byte]))
+        .toDF("doc_id", "media"))
+    // (the reference decode throws on null media; the engine skips it)
+    val refRows = MediaReference.videoFingerprints(corpus.filter(col("media").isNotNull)).cache()
+    val pr = refRows.select(col("doc_id"), col("fidx")).collect()
       .groupBy(_.getLong(0)).map { case (id, rs) =>
         id -> rs.map(_.getLong(1)).sorted.toSeq }
+    val got = MediaReference.printsOf(VideoDedup.prints(corpus))
     (0L to 19L).foreach { id =>
       val nf = Multimodal.plantedVideoFrames(id)
       val want = (0 until nf).filter(_ % 2 == 0).map(_.toLong)
       assert(pr(id) === want, s"doc $id sampled ${pr(id)}, want $want")
+      assert(got(id)._1.length === want.length * VideoDedup.Cells, s"doc $id frame count")
     }
+    // fr / sm equal the columnar streamTables, keys the per-stream
+    // distinct frame bucket entries
+    val st = MediaReference.streamTables(refRows).collect()
+      .map(r => r.getLong(0) -> ((r.getSeq[Int](1), r.getSeq[Long](2)))).toMap
+    val refKeys = MediaReference.keysOf(MediaReference.bucketEntries(refRows))
+    assert(got.keySet == st.keySet && !got.contains(7000L) && !got.contains(7001L))
+    st.foreach { case (id, (fr, sm)) =>
+      assert(got(id)._1 == fr && got(id)._2 == sm, s"fr/sm diverge for doc $id")
+      assert(got(id)._3 == refKeys(id), s"bucket keys diverge for doc $id")
+    }
+    refRows.unpersist()
     // determinism: a second pass yields identical rows
-    val a = VideoDedup.fingerprints(corpus).orderBy("doc_id", "fidx")
-      .collect().map(_.toSeq).toSeq
-    val b = VideoDedup.fingerprints(corpus).orderBy("doc_id", "fidx")
-      .collect().map(_.toSeq).toSeq
-    assert(a === b)
+    assert(MediaReference.printsOf(VideoDedup.prints(corpus)) == got)
   }
 
   test("verdict: both twin kinds dropped with their source as witness") {

@@ -1,70 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-
-import graft.SparkTestBase
 import graft.operators.{AudioDedup, Multimodal}
 
-/** Batch/streaming parity for AUDIO admission: the streaming twin
-  * must produce verdicts identical to
-  * `AudioDedup.incrementalAudioAdmission` against the SAME stored
-  * index, regardless of micro-batching, with zero state rows. */
-class StreamingAudioAdmissionSpec extends SparkTestBase {
-
-  import spark.implicits._
-
-  test("streaming verdicts equal batch verdicts per arrival pattern; state stays empty") {
-    val docs = (0L to 59L).map(id => (id, s"text $id")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_aud_twin").toString
-    AudioDedup.buildAudioIndex(AudioDedup.withPlantedClips(docs), dir)
-    // near twins of 0/20/40 + far variants, an exact copy, junk bytes
-    val batchRows = AudioDedup.plantedRecrawlBatch(docs)
-      .as[(Long, Array[Byte])].collect().toSeq ++ Seq(
-      (3000011L, Multimodal.plantWav(11L)),
-      (999L, "not a wav".getBytes("UTF-8")))
-    val batchDF = batchRows.toDF("doc_id", "media")
-    val expected = AudioDedup.incrementalAudioAdmission(batchDF, dir)
-      .collect()
-      .map(r => r.getLong(0) ->
-        ((r.getString(1),
-          Option(r.getAs[java.lang.Long]("match_id")).map(_.toLong),
-          r.getBoolean(3)))).toMap
-    // the fixture exercises both classes
-    assert(expected(1000020L)._1 == "near_dup")
-    assert(expected(3000011L) == (("near_dup", Some(11L), false)))
-    assert(expected(2000040L)._1 == "novel" && expected(999L)._1 == "novel")
-    // batch mode of the twin
-    val got0 = StreamingAudioAdmission.admission(batchDF, dir).collect()
-      .map(v => v.doc_id -> ((v.status, v.match_id, v.keep))).toMap
-    assert(got0 == expected)
-    // streaming arrival patterns
-    val patterns = Seq(
-      Seq(batchRows),
-      batchRows.map(Seq(_)),
-      Seq(batchRows.take(4), batchRows.drop(4)))
-    patterns.zipWithIndex.foreach { case (batches, pi) =>
-      implicit val sq = spark.sqlContext
-      val mem = MemoryStream[(Long, Array[Byte])]
-      val out = StreamingAudioAdmission.admission(
-        mem.toDF().toDF("doc_id", "media"), dir)
-      val q = out.writeStream.format("memory")
-        .queryName(s"aud_adm_$pi").outputMode("append").start()
-      try {
-        batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-        val got = spark.table(s"aud_adm_$pi").collect()
-          .map(r => r.getAs[Long]("doc_id") ->
-            ((r.getAs[String]("status"),
-              Option(r.getAs[java.lang.Long]("match_id")).map(_.toLong),
-              r.getAs[Boolean]("keep")))).toMap
-        assert(got == expected, s"pattern $pi diverged: $got vs $expected")
-        // non-vacuous zero-state check: require that progress was
-        // observed at all, then bound EVERY observed snapshot — a
-        // missing final snapshot can no longer skip the guarantee
-        assert(q.recentProgress.nonEmpty, "no streaming progress observed")
-        q.recentProgress.foreach(p =>
-          assert(p.stateOperators.forall(_.numRowsTotal == 0),
-            "admission fold must keep zero state rows"))
-      } finally q.stop()
-    }
-  }
-}
+/** AUDIO admission, batch and stream ([[MediaAdmissionBehaviour]]). */
+class StreamingAudioAdmissionSpec extends MediaAdmissionBehaviour(AudioDedup, "aud",
+  AudioDedup.withPlantedClips, AudioDedup.plantedRecrawlBatch, Multimodal.plantWav)

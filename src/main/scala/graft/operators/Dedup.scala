@@ -37,6 +37,19 @@ object Dedup {
       .groupBy(col("fp"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
+  /** Admission verdict labels — shared with the streaming twin
+    * (`streaming.StreamingAdmission`) so batch and live ingest can
+    * never drift apart on names or precedence. */
+  val DupOfIndex = "dup_of_index"
+  val DupInBatch = "dup_in_batch"
+  val Novel = "novel"
+  val NearDup = "near_dup"
+
+  /** fp-membership view of a stored fingerprint index (dedup +
+    * boolean marker) — the index prep both admission paths join. */
+  def indexFps(index: DataFrame): DataFrame =
+    index.select(col("fp")).distinct().withColumn("in_index", lit(true))
+
   /** Incremental exact dedup: classify a NEW batch of documents
     * against an existing corpus fingerprint INDEX, without re-reading
     * the corpus text — the re-crawl path at 100 TB (the index carries
@@ -54,19 +67,6 @@ object Dedup {
     * never a self-join of the corpus. The index should be the stored
     * `fp` output of [[exact]] from the previous curation run, so
     * repeated ingests are O(batch + index-join), not O(corpus). */
-  /** Admission verdict labels — shared with the streaming twin
-    * (`streaming.StreamingAdmission`) so batch and live ingest can
-    * never drift apart on names or precedence. */
-  val DupOfIndex = "dup_of_index"
-  val DupInBatch = "dup_in_batch"
-  val Novel = "novel"
-  val NearDup = "near_dup"
-
-  /** fp-membership view of a stored fingerprint index (dedup +
-    * boolean marker) — the index prep both admission paths join. */
-  def indexFps(index: DataFrame): DataFrame =
-    index.select(col("fp")).distinct().withColumn("in_index", lit(true))
-
   def incremental(batch: DataFrame, index: DataFrame, fp: Column): DataFrame = {
     val b = batch.select(col("doc_id"), fp.as("fp"))
     val w = Window.partitionBy(col("fp"))
@@ -134,8 +134,8 @@ object Dedup {
   final case class CandVote(doc_id: Long, index_id: Option[Long],
                             verified: Boolean)
 
-  /** The verdict fold every near-dup admission shares (text here, and
-    * the image/audio/video/semantic/embedding streaming twins): a key's
+  /** The verdict fold every near-dup admission shares (text here, the
+    * media engine, and the semantic and embedding families): a key's
     * candidate votes become ONE verdict — the minimum verified witness
     * id as `match_id` with status `near_dup`, else `novel`. `witness`
     * gives a vote's witness id when the vote is verified.
@@ -553,22 +553,6 @@ object Dedup {
         round(max(col("cos")), 6).as("max_cos"))
   }
 
-  /** Scale-safe embedding near-dup: the same per-probe stats as
-    * [[embeddingNearDup]], but scored over multi-table hyperplane LSH
-    * candidates only ([[Similarity.lshCandidates]]) — every join is a
-    * (table, bucket) or id equi-join, so the shape survives a probe
-    * set that is a fixed FRACTION of a 100 TB corpus (the broadcast
-    * nested-loop of the exact form outgrows executor memory there).
-    *
-    * Approximate by construction: a near pair hashing into disjoint
-    * buckets in all tables is missed, so `n_near` can undercount and
-    * `max_cos` can read low — never the reverse (candidates ⊆ all
-    * pairs). With `bits` = 2 and 8 tables a cos = 0.2 pair survives
-    * with p ≈ 0.95 (1 − (1 − p_plane²)^8, p_plane = 1 − θ/π); recall
-    * vs exact is gated as a checked contract in `q_dedup_embedding`.
-    * Probes with zero candidates surface as (n_near = 0, max_cos
-    * null) through the left join — silently dropping them would make
-    * the report lie about coverage. */
   /** SemDeDup-style cluster-scoped semantic dedup (Abbas et al.
     * 2023): k-means-partition the embedding space, then search for
     * near-duplicate pairs ONLY within each cluster and drop the
@@ -713,8 +697,8 @@ object Dedup {
     * this lifecycle). Layout:
     *  - `dir/vectors` — cid-PARTITIONED int8 rows (vec_id, qv),
     *    [[graft.sources.CorpusSink.writeParquet]] with
-    *    shardCol = "cid": an admission touching k cells prunes every
-    *    other cell's FILES at the directory level;
+    *    shardCol = "cid", one directory per cell (admission's left
+    *    join reads every cell; ROADMAP item 13);
     *  - `dir/cells_coarse` / `dir/cells_fine` — the two-level
     *    centroid sidecar (i, centroid) / (i, j, centroid).
     * A flat fit (nlist < [[HierNlist]]) is stored in the SAME
@@ -760,123 +744,177 @@ object Dedup {
 
   /** Load the two-level centroid sidecar back into the in-memory form
     * [[Similarity.assignCellsHier]] takes (driver-sized — nlist·dim
-    * doubles, the same object every IVF family carries). */
+    * doubles, the same object every IVF family carries). One collect
+    * per table: the schemas are stated, so no parquet schema inference
+    * runs, and the rows are ordered on the driver, not by a Spark sort. */
   def readSemanticCells(spark: org.apache.spark.sql.SparkSession, dir: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val coarse = spark.read.parquet(s"$dir/cells_coarse")
-      .orderBy(col("i")).collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-    val fineRows = spark.read.parquet(s"$dir/cells_fine")
-      .orderBy(col("i"), col("j")).collect()
-      .map(r => (r.getInt(0),
-        r.getAs[scala.collection.Seq[Double]]("centroid").toArray))
-    val fine = Array.tabulate(coarse.length)(i =>
-      fineRows.filter(_._1 == i).map(_._2))
-    (coarse, fine)
+    def centroid(r: org.apache.spark.sql.Row, i: Int) = r.getSeq[Double](i).toArray
+    val coarse = spark.read.schema("i INT, centroid ARRAY<DOUBLE>")
+      .parquet(s"$dir/cells_coarse").collect()
+      .sortBy(_.getInt(0)).map(centroid(_, 1))
+    val fine = spark.read.schema("i INT, j INT, centroid ARRAY<DOUBLE>")
+      .parquet(s"$dir/cells_fine").collect()
+      .groupBy(_.getInt(0))
+    (coarse, Array.tabulate(coarse.length)(i =>
+      fine.getOrElse(i, Array.empty).sortBy(_.getInt(1)).map(centroid(_, 2))))
+  }
+
+  /** Verdict row of vector admission ([[incrementalSemanticAdmission]],
+    * [[incrementalEmbeddingAdmission]]), one per vec_id. */
+  final case class VecVerdict(vec_id: Long, status: String,
+                              match_id: Option[Long], keep: Boolean)
+
+  /** Internal vote row (public: encoder codegen needs member access). */
+  final case class VecVote(vec_id: Long, index_id: Option[Long],
+                           verified: Boolean)
+
+  /** The per-row kernel pass of vector admission: (vec_id, embedding)
+    * rows, float or double, become (vec_id, fv, k, fn) — `fv` the
+    * embedding as array<double>, `k` = `kernel(fv)` (the row's
+    * candidate keys), `fn` = ‖fv‖. A null embedding reads as the empty
+    * vector: zero norm, so it never verifies and stays `novel`. No
+    * shuffle. */
+  private def kernelRows[K: TypeTag](vecs: DataFrame)(
+      kernel: Array[Double] => K): DataFrame = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    vecs.select(col("vec_id").cast("long"), col("embedding").cast("array<double>"))
+      .as[(Long, Array[Double])]
+      .map { case (id, v0) =>
+        val v = if (v0 == null) Array.emptyDoubleArray else v0
+        (id, v, kernel(v))
+      }
+      .toDF("vec_id", "fv", "k")
+      .withColumn("fn", VectorOps.l2Norm(col("fv")))
+  }
+
+  /** The exact-cosine vote both vector admissions share: `cands`
+    * (vec_id, fv, fn, index_id) — one row per candidate, index_id null
+    * for none — LEFT-joins the stored float vectors of `index`; a vote
+    * is verified when the candidate is another vector and its cosine
+    * with `fv` is above `threshold` (a null stored embedding never
+    * verifies, it does not fail the vote). The carried arrays are dropped
+    * before [[foldVerdicts]] folds each vector's votes to one verdict. */
+  private def cosineVerdicts(cands: DataFrame, index: DataFrame,
+                             threshold: Double): Dataset[VecVerdict] = {
+    val iv = index.select(col("vec_id").as("index_id"),
+        VectorOps.asDoubleArray(col("embedding")).as("iv"))
+      .withColumn("in_norm", VectorOps.l2Norm(col("iv")))
+    val votes = cands.join(iv, Seq("index_id"), "left")
+      .select(col("vec_id"), col("index_id"),
+        coalesce(col("index_id") =!= col("vec_id") &&
+          col("fn") * col("in_norm") > 0 &&
+          VectorOps.dotArr(col("fv"), col("iv")) / (col("fn") * col("in_norm"))
+            > threshold, lit(false)).as("verified"))
+      .as(Encoders.product[VecVote])
+    foldVerdicts(votes)(_.vec_id, v => v.index_id.filter(_ => v.verified))(
+      VecVerdict.apply _)
   }
 
   /** Incremental SEMANTIC admission — [[incrementalEmbeddingAdmission]]
-    * over the STORED k-means cells instead of recomputed LSH buckets:
-    * each batch vector is admitted unless some INDEXED vector in its
-    * cell is closer than `threshold` cosine.
-    *
-    *  1. the batch quantizes and hier-assigns against the stored
-    *     sidecar — O(batch·√nlist), no corpus touch;
-    *  2. candidates come from the cid equi-join into `dir/vectors` —
-    *     the cid-partitioned layout prunes every untouched cell's
-    *     files, so the scan is O(touched cells), never O(corpus);
-    *  3. the int8 pre-filter keeps pairs with approx cosine >
+    * over the STORED k-means cells instead of LSH buckets: each vector
+    * of `batch` (vec_id, embedding) is admitted unless some vector of
+    * the index at `dir` ([[buildSemanticIndex]]) in its cell is closer
+    * than `threshold` cosine; `index` is the float corpus the index was
+    * built from (the exact verify's side). ONE lazy plan serves a batch
+    * and a stream — `batch` may be a streaming DataFrame:
+    *  1. the kernel per row: [[Similarity.quantizeRow]] (the index
+    *     build's rounding), then the [[graft.functions.HierCellId]]
+    *     cell over the stored sidecar — O(√nlist) per row;
+    *  2. a stream-static LEFT join on cid into `dir/vectors` (no cell,
+    *     or an empty one, stays alive as `novel`);
+    *  3. the int8 pre-filter keeps candidates with approx cosine >
     *     threshold − `prefilterMargin` (the [[semanticDedup]] margin
     *     rule — quant distortion is a checked ≤0.5% contract, the
     *     margin a ≳10× cushion);
-    *  4. survivors get the exact float-cosine verdict via id-keyed
-    *     joins into the float sides, so every `near_dup` flag carries
-    *     an exact witness in `match_id` (drops SOUND by
-    *     construction; cell-boundary misses cost recall only, gated
-    *     in `q_dedup_incr_semantic`).
-    * Output: (vec_id, status, match_id, keep). */
+    *  4. the shared exact float-cosine vote and [[foldVerdicts]]: every
+    *     `near_dup` carries an exact witness in `match_id` (drops SOUND
+    *     by construction; cell-boundary misses cost recall only, gated
+    *     in `q_dedup_incr_semantic`), and no state is kept across
+    *     vectors or micro-batches.
+    * Building the plan runs only the sidecar's collects. Pairs within
+    * `batch` are not compared. */
   def incrementalSemanticAdmission(batch: DataFrame, index: DataFrame,
                                    dir: String, threshold: Double = 0.9,
-                                   prefilterMargin: Double = 0.05): DataFrame = {
-    import graft.functions.DotProductInt8
-    val spark = batch.sparkSession
-    val (coarse, fine) = readSemanticCells(spark, dir)
-    val bAssigned = Similarity.assignCellsHier(
-        Similarity.quantizedCorpus(batch)
-          .select(col("vec_id"), col("qv").as("embedding")), coarse, fine)
-      .filter(col("cid").isNotNull)
-      .select(col("vec_id").as("qid"), col("embedding").as("bqv"), col("cid"))
-      .withColumn("bqn",
-        sqrt(DotProductInt8.dot(col("bqv"), col("bqv")).cast("double")))
-    val stored = spark.read.parquet(s"$dir/vectors")
-      .withColumn("qn",
-        sqrt(DotProductInt8.dot(col("qv"), col("qv")).cast("double")))
-    val cand = bAssigned.join(stored, Seq("cid"))
-      .filter(col("qid") =!= col("vec_id") && col("bqn") * col("qn") > 0 &&
-        DotProductInt8.dot(col("bqv"), col("qv")).cast("double")
-          / (col("bqn") * col("qn")) > threshold - prefilterMargin)
-      .select(col("qid"), col("vec_id"))
-    val iv = index.select(col("vec_id"),
-        VectorOps.asDoubleArray(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.l2Norm(col("cv")))
-    val bv = batch.select(col("vec_id").as("qid"),
-        VectorOps.asDoubleArray(col("embedding")).as("qv2"))
-      .withColumn("qn2", VectorOps.l2Norm(col("qv2")))
-    val matched = cand.join(iv, Seq("vec_id")).join(bv, Seq("qid"))
-      .filter(col("qn2") * col("cn") > 0 &&
-        VectorOps.dotArr(col("qv2"), col("cv")) / (col("qn2") * col("cn"))
-          > threshold)
-      .groupBy(col("qid")).agg(min(col("vec_id")).as("match_id"))
-    batch.select(col("vec_id"))
-      .join(matched.withColumnRenamed("qid", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("match_id").isNotNull, lit("near_dup")).otherwise(lit(Novel))
-          .as("status"),
-        col("match_id"),
-        col("match_id").isNull.as("keep"))
+                                   prefilterMargin: Double = 0.05): Dataset[VecVerdict] = {
+    import graft.functions.{DotProductInt8, HierCellId}
+    def int8Norm(qv: Column) = sqrt(DotProductInt8.dot(qv, qv).cast("double"))
+    val (coarse, fine) = readSemanticCells(batch.sparkSession, dir)
+    val stored = batch.sparkSession.read
+      .schema("vec_id BIGINT, qv ARRAY<TINYINT>, cid INT").parquet(s"$dir/vectors")
+      .select(col("cid"), col("vec_id").as("index_id"), col("qv").as("sqv"))
+      .withColumn("sqn", int8Norm(col("sqv")))
+    val cands = kernelRows(batch)(v => Similarity.quantizeRow(v)._2.toSeq)
+      .withColumn("cid", HierCellId.of(VectorOps.asDoubleArray(col("k")), coarse, fine))
+      .withColumn("bqn", int8Norm(col("k")))
+      .join(stored, Seq("cid"), "left")
+      .select(col("vec_id"), col("fv"), col("fn"),
+        when(col("bqn") * col("sqn") > 0 &&
+            DotProductInt8.dot(col("k"), col("sqv")).cast("double")
+              / (col("bqn") * col("sqn")) > threshold - prefilterMargin,
+          col("index_id")).as("index_id"))
+    cosineVerdicts(cands, index, threshold)
   }
 
   /** Incremental EMBEDDING admission — the vector-space sibling of
-    * [[incrementalNearDup]]: each batch vector is admitted unless
-    * some stored-corpus vector is closer than `threshold` cosine.
-    * Candidates come from the multi-table hyperplane-LSH bucket join
-    * ([[Similarity.lshCandidates]] with the batch as the probe side),
-    * the exact cosine runs on candidates only, and the verdict per
-    * batch vector is the MIN matching index id (deterministic) or
-    * novel. Per-ingest cost is O(batch + candidates), and the
-    * candidate count is PARAMETER-DEPENDENT: each table contributes
-    * ~|batch|·|corpus|/2^bits expected pairs, so the never-O(corpus)
-    * claim holds only when `bits` scales with the corpus —
-    * 2^bits ≳ corpus / (target bucket size). The default (8 bits ×
-    * 8 tables, matching [[Similarity.lshCandidates]]) keeps buckets
-    * ≈|corpus|/256 per table; a 100 TB deployment raises `bits`
-    * further as the stored index grows.
-    * Output: (vec_id, status, match_id, keep). */
+    * [[incrementalNearDup]]: each vector of `batch` (vec_id, embedding)
+    * is admitted unless some vector of the static corpus `index` (same
+    * columns) is closer than `threshold` cosine. ONE lazy plan serves a
+    * batch and a stream — `batch` may be a streaming DataFrame:
+    *  1. the kernel per row on both sides: [[Similarity.bucketsOf]],
+    *     bit-identical to the columnar [[Similarity.lshBucket]], gives
+    *     each vector its bucket in each of `numTables` tables of `bits`
+    *     seeded hyperplanes over the first `dim` components;
+    *  2. the batch's (tbl, bucket) keys stream-static LEFT-join the
+    *     corpus bucket table (candidates only; zero-candidate vectors
+    *     stay alive);
+    *  3. the shared exact-cosine vote and [[foldVerdicts]]: the min
+    *     verified index id is `match_id`, else `novel`; no state is
+    *     kept across vectors or micro-batches.
+    * Per-call cost is O(batch + candidates), and the candidate count is
+    * PARAMETER-DEPENDENT: each table contributes ~|batch|·|corpus|/2^bits
+    * expected pairs, so the never-O(corpus) claim holds only when `bits`
+    * scales with the corpus — 2^bits ≳ corpus / (target bucket size).
+    * The default (8 bits × 8 tables) keeps buckets ≈|corpus|/256 per
+    * table; a 100 TB deployment raises `bits` as the stored index grows.
+    * `dim` is the embedding dimensionality (pipeline config), so
+    * building the plan runs no job. Pairs within `batch` are not
+    * compared. */
   def incrementalEmbeddingAdmission(batch: DataFrame, index: DataFrame,
-                                    threshold: Double = 0.9, bits: Int = 8,
-                                    numTables: Int = 8, seed: Long = 42L,
-                                    dim: Int = 0): DataFrame = {
-    val cand = Similarity.lshCandidates(index, batch, bits, seed, numTables, dim)
-    val iv = index.select(col("vec_id"),
-        VectorOps.asDoubleArray(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.l2Norm(col("cv")))
-    val bv = batch.select(col("vec_id").as("qid"),
-        VectorOps.asDoubleArray(col("embedding")).as("qv"))
-      .withColumn("qn", VectorOps.l2Norm(col("qv")))
-    val matched = cand.join(iv, Seq("vec_id")).join(bv, Seq("qid"))
-      .filter(col("qn") * col("cn") > 0 &&
-        VectorOps.dotArr(col("qv"), col("cv")) / (col("qn") * col("cn"))
-          > threshold)
-      .groupBy(col("qid")).agg(min(col("vec_id")).as("match_id"))
-    batch.select(col("vec_id"))
-      .join(matched.withColumnRenamed("qid", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        when(col("match_id").isNotNull, lit("near_dup")).otherwise(lit("novel"))
-          .as("status"),
-        col("match_id"),
-        col("match_id").isNull.as("keep"))
+                                    dim: Int, threshold: Double = 0.9,
+                                    bits: Int = 8, numTables: Int = 8,
+                                    seed: Long = 42L): Dataset[VecVerdict] = {
+    require(dim > 0, s"dim must be positive, got $dim")
+    val planes = Similarity.hyperplanes(dim, bits * numTables, seed)
+    def banded(vecs: DataFrame) =
+      kernelRows(vecs)(Similarity.bucketsOf(_, planes, bits, numTables))
+    val buckets = banded(index).select(col("vec_id").as("index_id"),
+      posexplode(col("k")).as(Seq("tbl", "bucket")))
+    val cands = banded(batch)
+      .select(col("vec_id"), col("fv"), col("fn"),
+        posexplode_outer(col("k")).as(Seq("tbl", "bucket")))
+      .join(buckets, Seq("tbl", "bucket"), "left")
+      .select(col("vec_id"), col("fv"), col("fn"), col("index_id"))
+    cosineVerdicts(cands, index, threshold)
   }
 
+  /** Scale-safe embedding near-dup: the same per-probe stats as
+    * [[embeddingNearDup]], but scored over multi-table hyperplane LSH
+    * candidates only ([[Similarity.lshCandidates]]) — every join is a
+    * (table, bucket) or id equi-join, so the shape survives a probe
+    * set that is a fixed FRACTION of a 100 TB corpus (the broadcast
+    * nested-loop of the exact form outgrows executor memory there).
+    *
+    * Approximate by construction: a near pair hashing into disjoint
+    * buckets in all tables is missed, so `n_near` can undercount and
+    * `max_cos` can read low — never the reverse (candidates ⊆ all
+    * pairs). With `bits` = 2 and 8 tables a cos = 0.2 pair survives
+    * with p ≈ 0.95 (1 − (1 − p_plane²)^8, p_plane = 1 − θ/π); recall
+    * vs exact is gated as a checked contract in `q_dedup_embedding`.
+    * Probes with zero candidates surface as (n_near = 0, max_cos
+    * null) through the left join — silently dropping them would make
+    * the report lie about coverage. */
   def embeddingNearDupLsh(corpus: DataFrame, probes: DataFrame, threshold: Double,
                           bits: Int = 2, seed: Long = 42L, numTables: Int = 8,
                           dim: Int = 0): DataFrame = {

@@ -94,6 +94,27 @@ object Similarity {
         lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ bitwiseOR _)
 
+  /** Per-row LSH buckets of `v` in `numTables` tables of `bits` planes
+    * each (table t uses planes t·bits until (t+1)·bits) — bit-identical
+    * to [[lshBucket]] per table: bit i is set when the sequential-fold
+    * dot of `v` with the plane is ≥ 0, over the shorter of the two. */
+  def bucketsOf(v: Array[Double], planes: Array[Array[Double]],
+                bits: Int, numTables: Int): Array[Long] =
+    Array.tabulate(numTables) { t =>
+      var bucket = 0L
+      var i = 0
+      while (i < bits) {
+        val p = planes(t * bits + i)
+        var s = 0.0
+        var j = 0
+        val n = math.min(v.length, p.length)
+        while (j < n) { s += v(j) * p(j); j += 1 }
+        if (s >= 0) bucket |= (1L << i)
+        i += 1
+      }
+      bucket
+    }
+
   /** Seeded k-means coarse centroids for [[ivfTopK]]. The fit sample
     * is a deterministic hash filter — keep rows whose embedding
     * xxhash64 is ≡ 0 (mod `sampleMod`) — so there is NO pre-count
@@ -365,28 +386,11 @@ object Similarity {
         round(col("score"), 6).as("score"))
   }
 
-  /** Bulk symmetric-int8 quantization of the corpus: (vec_id, qv
-    * array<tinyint>, scale double). A ZERO-shuffle typed
-    * per-partition map: Spark SQL's higher-order functions have no
-    * let-binding, so a `transform` whose lambda references a
-    * separately-projected scale column gets its projection COLLAPSED
-    * back into the lambda by Catalyst and re-derives array_max per
-    * ELEMENT (the nested-HOF trap [[EmbeddingQuant.quantReport]]
-    * documents — measured 2.3× the whole semantic-dedup query at
-    * sf1), while the earlier explode+window+collect_list shape paid
-    * ~25 s of pure n·dim-row shuffle at sf10. A plain per-row loop
-    * is the honest shape for this genuinely element-imperative step:
-    * one pass for max|x|, one for the rounded ratios, no shuffle, no
-    * interpreted lambdas. Rounding matches Spark's `round`
-    * (HALF_UP, away from zero). A 100 TB deployment runs this ONCE
-    * at ingest and stores (qv, scale, cid) as the ANN index's disk
-    * layout — see `IvfqLayoutSpec` for the stored form and its
-    * pruned scan. */
   /** The per-row quantization rule, shared verbatim by
-    * [[quantizedCorpus]] and the streaming admission twin
-    * ([[graft.streaming.StreamingSemanticAdmission]]) so batch and
-    * live ingest can never drift on rounding: symmetric int8, scale =
-    * max|x|/127, rounding matches Spark's `round` (HALF_UP, away from
+    * [[quantizedCorpus]] (the stored index's build) and
+    * [[Dedup.incrementalSemanticAdmission]]'s kernel, so the index and
+    * its admissions can never drift on rounding: symmetric int8, scale
+    * = max|x|/127, rounding matches Spark's `round` (HALF_UP, away from
     * zero). */
   private[graft] def quantizeRow(x: Array[Double]): (Double, Array[Byte]) = {
     var mx = 0.0
@@ -407,6 +411,23 @@ object Similarity {
     (scale, qv)
   }
 
+  /** Bulk symmetric-int8 quantization of the corpus: (vec_id, qv
+    * array<tinyint>, scale double). A ZERO-shuffle typed
+    * per-partition map: Spark SQL's higher-order functions have no
+    * let-binding, so a `transform` whose lambda references a
+    * separately-projected scale column gets its projection COLLAPSED
+    * back into the lambda by Catalyst and re-derives array_max per
+    * ELEMENT (the nested-HOF trap [[EmbeddingQuant.quantReport]]
+    * documents — measured 2.3× the whole semantic-dedup query at
+    * sf1), while the earlier explode+window+collect_list shape paid
+    * ~25 s of pure n·dim-row shuffle at sf10. A plain per-row loop
+    * is the honest shape for this genuinely element-imperative step:
+    * one pass for max|x|, one for the rounded ratios, no shuffle, no
+    * interpreted lambdas. Rounding matches Spark's `round`
+    * (HALF_UP, away from zero). A 100 TB deployment runs this ONCE
+    * at ingest and stores (qv, scale, cid) as the ANN index's disk
+    * layout — see `IvfqLayoutSpec` for the stored form and its
+    * pruned scan. */
   def quantizedCorpus(corpus: DataFrame): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._

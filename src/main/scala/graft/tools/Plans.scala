@@ -316,14 +316,16 @@ object Plans {
         "corpus, so the contract's truth branch stays bounded at any " +
         "verification SF."),
     "q_dedup_incr_semantic" ->
-      ("Admission against the STORED semantic index: the batch " +
-        "hier-assigns O(batch·√nlist) via the HierCellId codegen " +
-        "pass, candidates come from the cid equi-join into the " +
-        "cid-PARTITIONED stored vectors (untouched cells' files are " +
-        "pruned at the directory level), the int8 pre-filter bounds " +
-        "the float verify to margin survivors, and the verdict joins " +
-        "are all id-keyed — per ingest the corpus is never re-fit, " +
-        "re-quantized, or scanned beyond the touched cells. The " +
+      ("Admission against the STORED semantic index: one per-row " +
+        "kernel quantizes each batch vector and the HierCellId codegen " +
+        "pass hier-assigns it, O(batch·√nlist); candidates come from " +
+        "a cid left join into the stored int8 vectors, the int8 " +
+        "pre-filter bounds the float verify to margin survivors, and " +
+        "one exact-cosine vote joins the float corpus by id and folds " +
+        "to a verdict per vector — per ingest the corpus is never " +
+        "re-fit or re-quantized. The same plan runs on a streaming " +
+        "batch with zero state rows. The stored vectors are read " +
+        "whole: no cell's files are pruned (ROADMAP item 13). The " +
         "catalog reopen is a manifest read: zero rows."),
     "q_url_canon" ->
       ("Canonicalization is a per-row regexp projection inside the " +
@@ -551,13 +553,16 @@ object Plans {
         "shuffles."),
     "q_dedup_incr_embed" ->
       ("Vector-space incremental admission: the pinned planted batch " +
-        "joins the corpus's LSH bucket table on (tbl, bucket) — " +
+        "left-joins the corpus's LSH bucket table on (tbl, bucket) — " +
         "candidates only, never O(corpus) — and the exact cosine " +
         "runs on candidates alone. The truth branch broadcasts the " +
         "<=200-row batch against the corpus (linear, bounded panel). " +
-        "At 100 TB the bucket table is the persisted index; ingest " +
-        "is a stream-static join (StreamingEmbeddingAdmission is the " +
-        "verdict-identical streaming twin with zero state rows)."),
+        "Both sides get their per-table buckets from one per-row " +
+        "kernel (no shuffle); the stored vectors join by index id and " +
+        "one exact-cosine vote folds to a verdict per vector, no " +
+        "groupBy and no join back to the batch. The same plan runs on " +
+        "a streaming batch, with zero state rows; at 100 TB the bucket " +
+        "table is the persisted index."),
     "q_similarity_scaled" ->
       ("The one ANN key whose probe set GROWS with the corpus (the " +
         "uncapped 1% vec_id stratum): IVF with corpus-scaled nlist " +

@@ -246,6 +246,52 @@ class PlanShapeSpec extends SparkTestBase {
     assert(n == 0, s"building the plans ran $n jobs")
   }
 
+  /** Vector admission fixtures: a 60-vector corpus in 3 direction
+    * clusters with its stored semantic index (built here, outside any
+    * counted block), and a 4-vector batch. */
+  private lazy val vecCorpus = (0 until 60).map { i =>
+    val v = Array.fill(8)(0.0)
+    v(i % 3) = 10.0
+    v(3 + i % 5) = 1.0 + (i % 7) * 0.1
+    (i.toLong, v.toSeq)
+  }.toDF("vec_id", "embedding")
+  private lazy val vecBatch = vecCorpus.filter(col("vec_id") % 15 === 0)
+    .select((col("vec_id") + 1000).as("vec_id"), col("embedding"))
+  private lazy val semDir = {
+    val d = java.nio.file.Files.createTempDirectory("graft_sem_plan").toString
+    Dedup.buildSemanticIndex(vecCorpus, nlist = 4, d)
+    d
+  }
+  private def semanticAdmission =
+    Dedup.incrementalSemanticAdmission(vecBatch, vecCorpus, semDir).toDF()
+  private def embeddingAdmission =
+    Dedup.incrementalEmbeddingAdmission(vecBatch, vecCorpus, dim = 8).toDF()
+
+  test("vector admission plans: pinned Exchange count") {
+    // the two static sides (stored cells or corpus buckets, and the
+    // float vectors of the exact vote) broadcast into the left joins,
+    // and the per-vector fold's hash shuffle
+    Seq(semanticAdmission, embeddingAdmission).foreach { df =>
+      val p = plan(df)
+      assert(graft.tools.Plans.exchangeCount(p) == 3, s"the admission plan's exchanges moved:\n$p")
+      assert("Exchange hashpartitioning".r.findAllIn(p).size == 1 &&
+        "BroadcastExchange".r.findAllIn(p).size == 2, s"expected 1 shuffle + 2 broadcasts:\n$p")
+    }
+  }
+
+  test("building the embedding admission plan runs no job") {
+    val n = jobsLaunchedBy(embeddingAdmission.queryExecution.executedPlan)
+    assert(n == 0, s"building the plan ran $n jobs")
+  }
+
+  test("building the semantic admission plan runs only the sidecar collects") {
+    semDir // the index is built before the counted block
+    // one collect each of dir/cells_coarse and dir/cells_fine; the
+    // stored schemas are stated, so no schema-inference job runs
+    val n = jobsLaunchedBy(semanticAdmission.queryExecution.executedPlan)
+    assert(n == 2, s"building the plan ran $n jobs")
+  }
+
   /** Per modality: the engine, the prints of a 40-doc planted-twin
     * corpus, and its stored index with the planted re-crawl batch
     * (index built here, outside any counted block). */

@@ -66,9 +66,8 @@ class SemanticIndexSpec extends SparkTestBase {
         .toDF("vec_id", "embedding")
       val res = Dedup.incrementalSemanticAdmission(
           near.unionByName(far), corpus, dir, threshold = 0.9)
-        .collect().map(r => r.getLong(0) ->
-          (r.getString(1), if (r.isNullAt(2)) -1L else r.getLong(2),
-            r.getBoolean(3))).toMap
+        .collect().map(v => v.vec_id ->
+          (v.status, v.match_id.getOrElse(-1L), v.keep)).toMap
       assert(res(100L)._1 === "near_dup")
       assert(res(100L)._3 === false)
       // witness is a genuine >0.9 cosine partner (cluster of vec 7)
@@ -97,7 +96,7 @@ class SemanticIndexSpec extends SparkTestBase {
       val res = Dedup.incrementalSemanticAdmission(near, corpus, dir,
         threshold = 0.9).collect()
       assert(res.length === 1)
-      assert(res(0).getString(1) === "near_dup")
+      assert(res(0).status === "near_dup")
     } finally rm(dir)
   }
 

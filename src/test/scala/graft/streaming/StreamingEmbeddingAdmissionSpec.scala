@@ -1,114 +1,85 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
 import graft.operators.{Dedup, Similarity}
 
-/** Batch/streaming parity for EMBEDDING admission: the streaming twin
-  * must produce verdicts identical to
-  * `Dedup.incrementalEmbeddingAdmission` on the same vectors,
-  * regardless of micro-batching (verdicts depend only on the static
-  * index — asserted, not assumed). */
-class StreamingEmbeddingAdmissionSpec extends SparkTestBase {
+/** EMBEDDING admission, batch and stream ([[VectorAdmissionBehaviour]]):
+  * `Dedup.incrementalEmbeddingAdmission` returns the fixture's literal
+  * verdict table however it runs, for `array<float>` and
+  * `array<double>` embeddings alike. */
+class StreamingEmbeddingAdmissionSpec extends VectorAdmissionBehaviour {
 
   import spark.implicits._
 
   private val dim = 16
-  private def vec(seed: Int): Array[Float] = {
+  // float-valued doubles: the array<float> and array<double> runs see
+  // the same vectors
+  private def vec(seed: Int): Seq[Double] = {
     val rnd = new scala.util.Random(seed)
-    Array.fill(dim)(rnd.nextGaussian().toFloat)
+    Seq.fill(dim)(rnd.nextGaussian().toFloat.toDouble)
   }
-  private def near(v: Array[Float], eps: Float): Array[Float] =
-    v.zipWithIndex.map { case (x, i) => x + eps * (i % 3 - 1) }
+  private def near(v: Seq[Double], eps: Float): Seq[Double] =
+    v.zipWithIndex.map { case (x, i) => (x.toFloat + eps * (i % 3 - 1)).toDouble }
 
   private val base = vec(7)
   private val other = vec(11)
-  private def indexDf = Seq(
-    (100L, base.toSeq), (101L, other.toSeq), (102L, vec(13).toSeq)
-  ).toDF("vec_id", "embedding")
+  // a null stored vector shares the null and zero rows' all-ones
+  // buckets, so those rows vote against it and must stay novel
+  private val indexRows: Rows = Seq((100L, base), (101L, other), (102L, vec(13)), (103L, null))
 
-  private val streamVecs = Seq(
-    (1L, near(base, 0.01f).toSeq),  // near-dup of 100
-    (2L, vec(99).toSeq),            // novel (independent gaussian)
-    (3L, base.toSeq),               // exact copy of 100
-    (4L, near(other, 0.02f).toSeq), // near-dup of 101
-    (5L, Seq.fill(dim)(0.0f))       // zero vector: novel, no crash
-  )
+  private val rows: Rows = Seq(
+    (1L, near(base, 0.01f)),  // near-dup of 100
+    (2L, vec(99)),            // novel (independent gaussian)
+    (3L, base),               // exact copy of 100
+    (4L, near(other, 0.02f)), // near-dup of 101
+    (5L, Seq.fill(dim)(0.0)), // zero vector: novel, no crash
+    (6L, null),               // null embedding: novel
+    (102L, vec(13)))          // stored vector 102: not its own witness
+
+  /** The verdicts of the fixture, as the two-plan admission gave them. */
+  private val expected: Verdicts = Map(
+    1L -> (("near_dup", Some(100L), false)),
+    2L -> (("novel", None, true)),
+    3L -> (("near_dup", Some(100L), false)),
+    4L -> (("near_dup", Some(101L), false)),
+    5L -> (("novel", None, true)),
+    6L -> (("novel", None, true)),
+    102L -> (("novel", None, true)))
+
+  private val elems = Seq("float", "double")
+
+  private def admit(elem: String)(vecs: org.apache.spark.sql.DataFrame) =
+    Dedup.incrementalEmbeddingAdmission(vecs, rowsDF(indexRows, elem), dim = dim,
+      threshold = 0.9)
 
   test("per-row bucket keys are bit-identical to the batch LSH bucket expressions") {
     val planes = Similarity.hyperplanes(dim, 2 * 8, 42L)
-    val all = (indexDf.collect().map(r =>
-      (r.getLong(0), r.getSeq[Float](1).toArray)) ++
-      streamVecs.map { case (id, v) => (id, v.toArray) }).toSeq
-    val df = all.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
-    val batch = StreamingEmbeddingAdmission.bucketIndex(df, planes, 2, 8)
-      .groupBy(col("index_id"))
-      .agg(collect_list(struct(col("tbl"), col("bucket"))).as("bs"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)
-        .map(x => (x.getInt(0), x.getLong(1))).sorted.toList).toMap
+    val all = (indexRows ++ rows).filter(_._2 != null).map { case (id, v) =>
+      (id, v.map(_.toFloat)) }
+    val columnar = all.toDF("vec_id", "embedding")
+      .select(col("vec_id"), array((0 until 8).map(t =>
+        Similarity.lshBucket(col("embedding").cast("array<double>"),
+          planes.slice(t * 2, (t + 1) * 2))): _*))
+      .as[(Long, Seq[Long])].collect().toMap
     all.foreach { case (id, v) =>
-      val mine = StreamingEmbeddingAdmission.bucketsOf(v, planes, 2, 8)
-        .zipWithIndex.map { case (b, t) => (t, b) }.sorted.toList
-      assert(mine == batch(id), s"bucket keys diverge for vec $id")
+      val mine = Similarity.bucketsOf(v.map(_.toDouble).toArray, planes, 2, 8).toSeq
+      assert(mine == columnar(id), s"bucket keys diverge for vec $id")
     }
-  }
-
-  test("batch mode matches Dedup.incrementalEmbeddingAdmission verdict for verdict") {
-    val batchVecs = streamVecs.toDF("vec_id", "embedding")
-    val expected = Dedup.incrementalEmbeddingAdmission(batchVecs, indexDf,
-        threshold = 0.9, dim = dim).collect()
-      .map(r => r.getAs[Long]("vec_id") ->
-        ((r.getAs[String]("status"),
-          Option(r.getAs[java.lang.Long]("match_id")).map(_.toLong),
-          r.getAs[Boolean]("keep")))).toMap
-    val got = StreamingEmbeddingAdmission.admission(batchVecs, indexDf,
-        threshold = 0.9, dim = dim).collect()
-      .map(v => v.vec_id -> ((v.status, v.match_id, v.keep))).toMap
-    assert(got == expected)
-    // the fixture exercises both classes
-    assert(expected(3L)._1 == "near_dup" && expected(3L)._2.contains(100L))
-    assert(expected(1L)._1 == "near_dup")
-    assert(expected(2L)._1 == "novel" && expected(5L)._1 == "novel")
   }
 
   test("streaming verdicts equal batch verdicts for every arrival pattern; state stays empty") {
-    val batchVecs = streamVecs.toDF("vec_id", "embedding")
-    val expected = Dedup.incrementalEmbeddingAdmission(batchVecs, indexDf,
-        threshold = 0.9, dim = dim).collect()
-      .map(r => r.getAs[Long]("vec_id") ->
-        ((r.getAs[String]("status"),
-          Option(r.getAs[java.lang.Long]("match_id")).map(_.toLong),
-          r.getAs[Boolean]("keep")))).toMap
-    val patterns = Seq(
-      Seq(streamVecs),                                  // one batch
-      streamVecs.map(Seq(_)),                           // one row per batch
-      Seq(streamVecs.take(2), streamVecs.drop(2)))      // split
-    patterns.zipWithIndex.foreach { case (batches, pi) =>
-      implicit val sq = spark.sqlContext
-      val mem = MemoryStream[(Long, Seq[Float])]
-      val out = StreamingEmbeddingAdmission.admission(
-        mem.toDF().toDF("vec_id", "embedding"), indexDf,
-        threshold = 0.9, dim = dim)
-      val q = out.writeStream.format("memory")
-        .queryName(s"embed_adm_$pi").outputMode("append").start()
-      try {
-        batches.foreach { b => mem.addData(b.map { case (id, v) => (id, v) }: _*)
-          q.processAllAvailable() }
-        val got = spark.table(s"embed_adm_$pi").collect()
-          .map(r => r.getAs[Long]("vec_id") ->
-            ((r.getAs[String]("status"),
-              Option(r.getAs[java.lang.Long]("match_id")).map(_.toLong),
-              r.getAs[Boolean]("keep")))).toMap
-        assert(got == expected, s"pattern $pi diverged: $got vs $expected")
-        // non-vacuous zero-state check (see StreamingAudioAdmissionSpec)
-        assert(q.recentProgress.nonEmpty, "no streaming progress observed")
-        q.recentProgress.foreach(p =>
-          assert(p.stateOperators.map(_.numRowsTotal).sum == 0L,
-            "admission must keep zero state rows"))
-      } finally q.stop()
-    }
+    elems.foreach(e => assertBatchAndStreams("embed", admit(e), rows, e, expected))
+  }
+
+  test("checkpointed restart resumes admission without re-emitting verdicts") {
+    elems.foreach(e => assertRestart(s"embed_$e", admit(e), rows, e, expected))
+  }
+
+  test("dim is required and positive") {
+    val e = intercept[IllegalArgumentException](
+      Dedup.incrementalEmbeddingAdmission(rowsDF(rows, "float"), rowsDF(indexRows, "float"),
+        dim = 0))
+    assert(e.getMessage.contains("dim must be positive"))
   }
 }

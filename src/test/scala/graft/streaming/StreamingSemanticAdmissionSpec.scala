@@ -1,16 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
 import graft.operators.Dedup
 
-/** Batch/streaming parity for SEMANTIC admission: the streaming twin
-  * must produce verdicts identical to
-  * `Dedup.incrementalSemanticAdmission` against the SAME stored
-  * index, regardless of micro-batching, with zero state rows. */
-class StreamingSemanticAdmissionSpec extends SparkTestBase {
+/** SEMANTIC admission, batch and stream ([[VectorAdmissionBehaviour]]):
+  * `Dedup.incrementalSemanticAdmission` against one stored index
+  * returns the fixture's literal verdict table however it runs. */
+class StreamingSemanticAdmissionSpec extends VectorAdmissionBehaviour {
 
   import spark.implicits._
 
@@ -24,71 +21,42 @@ class StreamingSemanticAdmissionSpec extends SparkTestBase {
     }.toDF("vec_id", "embedding")
   }
 
-  private def streamVecs = {
-    val c7 = corpusDF.filter(col("vec_id") === 7L)
-      .select(col("embedding")).head().getSeq[Double](0)
+  private lazy val dir = {
+    val d = java.nio.file.Files.createTempDirectory("graft_sem_adm").toString
+    Dedup.buildSemanticIndex(corpusDF, nlist = 4, d)
+    d
+  }
+
+  private lazy val rows: Rows = {
+    def stored(id: Long) = corpusDF.filter(col("vec_id") === id)
+      .select(col("embedding")).head().getSeq[Double](0).toSeq
+    val c7 = stored(7L)
     Seq(
       (100L, c7.map(_ + 0.001)),                              // near-dup of cluster around 7
       (101L, c7),                                             // exact copy
       (200L, Seq(0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 9.0)),    // novel direction
-      (300L, Seq.fill(8)(0.0)))                               // zero vector: novel, no crash
+      (300L, Seq.fill(8)(0.0)),                               // zero vector: novel, no crash
+      (400L, null),                                           // null embedding: novel
+      (0L, stored(0L)))                                       // stored vector 0: not its own witness
   }
 
+  /** The verdicts of the fixture, as the two-plan admission gave them. */
+  private val expected: Verdicts = Map(
+    100L -> (("near_dup", Some(1L), false)),
+    101L -> (("near_dup", Some(1L), false)),
+    200L -> (("novel", None, true)),
+    300L -> (("novel", None, true)),
+    400L -> (("novel", None, true)),
+    0L -> (("near_dup", Some(3L), false)))
+
+  private def admit(vecs: org.apache.spark.sql.DataFrame) =
+    Dedup.incrementalSemanticAdmission(vecs, corpusDF, dir, threshold = 0.9)
+
   test("streaming verdicts equal batch verdicts per arrival pattern; state stays empty") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sem_twin").toString
-    try {
-      val corpus = corpusDF
-      Dedup.buildSemanticIndex(corpus, nlist = 4, dir)
-      val batchVecs = streamVecs.toDF("vec_id", "embedding")
-      val expected = Dedup.incrementalSemanticAdmission(batchVecs, corpus,
-          dir, threshold = 0.9).collect()
-        .map(r => r.getAs[Long]("vec_id") ->
-          ((r.getAs[String]("status"),
-            Option(r.getAs[java.lang.Long]("match_id")).map(_.toLong),
-            r.getAs[Boolean]("keep")))).toMap
-      // the fixture exercises both classes
-      assert(expected(101L)._1 == "near_dup")
-      assert(expected(100L)._1 == "near_dup")
-      assert(expected(200L)._1 == "novel" && expected(300L)._1 == "novel")
-      // batch mode of the twin
-      val got0 = StreamingSemanticAdmission.admission(batchVecs, corpus, dir,
-          threshold = 0.9).collect()
-        .map(v => v.vec_id -> ((v.status, v.match_id, v.keep))).toMap
-      assert(got0 == expected)
-      // streaming arrival patterns
-      val patterns = Seq(
-        Seq(streamVecs),
-        streamVecs.map(Seq(_)),
-        Seq(streamVecs.take(2), streamVecs.drop(2)))
-      patterns.zipWithIndex.foreach { case (batches, pi) =>
-        implicit val sq = spark.sqlContext
-        val mem = MemoryStream[(Long, Seq[Double])]
-        val out = StreamingSemanticAdmission.admission(
-          mem.toDF().toDF("vec_id", "embedding"), corpus, dir,
-          threshold = 0.9)
-        val q = out.writeStream.format("memory")
-          .queryName(s"sem_adm_$pi").outputMode("append").start()
-        try {
-          batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-          val got = spark.table(s"sem_adm_$pi").collect()
-            .map(r => r.getAs[Long]("vec_id") ->
-              ((r.getAs[String]("status"),
-                Option(r.getAs[java.lang.Long]("match_id")).map(_.toLong),
-                r.getAs[Boolean]("keep")))).toMap
-          assert(got == expected, s"pattern $pi diverged: $got vs $expected")
-          // non-vacuous zero-state check (see StreamingAudioAdmissionSpec)
-          assert(q.recentProgress.nonEmpty, "no streaming progress observed")
-          q.recentProgress.foreach(p =>
-            assert(p.stateOperators.map(_.numRowsTotal).sum == 0L,
-              "admission must keep zero state rows"))
-        } finally q.stop()
-      }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(dir))
-    }
+    assertBatchAndStreams("sem", admit, rows, "double", expected)
+  }
+
+  test("checkpointed restart resumes admission without re-emitting verdicts") {
+    assertRestart("sem", admit, rows, "double", expected)
   }
 }

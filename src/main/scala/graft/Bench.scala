@@ -9,7 +9,7 @@ object Bench {
     * BETWEEN every pair of query timings, so a starvation window that
     * opens mid-run is detected at the query it landed on — endpoint
     * canaries provably miss mid-run windows (BENCH_r02-r04). */
-  private def canaryMops(spinNanos: Long = 200000000L): Double = {
+  private[graft] def canaryMops(spinNanos: Long = 200000000L): Double = {
     var x = 0x9e3779b97f4a7c15L
     var ops = 0L
     val t0 = System.nanoTime()
@@ -54,14 +54,27 @@ object Bench {
     math.round(ops.get() / ((System.nanoTime() - t0) / 1e3) * 10.0) / 10.0
   }
 
-  /** Calibration accessors for [[graft.tools.CanaryProbe]]. */
-  def probeSingle(): Double = canaryMops()
-  def probeParallel(threads: Int = 8): Double = parallelCanaryMops(threads)
+  /** Warmup outside the timers: JVM, codegen, parquet-footer and OS
+    * page-cache costs would otherwise all land on whichever query runs
+    * first. hash(struct(*)) references every column so the scan reads
+    * real data pages (a bare count() is answered from footer metadata);
+    * events needs the nanos conf that Tables.events would set. */
+  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "events", "documents", "embeddings").foreach { t =>
+      try spark.read.parquet(s"$sfDir/$t.parquet")
+        .selectExpr("max(hash(struct(*)))").collect()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup $t failed: ${e.getMessage}")
+      }
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = Session.cpus
     // Below this the surrounding window is treated as starved and the
     // measurement is retried (healthy floor ~1,500 mops with generous
     // margin for scheduler jitter; starved windows are ~10-100× lower).
@@ -73,170 +86,150 @@ object Bench {
     // (BASELINE.md; r5 observed a window where the single canary
     // read 1,767 "healthy" while 32-thread throughput was ~2 cores'
     // worth and every query measured 2-4× slow).
-    val parWidth = math.max(2, cpus.toInt)
+    val parWidth = math.max(2, cpus)
     val parFloor = sys.env.getOrElse("SPARK_GRAFT_PAR_FLOOR",
       (parWidth * 750).toString).toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup outside the timers: JVM/codegen/parquet-footer/OS-page-cache
-    // costs would otherwise all land on whichever query runs first.
-    // hash(struct(*)) references every column so the scan reads real
-    // data pages (a bare count() is answered from footer metadata);
-    // events needs the nanos conf that Tables.events would set.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet")
-        .selectExpr("max(hash(struct(*)))").collect()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup $t failed: ${e.getMessage}")
-      }
-    }
-    def cleanup(): Unit = {
-      // Per-query isolation: drop any cache/broadcast state a query
-      // leaked so allocation-heavy successors don't pay its GC bill.
-      // clearCache only covers SQL-level cache; RDD-level persists
-      // (e.g. connected-components' final label RDD, which must stay
-      // cached until the caller consumes it) are dropped explicitly.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-    // Warm both canary paths before the first certified reading: the
-    // first parallel-canary invocation is JIT-cold (r5 observed
-    // par_mops_pre 852 vs 55k warmed), which certified attempt 1 of
-    // the alphabetically-first query as unhealthy every run.
-    canaryMops(100000000L)
-    parallelCanaryMops(parWidth, 100000000L)
-    val mopsPre = canaryMops(500000000L)
-    val parPre = parallelCanaryMops(parWidth)
-    // Self-healing measurement protocol (BASELINE.md, mechanized):
-    // each query is timed up to `maxAttempts` times; an attempt is
-    // "healthy" when the canaries on BOTH sides of it cleared BOTH
-    // floors — single-thread mops (slow-core starvation) AND
-    // session-width aggregate mops (reduced-core starvation, which
-    // the single canary provably misses) — the canary pair after attempt N
-    // doubles as the pair before attempt N+1 / the next query. Stop
-    // once 2 healthy attempts exist; report the per-query MIN over
-    // healthy attempts (all attempts if none were healthy — min still
-    // favors unstarved runs). Queries that never got 2 healthy
-    // windows are listed in "starved" so a reader knows which numbers
-    // to distrust.
-    val maxAttempts = 4
-    // Cross-RUN min-merge: one full pass's per-query min-of-healthy
-    // still inherits whatever noise window the whole pass sat in
-    // (BENCH_r06 measured 34.5 s while the same-day clean pin was
-    // 28.2 s — pure window variance). N full passes over the sorted
-    // surface land each query in N well-separated windows; the
-    // per-query MIN across passes is the graded number.
-    val runs = math.max(1, scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").trim.toInt).getOrElse {
-        System.err.println("[bench] bad SPARK_GRAFT_BENCH_RUNS, using 2")
-        2
-      })
-    var lastCanary = mopsPre
-    var lastPar = parPre
-    def measurePass(): (Seq[(String, Double)], Set[String], Set[String]) = {
-      val starved = scala.collection.mutable.ListBuffer[String]()
-      val failed = scala.collection.mutable.ListBuffer[String]()
-      val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val samples = scala.collection.mutable.ArrayBuffer[(Double, Boolean)]()
-        var healthy = 0
-        var attempts = 0
-        while (healthy < 2 && attempts < maxAttempts) {
-          val pre = lastCanary
-          val preP = lastPar
-          val t0 = System.nanoTime()
-          // A thrown query fails fast, and its near-zero elapsed time
-          // must NOT enter the min-merge as a "measurement" — mark the
-          // sample unhealthy and surface the query in "failed".
-          var threw = false
-          try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-            threw = true
-            System.err.println(s"[bench] $name attempt ${attempts + 1} threw: " +
-              s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+    Session.run(cpus) { spark =>
+      warmup(spark, sfDir)
+      // Warm both canary paths before the first certified reading: the
+      // first parallel-canary invocation is JIT-cold (r5 observed
+      // par_mops_pre 852 vs 55k warmed), which certified attempt 1 of
+      // the alphabetically-first query as unhealthy every run.
+      canaryMops(100000000L)
+      parallelCanaryMops(parWidth, 100000000L)
+      val mopsPre = canaryMops(500000000L)
+      val parPre = parallelCanaryMops(parWidth)
+      // Self-healing measurement protocol (BASELINE.md, mechanized):
+      // each query is timed up to `maxAttempts` times; an attempt is
+      // "healthy" when the canaries on BOTH sides of it cleared BOTH
+      // floors — single-thread mops (slow-core starvation) AND
+      // session-width aggregate mops (reduced-core starvation, which
+      // the single canary provably misses) — the canary pair after attempt N
+      // doubles as the pair before attempt N+1 / the next query. Stop
+      // once 2 healthy attempts exist; report the per-query MIN over
+      // healthy attempts (all attempts if none were healthy — min still
+      // favors unstarved runs). Queries that never got 2 healthy
+      // windows are listed in "starved" so a reader knows which numbers
+      // to distrust.
+      val maxAttempts = 4
+      // Cross-RUN min-merge: one full pass's per-query min-of-healthy
+      // still inherits whatever noise window the whole pass sat in
+      // (BENCH_r06 measured 34.5 s while the same-day clean pin was
+      // 28.2 s — pure window variance). N full passes over the sorted
+      // surface land each query in N well-separated windows; the
+      // per-query MIN across passes is the graded number.
+      val runs = math.max(1, scala.util.Try(
+        sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").trim.toInt).getOrElse {
+          System.err.println("[bench] bad SPARK_GRAFT_BENCH_RUNS, using 2")
+          2
+        })
+      var lastCanary = mopsPre
+      var lastPar = parPre
+      def measurePass(): (Seq[(String, Double)], Set[String], Set[String]) = {
+        val starved = scala.collection.mutable.ListBuffer[String]()
+        val failed = scala.collection.mutable.ListBuffer[String]()
+        val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+          val samples = scala.collection.mutable.ArrayBuffer[(Double, Boolean)]()
+          var healthy = 0
+          var attempts = 0
+          while (healthy < 2 && attempts < maxAttempts) {
+            val pre = lastCanary
+            val preP = lastPar
+            val t0 = System.nanoTime()
+            // A thrown query fails fast, and its near-zero elapsed time
+            // must NOT enter the min-merge as a "measurement" — mark the
+            // sample unhealthy and surface the query in "failed".
+            var threw = false
+            try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+              threw = true
+              System.err.println(s"[bench] $name attempt ${attempts + 1} threw: " +
+                s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+            }
+            val sec = (System.nanoTime() - t0) / 1e9
+            Session.cleanup(spark)
+            lastCanary = canaryMops()
+            lastPar = parallelCanaryMops(parWidth)
+            val ok = !threw && math.min(pre, lastCanary) >= canaryFloor &&
+              math.min(preP, lastPar) >= parFloor
+            if (ok) healthy += 1
+            if (threw) failed += name
+            samples += ((sec, ok))
+            attempts += 1
           }
-          val sec = (System.nanoTime() - t0) / 1e9
-          cleanup()
-          lastCanary = canaryMops()
-          lastPar = parallelCanaryMops(parWidth)
-          val ok = !threw && math.min(pre, lastCanary) >= canaryFloor &&
-            math.min(preP, lastPar) >= parFloor
-          if (ok) healthy += 1
-          if (threw) failed += name
-          samples += ((sec, ok))
-          attempts += 1
+          if (healthy < 2) starved += name
+          val good = samples.collect { case (sec, true) => sec }
+          val sec = (if (good.nonEmpty) good.min else samples.map(_._1).min)
+          name -> sec
         }
-        if (healthy < 2) starved += name
-        val good = samples.collect { case (sec, true) => sec }
-        val sec = (if (good.nonEmpty) good.min else samples.map(_._1).min)
-        name -> sec
+        (results, starved.toSet, failed.toSet)
       }
-      (results, starved.toSet, failed.toSet)
+      val passes = (1 to runs).map { i =>
+        val p = measurePass()
+        System.err.println(f"[bench] pass $i/$runs total ${p._1.map(_._2).sum}%.3f s, " +
+          s"starved ${p._2.size}")
+        p
+      }
+      val names = passes.head._1.map(_._1)
+      // a query is starved only if NO pass got it 2 healthy windows;
+      // min across passes favors whichever window was clean
+      val starved = names.filter(n => passes.forall(_._2.contains(n)))
+      // any query that threw in ANY pass is reported — its timing (if no
+      // healthy sample exists anywhere) is a fail-fast artifact, not a
+      // measurement
+      val failed = names.filter(n => passes.exists(_._3.contains(n)))
+      val results = names.map(n => n -> passes.map(_._1.toMap.apply(n)).min)
+      val mopsPost = canaryMops(500000000L)
+      val parPost = parallelCanaryMops(parWidth)
+      val summary = Summary(results, runs, canaryFloor, parFloor,
+        mopsPre, mopsPost, parPre, parPost, starved, failed, sfDir)
+      // Robust emission: the full JSON goes to a file, and stdout ends
+      // with the compact line on its own line (BENCH_r04 recorded
+      // "parsed": null because sbt's LoggedOutput glued the line to log
+      // noise — build.sbt now also forces StdoutOutput for forked runs).
+      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
+      try java.nio.file.Files.write(java.nio.file.Paths.get(out),
+        (summary.full + "\n").getBytes("UTF-8"))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $out: ${e.getMessage}")
+      }
+      System.out.flush()
+      println()
+      println(summary.compact)
+      System.out.flush()
     }
-    val passes = (1 to runs).map { i =>
-      val p = measurePass()
-      System.err.println(f"[bench] pass $i/$runs total ${p._1.map(_._2).sum}%.3f s, " +
-        s"starved ${p._2.size}")
-      p
-    }
-    val names = passes.head._1.map(_._1)
-    // a query is starved only if NO pass got it 2 healthy windows;
-    // min across passes favors whichever window was clean
-    val starved = names.filter(n => passes.forall(_._2.contains(n)))
-    // any query that threw in ANY pass is reported — its timing (if no
-    // healthy sample exists anywhere) is a fail-fast artifact, not a
-    // measurement
-    val failed = names.filter(n => passes.exists(_._3.contains(n)))
-    val results = names.map { n =>
-      val sec = passes.map(_._1.toMap.apply(n)).min
-      n -> (math.round(sec * 1000.0) / 1000.0)
-    }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = math.round(results.map(_._2).sum * 1000.0) / 1000.0
-    val mopsPost = canaryMops(500000000L)
-    val parPost = parallelCanaryMops(parWidth)
-    val starvedJson = starved.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""canary_mops_pre":$mopsPre,"canary_mops_post":$mopsPost,""" +
-        s""""par_mops_pre":$parPre,"par_mops_post":$parPost,""" +
+  }
+
+  /** What one bench run reports: per-key seconds (min over passes),
+    * the canaries around the whole run and the keys to distrust. */
+  private[graft] final case class Summary(
+      results: Seq[(String, Double)], runs: Int, canaryFloor: Double, parFloor: Double,
+      mopsPre: Double, mopsPost: Double, parPre: Double, parPost: Double,
+      starved: Seq[String], failed: Seq[String], sfDir: String) {
+
+    private def ms(sec: Double) = math.round(sec * 1000.0) / 1000.0
+    private def strs(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    private def head = s"""{"metric":"total","value":${ms(results.map(r => ms(r._2)).sum)},"unit":"sec""""
+    private def canaries = s""""canary_mops_pre":$mopsPre,"canary_mops_post":$mopsPost,""" +
+      s""""par_mops_pre":$parPre,"par_mops_post":$parPost"""
+    private def tail = s""""starved":${strs(starved)},"failed":${strs(failed)},"sf":"$sfDir"}"""
+
+    /** The line for the bench file: `{key: sec}` for every key, the
+      * canaries, the protocol and the floors. */
+    def full: String = {
+      val qs = results.map { case (k, v) => s"\"" + k + "\":" + ms(v) }
+        .mkString("{", ",", "}")
+      s"""$head,"queries":$qs,$canaries,""" +
         s""""protocol":"min_merge_of_${runs}_passes_min_of_2_healthy_attempts",""" +
-        s""""runs":$runs,"canary_floor":$canaryFloor,""" +
-        s""""par_floor":$parFloor,""" +
-        s""""starved":$starvedJson,"failed":$failedJson,"sf":"$sfDir"}"""
-    // Robust emission: the JSON goes to a file AND to stdout on its
-    // own line (BENCH_r04 recorded "parsed": null because sbt's
-    // LoggedOutput glued the line to log noise — build.sbt now also
-    // forces StdoutOutput for forked runs).
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (json + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $out: ${e.getMessage}")
+        s""""runs":$runs,"canary_floor":$canaryFloor,"par_floor":$parFloor,$tail"""
     }
-    // Compact twin WITHOUT the per-query map, emitted LAST: the
-    // driver captures a bounded tail of stdout, and the full 92-query
-    // line can be truncated from the front (BENCH_r04/r05 "parsed":
-    // null). The compact line is a few hundred bytes, so whatever
-    // truncation eats the full line leaves this one parseable.
-    val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":{},""" +
-        s""""n_queries":${results.size},"compact":true,"runs":$runs,""" +
-        s""""canary_mops_pre":$mopsPre,"canary_mops_post":$mopsPost,""" +
-        s""""par_mops_pre":$parPre,"par_mops_post":$parPost,""" +
-        s""""starved":$starvedJson,"failed":$failedJson,"sf":"$sfDir"}"""
-    System.out.flush()
-    println()
-    println(json)
-    println(compact)
-    System.out.flush()
-    spark.stop()
+
+    /** The last stdout line: the full line without the per-key map,
+      * protocol and floors. A run's result is read from a bounded tail
+      * of stdout, about 2,000 characters (BENCH_r04/r05 "parsed": null
+      * when a per-key line came last), and 137 named keys alone take
+      * about 3.5 kB, so per-key seconds live only in the bench file. */
+    def compact: String =
+      s"""$head,"queries":{},"n_queries":${results.size},""" +
+        s""""compact":true,"runs":$runs,$canaries,$tail"""
   }
 }

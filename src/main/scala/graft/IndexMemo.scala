@@ -37,14 +37,18 @@ object IndexMemo {
 
   private lazy val root: Path = {
     val r = Files.createTempDirectory("graft_index_memo")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(r.toFile)
-    }
+    sys.addShutdownHook(deleteTree(r.toString))
     r
+  }
+
+  /** Recursive delete of a directory tree (or a file); a missing path
+    * is a no-op. */
+  def deleteTree(path: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete()
+    }
+    rm(new java.io.File(path))
   }
 
   private val built = scala.collection.mutable.HashMap.empty[String, String]
@@ -75,11 +79,7 @@ object IndexMemo {
       try build(d.toString)
       catch {
         case e: Throwable =>
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete()
-          }
-          rm(d.toFile)
+          deleteTree(d.toString)
           throw e
       }
       d.toString

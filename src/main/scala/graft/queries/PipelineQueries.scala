@@ -1495,13 +1495,7 @@ object PipelineQueries {
         import s.implicits._
         Seq((nQueries, recall >= 0.5, parityOk))
           .toDF("n_queries", "recall_ok", "parity_ok")
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(new java.io.File(dir))
-      }
+      } finally graft.IndexMemo.deleteTree(dir)
     }),
 
     // tombstone DELETE on the stored IVF×int8 index (the lifecycle
@@ -1571,13 +1565,7 @@ object PipelineQueries {
         import s.implicits._
         Seq((queries.count(), noDeleted, parityOk, purgeOk))
           .toDF("n_queries", "no_deleted_ok", "parity_ok", "purge_ok")
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(new java.io.File(dir))
-      }
+      } finally graft.IndexMemo.deleteTree(dir)
     }),
 
     // UPSERT on the stored IVF×int8 index — replace-or-insert, the
@@ -1622,10 +1610,10 @@ object PipelineQueries {
         // the upserted corpus is read by three serve/rebuild
         // pipelines — cache it for the key's lifetime
         val upsertedC = upserted.cache()
-        // eager cache fill: the two concurrent consumers below would
-        // otherwise both compute the cold union (the cold-cache herd)
-        upsertedC.count()
         try {
+          // eager cache fill: the two concurrent consumers below would
+          // otherwise both compute the cold union (the cold-cache herd)
+          upsertedC.count()
           // serve-from-disk and the rebuild twin are independent once
           // the upsert landed — concurrent job groups (the
           // q_ann_append overlap rule); the replay is sequenced after
@@ -1651,13 +1639,7 @@ object PipelineQueries {
               sameResults(after, served)))
             .toDF("n_queries", "parity_ok", "replace_ok", "replay_ok")
         } finally upsertedC.unpersist(blocking = false)
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(new java.io.File(dir))
-      }
+      } finally graft.IndexMemo.deleteTree(dir)
     }),
 
     // cross-doc duplicated-substring spans (Lee et al. exact-substring
@@ -1893,42 +1875,43 @@ object PipelineQueries {
         .withColumn("rank", row_number().over(
           Window.orderBy(col("bm25_e6").desc, col("doc_id"))).cast("long"))
         .cache()
-      // materialize the shared sparse leg once, then run its four
-      // consumers (two fusions, the inline-parity twin, the parity
-      // collect) as concurrent job groups (the q_ann_append overlap
-      // rule) — they are independent reads of cached/stored frames
-      sparseStored.count()
-      import s.implicits._
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fFusedStored = bgJob(
-        Retrieval.rrfFuse(sparseStored, denseStored, k = 10).collect())
-      // contract 1: the stored sparse leg is BIT-identical to inline
-      val fSparseInline = bgJob(
-        Retrieval.bm25Scores(docs, qterms.toDF("term"))
-          .filter(col("doc_id") =!= qid)
-          .orderBy(col("bm25_e6").desc, col("doc_id")).limit(50)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
-      val fSparseRows = bgJob(sparseStored
-        .select(col("doc_id"), col("n_hit"), col("bm25_e6"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet)
-      // contract 2: fusion overlap vs the exact composition
-      val denseExact = Similarity.bruteForceTopK(emb, queryVec, k = 50)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      val fFusedExact = bgJob(
-        Retrieval.rrfFuse(sparseStored, denseExact, k = 10)
-          .collect().map(_.getLong(0)).toSet)
-      val fusedStored = Await.result(fFusedStored, Duration.Inf)
-      val sparseParity =
-        Await.result(fSparseRows, Duration.Inf) ==
-          Await.result(fSparseInline, Duration.Inf)
-      val fusedExact = Await.result(fFusedExact, Duration.Inf)
-      sparseStored.unpersist(blocking = false)
-      val overlap = fusedStored.map(_.getLong(0)).count(fusedExact.contains)
-      Seq((fusedStored.length.toLong, sparseParity, overlap >= 6))
-        .toDF("n_rows", "sparse_parity_ok", "fusion_overlap_ok")
+      try {
+        // materialize the shared sparse leg once, then run its four
+        // consumers (two fusions, the inline-parity twin, the parity
+        // collect) as concurrent job groups (the q_ann_append overlap
+        // rule) — they are independent reads of cached/stored frames
+        sparseStored.count()
+        import s.implicits._
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.ExecutionContext.Implicits.global
+        import scala.concurrent.duration.Duration
+        val fFusedStored = bgJob(
+          Retrieval.rrfFuse(sparseStored, denseStored, k = 10).collect())
+        // contract 1: the stored sparse leg is BIT-identical to inline
+        val fSparseInline = bgJob(
+          Retrieval.bm25Scores(docs, qterms.toDF("term"))
+            .filter(col("doc_id") =!= qid)
+            .orderBy(col("bm25_e6").desc, col("doc_id")).limit(50)
+            .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
+        val fSparseRows = bgJob(sparseStored
+          .select(col("doc_id"), col("n_hit"), col("bm25_e6"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .toSet)
+        // contract 2: fusion overlap vs the exact composition
+        val denseExact = Similarity.bruteForceTopK(emb, queryVec, k = 50)
+          .select(col("neighbor_id").as("doc_id"), col("rank"))
+        val fFusedExact = bgJob(
+          Retrieval.rrfFuse(sparseStored, denseExact, k = 10)
+            .collect().map(_.getLong(0)).toSet)
+        val fusedStored = Await.result(fFusedStored, Duration.Inf)
+        val sparseParity =
+          Await.result(fSparseRows, Duration.Inf) ==
+            Await.result(fSparseInline, Duration.Inf)
+        val fusedExact = Await.result(fFusedExact, Duration.Inf)
+        val overlap = fusedStored.map(_.getLong(0)).count(fusedExact.contains)
+        Seq((fusedStored.length.toLong, sparseParity, overlap >= 6))
+          .toDF("n_rows", "sparse_parity_ok", "fusion_overlap_ok")
+      } finally sparseStored.unpersist(blocking = false)
     }),
 
     // stored-BM25-index INCREMENTAL MAINTENANCE, exactly oracled:
@@ -1969,13 +1952,7 @@ object PipelineQueries {
         rows.map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_hit"),
             r.getAs[Long]("bm25_e6")))
           .toDF("doc_id", "n_hit", "bm25_e6")
-      } finally {
-        def rmr(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rmr)
-          f.delete()
-        }
-        rmr(new java.io.File(dir))
-      }
+      } finally graft.IndexMemo.deleteTree(dir)
     }),
 
     // tombstone DELETE on the stored BM25 index: build on the FULL
@@ -2016,13 +1993,7 @@ object PipelineQueries {
         rows.map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_hit"),
             r.getAs[Long]("bm25_e6")))
           .toDF("doc_id", "n_hit", "bm25_e6")
-      } finally {
-        def rmr(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rmr)
-          f.delete()
-        }
-        rmr(new java.io.File(dir))
-      }
+      } finally graft.IndexMemo.deleteTree(dir)
     }),
 
     // Johnson-Lindenstrauss signed random projection 64 -> 8 dims:

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.io.{FileWriter, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ml.{SketchLinearRegression, Splits}
@@ -39,57 +38,48 @@ object Experiment {
       if (sketchOrFlink == "Flink") "None" else a.getOrElse("compressionType", "Sketch")
     val logPath = a.getOrElse("output", "GraftExperimentLogs.txt")
 
-    // getOrCreate may hand back a caller-owned session (e.g. under
-    // test); only stop what we actually created
-    val preexisting = SparkSession.getDefaultSession.orElse(SparkSession.getActiveSession)
-    val spark = SparkSession.builder()
-      .master(s"local[$parallelism]")
-      .config("spark.sql.shuffle.partitions", parallelism)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-experiment")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // a caller-owned session (e.g. under test) is joined, not stopped
+    graft.Session.run(parallelism) { spark =>
+      import spark.implicits._
+      val t0 = System.currentTimeMillis()
+      val parsed = LibSvm.read(spark, input, maxDim)
+      val dim = LibSvm.inferDim(parsed)
+      // deterministic 75/25 split on a full-row hash (vs the
+      // reference's unseeded Splitter)
+      val (trainDf, testDf) = Splits.byKey(parsed.toDF(),
+        xxhash64(col("label"), col("indices"), col("values")))
+      val train = LibSvm.toLabeledVectors(trainDf.as[LibSvm.Parsed], dim)
 
-    import spark.implicits._
-    val t0 = System.currentTimeMillis()
-    val parsed = LibSvm.read(spark, input, maxDim)
-    val dim = LibSvm.inferDim(parsed)
-    // deterministic 75/25 split on a full-row hash (vs the
-    // reference's unseeded Splitter)
-    val (trainDf, testDf) = Splits.byKey(parsed.toDF(),
-      xxhash64(col("label"), col("indices"), col("values")))
-    val train = LibSvm.toLabeledVectors(trainDf.as[LibSvm.Parsed], dim)
+      val model = new SketchLinearRegression()
+        .setIterations(iterations).setStepsize(stepSize)
+        .setCompressionType(compression)
+        .pipe(m => threshold.fold(m)(m.setConvergenceThreshold))
+        .fit(train)
 
-    val model = new SketchLinearRegression()
-      .setIterations(iterations).setStepsize(stepSize)
-      .setCompressionType(compression)
-      .pipe(m => threshold.fold(m)(m.setConvergenceThreshold))
-      .fit(train)
+      // evaluate: (truth, prediction) → Σ|t−p|, MAE (Test.scala:52-62)
+      val eval = LibSvm.toLabeledVectors(testDf.as[LibSvm.Parsed], dim)
+        .map(lv => (lv.label, model.predict(lv.features)))
+        .toDF("truth", "prediction")
+        .agg(coalesce(sum(abs(col("truth") - col("prediction"))), lit(0.0)).as("absSum"),
+          count(lit(1)).as("n")).head()
+      val absoluteError = eval.getDouble(0)
+      val nTest = eval.getLong(1)
+      // an empty test split (tiny input, every row hashed to train)
+      // would otherwise make sum() null → NPE, and 0/0 → NaN
+      val avgError = if (nTest == 0) 0.0 else absoluteError / nTest
+      val totalTime = System.currentTimeMillis() - t0
 
-    // evaluate: (truth, prediction) → Σ|t−p|, MAE (Test.scala:52-62)
-    val eval = LibSvm.toLabeledVectors(testDf.as[LibSvm.Parsed], dim)
-      .map(lv => (lv.label, model.predict(lv.features)))
-      .toDF("truth", "prediction")
-      .agg(coalesce(sum(abs(col("truth") - col("prediction"))), lit(0.0)).as("absSum"),
-        count(lit(1)).as("n")).head()
-    val absoluteError = eval.getDouble(0)
-    val nTest = eval.getLong(1)
-    // an empty test split (tiny input, every row hashed to train)
-    // would otherwise make sum() null → NPE, and 0/0 → NaN
-    val avgError = if (nTest == 0) 0.0 else absoluteError / nTest
-    val totalTime = System.currentTimeMillis() - t0
-
-    // CSV schema parity with Test.scala:71-77:
-    // method,par,iter,step,compression,input,dim,totalMs,msPerEpoch,absErr,avgErr
-    val csv = Seq(sketchOrFlink, parallelism, iterations, stepSize, compression,
-      input, dim, totalTime, totalTime / math.max(iterations, 1),
-      f"$absoluteError%.6f", f"$avgError%.6f").mkString(",")
-    val out = new PrintWriter(new FileWriter(logPath, true))
-    try {
-      out.println(s"CSV_Line: $csv")
-    } finally out.close()
-    println(s"CSV_Line: $csv")
-    if (preexisting.isEmpty) spark.stop()
+      // CSV schema parity with Test.scala:71-77:
+      // method,par,iter,step,compression,input,dim,totalMs,msPerEpoch,absErr,avgErr
+      val csv = Seq(sketchOrFlink, parallelism, iterations, stepSize, compression,
+        input, dim, totalTime, totalTime / math.max(iterations, 1),
+        f"$absoluteError%.6f", f"$avgError%.6f").mkString(",")
+      val out = new PrintWriter(new FileWriter(logPath, true))
+      try {
+        out.println(s"CSV_Line: $csv")
+      } finally out.close()
+      println(s"CSV_Line: $csv")
+    }
   }
 
   private implicit class Pipe[A](private val a: A) extends AnyVal {

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.io.PrintWriter
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dumps `explain("formatted")` of the internal dataflows behind the
@@ -22,63 +22,59 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <sfDir> <outDir> <tag>")
     val Array(sfDir, outDir, tag) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    new java.io.File(outDir).mkdirs()
+    graft.Session.run() { spark =>
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      new java.io.File(outDir).mkdirs()
 
-    def dump(name: String, df: DataFrame): Unit = {
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      val w = new PrintWriter(s"$outDir/${name}_$tag.txt", "UTF-8")
-      try w.println(plan) finally w.close()
-      println(s"[plandump] $name ($tag): ${Plans.exchangeCount(plan)} Exchange lines")
+      def dump(name: String, df: DataFrame): Unit = {
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        val w = new PrintWriter(s"$outDir/${name}_$tag.txt", "UTF-8")
+        try w.println(plan) finally w.close()
+        println(s"[plandump] $name ($tag): ${Plans.exchangeCount(plan)} Exchange lines")
+      }
+
+      import graft.operators.{AudioDedup, Curation, Dedup, ImageDedup, MediaDedup, VideoDedup}
+      val docs = graft.Tables.documents(spark, sfDir)
+      val modalities: Seq[(String, MediaDedup, DataFrame => DataFrame,
+          DataFrame => DataFrame, DataFrame => DataFrame)] = Seq(
+        ("image", ImageDedup, ImageDedup.withPlantedTwins, ImageDedup.withPlantedImages,
+          ImageDedup.plantedRecrawlBatch),
+        ("audio", AudioDedup, AudioDedup.withPlantedTwins, AudioDedup.withPlantedClips,
+          AudioDedup.plantedRecrawlBatch),
+        ("video", VideoDedup, VideoDedup.withPlantedTwins, VideoDedup.withPlantedStreams,
+          VideoDedup.plantedRecrawlBatch))
+      modalities.foreach { case (kind, m, twins, stored, recrawl) =>
+        val corpus = twins(docs)
+        val prints = m.families(m.prints(corpus)).cache()
+        prints.count()
+        dump(s"q_dedup_${kind}_verdict", m.dedupFromFamilies(corpus.select(col("doc_id")), prints))
+        prints.unpersist(blocking = false)
+        val dir = java.nio.file.Files.createTempDirectory(s"plandump_$kind").toString
+        try {
+          m.buildIndex(stored(docs), dir)
+          dump(s"q_dedup_incr_${kind}_admission", m.admission(recrawl(docs), dir).toDF())
+        } finally graft.IndexMemo.deleteTree(dir)
+      }
+
+      // q_dedup_substring's span chain
+      dump("q_dedup_substring_spans", Dedup.duplicatedSpans(docs, 8, 2))
+
+      // q_curate_hosts exactly as the key composes it
+      val id = col("doc_id")
+      val even = pmod(id, lit(2)) === 0
+      val url = concat(lit("https://"), col("source"),
+        when(even, lit("-a")).otherwise(lit("-b")), lit(".example.com"),
+        when(even, lit("/art/0"))
+          .otherwise(concat(lit("/art/"), pmod(id, lit(100000)).cast("string"))),
+        when(even, lit("?id=0"))
+          .otherwise(concat(lit("?id="), pmod(id, lit(7)).cast("string"))),
+        when(pmod(id, lit(3)) === 0, lit("&utm_source=feed")).otherwise(lit("")))
+      dump("q_curate_hosts", Curation.curateWithHostGate(docs,
+        urls = docs.select(id, url.as("url")),
+        evalDocs = docs.filter(pmod(id, lit(10)) === 0),
+        contamThresholdE6 = 700000L))
+
     }
-
-    import graft.operators.{AudioDedup, Curation, Dedup, ImageDedup, MediaDedup, VideoDedup}
-    val docs = graft.Tables.documents(spark, sfDir)
-    val modalities: Seq[(String, MediaDedup, DataFrame => DataFrame,
-        DataFrame => DataFrame, DataFrame => DataFrame)] = Seq(
-      ("image", ImageDedup, ImageDedup.withPlantedTwins, ImageDedup.withPlantedImages,
-        ImageDedup.plantedRecrawlBatch),
-      ("audio", AudioDedup, AudioDedup.withPlantedTwins, AudioDedup.withPlantedClips,
-        AudioDedup.plantedRecrawlBatch),
-      ("video", VideoDedup, VideoDedup.withPlantedTwins, VideoDedup.withPlantedStreams,
-        VideoDedup.plantedRecrawlBatch))
-    modalities.foreach { case (kind, m, twins, stored, recrawl) =>
-      val corpus = twins(docs)
-      val prints = m.families(m.prints(corpus)).cache()
-      prints.count()
-      dump(s"q_dedup_${kind}_verdict", m.dedupFromFamilies(corpus.select(col("doc_id")), prints))
-      prints.unpersist(blocking = false)
-      val dir = java.nio.file.Files.createTempDirectory(s"plandump_$kind").toString
-      m.buildIndex(stored(docs), dir)
-      dump(s"q_dedup_incr_${kind}_admission", m.admission(recrawl(docs), dir).toDF())
-    }
-
-    // q_dedup_substring's span chain
-    dump("q_dedup_substring_spans", Dedup.duplicatedSpans(docs, 8, 2))
-
-    // q_curate_hosts exactly as the key composes it
-    val id = col("doc_id")
-    val even = pmod(id, lit(2)) === 0
-    val url = concat(lit("https://"), col("source"),
-      when(even, lit("-a")).otherwise(lit("-b")), lit(".example.com"),
-      when(even, lit("/art/0"))
-        .otherwise(concat(lit("/art/"), pmod(id, lit(100000)).cast("string"))),
-      when(even, lit("?id=0"))
-        .otherwise(concat(lit("?id="), pmod(id, lit(7)).cast("string"))),
-      when(pmod(id, lit(3)) === 0, lit("&utm_source=feed")).otherwise(lit("")))
-    dump("q_curate_hosts", Curation.curateWithHostGate(docs,
-      urls = docs.select(id, url.as("url")),
-      evalDocs = docs.filter(pmod(id, lit(10)) === 0),
-      contamThresholdE6 = 700000L))
-
-    spark.stop()
   }
 }

@@ -625,7 +625,7 @@ object Plans {
     * purge → append) whose serve path is exactly
     * `q_similarity_ivfq`'s pinned plan. */
   private val internals: Seq[(String, String,
-      (SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
+      (SparkSession, String, String) => org.apache.spark.sql.DataFrame)] = Seq(
     ("q_dedup_image", "internal: the near-dup PAIR frame the verdict " +
       "folds (graft.operators.MediaDedup, the image modality) — the " +
       "capped (band, value, color-cell) bucket groups (one shuffle, " +
@@ -634,14 +634,14 @@ object Plans {
       "per-channel distance (SerializeFromObject above MapPartitions " +
       "in the plan — the optimizer barrier that keeps the per-element " +
       "loops out of every join condition).",
-      (s, d) => {
+      (s, d, _) => {
         val m = graft.operators.ImageDedup
         m.nearDupPairs(m.prints(m.withPlantedTwins(graft.Tables.documents(s, d))))
       }),
     ("q_dedup_audio", "internal: the audio near-dup PAIR frame — the " +
       "same engine plan over the audio kernel (one 65-int envelope " +
       "frame, sign-delta bands, mean-level grids).",
-      (s, d) => {
+      (s, d, _) => {
         val m = graft.operators.AudioDedup
         m.nearDupPairs(m.prints(m.withPlantedTwins(graft.Tables.documents(s, d))))
       }),
@@ -653,19 +653,17 @@ object Plans {
       "threshold), a typed sum-gate + exact-verify vote per " +
       "candidate, and the per-doc verdict fold " +
       "(FlatMapGroupsWithState, no state kept).",
-      (s, d) => {
+      (s, d, dir) => {
         val m = graft.operators.ImageDedup
         val docs = graft.Tables.documents(s, d)
-        val dir = java.nio.file.Files.createTempDirectory("plans_imgidx").toString
         m.buildIndex(m.withPlantedImages(docs), dir)
         m.admission(m.plantedRecrawlBatch(docs), dir).toDF()
       }),
     ("q_dedup_incr_audio", "internal: the audio ADMISSION plan — the " +
       "q_dedup_incr_image plan over the audio kernel.",
-      (s, d) => {
+      (s, d, dir) => {
         val m = graft.operators.AudioDedup
         val docs = graft.Tables.documents(s, d)
-        val dir = java.nio.file.Files.createTempDirectory("plans_audidx").toString
         m.buildIndex(m.withPlantedClips(docs), dir)
         m.admission(m.plantedRecrawlBatch(docs), dir).toDF()
       }),
@@ -675,14 +673,14 @@ object Plans {
       "sums (no pivot shuffle, no UDF); training itself exchanges " +
       "only 64-dim gradients through treeAggregate, invisible to SQL " +
       "by design.",
-      (s, d) => graft.operators.ModelSelection.hashedFeatures(
+      (s, d, _) => graft.operators.ModelSelection.hashedFeatures(
         graft.Tables.documents(s, d))),
     ("q_bpe_merges", "internal: the per-round PAIR-COUNT frame the " +
       "driver argmax-probes — an explode of adjacent-symbol zips " +
       "over the VOCAB-sized word-frequency table with map-side " +
       "partial aggregation; rounds cost vocab-table jobs, never " +
       "corpus scans.",
-      (s, d) => graft.operators.Tokenizer.pairCounts(
+      (s, d, _) => graft.operators.Tokenizer.pairCounts(
         graft.operators.Tokenizer.wordFreq(graft.Tables.documents(s, d)))),
     ("q_unigram_encode", "internal: the unigram-LM encode frame — " +
       "Viterbi runs once per DISTINCT word (a typed MapPartitions " +
@@ -690,7 +688,7 @@ object Plans {
       "map), then ONE word-keyed join and ONE doc-keyed aggregation " +
       "reassemble documents; EM training itself exchanges only " +
       "piece-count sidecars, invisible to SQL by design.",
-      (s, d) => {
+      (s, d, _) => {
         val docs = graft.Tables.documents(s, d)
         val model = graft.operators.Unigram.learnUnigramMemo(docs, d,
           vocabSize = 256, seedSize = 2048)
@@ -699,44 +697,39 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    graft.Session.run(8) { spark =>
+      val out = new StringBuilder
+      out ++= "# PLANS — physical plans of the headline queries\n\n"
+      out ++= s"Generated by `graft.tools.Plans` against `$sfDir`.\n"
+      out ++= "For each query: why this is the plan we want at 100 TB, then\n"
+      out ++= "the `explain(\"formatted\")` output (AQE initial plan).\n"
 
-    val out = new StringBuilder
-    out ++= "# PLANS — physical plans of the headline queries\n\n"
-    out ++= s"Generated by `graft.tools.Plans` against `$sfDir`.\n"
-    out ++= "For each query: why this is the plan we want at 100 TB, then\n"
-    out ++= "the `explain(\"formatted\")` output (AQE initial plan).\n"
+      rationale.foreach { case (name, why) =>
+        val df = graft.SparkEntry.queries(name)(spark, sfDir)
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        out ++= s"\n## $name\n\n$why\n\n```\n$plan```\n"
+      }
 
-    rationale.foreach { case (name, why) =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      out ++= s"\n## $name\n\n$why\n\n```\n$plan```\n"
+      out ++= "\n# Internal dataflow plans of contract keys\n\n"
+      out ++= "Keys whose public result is a 1-row contract verdict\n"
+      out ++= "(LocalTableScan above): the designated internal frame per\n"
+      out ++= "key, so the real candidate-join/verify plan is pinned too.\n"
+      out ++= "`q_ann_upsert` is a write lifecycle (tombstone → purge →\n"
+      out ++= "append); its serve path is `q_similarity_ivfq`'s plan.\n"
+      internals.foreach { case (name, why, mk) =>
+        val scratch = java.nio.file.Files.createTempDirectory("plans_scratch").toString
+        val plan =
+          try mk(spark, sfDir, scratch).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          finally graft.IndexMemo.deleteTree(scratch)
+        out ++= s"\n## $name — internal\n\n$why\n\n```\n$plan```\n"
+      }
+
+      val pw = new PrintWriter("PLANS.md", "UTF-8")
+      try pw.write(out.toString) finally pw.close()
+      println(s"[plans] wrote PLANS.md (${rationale.size} queries + " +
+        s"${internals.size} internal)")
     }
-
-    out ++= "\n# Internal dataflow plans of contract keys\n\n"
-    out ++= "Keys whose public result is a 1-row contract verdict\n"
-    out ++= "(LocalTableScan above): the designated internal frame per\n"
-    out ++= "key, so the real candidate-join/verify plan is pinned too.\n"
-    out ++= "`q_ann_upsert` is a write lifecycle (tombstone → purge →\n"
-    out ++= "append); its serve path is `q_similarity_ivfq`'s plan.\n"
-    internals.foreach { case (name, why, mk) =>
-      val df = mk(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      out ++= s"\n## $name — internal\n\n$why\n\n```\n$plan```\n"
-    }
-
-    val pw = new PrintWriter("PLANS.md", "UTF-8")
-    try pw.write(out.toString) finally pw.close()
-    println(s"[plans] wrote PLANS.md (${rationale.size} queries + " +
-      s"${internals.size} internal)")
-    spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Tables
 import graft.operators.Tokenizer
 
@@ -30,31 +28,24 @@ object TrainBpe {
     val rounds = if (args.length >= 2) args(1).toInt else 1000
     val maxBatch = if (args.length >= 3) args(2).toInt else 32
     val hexMode = args.length >= 4 && args(3) == "hex"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-    val raw = Tables.documents(spark, sfDir)
-    val docs = if (!hexMode) raw
-      else raw.withColumn("text", concat_ws(" ",
-        transform(split(col("text"), " "),
-          w => md5(concat(w, pmod(col("doc_id"), lit(64)).cast("string"))))))
-    val t0 = System.nanoTime()
-    val base = Tokenizer.wordFreq(docs).persist()
-    val merges =
-      try Tokenizer.learnMerges(base, rounds, maxBatch)
-      finally base.unpersist()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val last = merges.takeRight(3).map(m => s"${m._2}+${m._3}@${m._4}")
-    println(f"""{"tool":"train_bpe","sf":"$sfDir","rounds":$rounds,""" +
-      f""""max_batch":$maxBatch,"hex":$hexMode,""" +
-      f""""merges_learned":${merges.length},""" +
-      f""""wall_s":$wall%.1f,"tail_merges":"${last.mkString(" ")}"}""")
-    spark.stop()
+    graft.Session.run() { spark =>
+      import org.apache.spark.sql.functions._
+      val raw = Tables.documents(spark, sfDir)
+      val docs = if (!hexMode) raw
+        else raw.withColumn("text", concat_ws(" ",
+          transform(split(col("text"), " "),
+            w => md5(concat(w, pmod(col("doc_id"), lit(64)).cast("string"))))))
+      val t0 = System.nanoTime()
+      val base = Tokenizer.wordFreq(docs).persist()
+      val merges =
+        try Tokenizer.learnMerges(base, rounds, maxBatch)
+        finally base.unpersist()
+      val wall = (System.nanoTime() - t0) / 1e9
+      val last = merges.takeRight(3).map(m => s"${m._2}+${m._3}@${m._4}")
+      println(f"""{"tool":"train_bpe","sf":"$sfDir","rounds":$rounds,""" +
+        f""""max_batch":$maxBatch,"hex":$hexMode,""" +
+        f""""merges_learned":${merges.length},""" +
+        f""""wall_s":$wall%.1f,"tail_merges":"${last.mkString(" ")}"}""")
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Tables
 import graft.operators.Unigram
 
@@ -22,33 +20,26 @@ object TrainUnigram {
     val vocabSize = if (args.length >= 2) args(1).toInt else 512
     val seedSize = if (args.length >= 3) args(2).toInt else 4 * vocabSize
     val hexMode = args.length >= 4 && args(3) == "hex"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-    val raw = Tables.documents(spark, sfDir)
-    val docs = if (!hexMode) raw
-      else raw.withColumn("text", concat_ws(" ",
-        transform(split(col("text"), " "),
-          w => md5(concat(w, pmod(col("doc_id"), lit(64)).cast("string"))))))
-    val t0 = System.nanoTime()
-    val model = Unigram.learnUnigram(docs, vocabSize, seedSize)
-    val wall = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val encoded = Unigram.unigramEncode(docs, model)
-      .agg(sum(col("n_pieces")), min(col("roundtrip_ok"))).head()
-    val encWall = (System.nanoTime() - t1) / 1e9
-    println(f"[unigram] sf=$sfDir vocab=${model.pieces.length} " +
-      f"(target $vocabSize, seed $seedSize, hex=$hexMode) " +
-      f"em_iters=${model.lossTrail.length} train_wall=$wall%.1f s " +
-      f"loss ${model.lossTrail.head}%.3e -> ${model.lossTrail.last}%.3e " +
-      f"encode_wall=$encWall%.1f s pieces=${encoded.getLong(0)} " +
-      f"roundtrip=${encoded.getBoolean(1)}")
-    spark.stop()
+    graft.Session.run() { spark =>
+      import org.apache.spark.sql.functions._
+      val raw = Tables.documents(spark, sfDir)
+      val docs = if (!hexMode) raw
+        else raw.withColumn("text", concat_ws(" ",
+          transform(split(col("text"), " "),
+            w => md5(concat(w, pmod(col("doc_id"), lit(64)).cast("string"))))))
+      val t0 = System.nanoTime()
+      val model = Unigram.learnUnigram(docs, vocabSize, seedSize)
+      val wall = (System.nanoTime() - t0) / 1e9
+      val t1 = System.nanoTime()
+      val encoded = Unigram.unigramEncode(docs, model)
+        .agg(sum(col("n_pieces")), min(col("roundtrip_ok"))).head()
+      val encWall = (System.nanoTime() - t1) / 1e9
+      println(f"[unigram] sf=$sfDir vocab=${model.pieces.length} " +
+        f"(target $vocabSize, seed $seedSize, hex=$hexMode) " +
+        f"em_iters=${model.lossTrail.length} train_wall=$wall%.1f s " +
+        f"loss ${model.lossTrail.head}%.3e -> ${model.lossTrail.last}%.3e " +
+        f"encode_wall=$encWall%.1f s pieces=${encoded.getLong(0)} " +
+        f"roundtrip=${encoded.getBoolean(1)}")
+    }
   }
 }

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.{Column, SparkSession}
@@ -26,4 +27,8 @@ object Bridge {
     * Spark's InjectRuntimeFilter shape. */
   def bloomMightContain(serialized: Array[Byte], value: Column): Column =
     column(BloomFilterMightContain(Literal(serialized), expression(value)))
+
+  /** Blocks until every listener event posted so far has reached its
+    * listeners (`listenerBus` is `private[spark]`). */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

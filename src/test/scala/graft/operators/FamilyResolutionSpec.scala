@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestBase
 
 /** Focused spec for the r16 family-resolution restructure: the
   * media dedups now derive exact-content families (rep = min doc_id
@@ -12,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * families, out-of-order ids, and an undecodable (absent) member —
   * by checking the window form against the old groupBy reference
   * formulation row for row. */
-class FamilyResolutionSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FamilyResolutionSpec extends SparkTestBase {
 
   test("window-min family resolution equals the groupBy reference") {
     val s = spark

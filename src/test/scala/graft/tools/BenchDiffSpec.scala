@@ -26,4 +26,26 @@ class BenchDiffSpec extends AnyFunSuite {
     assert(queries.isEmpty)
     assert(top("value") === 1.5)
   }
+
+  test("Bench's file line carries every key and its compact stdout line fits the tail window") {
+    val keys = graft.SparkEntry.queries.keySet.toSeq.sorted
+    val results = keys.zipWithIndex.map { case (k, i) => k -> (0.1 + i * 0.0137) }
+    val summary = graft.Bench.Summary(results, runs = 2, canaryFloor = 600,
+      parFloor = 3000, mopsPre = 1500, mopsPost = 1490, parPre = 5900, parPost = 6000,
+      starved = Seq("q_retrieval_hybrid_stored"), failed = Seq("q_ann_upsert"),
+      sfDir = "/data/sf0.1")
+    val (fileTop, fileQueries) = BenchDiff.parse(summary.full)
+    assert(fileQueries.keySet == keys.toSet && fileQueries.size == 137)
+    assert(math.abs(fileQueries("q_dedup_minhash") - results.toMap.apply("q_dedup_minhash")) < 0.0005)
+    val (top, queries) = BenchDiff.parse(summary.compact)
+    assert(queries.isEmpty && top("n_queries") == 137)
+    assert(top("value") == fileTop("value"))
+    Seq("canary_mops_pre", "canary_mops_post", "par_mops_pre", "par_mops_post")
+      .foreach(k => assert(top.contains(k), k))
+    // a run's result is read from the last ~2,000 characters of stdout,
+    // which end with this line and sbt's closing status line
+    val sbtTail = "[success] Total time: 1018 s (16:58), completed Aug 18, 2026, 8:07:19 AM"
+    assert(summary.compact.length + sbtTail.length + 2 <= 2000)
+    assert(!summary.compact.contains('\n'))
+  }
 }

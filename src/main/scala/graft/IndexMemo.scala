@@ -35,21 +35,7 @@ import java.nio.file.{Files, Path, Paths}
   */
 object IndexMemo {
 
-  private lazy val root: Path = {
-    val r = Files.createTempDirectory("graft_index_memo")
-    sys.addShutdownHook(deleteTree(r.toString))
-    r
-  }
-
-  /** Recursive delete of a directory tree (or a file); a missing path
-    * is a no-op. */
-  def deleteTree(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(path))
-  }
+  private lazy val root: Path = Paths.get(Materialize.jvmTempDir("graft_index_memo"))
 
   private val built = scala.collection.mutable.HashMap.empty[String, String]
 
@@ -77,11 +63,7 @@ object IndexMemo {
       // assume a clean target): delete the dir before rethrowing, so
       // a retry starts from scratch exactly like the first attempt
       try build(d.toString)
-      catch {
-        case e: Throwable =>
-          deleteTree(d.toString)
-          throw e
-      }
+      catch { case e: Throwable => Materialize.deleteTree(d.toString); throw e }
       d.toString
     })
   }

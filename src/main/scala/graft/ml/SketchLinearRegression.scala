@@ -4,7 +4,6 @@ import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorOps
 import graft.sketch.{GradientCodec, SketchCodec}
@@ -86,8 +85,7 @@ class SketchLinearRegression extends Serializable {
     // that reads it (Flink bulk iteration's implicit cache, SURVEY §4)
     val blocks = data
       .mapPartitions(rows => if (rows.hasNext) Iterator(RowBlock(rows)) else Iterator.empty)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try train(blocks) finally blocks.unpersist(blocking = false)
+    graft.Materialize.withCached(blocks)(train(blocks))
   }
 
   private def train(blocks: RDD[RowBlock]): LinearModel = {

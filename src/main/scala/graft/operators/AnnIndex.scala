@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.VectorOps
 import graft.sources.CorpusSink
 
@@ -720,32 +721,18 @@ object AnnIndex {
     val centroids = Similarity.kmeansCentroids(corpus, nlist, seed,
       initMode = initMode, sampleMod = sampleMod)
     writeCentroids(corpus.sparkSession, centroids, dir)
-    // one centroid-scoring pass serves both the spill and the argmax
-    // (crank 1) — the graphTopK single-pass rule
-    val spill = Similarity.assignTopCells(corpus, centroids, spillCells).cache()
-    val assigned = corpus.select(col("vec_id"),
-        VectorOps.asDoubleArray(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.l2Norm(col("cv")))
-      .join(spill.filter(col("crank") === 1).select(col("vec_id"), col("cid")),
-        Seq("vec_id"))
-      .cache()
-    spill.count(); assigned.count() // pre-populate before stages race (graphTopK rule)
-    var edges: DataFrame = null
-    try {
-      val n = corpus.count()
-      edges = Similarity.knnGraphFrom(assigned, spill,
-        n, g, refineRounds, randPerVec, seed)
-      CorpusSink.writeParquet(
-        edges.withColumn("bucket", pmod(hash(col("src")), lit(nBuckets))),
-        s"$dir/edges", shardCol = "bucket", sortCol = "src",
-        filesPerShard = filesPerShard)
-      writeNodes(corpus.select(col("vec_id")), dir, nBuckets, append = false)
-      writeManifest(corpus.sparkSession, dir, n, 0L, 0L)
-      centroids
-    } finally {
-      spill.unpersist(blocking = false)
-      assigned.unpersist(blocking = false)
-      if (edges != null) edges.unpersist(blocking = false)
+    val n = corpus.count()
+    Similarity.withGraph(corpus, centroids, n, spillCells, g, refineRounds,
+        randPerVec, seed) { (_, edges) =>
+      try {
+        CorpusSink.writeParquet(
+          edges.withColumn("bucket", pmod(hash(col("src")), lit(nBuckets))),
+          s"$dir/edges", shardCol = "bucket", sortCol = "src",
+          filesPerShard = filesPerShard)
+        writeNodes(corpus.select(col("vec_id")), dir, nBuckets, append = false)
+        writeManifest(corpus.sparkSession, dir, n, 0L, 0L)
+        centroids
+      } finally Materialize.release(edges)
     }
   }
 

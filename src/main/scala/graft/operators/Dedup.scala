@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import org.apache.spark.sql.graftbridge.Bridge
 
+import graft.Materialize
 import graft.functions.VectorOps
 
 /** Deduplication operators for LLM training-data pipelines:
@@ -366,10 +367,11 @@ object Dedup {
     * nothing unless some label genuinely changed.)
     *
     * Returns (id, label) for every node that appears in `pairs`,
-    * plus rounds-used and the converged flag.
+    * plus rounds-used and the converged flag. The labels read the last
+    * round's pinned RDD, which the caller frees with
+    * [[graft.Materialize.release]] once they are consumed.
     */
   def connectedComponentsStats(pairs: DataFrame, maxIter: Int = 25): CCResult = {
-    import org.apache.spark.storage.StorageLevel
     val spark = pairs.sparkSession
     import spark.implicits._
     val edges = pairs
@@ -377,8 +379,7 @@ object Dedup {
       .filter(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("x"), greatest(col("x"), col("y")).as("y"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Lineage discipline: each round materializes to a persisted RDD
+    // Lineage discipline: each round materializes to a pinned RDD
     // and re-enters SQL through a flat LogicalRDD plan. Keeping the
     // loop purely in DataFrames nests the previous round's plan ~6×
     // per iteration (two self-references to l1, three to labels) —
@@ -387,48 +388,47 @@ object Dedup {
     // parent is cached.
     def toDF(r: org.apache.spark.rdd.RDD[(Long, Long)]) =
       spark.createDataset(r).toDF("id", "label")
-    var cur = edges.select(col("x").as("id"))
-      .union(edges.select(col("y").as("id")))
-      .distinct()
-      .withColumn("label", col("id"))
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
-      val labels = toDF(cur)
-      // min label across each edge (both directions) plus own label;
-      // the `own` marker carries each node's previous label through
-      // the aggregate so the changed-count needs no extra join
-      val lx = labels.select(col("id").as("x"), col("label"))
-      val ly = labels.select(col("id").as("y"), col("label"))
-      val l1 = edges.join(lx, "x")
-        .select(col("y").as("id"), col("label"), lit(false).as("own"))
-        .union(edges.join(ly, "y")
-          .select(col("x").as("id"), col("label"), lit(false).as("own")))
-        .union(labels.withColumn("own", lit(true)))
-        .groupBy("id").agg(min("label").as("label"),
-          max(when(col("own"), col("label"))).as("old_label"))
-      // pointer jump: label ← label(label) — halves path lengths
-      val jump = l1.select(col("id").as("label"), col("label").as("label2"))
-      val changed = spark.sparkContext.longAccumulator(s"cc_changed_$iter")
-      val next = l1.join(jump, Seq("label"), "left")
-        .select(col("id"), coalesce(col("label2"), col("label")).as("label"),
-          col("old_label"))
-        .rdd.map { r =>
-          val lbl = r.getLong(1)
-          if (lbl != r.getLong(2)) changed.add(1L)
-          (r.getLong(0), lbl)
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.count() // one action: materializes the round AND fills the accumulator
-      converged = changed.value == 0L
-      cur.unpersist(blocking = false)
-      cur = next
-      iter += 1
+    val last = Materialize.withCached(edges) {
+      // `.rdd` plans eagerly: built here, it reads the edges cache
+      val init = edges.select(col("x").as("id"))
+        .union(edges.select(col("y").as("id")))
+        .distinct()
+        .withColumn("label", col("id"))
+        .rdd.map(r => (r.getLong(0), r.getLong(1)))
+      Materialize.withCached(init)(Materialize.iterate(init, maxIter, converged) { cur =>
+        val labels = toDF(cur)
+        // min label across each edge (both directions) plus own label;
+        // the `own` marker carries each node's previous label through
+        // the aggregate so the changed-count needs no extra join
+        val lx = labels.select(col("id").as("x"), col("label"))
+        val ly = labels.select(col("id").as("y"), col("label"))
+        val l1 = edges.join(lx, "x")
+          .select(col("y").as("id"), col("label"), lit(false).as("own"))
+          .union(edges.join(ly, "y")
+            .select(col("x").as("id"), col("label"), lit(false).as("own")))
+          .union(labels.withColumn("own", lit(true)))
+          .groupBy("id").agg(min("label").as("label"),
+            max(when(col("own"), col("label"))).as("old_label"))
+        // pointer jump: label ← label(label) — halves path lengths
+        val jump = l1.select(col("id").as("label"), col("label").as("label2"))
+        val changed = spark.sparkContext.longAccumulator(s"cc_changed_$iter")
+        // one action: materializes the round AND fills the accumulator
+        val next = Materialize.pin(l1.join(jump, Seq("label"), "left")
+          .select(col("id"), coalesce(col("label2"), col("label")).as("label"),
+            col("old_label"))
+          .rdd.map { r =>
+            val lbl = r.getLong(1)
+            if (lbl != r.getLong(2)) changed.add(1L)
+            (r.getLong(0), lbl)
+          })
+        converged = changed.value == 0L
+        iter += 1
+        next
+      })
     }
-    edges.unpersist(blocking = false)
-    CCResult(toDF(cur), iter, converged)
+    CCResult(toDF(last), iter, converged)
   }
 
   /** Labels-only view of [[connectedComponentsStats]]. */
@@ -557,7 +557,8 @@ object Dedup {
     * 2023): k-means-partition the embedding space, then search for
     * near-duplicate pairs ONLY within each cluster and drop the
     * larger-id member of every (cos > threshold) pair — the repo's
-    * keep-min survivor convention. Output: (vec_id, cid, keep).
+    * keep-min survivor convention. Output: (vec_id, cid, keep), a
+    * [[graft.Materialize.pin]] the caller releases.
     *
     * Approximate by construction: a near pair straddling a cluster
     * boundary is missed (never the reverse — every within-cluster
@@ -602,88 +603,79 @@ object Dedup {
     // scans: fit, quantize, assign). Floats are touched again only by
     // the bounded exact verify of stage-2 survivors.
     val quant = Similarity.quantizedCorpus(corpus)
-      .select(col("vec_id"), col("qv")).cache()
+      .select(col("vec_id"), col("qv"))
     val qAsEmb = quant.select(col("vec_id"), col("qv").as("embedding"))
-    // fit on the int8 vectors: cosine is scale-invariant, so the
-    // per-vector quantization scale drops out of every distance, and
-    // per-vector reconstruction cosine ≥ 0.995 is a checked contract
-    // (EmbeddingQuant.quantReport) — cell boundaries move by less
-    // than the prefilter margin absorbs. random init: deterministic
-    // under the seed and O(k) — k-means||'s driver-local final step
-    // dominates once nlist reaches the hundreds, and cell QUALITY is
-    // secondary (cells partition the space; recall is gated by the
-    // q_dedup_semantic contract, not cell shape). maxIter 4: at
-    // corpus-scaled nlist the MLlib fit is the single largest
-    // production stage (15.3 s of 25.9 s at sf10 with the default 10
-    // iterations — measured; 4 halves it with no contract movement).
-    // Corpus-scaled nlist (the SemDeDup configuration: nlist ∝ n to
-    // hold |cell| constant) takes the TWO-LEVEL hierarchy — a flat
-    // fit+assign is O(n·nlist) = O(n²/256) there, measured 18.3×
-    // wall at 10× data; coarse√nlist → fine-within-cell assignment
-    // is O(n·√nlist) and stays linear as nlist grows
-    // ([[Similarity.hierCentroids]]). Small fixed nlist keeps the
-    // flat path (fewer moving parts, identical contract).
-    val assignedCells =
-      if (nlist >= HierNlist) {
-        val (coarse, fine) = Similarity.hierCentroids(qAsEmb, nlist, seed,
-          maxIter = 4, sampleMod = sampleMod)
-        Similarity.assignCellsHier(qAsEmb, coarse, fine)
-      } else {
-        val centroids = Similarity.kmeansCentroids(qAsEmb, nlist, seed,
-          maxIter = 4, sampleMod = sampleMod, initMode = "random")
-        Similarity.assignCells(qAsEmb, centroids)
-      }
-    // the in-session stand-in for the stored cid-bucketed quantized
-    // index a deployment reads here: (id, cid, int8 vector, norm),
-    // ~100 B/row, cached because both self-join sides read it. The
-    // int8 self-norm is precomputed per ROW, not per pair.
-    val qside = assignedCells
-      .select(col("vec_id"), col("embedding").as("qv"), col("cid"))
-      .withColumn("qn", sqrt(DotProductInt8.dot(col("qv"), col("qv"))
-        .cast("double")))
-      .cache()
-    // narrow (vec_id, cid) twin for the final verdict join — 12 B/row
-    val assigned = qside.select(col("vec_id"), col("cid")).cache()
-    // stage 1: int8-only bulk pair scan (cid-keyed self equi-join)
-    val x = qside.select(col("cid"), col("vec_id").as("xid"),
-      col("qv").as("xqv"), col("qn").as("xqn"))
-    val y = qside.select(col("cid"), col("vec_id").as("yid"),
-      col("qv").as("yqv"), col("qn").as("yqn"))
-    val candPairs = x.join(y, Seq("cid"))
-      .filter(col("xid") < col("yid") && col("xqn") * col("yqn") > 0 &&
-        DotProductInt8.dot(col("xqv"), col("yqv")).cast("double")
-          / (col("xqn") * col("yqn")) > threshold - prefilterMargin)
-      .select(col("xid"), col("yid"))
-    // stage 2: exact-cosine verdict on the surviving pairs only —
-    // two id-keyed point-lookup joins into the float vectors
+    // stage 2's exact-cosine side: the float vectors, by key
     val exact = corpus.select(col("vec_id"),
         VectorOps.asDoubleArray(col("embedding")).as("cv"))
       .withColumn("cn", VectorOps.l2Norm(col("cv")))
-    val drops = candPairs
-      .join(exact.select(col("vec_id").as("xid"), col("cv").as("xv"),
-        col("cn").as("xn")), Seq("xid"))
-      .join(exact.select(col("vec_id").as("yid"), col("cv").as("yv"),
-        col("cn").as("yn")), Seq("yid"))
-      .filter(col("xn") * col("yn") > 0 &&
-        VectorOps.dotArr(col("xv"), col("yv")) / (col("xn") * col("yn"))
-          > threshold)
-      .select(col("yid").as("vec_id")).distinct()
-      .cache()
-    // EAGER finish (the kmeansCentroids try/finally discipline): the
-    // drop set and the narrow assignment are materialized here so the
-    // wide working caches (int8 vectors ×2) can be released instead
-    // of accumulating across calls. The two blocks a call leaves
-    // cached are the narrow assignment (12 B/row) and the small drop
-    // set the returned lazy verdict joins; an evicted block
-    // recomputes through the released lineage — correct, slower.
-    try { drops.count(); assigned.count() }
-    finally {
-      qside.unpersist(blocking = false)
-      quant.unpersist(blocking = false)
+    // EAGER finish: the verdict is pinned, so the wide working caches
+    // (int8 vectors ×2) are released instead of accumulating
+    Materialize.withCached(quant) {
+      // fit on the int8 vectors: cosine is scale-invariant, so the
+      // per-vector quantization scale drops out of every distance, and
+      // per-vector reconstruction cosine ≥ 0.995 is a checked contract
+      // (EmbeddingQuant.quantReport) — cell boundaries move by less
+      // than the prefilter margin absorbs. random init: deterministic
+      // under the seed and O(k) — k-means||'s driver-local final step
+      // dominates once nlist reaches the hundreds, and cell QUALITY is
+      // secondary (cells partition the space; recall is gated by the
+      // q_dedup_semantic contract, not cell shape). maxIter 4: at
+      // corpus-scaled nlist the MLlib fit is the single largest
+      // production stage (15.3 s of 25.9 s at sf10 with the default 10
+      // iterations — measured; 4 halves it with no contract movement).
+      // Corpus-scaled nlist (the SemDeDup configuration: nlist ∝ n to
+      // hold |cell| constant) takes the TWO-LEVEL hierarchy — a flat
+      // fit+assign is O(n·nlist) = O(n²/256) there, measured 18.3×
+      // wall at 10× data; coarse√nlist → fine-within-cell assignment
+      // is O(n·√nlist) and stays linear as nlist grows
+      // ([[Similarity.hierCentroids]]). Small fixed nlist keeps the
+      // flat path (fewer moving parts, identical contract).
+      val assignedCells =
+        if (nlist >= HierNlist) {
+          val (coarse, fine) = Similarity.hierCentroids(qAsEmb, nlist, seed,
+            maxIter = 4, sampleMod = sampleMod)
+          Similarity.assignCellsHier(qAsEmb, coarse, fine)
+        } else {
+          val centroids = Similarity.kmeansCentroids(qAsEmb, nlist, seed,
+            maxIter = 4, sampleMod = sampleMod, initMode = "random")
+          Similarity.assignCells(qAsEmb, centroids)
+        }
+      // the in-session stand-in for the stored cid-bucketed quantized
+      // index a deployment reads here: (id, cid, int8 vector, norm),
+      // ~100 B/row, cached because both self-join sides read it. The
+      // int8 self-norm is precomputed per ROW, not per pair.
+      val qside = assignedCells
+        .select(col("vec_id"), col("embedding").as("qv"), col("cid"))
+        .withColumn("qn", sqrt(DotProductInt8.dot(col("qv"), col("qv"))
+          .cast("double")))
+      Materialize.withCached(qside) {
+        // stage 1: int8-only bulk pair scan (cid-keyed self equi-join)
+        val x = qside.select(col("cid"), col("vec_id").as("xid"),
+          col("qv").as("xqv"), col("qn").as("xqn"))
+        val y = qside.select(col("cid"), col("vec_id").as("yid"),
+          col("qv").as("yqv"), col("qn").as("yqn"))
+        val candPairs = x.join(y, Seq("cid"))
+          .filter(col("xid") < col("yid") && col("xqn") * col("yqn") > 0 &&
+            DotProductInt8.dot(col("xqv"), col("yqv")).cast("double")
+              / (col("xqn") * col("yqn")) > threshold - prefilterMargin)
+          .select(col("xid"), col("yid"))
+        // stage 2: exact-cosine verdict on the surviving pairs only —
+        // two id-keyed point-lookup joins into the float vectors
+        val drops = candPairs
+          .join(exact.select(col("vec_id").as("xid"), col("cv").as("xv"),
+            col("cn").as("xn")), Seq("xid"))
+          .join(exact.select(col("vec_id").as("yid"), col("cv").as("yv"),
+            col("cn").as("yn")), Seq("yid"))
+          .filter(col("xn") * col("yn") > 0 &&
+            VectorOps.dotArr(col("xv"), col("yv")) / (col("xn") * col("yn"))
+              > threshold)
+          .select(col("yid").as("vec_id")).distinct()
+        Materialize.pin(qside.select(col("vec_id"), col("cid"))
+          .join(drops.withColumn("__drop", lit(true)), Seq("vec_id"), "left")
+          .select(col("vec_id"), col("cid"), col("__drop").isNull.as("keep")))
+      }
     }
-    assigned
-      .join(drops.withColumn("__drop", lit(true)), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cid"), col("__drop").isNull.as("keep"))
   }
 
   // ---- stored + incremental semantic dedup ----
@@ -714,9 +706,9 @@ object Dedup {
     val spark = corpus.sparkSession
     import spark.implicits._
     val quant = Similarity.quantizedCorpus(corpus)
-      .select(col("vec_id"), col("qv")).cache()
+      .select(col("vec_id"), col("qv"))
     val qAsEmb = quant.select(col("vec_id"), col("qv").as("embedding"))
-    try {
+    Materialize.withCached(quant) {
       val (coarse, fine) =
         if (nlist >= HierNlist)
           Similarity.hierCentroids(qAsEmb, nlist, seed, maxIter = 4,
@@ -739,7 +731,7 @@ object Dedup {
         .select(col("vec_id"), col("embedding").as("qv"), col("cid"))
       graft.sources.CorpusSink.writeParquet(assigned, s"$dir/vectors",
         shardCol = "cid", sortCol = "vec_id", filesPerShard = 2)
-    } finally quant.unpersist(blocking = false)
+    }
   }
 
   /** Load the two-level centroid sidecar back into the in-memory form

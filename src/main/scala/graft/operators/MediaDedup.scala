@@ -217,24 +217,22 @@ abstract class MediaDedup extends Serializable {
     * [[families]] of its prints, cached and filled before the verdict
     * runs (the verdict's leaf stages are submitted concurrently, and a
     * cold cache would decode once per stage), and released when `use`
-    * returns; `verdict` is [[dedupFromFamilies]], cached and
-    * materialized, and `use` owns its `unpersist()`. The one cache
-    * policy of [[dedup]] and every caller that needs the prints too. */
+    * returns; `verdict` is [[dedupFromFamilies]], pinned, and `use`
+    * owns its release (it is released here only if `use` throws). The
+    * one cache policy of [[dedup]] and every caller that needs the
+    * prints too. */
   def withVerdict[T](withMedia: DataFrame, maxMeanDiffE2: Long = DefaultMaxMeanDiffE2,
                      maxBucketSize: Int = 1000)(use: (DataFrame, DataFrame) => T): T = {
-    val fams = families(prints(withMedia)).cache()
-    try {
+    val fams = families(prints(withMedia))
+    graft.Materialize.withCached(fams) {
       fams.count()
-      val res = dedupFromFamilies(withMedia.select(col("doc_id")), fams,
-        maxMeanDiffE2, maxBucketSize).cache()
-      try res.count()
-      catch { case e: Throwable => res.unpersist(blocking = false); throw e }
-      use(fams, res)
-    } finally fams.unpersist(blocking = false)
+      graft.Materialize.handOff(graft.Materialize.pin(dedupFromFamilies(
+        withMedia.select(col("doc_id")), fams, maxMeanDiffE2, maxBucketSize)))(use(fams, _))
+    }
   }
 
-  /** End-to-end verdict over (doc_id, media), cached and materialized
-    * ([[withVerdict]]); the caller owns its `unpersist()`. */
+  /** End-to-end verdict over (doc_id, media), pinned ([[withVerdict]]);
+    * the caller releases it. */
   def dedup(withMedia: DataFrame, maxMeanDiffE2: Long = DefaultMaxMeanDiffE2,
             maxBucketSize: Int = 1000): DataFrame =
     withVerdict(withMedia, maxMeanDiffE2, maxBucketSize)((_, res) => res)
@@ -253,8 +251,7 @@ abstract class MediaDedup extends Serializable {
                  filesPerShard: Int = 2): Unit = {
     val reps = families(prints(withMedia))
       .filter(col("doc_id") === col("rep")).drop("rep")
-      .cache()
-    try {
+    graft.Materialize.withCached(reps) {
       graft.sources.CorpusSink.writeParquet(
         reps.select(col("doc_id"), col("fr"), col("sm"),
           pmod(col("doc_id"), lit(16)).cast("int").as("shard")),
@@ -270,7 +267,7 @@ abstract class MediaDedup extends Serializable {
             .cast("int").as("shard"))
       graft.sources.CorpusSink.writeParquet(capped, s"$dir/buckets",
         shardCol = "shard", sortCol = "doc_id", filesPerShard = filesPerShard)
-    } finally reps.unpersist(blocking = false)
+    }
   }
 
   /** Admission verdicts of `media` (doc_id, media) against the stored

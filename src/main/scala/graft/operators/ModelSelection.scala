@@ -224,35 +224,34 @@ object ModelSelection {
                              stepSize: Double = 1.0,
                              featureScale: Double = 32.0)
       : (graft.ml.LinearModel, DataFrame) = {
-    // cached: the tokenize-bound featurize feeds BOTH the training
-    // RDD and the caller's scoring/accuracy pass — the returned
-    // frame is cached and CALLER-OWNED (unpersist after scoring)
-    val feats = hashedFeatures(docs, buckets)
-      .join(docs.select(col("doc_id"), labelCol.cast("double").as("label")),
-        Seq("doc_id"))
-      .select(col("doc_id"), col("label"), col("features"))
-      .cache()
-    // GD conditioning: frequency features are O(0.01–0.2) while the
-    // intercept gradient is O(0.1–0.5), so one η cannot serve both —
-    // a weight-moving step makes the intercept oscillate (measured:
-    // loss 0.69→11→2→9 at η=100). Train on features × featureScale
-    // (both gradients now the same order, small η converges
-    // monotonically) and fold the scale back into the returned
-    // weights (wᵀ(s·x) = (s·w)ᵀx), so the model scores RAW
-    // [[hashedFeatures]] frequencies.
-    val rdd = graft.Tables.spreadIfNarrow(
-        feats.select(col("label"), col("features")))
-      .rdd.map { r =>
-        val xs = r.getSeq[Double](1).toArray
-        var i = 0
-        while (i < xs.length) { xs(i) *= featureScale; i += 1 }
-        (r.getDouble(0), org.apache.spark.ml.linalg.Vectors.dense(xs))
-      }
-    val m = new graft.ml.SketchLogisticRegression()
-      .setIterations(iterations).setStepsize(stepSize)
-      .setCompressionType("None")
-      .fitRDD(rdd)
-    (graft.ml.LinearModel(m.weights.map(_ * featureScale), m.intercept,
-      m.lossHistory), feats)
+    // pinned: the tokenize-bound featurize feeds BOTH the training RDD
+    // and the caller's scoring pass, which releases it
+    graft.Materialize.handOff(graft.Materialize.pin(hashedFeatures(docs, buckets)
+        .join(docs.select(col("doc_id"), labelCol.cast("double").as("label")),
+          Seq("doc_id"))
+        .select(col("doc_id"), col("label"), col("features")))) { feats =>
+      // GD conditioning: frequency features are O(0.01–0.2) while the
+      // intercept gradient is O(0.1–0.5), so one η cannot serve both —
+      // a weight-moving step makes the intercept oscillate (measured:
+      // loss 0.69→11→2→9 at η=100). Train on features × featureScale
+      // (both gradients now the same order, small η converges
+      // monotonically) and fold the scale back into the returned
+      // weights (wᵀ(s·x) = (s·w)ᵀx), so the model scores RAW
+      // [[hashedFeatures]] frequencies.
+      val rdd = graft.Tables.spreadIfNarrow(
+          feats.select(col("label"), col("features")))
+        .rdd.map { r =>
+          val xs = r.getSeq[Double](1).toArray
+          var i = 0
+          while (i < xs.length) { xs(i) *= featureScale; i += 1 }
+          (r.getDouble(0), org.apache.spark.ml.linalg.Vectors.dense(xs))
+        }
+      val m = new graft.ml.SketchLogisticRegression()
+        .setIterations(iterations).setStepsize(stepSize)
+        .setCompressionType("None")
+        .fitRDD(rdd)
+      (graft.ml.LinearModel(m.weights.map(_ * featureScale), m.intercept,
+        m.lossHistory), feats)
+    }
   }
 }

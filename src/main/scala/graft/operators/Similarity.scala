@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.VectorOps
 
 /** Approximate-nearest-neighbor operators over an embedding column
@@ -136,8 +137,8 @@ object Similarity {
       .filter(VectorOps.l2Norm(col("cv")) > 0)
     val sampled = if (sampleMod == 1) vecs
       else vecs.filter(pmod(xxhash64(col("cv")), lit(sampleMod.toLong)) === 0)
-    val fit = sampled.select(array_to_vector(col("cv")).as("features")).cache()
-    try {
+    val fit = sampled.select(array_to_vector(col("cv")).as("features"))
+    Materialize.withCached(fit) {
       // count() materializes the cache (the single corpus scan) and
       // bounds k — KMeans needs k <= n and the sample could be tiny
       val n = fit.count()
@@ -155,7 +156,7 @@ object Similarity {
         .setFeaturesCol("features")
         .fit(fit)
         .clusterCenters.map(_.toArray)
-    } finally fit.unpersist(blocking = false)
+    }
   }
 
   /** Corpus rows with their coarse IVF cell id appended (`cid`,
@@ -298,10 +299,9 @@ object Similarity {
     val k2 = math.max(1, math.ceil(nlist.toDouble / k1).toInt)
     val vecs = corpus.select(VectorOps.asDoubleArray(col("embedding")).as("cv"))
       .filter(VectorOps.l2Norm(col("cv")) > 0)
-    val sampled = if (sampleMod == 1) vecs
+    val sample = if (sampleMod == 1) vecs
       else vecs.filter(pmod(xxhash64(col("cv")), lit(sampleMod.toLong)) === 0)
-    val sample = sampled.cache()
-    try {
+    Materialize.withCached(sample) {
       // coarse fit reads the cached sample — random init for the
       // same reason as the flat corpus-scaled path (k-means||'s
       // driver-local finish dominates at large k; cells are space
@@ -328,7 +328,7 @@ object Similarity {
           .getOrElse(Array(coarse(i).clone()))
       }
       (coarse, fine)
-    } finally sample.unpersist(blocking = false)
+    }
   }
 
   /** Corpus rows with the two-level cell id appended — the hier twin
@@ -670,45 +670,44 @@ object Similarity {
     * stage is O(n·poly(g)) rows through hash joins — no stage is
     * quadratic in the corpus.
     *
-    * The returned edge table is MATERIALIZED AND CACHED (see
-    * [[knnGraphFrom]]'s eager-per-round rationale); callers that are
-    * done with it should unpersist it, as [[graphTopK]] and
-    * `AnnIndex.buildGraphIndex` do. */
+    * The returned edge table is a [[graft.Materialize.pin]] the caller
+    * releases (see [[withGraph]]'s eager-per-round rationale). */
   def knnGraph(corpus: DataFrame, g: Int = 8, nlist: Int = 16,
                refineRounds: Int = 1, randPerVec: Int = 4,
                seed: Long = 42L, initMode: String = "k-means||",
                spillCells: Int = 2): DataFrame = {
     val centroids = kmeansCentroids(corpus, nlist, seed, initMode = initMode)
+    withGraph(corpus, centroids, corpus.count(), spillCells, g, refineRounds,
+      randPerVec, seed)((_, graph) => graph)
+  }
+
+  /** The one graph build of [[knnGraph]], [[graphTopK]] and
+    * `AnnIndex.buildGraphIndex` over a corpus of `n` rows (a
+    * column-pruned parquet-footer count at the caller). ONE
+    * centroid-scoring pass feeds the spilled build candidates AND the
+    * argmax assignment (crank 1 of the spill; a second pass measured
+    * ~¼ of the sf10 build). Both are cached for the build's several
+    * join sides and filled BEFORE it fans out: stages racing a cold
+    * cache each recompute the scoring — measured 2× the sf10 build.
+    *
+    * EAGER per round (the searchOverEdges discipline): each round's
+    * n·g edge table is pinned before the next refines it — the
+    * refinement references its predecessor from THREE join sides, so
+    * the lazy shape re-executed the Σ|cell|² init scoring up to 3×
+    * per round (and re-planned an ever-deepening tree per action
+    * downstream). `use(assigned, graph)` runs while the build caches
+    * are held and owns the last round's pinned `graph`. */
+  private[operators] def withGraph[A](corpus: DataFrame,
+                                      centroids: Array[Array[Double]], n: Long,
+                                      spillCells: Int, g: Int, refineRounds: Int,
+                                      randPerVec: Int, seed: Long)
+                                     (use: (DataFrame, DataFrame) => A): A = {
     val spill = assignTopCells(corpus, centroids, spillCells)
     val assigned = corpus.select(col("vec_id"),
         VectorOps.asDoubleArray(col("embedding")).as("cv"))
       .withColumn("cn", VectorOps.l2Norm(col("cv")))
       .join(spill.filter(col("crank") === 1).select(col("vec_id"), col("cid")),
         Seq("vec_id"))
-    knnGraphFrom(assigned, spill,
-      corpus.count(), g, refineRounds, randPerVec, seed)
-  }
-
-  /** [[knnGraph]] over an already-assigned corpus (vec_id, cv, cn,
-    * cid) — split out so [[graphTopK]] shares one k-means fit and
-    * one cell-assignment pass between index build and query seeding.
-    * `spill` is the [[assignTopCells]] multi-cell assignment the
-    * build candidates come from (adjacent-cell pairs included);
-    * `n` is the corpus row count (a column-pruned parquet-footer
-    * count job at the caller, the bounded-probe house pattern).
-    *
-    * EAGER per round (the searchOverEdges discipline): each round's
-    * n·g edge table is cached and materialized before the next
-    * refines it — the refinement references its predecessor from
-    * THREE join sides, so the lazy shape re-executed the Σ|cell|²
-    * init scoring up to 3× per round (and re-planned an
-    * ever-deepening tree per action downstream). The RETURNED graph
-    * is cached and materialized; the caller unpersists it when the
-    * edges have been consumed (graphTopK/buildGraphIndex do). */
-  private[operators] def knnGraphFrom(assigned: DataFrame, spill: DataFrame,
-                                      n: Long, g: Int,
-                                      refineRounds: Int, randPerVec: Int,
-                                      seed: Long): DataFrame = {
     val c = assigned.select(col("vec_id"), col("cv"), col("cn"))
     // top-k per src through the BOUNDED-BUFFER aggregate, not a
     // row_number window: a window must shuffle AND sort every scored
@@ -759,32 +758,30 @@ object Similarity {
     val bucketed = assigned
       .withColumn("b", pmod(xxhash64(col("vec_id"), lit(seed)), lit(nBuckets)))
     val randScored = scoreJoin(asSrc(bucketed, "b"), asDst(bucketed, "b"), "b")
-    var graph = topG(cellScored.unionByName(randScored)).cache()
-    graph.count()
-    // NN-Descent rounds: neighbor-of-neighbor candidates through the
-    // shared endpoint, in both edge directions. Endpoint vectors are
-    // pre-attached to the n·g-row edge tables BEFORE the mid-join,
-    // keeping the invariant; duplicate candidates cost a redundant
-    // (codegen'd) dot each and collapse inside the top-g buffers.
-    (1 to refineRounds).foreach { _ =>
-      val left = graph.select(col("src"), col("dst").as("mid"))
-        .join(c.select(col("vec_id").as("src"), col("cv").as("xv"),
-          col("cn").as("xn")), Seq("src"))
-      val right = graph.select(col("src").as("mid"), col("dst"))
-        .unionByName(graph.select(col("dst").as("mid"), col("src").as("dst")))
-        .join(c.select(col("vec_id").as("dst"), col("cv").as("yv"),
-          col("cn").as("yn")), Seq("dst"))
-      val nonScored = left.join(right, Seq("mid"))
-        .filter(col("src") =!= col("dst") && col("xn") * col("yn") > 0)
-        .withColumn("score",
-          VectorOps.dotArr(col("xv"), col("yv")) / (col("xn") * col("yn")))
-        .select(col("src"), col("dst"), col("score"))
-      val next = topG(nonScored.unionByName(graph)).cache()
-      next.count()
-      graph.unpersist(blocking = false)
-      graph = next
+    Materialize.withCached(spill, assigned) {
+      spill.count(); assigned.count()
+      val first = Materialize.pin(topG(cellScored.unionByName(randScored)))
+      // NN-Descent rounds: neighbor-of-neighbor candidates through the
+      // shared endpoint, in both edge directions. Endpoint vectors are
+      // pre-attached to the n·g-row edge tables BEFORE the mid-join,
+      // keeping the invariant; duplicate candidates cost a redundant
+      // (codegen'd) dot each and collapse inside the top-g buffers.
+      Materialize.handOff(Materialize.iterate(first, refineRounds) { graph =>
+        val left = graph.select(col("src"), col("dst").as("mid"))
+          .join(c.select(col("vec_id").as("src"), col("cv").as("xv"),
+            col("cn").as("xn")), Seq("src"))
+        val right = graph.select(col("src").as("mid"), col("dst"))
+          .unionByName(graph.select(col("dst").as("mid"), col("src").as("dst")))
+          .join(c.select(col("vec_id").as("dst"), col("cv").as("yv"),
+            col("cn").as("yn")), Seq("dst"))
+        val nonScored = left.join(right, Seq("mid"))
+          .filter(col("src") =!= col("dst") && col("xn") * col("yn") > 0)
+          .withColumn("score",
+            VectorOps.dotArr(col("xv"), col("yv")) / (col("xn") * col("yn")))
+          .select(col("src"), col("dst"), col("score"))
+        Materialize.pin(topG(nonScored.unionByName(graph)))
+      })(use(assigned, _))
     }
-    graph
   }
 
   /** Graph-traversal ANN (the DiskANN/HNSW-search shape, batched
@@ -806,35 +803,12 @@ object Similarity {
                 randPerVec: Int = 4, spillCells: Int = 2): DataFrame = {
     val centroids = kmeansCentroids(corpus, nlist, seed, initMode = initMode,
       sampleMod = sampleMod)
-    // ONE centroid-scoring pass feeds the spilled build candidates
-    // AND the argmax assignment (crank 1 of the spill — scoring
-    // twice through assignCells was a second n·nlist·dim pass, a
-    // measured ~¼ of the sf10 build). Cached because the graph build
-    // reads both from several join sides. Released below: the
-    // traversal is eager, so by return time nothing reads them again.
-    val spill = assignTopCells(corpus, centroids, spillCells).cache()
-    val assigned = corpus.select(col("vec_id"),
-        VectorOps.asDoubleArray(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.l2Norm(col("cv")))
-      .join(spill.filter(col("crank") === 1).select(col("vec_id"), col("cid")),
-        Seq("vec_id"))
-      .cache()
-    // materialize BEFORE the build fans out: the build's first action
-    // launches several stages concurrently, and stages racing an
-    // unpopulated cache each recompute the n·nlist scoring pass —
-    // measured 2× the whole sf10 build
-    spill.count(); assigned.count()
-    var graph: DataFrame = null
-    try {
-      graph = knnGraphFrom(assigned, spill,
-        corpus.count(), g,
-        refineRounds = refineRounds, randPerVec = randPerVec, seed = seed)
-      searchOverEdges(assigned, graph.select(col("src"), col("dst")),
+    // the traversal is eager: nothing reads the graph after it
+    withGraph(corpus, centroids, corpus.count(), spillCells, g, refineRounds,
+        randPerVec, seed) { (assigned, graph) =>
+      try searchOverEdges(assigned, graph.select(col("src"), col("dst")),
         queries, k, centroids, beam, hops, seedProbe)
-    } finally {
-      spill.unpersist(blocking = false)
-      assigned.unpersist(blocking = false)
-      if (graph != null) graph.unpersist(blocking = false)
+      finally Materialize.release(graph)
     }
   }
 
@@ -857,10 +831,10 @@ object Similarity {
       .select(col("vec_id"),
         VectorOps.asDoubleArray(col("embedding")).as("cv"), col("cid"))
       .withColumn("cn", VectorOps.l2Norm(col("cv")))
-      .cache()
-    try searchOverEdges(assigned, edges.select(col("src"), col("dst")),
-      queries, k, centroids, beam, hops, seedProbe)
-    finally assigned.unpersist(blocking = false)
+    Materialize.withCached(assigned) {
+      searchOverEdges(assigned, edges.select(col("src"), col("dst")),
+        queries, k, centroids, beam, hops, seedProbe)
+    }
   }
 
   /** The traversal half shared by [[graphTopK]] and
@@ -868,38 +842,26 @@ object Similarity {
     * then `hops` rounds of best-first beam expansion over the
     * (symmetrized, cached) edge table.
     *
-    * EAGER per hop, like the SGD driver loop and [[kmeansCentroids]]:
-    * each hop's frontier is `localCheckpoint`ed — materialized to
-    * executor block storage and re-planted as a flat `LogicalRDD` —
-    * before the next hop expands it. The frontier therefore STAYS
-    * DISTRIBUTED (no driver round-trip; an earlier collect-per-hop
-    * shape funneled |Q|·beam rows through the driver each hop, a
-    * bottleneck once the probe set scales with the corpus) while
-    * keeping both measured wins of eager truncation: (1) the lazy
-    * iterated shape re-optimizes an ever-deepening union-of-joins
-    * tree (full of centroid-literal expressions) on EVERY downstream
-    * action, ~2 s/action of pure driver planning by hop 3 at sf0.1;
-    * (2) the symmetrized edge-table cache can be unpersisted before
-    * returning with zero recompute risk, because the returned top-k
-    * plan reads only the final checkpointed frontier. Superseded
-    * frontiers are unpersisted as soon as their successor is
-    * materialized; the final one (|Q|·beam skinny rows) is owned by
-    * the returned plan and freed by Spark's ContextCleaner when the
-    * caller drops it — checkpoint blocks, unlike a live cache, can
-    * never trigger an upstream recompute. */
+    * EAGER per hop: each hop's frontier is a [[graft.Materialize.barrier]]
+    * before the next hop expands it, so the frontier STAYS DISTRIBUTED
+    * (an earlier collect-per-hop shape funneled |Q|·beam rows through
+    * the driver each hop) while keeping both measured wins of eager
+    * truncation: (1) the lazy iterated shape re-optimizes an
+    * ever-deepening union-of-joins tree on EVERY downstream action,
+    * ~2 s/action of driver planning by hop 3 at sf0.1; (2) the edge
+    * cache is released before returning with zero recompute risk, since
+    * the returned plan reads only the final frontier, which the caller
+    * owns and may [[graft.Materialize.release]]. */
   private def searchOverEdges(assigned: DataFrame, directed: DataFrame,
                               queries: DataFrame, k: Int,
                               centroids: Array[Array[Double]],
                               beam: Int, hops: Int,
                               seedProbe: Int): DataFrame = {
-    // traversal uses edges in both directions (an in-edge is as good
-    // a shortcut as an out-edge). Cached: every hop joins the edge
-    // table, and without the cache each hop's lineage would re-run
-    // the whole upstream build
+    // both directions (an in-edge is as good a shortcut as an
+    // out-edge); cached because every hop joins it
     val edges = directed.select(col("src").as("u"), col("dst").as("v"))
       .unionByName(directed.select(col("dst").as("u"), col("src").as("v")))
       .dropDuplicates("u", "v")
-      .cache()
     val c = assigned.select(col("vec_id"), col("cv"), col("cn"))
     def centroidScores(vecCol: org.apache.spark.sql.Column) =
       graft.functions.CentroidCosines.of(vecCol, centroids)
@@ -932,24 +894,18 @@ object Similarity {
     // runs once eagerly, and hop h+1 plans against an ExistingRDD
     // scan instead of the whole hops-0..h lineage — never a
     // LocalTableScan, so no frontier row visits the driver
-    def checkpointedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    val cand = Materialize.withCached(edges) {
+      // query-sized: |Q|·beam rows per frontier
+      Materialize.iterate(Materialize.barrier(topBeam(scoreCands(seeds), beam)), hops) { cand =>
+        val expanded = cand.select(col("qid"), col("vec_id").as("u"))
+          .join(edges, Seq("u"))
+          .select(col("qid"), col("v").as("vec_id"))
+          .dropDuplicates("qid", "vec_id")
+        // query-sized: |Q|·beam rows
+        Materialize.barrier(topBeam(scoreCands(expanded)
+          .unionByName(cand).dropDuplicates("qid", "vec_id"), beam))
       }
-    def truncate(df: DataFrame): DataFrame = df.localCheckpoint()
-    var cand = truncate(topBeam(scoreCands(seeds), beam))
-    (1 to hops).foreach { _ =>
-      val expanded = cand.select(col("qid"), col("vec_id").as("u"))
-        .join(edges, Seq("u"))
-        .select(col("qid"), col("v").as("vec_id"))
-        .dropDuplicates("qid", "vec_id")
-      val next = truncate(topBeam(scoreCands(expanded)
-        .unionByName(cand).dropDuplicates("qid", "vec_id"), beam))
-      // the superseded frontier's blocks are baked into `next` now
-      checkpointedRdd(cand).foreach(_.unpersist(blocking = false))
-      cand = next
     }
-    edges.unpersist(blocking = false)
     cand.withColumn("rank", row_number().over(
         Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))).cast("long"))
       .filter(col("rank") <= k)

@@ -68,7 +68,7 @@ object Tokenizer {
     * over the VOCAB pair table, never corpus data), selects a prefix
     * that is provably order-equivalent to sequential greedy, applies
     * the whole prefix as one chained `replace` projection, and
-    * periodically `localCheckpoint`s the vocab so the layered
+    * periodically puts the vocab behind a barrier so the layered
     * projection lineage stays bounded at thousands of merges.
     *
     * WHY the batch reproduces sequential greedy EXACTLY (the property
@@ -151,7 +151,7 @@ object Tokenizer {
         // this a 1k-merge run re-analyzes a 1k-deep expression tree
         // per round and eventually overflows codegen
         if (sinceCheckpoint >= checkpointEvery && done < rounds) {
-          wf = wf.localCheckpoint()
+          wf = graft.Materialize.barrier(wf) // vocab-sized: one row per word
           sinceCheckpoint = 0
         }
       }
@@ -163,9 +163,8 @@ object Tokenizer {
     * (round, pair_a, pair_b, cnt). */
   def bpeLearn(docs: DataFrame, rounds: Int = 5): DataFrame = {
     val spark = docs.sparkSession
-    val base = wordFreq(docs).persist()
-    val merges = learnMerges(base, rounds)
-    base.unpersist()
+    val base = wordFreq(docs)
+    val merges = graft.Materialize.withCached(base)(learnMerges(base, rounds))
     import spark.implicits._
     merges.toDF("round", "pair_a", "pair_b", "cnt")
   }
@@ -193,8 +192,8 @@ object Tokenizer {
     * reassembles documents. Documents with no `[a-z0-9]` token
     * encode to zero tokens and are kept (empty id string). */
   def bpeEncode(docs: DataFrame, rounds: Int = 5): DataFrame = {
-    val base = wordFreq(docs).persist()
-    try {
+    val base = wordFreq(docs)
+    graft.Materialize.withCached(base) {
       val merges = learnMerges(base, rounds)
       // replay the merges over the vocab as one chained projection
       val symFinal = merges.foldLeft(col("sym")) { case (c, (_, a, b, _)) =>
@@ -208,14 +207,11 @@ object Tokenizer {
       val symtab = vocab.select(explode(col("syms")).as("symbol")).distinct()
         .withColumn("tid",
           row_number().over(Window.orderBy(col("symbol"))).cast("int"))
-      // word → (ordered id string, token count): vocab-sized.
-      // localCheckpoint MATERIALIZES it (eager) and truncates its
-      // lineage before the finally-unpersist of `base` below — the
-      // returned DataFrame is lazy, so without this every downstream
-      // action would recompute the full corpus word-frequency scan
-      // through the by-then-released cache, re-paying exactly the
-      // pass the persist amortized for the merge training.
-      val wordIds = vocab
+      // word → (ordered id string, token count): vocab-sized. The
+      // barrier materializes it before `base` is released below, or
+      // every action on the lazy result would recompute the corpus
+      // word-frequency scan the cache amortized for the training.
+      val wordIds = graft.Materialize.barrier(vocab
         .select(col("word"), posexplode(col("syms")).as(Seq("spos", "symbol")))
         .join(broadcast(symtab), Seq("symbol"))
         .groupBy(col("word"))
@@ -223,8 +219,7 @@ object Tokenizer {
           array_join(transform(
             array_sort(collect_list(struct(col("spos"), col("tid")))),
             s => s.getField("tid").cast("string")), " ").as("wids"),
-          count(lit(1)).cast("long").as("wn"))
-        .localCheckpoint()
+          count(lit(1)).cast("long").as("wn")))
       // corpus pass: one explode, one word-keyed join (the optimizer
       // broadcasts the word table while it fits and hash-joins past
       // that — corpus vocabulary grows with the corpus, unlike the
@@ -240,6 +235,6 @@ object Tokenizer {
           array_join(transform(
             array_sort(collect_list(struct(col("wpos"), col("wids")))),
             s => s.getField("wids")), " ").as("token_ids"))
-    } finally base.unpersist()
+    }
   }
 }

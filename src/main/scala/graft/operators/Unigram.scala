@@ -269,8 +269,8 @@ object Unigram {
     * within each fixed-vocabulary phase — `UnigramSpec` pins it). */
   def learnUnigram(docs: DataFrame, vocabSize: Int = 512,
                    seedSize: Int = 4096, emIters: Int = 2): UnigramModel = {
-    val wf = Tokenizer.wordFreq(docs).select(col("word"), col("n")).persist()
-    try {
+    val wf = Tokenizer.wordFreq(docs).select(col("word"), col("n"))
+    graft.Materialize.withCached(wf) {
       val seed = seedPieces(wf, seedSize)
       val charPieces = seed.iterator.filter(_._1.length == 1).map(_._1).toVector
       var multi = seed.iterator.filter(_._1.length > 1).map(_._1).toVector
@@ -309,7 +309,7 @@ object Unigram {
         finalVocab.sorted.map(p =>
           Piece(p, scores(p), counts.getOrElse(p, 0.0))),
         lossTrail.result())
-    } finally wf.unpersist()
+    }
   }
 
   private val modelMemo =
@@ -345,7 +345,8 @@ object Unigram {
     val bScores = spark.sparkContext.broadcast(scores)
     val bIds = spark.sparkContext.broadcast(ids)
     val wf = Tokenizer.wordFreq(docs).select(col("word")).as[String]
-    val wordPieces = wf.mapPartitions { it =>
+    // vocab-sized: one row per distinct word; truncate lineage before reuse
+    val wordPieces = graft.Materialize.barrier(wf.mapPartitions { it =>
         val s = bScores.value
         val idm = bIds.value
         it.map { w =>
@@ -356,8 +357,7 @@ object Unigram {
             case None => (w, "", 0L, false)
           }
         }
-      }.toDF("word", "wids", "wn", "rt")
-      .localCheckpoint() // vocab-sized; truncate lineage before reuse
+      }.toDF("word", "wids", "wn", "rt"))
     docs.select(col("doc_id"),
         posexplode_outer(TextOps.regexTokens(col("text")))
           .as(Seq("wpos", "word")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators.{AnnIndex, AudioDedup, Contamination, Curation, Dedup, EmbeddingOps, EmbeddingQuant, Html, ImageDedup, MediaDedup, ModelSelection, Multimodal, Packing, Retrieval, Sampling, Similarity, TextOps, Tokenizer, Unigram, UrlOps, VideoDedup}
 
 /** Group B (LLM training-data pipeline) — SURVEY.md §2.5 north star:
@@ -20,14 +20,18 @@ import graft.operators.{AnnIndex, AudioDedup, Contamination, Curation, Dedup, Em
 object PipelineQueries {
 
   /** Concurrent-pipeline submitter for the overlap pattern (guide
-    * §2.6): the body is a BLOCKING Spark action (collect/count/
-    * localCheckpoint), so it runs wrapped in
+    * §2.6): the body is a BLOCKING Spark action (a collect, a count or
+    * an eager materialization), so it runs wrapped in
     * `scala.concurrent.blocking` — the global fork-join pool then
     * grows a compensation thread instead of deadlocking if keys ever
     * nest or widen the fan-out (ADVICE r16). */
   private def bgJob[T](body: => T): scala.concurrent.Future[T] =
     scala.concurrent.Future(scala.concurrent.blocking(body))(
       scala.concurrent.ExecutionContext.Implicits.global)
+
+  /** Blocks for a [[bgJob]]'s result, rethrowing its failure. */
+  private def await[T](f: scala.concurrent.Future[T]): T =
+    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
 
   /** Memo keys for the session-shared stored-index bases
     * (graft.IndexMemo): every build parameter that matters is encoded
@@ -128,7 +132,7 @@ object PipelineQueries {
         Seq((row.getLong(0), row.getLong(1), nConfirmed == panel.length,
             row.getLong(2) >= row.getLong(1) * 0.8))
           .toDF(countCol, "n_planted", "sound", "recall_ok")
-      } finally res.unpersist(blocking = false)
+      } finally Materialize.release(res)
     }
 
   /** The `q_dedup_incr_{image,audio,video}` contract: build (once per
@@ -144,7 +148,7 @@ object PipelineQueries {
                                      m: MediaDedup, family: String,
                                      extra: Map[String, String],
                                      corpus: org.apache.spark.sql.DataFrame,
-                                     batchMedia: org.apache.spark.sql.DataFrame)
+                                     batch: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val n = Tables.documents(s, d).count()
     val params = Map("family" -> family, "sf" -> d, "n" -> n.toString,
@@ -157,26 +161,26 @@ object PipelineQueries {
       throw new IllegalStateException(
         "catalog reopen must not rebuild a vintage-matched index"))
     val reuseOk = reused2 && dir1 == dir2
-    val batch = batchMedia.cache()
-    try {
-      // eager cache fill, inside the try so the finally unpersists on
-      // a throw too: the admission and the truth branch read the batch
-      // concurrently — a cold cache would make both re-plant it
+    Materialize.withCached(batch) {
+      // eager cache fill: the admission and the truth branch read the
+      // batch concurrently — a cold cache would make both re-plant it
       batch.count()
       // the admission and the exact truth are INDEPENDENT pipelines
       // joined only at the final contract aggregation: the admission
       // runs as a concurrent job group (its narrow verdict
       // checkpointed there) while this thread materializes the truth
-      import scala.concurrent.Await
-      import scala.concurrent.duration.Duration
-      val fRes = bgJob(m.admission(batch, dir2).toDF().localCheckpoint())
-      val truth = containedTruth(m, m.prints(batch), m.prints(corpus), earlierOnly = false)
-        .withColumn("t", lit(1))
-        .localCheckpoint() // eager: truth computes WHILE fRes runs
-      val flagged = Await.result(fRes, Duration.Inf)
+      // batch-sized: one verdict per batch row
+      val fRes = bgJob(Materialize.barrier(m.admission(batch, dir2).toDF()))
+      // batch-sized: one row per matched batch doc
+      val truth = Materialize.barrier(containedTruth(m, m.prints(batch),
+          m.prints(corpus), earlierOnly = false)
+        .withColumn("t", lit(1)))
+      val flagged = await(fRes)
         .filter(col("status") === Dedup.NearDup)
         .select(col("doc_id"), lit(1).as("f"))
-      batch.select(col("doc_id"))
+      // row-sized: the one contract row, materialized before the batch
+      // cache is released
+      Materialize.barrier(batch.select(col("doc_id"))
         .join(flagged, Seq("doc_id"), "left")
         .join(truth, Seq("doc_id"), "left")
         .agg(
@@ -189,9 +193,8 @@ object PipelineQueries {
             .otherwise(0)), lit(0)).cast("double").as("n_hit"))
         .select(col("n_batch"), (col("unsound") === 0).as("sound"),
           (col("n_hit") >= col("n_exact") * 0.8).as("recall_ok"),
-          lit(reuseOk).as("reuse_ok"))
-        .localCheckpoint()
-    } finally batch.unpersist(blocking = false)
+          lit(reuseOk).as("reuse_ok")))
+    }
   }
 
   private def ivfqBaseKey(d: String) =
@@ -446,10 +449,11 @@ object PipelineQueries {
           .otherwise(col("text")).as("text"))
       val (m, feats) = ModelSelection.trainQualityClassifier(planted,
         labelCol = pmod(col("doc_id"), lit(5)) >= 2)
-      try graft.ml.SketchLogisticRegression.binaryAccuracy(m, feats)
-        .select(col("n"), (col("acc_e6") >= 900000L).as("acc_ok"))
-        .localCheckpoint()
-      finally feats.unpersist(blocking = false)
+      // row-sized: the one accuracy row, materialized before `feats`
+      // is released
+      try Materialize.barrier(graft.ml.SketchLogisticRegression.binaryAccuracy(m, feats)
+        .select(col("n"), (col("acc_e6") >= 900000L).as("acc_ok")))
+      finally Materialize.release(feats)
     }),
 
     // deterministic per-group reservoir: exactly 5 docs per source
@@ -541,9 +545,6 @@ object PipelineQueries {
       // count()), exactly how a deployment schedules independent
       // curation stages; local[32] has the slack, and the driver
       // threads only await
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
       val evalDocs = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
       val fImg = bgJob(ImageDedup.dedup(media.filter(col("img").isNotNull)
         .select(col("doc_id"), col("img").as("media"))))
@@ -555,29 +556,23 @@ object PipelineQueries {
       // depends only on the docs, never on the media verdicts — run
       // it as a 4th concurrent job group and anti-join afterwards
       // (Curation.mediaGateFromGated documents the commute argument);
-      // eager localCheckpoint so the tokenize work happens NOW
-      val fGated = bgJob(Curation.gateStage(docs, evalDocs)
-        .localCheckpoint())
-      val imgRes = Await.result(fImg, Duration.Inf)
-      val audRes = Await.result(fAud, Duration.Inf)
-      val vidRes = Await.result(fVid, Duration.Inf)
+      // pinned so the tokenize work happens NOW — corpus-sized, so a
+      // cache that keeps its lineage, released with the verdicts
+      val fGated = bgJob(Materialize.pin(Curation.gateStage(docs, evalDocs)))
+      // await all four, so every pin is released whichever job fails
+      val pins = Seq(fImg, fAud, fVid, fGated)
+        .map(f => scala.util.Try(await(f)))
       try {
+        val Seq(imgRes, audRes, vidRes, gated) = pins.map(_.get)
         val dropped = Seq(imgRes, audRes, vidRes)
           .map(_.filter(!col("keep")).select(col("doc_id")))
           .reduce(_.unionByName(_))
-        val rep = Curation.mediaGateFromGated(
-            Await.result(fGated, Duration.Inf), dropped, evalDocs,
-            contamThresholdE6 = 700000L) // the q_curate_e2e rationale
-          .orderBy(col("source"))
-        // materialize the |sources|-row report while the verdict
+        // row-sized: one row per source, materialized while the verdict
         // caches are hot — they are released in the finally
-        s.createDataFrame(java.util.Arrays.asList(rep.collect(): _*),
-          rep.schema)
-      } finally {
-        imgRes.unpersist(blocking = false)
-        audRes.unpersist(blocking = false)
-        vidRes.unpersist(blocking = false)
-      }
+        Materialize.barrier(Curation.mediaGateFromGated(gated, dropped, evalDocs,
+            contamThresholdE6 = 700000L) // the q_curate_e2e rationale
+          .orderBy(col("source")))
+      } finally pins.foreach(_.foreach(Materialize.release(_)))
     }),
 
     // n-gram Jaccard near-dup on a keyed subset (inverted-index join)
@@ -937,10 +932,10 @@ object PipelineQueries {
       val n = corpus.count()
       val nlist = math.max(8L, n / 256L).toInt
       val sampleMod = math.max(1L, n / (16L * nlist)).toInt
-      // cache: res is 3 narrow columns and feeds BOTH contract
-      // branches — without it the cid-keyed pair join runs twice
+      // res is pinned (3 narrow columns) and feeds BOTH contract
+      // branches, so the cid-keyed pair join runs once
       val res = Dedup.semanticDedup(corpus, nlist, threshold = 0.9,
-        sampleMod = sampleMod).cache()
+        sampleMod = sampleMod)
       // soundness truth branch: re-verify a deterministic SCALE-CAPPED
       // panel of the drop set against the exact global definition —
       // mod-7 thinning (planted ids are ≡ 0 mod 20: a mod-20 sampler
@@ -1352,17 +1347,14 @@ object PipelineQueries {
       // the stored-graph traversal (eager per-hop checkpoints) and
       // the brute-force truth are independent pipelines — concurrent
       // job groups (the q_curate_media overlap rule)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
       val fAnn = bgJob(AnnIndex.graphTopKFromPath(s, idxDir, emb, queries,
         k = 5, beam = 96, hops = 3, seedProbe = seedProbe))
-      val exact = Similarity.bruteForceTopK(emb, queries, k = 5)
-        .localCheckpoint() // eager: truth computes WHILE fAnn traverses
+      // query-sized: k rows per query, computed WHILE fAnn traverses
+      val exact = Materialize.barrier(Similarity.bruteForceTopK(emb, queries, k = 5))
       // bound raised 0.65 → 0.75 (r12) → 0.85 (r13, after the serve
       // retune measured 0.98 / 0.96 / 0.93 at sf0.1 / sf1 / sf10):
       // the contract enforces the scale margin itself
-      Similarity.meanRecall(Await.result(fAnn, Duration.Inf), exact)
+      Similarity.meanRecall(await(fAnn), exact)
         .select(col("n_queries"), (col("recall") >= 0.85).as("recall_ok"))
     }),
 
@@ -1371,7 +1363,7 @@ object PipelineQueries {
     // graph family only a pinned panel): probes are the UNCAPPED 1%
     // vec_id stratum, served from the SAME stored graph index as
     // q_similarity_graph (built once per session), traversed with
-    // the now-distributed frontier — each hop localCheckpoints, so
+    // the now-distributed frontier — each hop is a barrier, so
     // no frontier row visits the driver and the probe set can scale
     // with the corpus. Contract: ≥95% of probes fill their top-k
     // (the q_similarity_scaled coverage rule — an exact-truth branch
@@ -1452,9 +1444,7 @@ object PipelineQueries {
       val old = emb.join(batch.select("vec_id"), Seq("vec_id"), "left_anti")
       val queries = emb.filter(pmod(col("vec_id"), lit(100)) === 0
         && col("vec_id") < 2000)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_append")
-        .toString
-      try {
+      Materialize.withTempDir("graft_ann_append") { dir =>
         // the BASE index (corpus-minus-batch, frozen params) is a pure
         // function of the fixture, so it is built ONCE per session and
         // file-cloned here — q_ann_delete mutates the same base, which
@@ -1472,9 +1462,6 @@ object PipelineQueries {
         // (stored serve, in-session rebuild twin, brute-force truth)
         // are INDEPENDENT reads once the append landed — run them as
         // concurrent job groups (the q_curate_media overlap rule)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
         val fServed = bgJob(AnnIndex.ivfqTopKFromPath(s, dir, emb, queries,
           k = 5, nProbe = 4, rerank = 4).collect())
         // in-session rebuild twin: same centroids, full corpus —
@@ -1488,14 +1475,13 @@ object PipelineQueries {
           exact, queries, centroids, k = 5, nProbe = 4, rerank = 4).collect())
         val fExactTopK = bgJob(
           Similarity.bruteForceTopK(emb, queries, k = 5).collect())
-        val served = Await.result(fServed, Duration.Inf)
-        val parityOk = sameResults(served, Await.result(fRebuilt, Duration.Inf))
-        val (nQueries, recall) = recallOf(served,
-          Await.result(fExactTopK, Duration.Inf))
+        val served = await(fServed)
+        val parityOk = sameResults(served, await(fRebuilt))
+        val (nQueries, recall) = recallOf(served, await(fExactTopK))
         import s.implicits._
         Seq((nQueries, recall >= 0.5, parityOk))
           .toDF("n_queries", "recall_ok", "parity_ok")
-      } finally graft.IndexMemo.deleteTree(dir)
+      }
     }),
 
     // tombstone DELETE on the stored IVF×int8 index (the lifecycle
@@ -1516,9 +1502,7 @@ object PipelineQueries {
         "left_anti")
       val queries = emb.filter(pmod(col("vec_id"), lit(100)) === 0
         && col("vec_id") < 2000)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_delete")
-        .toString
-      try {
+      Materialize.withTempDir("graft_ann_delete") { dir =>
         // clone of the session-shared FULL-corpus index (the memoized
         // base + the pinned batch appended under the frozen fit —
         // row-identical to a fresh build with these centroids, since
@@ -1534,9 +1518,6 @@ object PipelineQueries {
         // deleted-id list are independent pipelines — concurrent job
         // groups, with the physical purge sequenced strictly AFTER the
         // masked serve it is compared against
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
         val fServed = bgJob(AnnIndex.ivfqTopKFromPath(s, dir, emb, queries,
           k = 5, nProbe = 4, rerank = 4).collect())
         val exact = survivors.select(col("vec_id"),
@@ -1547,25 +1528,25 @@ object PipelineQueries {
           k = 5, nProbe = 4, rerank = 4).collect())
         val fDelIds = bgJob(deleted.select(col("vec_id")).collect()
           .map(_.getLong(0)).toSet)
-        val served = Await.result(fServed, Duration.Inf)
+        val served = await(fServed)
         // fDelIds is awaited BEFORE the purge rewrites $dir/vectors;
         // fRebuilt reads only emb-derived frames and driver-side
         // centroids and MUST NEVER read `dir` — any future edit that
         // makes it read the index directory must also await it here
         // (ADVICE r16: silent file race otherwise)
-        val delIds = Await.result(fDelIds, Duration.Inf)
+        val delIds = await(fDelIds)
         AnnIndex.purgeIvfqDeletes(s, dir)
         val after = AnnIndex.ivfqTopKFromPath(s, dir, emb, queries,
           k = 5, nProbe = 4, rerank = 4).collect()
         val noDeleted =
           !served.exists(r => delIds(r.getAs[Long]("neighbor_id")))
-        val parityOk = sameResults(served, Await.result(fRebuilt, Duration.Inf))
+        val parityOk = sameResults(served, await(fRebuilt))
         val purgeOk = sameResults(after, served) &&
           !new java.io.File(s"$dir/deletes").exists()
         import s.implicits._
         Seq((queries.count(), noDeleted, parityOk, purgeOk))
           .toDF("n_queries", "no_deleted_ok", "parity_ok", "purge_ok")
-      } finally graft.IndexMemo.deleteTree(dir)
+      }
     }),
 
     // UPSERT on the stored IVF×int8 index — replace-or-insert, the
@@ -1600,46 +1581,40 @@ object PipelineQueries {
         .unionByName(batch)
       val queries = emb.filter(pmod(col("vec_id"), lit(100)) === 0
         && col("vec_id") < 2000)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ann_upsert")
-        .toString
-      try {
+      Materialize.withTempDir("graft_ann_upsert") { dir =>
         graft.IndexMemo.copyTree(ivfqFullDir(s, d), dir)
         val centroids = AnnIndex.readCentroids(s, dir)
         val purged = AnnIndex.upsertIvfq(batch, dir)
         // collect-once + driver-side checks (the q_ann_append shape);
         // the upserted corpus is read by three serve/rebuild
         // pipelines — cache it for the key's lifetime
-        val upsertedC = upserted.cache()
-        try {
+        Materialize.withCached(upserted) {
           // eager cache fill: the two concurrent consumers below would
           // otherwise both compute the cold union (the cold-cache herd)
-          upsertedC.count()
+          upserted.count()
           // serve-from-disk and the rebuild twin are independent once
           // the upsert landed — concurrent job groups (the
           // q_ann_append overlap rule); the replay is sequenced after
           // the serve it is compared against
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          val fServed = bgJob(AnnIndex.ivfqTopKFromPath(s, dir, upsertedC,
+          val fServed = bgJob(AnnIndex.ivfqTopKFromPath(s, dir, upserted,
             queries, k = 5, nProbe = 4, rerank = 4).collect())
-          val exact = upsertedC.select(col("vec_id"),
+          val exact = upserted.select(col("vec_id"),
               VectorOps.asDoubleArray(col("embedding")).as("cv"))
             .withColumn("cn", VectorOps.l2Norm(col("cv")))
           val fRebuilt = bgJob(Similarity.ivfqRerank(
-            Similarity.quantizedCorpus(upsertedC), exact, queries, centroids,
+            Similarity.quantizedCorpus(upserted), exact, queries, centroids,
             k = 5, nProbe = 4, rerank = 4).collect())
-          val served = Await.result(fServed, Duration.Inf)
-          val parityOk = sameResults(served, Await.result(fRebuilt, Duration.Inf))
+          val served = await(fServed)
+          val parityOk = sameResults(served, await(fRebuilt))
           AnnIndex.upsertIvfq(batch, dir) // replay the whole upsert
-          val after = AnnIndex.ivfqTopKFromPath(s, dir, upsertedC, queries,
+          val after = AnnIndex.ivfqTopKFromPath(s, dir, upserted, queries,
             k = 5, nProbe = 4, rerank = 4).collect()
           import s.implicits._
           Seq((queries.count(), parityOk, purged.nonEmpty,
               sameResults(after, served)))
             .toDF("n_queries", "parity_ok", "replace_ok", "replay_ok")
-        } finally upsertedC.unpersist(blocking = false)
-      } finally graft.IndexMemo.deleteTree(dir)
+        }
+      }
     }),
 
     // cross-doc duplicated-substring spans (Lee et al. exact-substring
@@ -1874,17 +1849,13 @@ object PipelineQueries {
         .orderBy(col("bm25_e6").desc, col("doc_id")).limit(50)
         .withColumn("rank", row_number().over(
           Window.orderBy(col("bm25_e6").desc, col("doc_id"))).cast("long"))
-        .cache()
-      try {
+      Materialize.withCached(sparseStored) {
         // materialize the shared sparse leg once, then run its four
         // consumers (two fusions, the inline-parity twin, the parity
         // collect) as concurrent job groups (the q_ann_append overlap
         // rule) — they are independent reads of cached/stored frames
         sparseStored.count()
         import s.implicits._
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
         val fFusedStored = bgJob(
           Retrieval.rrfFuse(sparseStored, denseStored, k = 10).collect())
         // contract 1: the stored sparse leg is BIT-identical to inline
@@ -1903,15 +1874,13 @@ object PipelineQueries {
         val fFusedExact = bgJob(
           Retrieval.rrfFuse(sparseStored, denseExact, k = 10)
             .collect().map(_.getLong(0)).toSet)
-        val fusedStored = Await.result(fFusedStored, Duration.Inf)
-        val sparseParity =
-          Await.result(fSparseRows, Duration.Inf) ==
-            Await.result(fSparseInline, Duration.Inf)
-        val fusedExact = Await.result(fFusedExact, Duration.Inf)
+        val fusedStored = await(fFusedStored)
+        val sparseParity = await(fSparseRows) == await(fSparseInline)
+        val fusedExact = await(fFusedExact)
         val overlap = fusedStored.map(_.getLong(0)).count(fusedExact.contains)
         Seq((fusedStored.length.toLong, sparseParity, overlap >= 6))
           .toDF("n_rows", "sparse_parity_ok", "fusion_overlap_ok")
-      } finally sparseStored.unpersist(blocking = false)
+      }
     }),
 
     // stored-BM25-index INCREMENTAL MAINTENANCE, exactly oracled:
@@ -1923,9 +1892,7 @@ object PipelineQueries {
     // contract boolean
     "q_retrieval_append" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_bm25_append")
-        .toString
-      try {
+      Materialize.withTempDir("graft_bm25_append") { dir =>
         // the 2/3-corpus base index is session-memoized and file-cloned
         // (graft.IndexMemo — the tokenize+shuffle of the base build is
         // the dominant cost and a pure function of the fixture); the
@@ -1933,9 +1900,6 @@ object PipelineQueries {
         // the query-term probe depends only on the docs — run it as a
         // concurrent job group while the clone + append land (the
         // q_ann_append overlap rule)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
         val fQterms = bgJob(Retrieval.dfCounts(docs)
           .filter(!col("term").isin("the", "a", "of", "and", "in"))
           .orderBy(col("df").desc, col("term")).limit(3)
@@ -1944,15 +1908,10 @@ object PipelineQueries {
           Retrieval.buildIndex(docs.filter(col("doc_id") % 3 =!= 0), base))
         Retrieval.appendIndex(docs.filter(col("doc_id") % 3 === 0), dir)
         // same query-term rule as q_bm25_topk (3-row driver probe)
-        val qterms = Await.result(fQterms, Duration.Inf)
-        // collect-then-localize so the served frame outlives the tmp dir
-        val rows = Retrieval.bm25TopKFromIndex(s, dir, qterms, k = 10)
-          .collect().toSeq
-        import s.implicits._
-        rows.map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_hit"),
-            r.getAs[Long]("bm25_e6")))
-          .toDF("doc_id", "n_hit", "bm25_e6")
-      } finally graft.IndexMemo.deleteTree(dir)
+        val qterms = await(fQterms)
+        // row-sized: k rows; the barrier outlives the temp dir
+        Materialize.barrier(Retrieval.bm25TopKFromIndex(s, dir, qterms, k = 10))
+      }
     }),
 
     // tombstone DELETE on the stored BM25 index: build on the FULL
@@ -1963,9 +1922,7 @@ object PipelineQueries {
     // over corpus-minus-deleted — value parity, not a contract bool
     "q_retrieval_delete" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_bm25_delete")
-        .toString
-      try {
+      Materialize.withTempDir("graft_bm25_delete") { dir =>
         // clone of the session-shared FULL-corpus index (memoized 2/3
         // base + held-out 1/3 appended — served scores after any
         // append sequence are BIT-IDENTICAL to a one-shot build,
@@ -1976,9 +1933,6 @@ object PipelineQueries {
         // depends only on the docs, so it runs as a concurrent job
         // group while the clone + delete land (the q_ann_append
         // overlap rule)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
         val fQterms = bgJob(Retrieval.dfCounts(live)
           .filter(!col("term").isin("the", "a", "of", "and", "in"))
           .orderBy(col("df").desc, col("term")).limit(3)
@@ -1986,14 +1940,10 @@ object PipelineQueries {
         graft.IndexMemo.copyTree(bm25FullDir(s, d), dir)
         Retrieval.deleteIndex(
           docs.filter(col("doc_id") % 4 === 1).select(col("doc_id")), dir)
-        val qterms = Await.result(fQterms, Duration.Inf)
-        val rows = Retrieval.bm25TopKFromIndex(s, dir, qterms, k = 10)
-          .collect().toSeq
-        import s.implicits._
-        rows.map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_hit"),
-            r.getAs[Long]("bm25_e6")))
-          .toDF("doc_id", "n_hit", "bm25_e6")
-      } finally graft.IndexMemo.deleteTree(dir)
+        val qterms = await(fQterms)
+        // row-sized: k rows; the barrier outlives the temp dir
+        Materialize.barrier(Retrieval.bm25TopKFromIndex(s, dir, qterms, k = 10))
+      }
     }),
 
     // Johnson-Lindenstrauss signed random projection 64 -> 8 dims:

@@ -78,10 +78,9 @@ object SketchQueries {
     "q_sketch_bloom" -> ((s, d) => {
       import s.implicits._
       val li = Tables.lineitem(s, d).select(col("l_orderkey"))
-      val dk = li.distinct().persist()
-      val nKeys = dk.count()
-      val present = dk.limit(100).collect().map(_.getLong(0))
-      dk.unpersist(blocking = false)
+      val dk = li.distinct()
+      val (nKeys, present) = graft.Materialize.withCached(dk)(
+        (dk.count(), dk.limit(100).collect().map(_.getLong(0))))
       val bf = li.stat.bloomFilter(col("l_orderkey"), expectedNumItems = nKeys,
         fpp = 0.01)
       val noFalseNeg = present.forall(bf.mightContain)

@@ -46,15 +46,15 @@ object PlanDump {
           VideoDedup.plantedRecrawlBatch))
       modalities.foreach { case (kind, m, twins, stored, recrawl) =>
         val corpus = twins(docs)
-        val prints = m.families(m.prints(corpus)).cache()
-        prints.count()
-        dump(s"q_dedup_${kind}_verdict", m.dedupFromFamilies(corpus.select(col("doc_id")), prints))
-        prints.unpersist(blocking = false)
-        val dir = java.nio.file.Files.createTempDirectory(s"plandump_$kind").toString
-        try {
+        val prints = m.families(m.prints(corpus))
+        graft.Materialize.withCached(prints) {
+          prints.count()
+          dump(s"q_dedup_${kind}_verdict", m.dedupFromFamilies(corpus.select(col("doc_id")), prints))
+        }
+        graft.Materialize.withTempDir(s"plandump_$kind") { dir =>
           m.buildIndex(stored(docs), dir)
           dump(s"q_dedup_incr_${kind}_admission", m.admission(recrawl(docs), dir).toDF())
-        } finally graft.IndexMemo.deleteTree(dir)
+        }
       }
 
       // q_dedup_substring's span chain

@@ -718,11 +718,9 @@ object Plans {
       out ++= "`q_ann_upsert` is a write lifecycle (tombstone → purge →\n"
       out ++= "append); its serve path is `q_similarity_ivfq`'s plan.\n"
       internals.foreach { case (name, why, mk) =>
-        val scratch = java.nio.file.Files.createTempDirectory("plans_scratch").toString
-        val plan =
-          try mk(spark, sfDir, scratch).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          finally graft.IndexMemo.deleteTree(scratch)
+        val plan = graft.Materialize.withTempDir("plans_scratch")(scratch =>
+          mk(spark, sfDir, scratch).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
         out ++= s"\n## $name — internal\n\n$why\n\n```\n$plan```\n"
       }
 

@@ -36,10 +36,9 @@ object TrainBpe {
           transform(split(col("text"), " "),
             w => md5(concat(w, pmod(col("doc_id"), lit(64)).cast("string"))))))
       val t0 = System.nanoTime()
-      val base = Tokenizer.wordFreq(docs).persist()
-      val merges =
-        try Tokenizer.learnMerges(base, rounds, maxBatch)
-        finally base.unpersist()
+      val base = Tokenizer.wordFreq(docs)
+      val merges = graft.Materialize.withCached(base)(
+        Tokenizer.learnMerges(base, rounds, maxBatch))
       val wall = (System.nanoTime() - t0) / 1e9
       val last = merges.takeRight(3).map(m => s"${m._2}+${m._3}@${m._4}")
       println(f"""{"tool":"train_bpe","sf":"$sfDir","rounds":$rounds,""" +

@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal}
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.{Column, SparkSession}
 
 /** Minimal bridge into `private[sql]` Spark internals needed to
@@ -31,4 +34,13 @@ object Bridge {
   /** Blocks until every listener event posted so far has reached its
     * listeners (`listenerBus` is `private[spark]`). */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Runs an RDD's pending local checkpoint now, in one job with the
+    * session's SQL confs, as an eager `Dataset.localCheckpoint` does. */
+  def checkpointNow(spark: SparkSession, rdd: RDD[_]): Unit =
+    SQLExecution.withSQLConfPropagated(spark.asInstanceOf[classic.SparkSession])(rdd.doCheckpoint())
+
+  /** Number of Datasets the session's cache manager holds. */
+  def cachedDatasets(spark: SparkSession): Int =
+    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.numCachedEntries
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.AnnIndex
@@ -24,31 +22,25 @@ class IndexCatalogSpec extends SparkTestBase {
     }.toDF("vec_id", "embedding")
   }
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-    f.delete()
-  }
-
   test("build once, reopen from a fresh session, serve bit-identically; drift rebuilds") {
     val emb = clustered(120, 16, seed = 73)
     val queries = emb.filter(col("vec_id") % 30 === 0)
-    val root = Files.createTempDirectory("graft_catalog").toString
-    val params = Map("family" -> "ivfq", "nlist" -> "4", "seed" -> "11",
-      "corpus_rows" -> "120")
-    var builds = 0
-    def open(s: org.apache.spark.sql.SparkSession,
-             p: Map[String, String]) =
-      IndexCatalog.openOrBuild(s, root, "emb_ivfq", p) { dir =>
-        builds += 1
-        AnnIndex.buildIvfqIndex(emb, dir, nlist = p("nlist").toInt,
-          seed = p("seed").toLong)
-      }
-    def serve(s: org.apache.spark.sql.SparkSession, d: String) =
-      AnnIndex.ivfqTopKFromPath(s, d, emb, queries, k = 3, nProbe = 2,
-        rerank = 4).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .sortBy(t => (t._1, t._2)).toList
-    try {
+    Materialize.withTempDir("graft_catalog") { root =>
+      val params = Map("family" -> "ivfq", "nlist" -> "4", "seed" -> "11",
+        "corpus_rows" -> "120")
+      var builds = 0
+      def open(s: org.apache.spark.sql.SparkSession,
+               p: Map[String, String]) =
+        IndexCatalog.openOrBuild(s, root, "emb_ivfq", p) { dir =>
+          builds += 1
+          AnnIndex.buildIvfqIndex(emb, dir, nlist = p("nlist").toInt,
+            seed = p("seed").toLong)
+        }
+      def serve(s: org.apache.spark.sql.SparkSession, d: String) =
+        AnnIndex.ivfqTopKFromPath(s, d, emb, queries, k = 3, nProbe = 2,
+          rerank = 4).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+          .sortBy(t => (t._1, t._2)).toList
       // session 1: first open builds and stamps the manifest
       val (dir1, reused1) = open(spark, params)
       assert(!reused1 && builds == 1)
@@ -78,7 +70,7 @@ class IndexCatalogSpec extends SparkTestBase {
       assert(!open(spark, params + ("corpus_rows" -> "121"))._2 && builds == 4)
 
       // an interrupted commit (manifest gone) can never validate
-      rm(new java.io.File(s"$dir1/_graft_manifest"))
+      Materialize.deleteTree(s"$dir1/_graft_manifest")
       assert(!open(spark, params)._2 && builds == 5)
 
       // a crashed-build staging dir is cleaned up, not built upon
@@ -89,7 +81,7 @@ class IndexCatalogSpec extends SparkTestBase {
       assert(!reused6 && builds == 6)
       assert(!new java.io.File(s"$dir6/junk").exists(),
         "crashed staging leftovers survived into the committed index")
-    } finally rm(new java.io.File(root))
+    }
   }
 
   test("a crash between the commit renames loses no index") {
@@ -99,17 +91,16 @@ class IndexCatalogSpec extends SparkTestBase {
     // prove the next call finishes the commit instead of rebuilding
     // or, worse, clearing the only surviving copies
     val emb = clustered(80, 8, seed = 5)
-    val root = Files.createTempDirectory("graft_catalog_crash").toString
-    val params = Map("family" -> "ivfq", "nlist" -> "4", "seed" -> "3")
-    var builds = 0
-    def open(p: Map[String, String], mayBuild: Boolean = true) =
-      IndexCatalog.openOrBuild(spark, root, "idx", p) { dir =>
-        assert(mayBuild, "rebuild fired where recovery should serve")
-        builds += 1
-        AnnIndex.buildIvfqIndex(emb, dir, nlist = p("nlist").toInt,
-          seed = p("seed").toLong)
-      }
-    try {
+    Materialize.withTempDir("graft_catalog_crash") { root =>
+      val params = Map("family" -> "ivfq", "nlist" -> "4", "seed" -> "3")
+      var builds = 0
+      def open(p: Map[String, String], mayBuild: Boolean = true) =
+        IndexCatalog.openOrBuild(spark, root, "idx", p) { dir =>
+          assert(mayBuild, "rebuild fired where recovery should serve")
+          builds += 1
+          AnnIndex.buildIvfqIndex(emb, dir, nlist = p("nlist").toInt,
+            seed = p("seed").toLong)
+        }
       val (live, _) = open(params)
       assert(builds == 1)
 
@@ -140,6 +131,6 @@ class IndexCatalogSpec extends SparkTestBase {
       assert(dir3 == live && reused3,
         "restored set-aside index should have validated")
       assert(liveF.isDirectory && !oldF.exists())
-    } finally rm(new java.io.File(root))
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.AnnIndex
@@ -42,30 +40,24 @@ class IndexMemoSpec extends SparkTestBase {
     assert(builds == 1, "memo re-ran the build for the same key")
 
     val baseStamps = fileStamps(baseDir)
-    val cloneA = Files.createTempDirectory("memo_clone_a").toString
-    val cloneB = Files.createTempDirectory("memo_clone_b").toString
-    try {
-      IndexMemo.copyTree(base(), cloneA)
-      IndexMemo.copyTree(base(), cloneB)
-      // mutate clone A hard: delete a slice, purge it physically
-      AnnIndex.deleteVectors(
-        emb.filter(col("vec_id") % 4 === 1).select("vec_id"), cloneA)
-      AnnIndex.purgeIvfqDeletes(spark, cloneA)
-      // the base and the sibling clone are bit-for-bit what they were
-      assert(fileStamps(baseDir) == baseStamps,
-        "mutating a clone changed the shared base")
-      assert(fileStamps(cloneB) == baseStamps.map { case (p, l) =>
-        p.replace(baseDir, cloneB) -> l },
-        "mutating a clone changed a sibling clone")
-      // and the clone really did change
-      assert(fileStamps(cloneA) != baseStamps.map { case (p, l) =>
-        p.replace(baseDir, cloneA) -> l })
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
+    Materialize.withTempDir("memo_clone_a") { cloneA =>
+      Materialize.withTempDir("memo_clone_b") { cloneB =>
+        IndexMemo.copyTree(base(), cloneA)
+        IndexMemo.copyTree(base(), cloneB)
+        // mutate clone A hard: delete a slice, purge it physically
+        AnnIndex.deleteVectors(
+          emb.filter(col("vec_id") % 4 === 1).select("vec_id"), cloneA)
+        AnnIndex.purgeIvfqDeletes(spark, cloneA)
+        // the base and the sibling clone are bit-for-bit what they were
+        assert(fileStamps(baseDir) == baseStamps,
+          "mutating a clone changed the shared base")
+        assert(fileStamps(cloneB) == baseStamps.map { case (p, l) =>
+          p.replace(baseDir, cloneB) -> l },
+          "mutating a clone changed a sibling clone")
+        // and the clone really did change
+        assert(fileStamps(cloneA) != baseStamps.map { case (p, l) =>
+          p.replace(baseDir, cloneA) -> l })
       }
-      rm(new java.io.File(cloneA)); rm(new java.io.File(cloneB))
     }
   }
 }

@@ -1,10 +1,8 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 
 /** Incremental maintenance of the stored ANN indexes ([[AnnIndex]]):
   * append must be a first-class citizen of the serving contract, not
@@ -38,16 +36,8 @@ class AnnAppendSpec extends SparkTestBase {
     }).toDF("vec_id", "embedding")
   }
 
-  private def withTempDir(f: String => Unit): Unit = {
-    val dir = Files.createTempDirectory("ann_append").toString
-    try f(dir) finally {
-      def rm(x: java.io.File): Unit = {
-        if (x.isDirectory) x.listFiles().foreach(rm)
-        x.delete()
-      }
-      rm(Paths.get(dir).toFile)
-    }
-  }
+  private def withTempDir(f: String => Unit): Unit =
+    Materialize.withTempDir("ann_append")(f)
 
   private def resultSet(df: org.apache.spark.sql.DataFrame) = df.collect()
     .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))

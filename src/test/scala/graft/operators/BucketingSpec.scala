@@ -15,13 +15,9 @@ class BucketingSpec extends SparkTestBase {
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_items")
     // a previously-failed run may leave unregistered table dirs behind
-    // (possibly with _temporary subdirs) — delete depth-first
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-      f.delete()
-    }
+    // (possibly with _temporary subdirs)
     Seq("b_orders", "b_items").foreach { t =>
-      rmTree(new java.io.File(s"spark-warehouse/$t"))
+      graft.Materialize.deleteTree(s"spark-warehouse/$t")
     }
 
     (1 to 1000).map(i => (i.toLong, i * 10.0)).toDF("key", "price")

@@ -1,10 +1,8 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 
 /** The graph-ANN stored-index claim made concrete (the
   * `IvfqLayoutSpec` analogue for the graph family): build the full
@@ -29,8 +27,7 @@ class GraphLayoutSpec extends SparkTestBase {
   test("stored edge table: traversal reads (src, dst) only and serves identical answers") {
     val emb = clustered(4, 30, 16, seed = 17)
     val queries = emb.filter(col("vec_id").isin(5L, 35L, 65L, 95L))
-    val dir = Files.createTempDirectory("graph_layout").toString
-    try {
+    Materialize.withTempDir("graph_layout") { dir =>
       // the full stored form: src-hash-bucketed edges, in-file sorted
       // by src (row-group min/max stats then prune src point lookups)
       // PLUS the centroid sidecar — everything serving needs
@@ -82,12 +79,6 @@ class GraphLayoutSpec extends SparkTestBase {
       assert(servedPlan.contains("ExistingRDD"),
         "expected the final frontier as a checkpointed ExistingRDD scan:\n"
           + servedPlan)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(Paths.get(dir).toFile)
     }
   }
 }

@@ -1,10 +1,8 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 
 /** Reciprocal-rank fusion ([[Retrieval.rrfFuse]]) — the hybrid
   * sparse+dense merge. The gate key (`q_retrieval_hybrid`) oracles
@@ -51,8 +49,7 @@ class HybridRetrievalSpec extends SparkTestBase {
     val docs = (0 until 60).map { i =>
       (i.toLong, s"alpha${i % 5} shared beta${i % 7} filler word${i % 3}")
     }.toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("hybrid_ivf").toString
-    try {
+    Materialize.withTempDir("hybrid_ivf") { dir =>
       AnnIndex.buildIvfqIndex(emb.filter(col("vec_id") =!= 7L), dir, nlist = 4,
         seed = 11L)
       AnnIndex.appendIvfq(emb.filter(col("vec_id") === 7L), dir)
@@ -83,12 +80,6 @@ class HybridRetrievalSpec extends SparkTestBase {
         assert(r.getLong(1) ==
           1000000000L / (60L + r.getLong(2)) + 1000000000L / (60L + r.getLong(3)))
       }
-    } finally {
-      def rm(x: java.io.File): Unit = {
-        if (x.isDirectory) x.listFiles().foreach(rm)
-        x.delete()
-      }
-      rm(Paths.get(dir).toFile)
     }
   }
 }

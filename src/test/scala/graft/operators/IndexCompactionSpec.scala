@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 
 /** Compaction — the maintenance valve both append paths promise
   * ([[Retrieval.compactIndex]] for BM25 postings,
@@ -22,16 +22,8 @@ import graft.SparkTestBase
   */
 class IndexCompactionSpec extends SparkTestBase {
 
-  private def withTempDir(f: String => Unit): Unit = {
-    val dir = Files.createTempDirectory("compaction").toString
-    try f(dir) finally {
-      def rm(x: java.io.File): Unit = {
-        if (x.isDirectory) x.listFiles().foreach(rm)
-        x.delete()
-      }
-      rm(Paths.get(dir).toFile)
-    }
-  }
+  private def withTempDir(f: String => Unit): Unit =
+    Materialize.withTempDir("compaction")(f)
 
   private def parquetFiles(dir: String): Map[String, Long] = {
     def walk(f: java.io.File): Seq[java.io.File] =

@@ -1,10 +1,8 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 
 /** Tombstone DELETE for the stored indexes — the lifecycle letter
   * append/compact left open. Contracts, per family:
@@ -42,16 +40,8 @@ class IndexDeleteSpec extends SparkTestBase {
     }).toDF("vec_id", "embedding")
   }
 
-  private def withTempDir(f: String => Unit): Unit = {
-    val dir = Files.createTempDirectory("index_delete").toString
-    try f(dir) finally {
-      def rm(x: java.io.File): Unit = {
-        if (x.isDirectory) x.listFiles().foreach(rm)
-        x.delete()
-      }
-      rm(new java.io.File(dir))
-    }
-  }
+  private def withTempDir(f: String => Unit): Unit =
+    Materialize.withTempDir("index_delete")(f)
 
   private def fileStamps(path: String): Map[String, Long] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -314,11 +304,7 @@ class IndexDeleteSpec extends SparkTestBase {
       val keptDf = spark.createDataFrame(
         spark.sparkContext.parallelize(kept),
         spark.read.parquet(s"$dir/edges").schema)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(new java.io.File(s"$dir/edges"))
+      Materialize.deleteTree(s"$dir/edges")
       keptDf.write.partitionBy("bucket").parquet(s"$dir/edges")
       // x is edge-free but still servable: a query carrying x's exact
       // embedding (fresh qid — the traversal filters qid == vec_id)

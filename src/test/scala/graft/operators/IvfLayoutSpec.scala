@@ -1,10 +1,8 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 import graft.sources.CorpusSink
 
 /** The IVF scale claim made concrete: assign each vector its coarse
@@ -28,8 +26,7 @@ class IvfLayoutSpec extends SparkTestBase {
     val centroids = Similarity.kmeansCentroids(emb, nlist = 4, seed = 11L)
     assert(centroids.length == 4)
     val withCid = Similarity.assignCells(emb, centroids)
-    val dir = Files.createTempDirectory("ivf_layout").toString
-    try {
+    Materialize.withTempDir("ivf_layout") { dir =>
       CorpusSink.writeParquet(withCid, dir, shardCol = "cid",
         sortCol = "vec_id", filesPerShard = 2)
       val cidDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
@@ -51,12 +48,6 @@ class IvfLayoutSpec extends SparkTestBase {
       // the pruned probe still returns exactly the probed cells' rows
       val expected = withCid.filter(col("cid").isin(1, 2)).count()
       assert(probed.count() == expected)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(Paths.get(dir).toFile)
     }
   }
 

@@ -1,10 +1,8 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 /** The IVF+int8 scale claim made concrete: build the full stored
   * index once ([[AnnIndex.buildIvfqIndex]] — cid-partitioned int8
   * vectors AND the centroid sidecar), and prove that serving
@@ -27,8 +25,7 @@ class IvfqLayoutSpec extends SparkTestBase {
 
   test("stage 1 scans the stored int8 index, never the float embeddings") {
     val emb = clusteredEmb(n = 400, dim = 8, nAxes = 4, seed = 13)
-    val dir = Files.createTempDirectory("ivfq_layout").toString
-    try {
+    Materialize.withTempDir("ivfq_layout") { dir =>
       // the full stored form: cid-partitioned int8 vectors + the
       // centroid sidecar ([[AnnIndex.buildIvfqIndex]]); serving
       // round-trips entirely from disk with no in-session fit
@@ -57,12 +54,6 @@ class IvfqLayoutSpec extends SparkTestBase {
       val recall = Similarity.meanRecall(ann, exactTop)
         .head().getAs[Double]("recall")
       assert(recall >= 0.5, s"ivfq recall $recall below contract")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(Paths.get(dir).toFile)
     }
   }
 

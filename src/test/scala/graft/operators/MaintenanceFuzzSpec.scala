@@ -1,11 +1,9 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 
 /** Interleaved-maintenance fuzz: every lifecycle op is spec-proven in
   * isolation and inside the two streaming valves — this spec drives
@@ -40,11 +38,6 @@ class MaintenanceFuzzSpec extends SparkTestBase {
     m.toSeq.sortBy(_._1).toDF("vec_id", "embedding")
   }
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-    f.delete()
-  }
-
   private def expectedRows(live: DataFrame, centroids: Array[Array[Double]]) =
     Similarity.quantizedCorpus(live)
       .withColumn("qcv", transform(col("qv"), q => q.cast("double")))
@@ -63,8 +56,7 @@ class MaintenanceFuzzSpec extends SparkTestBase {
       var live: Map[Long, Seq[Float]] =
         (0L until 80L).map(i => i -> vec(rnd, centers)).toMap
       var nextId = 1000L
-      val dir = Files.createTempDirectory(s"fuzz_ivfq_$seed").toString
-      try {
+      Materialize.withTempDir(s"fuzz_ivfq_$seed") { dir =>
         AnnIndex.buildIvfqIndex(toDf(spark, live), dir, nlist = 4,
           seed = 11L)
         val opNames = Seq("append", "delete", "purge", "compact", "refit",
@@ -131,7 +123,7 @@ class MaintenanceFuzzSpec extends SparkTestBase {
           k = 3, nProbe = 2, rerank = 4))
         assert(served == rebuilt,
           s"seed=$seed: end-of-schedule serving diverged from rebuild")
-      } finally rm(new java.io.File(dir))
+      }
     }
   }
 
@@ -144,8 +136,7 @@ class MaintenanceFuzzSpec extends SparkTestBase {
       var tombstoned = Set.empty[Long]
       var nextId = 1000L
       val g = 4
-      val dir = Files.createTempDirectory(s"fuzz_graph_$seed").toString
-      try {
+      Materialize.withTempDir(s"fuzz_graph_$seed") { dir =>
         AnnIndex.buildGraphIndex(toDf(spark, live), dir, g = g, nlist = 4,
           seed = 11L, nBuckets = 8)
         val opNames = Seq("append", "delete", "purge", "upsert")
@@ -214,7 +205,7 @@ class MaintenanceFuzzSpec extends SparkTestBase {
         assert(served.nonEmpty, s"seed=$seed: no served results")
         assert(served.forall(r => live.contains(r.getLong(2))),
           s"seed=$seed: serving returned a non-live id")
-      } finally rm(new java.io.File(dir))
+      }
     }
   }
 }

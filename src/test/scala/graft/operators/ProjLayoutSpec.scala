@@ -1,10 +1,8 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 import graft.sources.CorpusSink
 
 /** The JL-within-IVF scale claim made concrete: build the
@@ -31,8 +29,7 @@ class ProjLayoutSpec extends SparkTestBase {
     val emb = clusteredEmb(n = 400, dim = 8, nAxes = 4, seed = 13)
     val centroids = Similarity.kmeansCentroids(emb, nlist = 4, seed = 11L)
     val index = Similarity.projIndex(emb, centroids, outDim)
-    val dir = Files.createTempDirectory("proj_layout").toString
-    try {
+    Materialize.withTempDir("proj_layout") { dir =>
       CorpusSink.writeParquet(index, dir, shardCol = "cid",
         sortCol = "vec_id", filesPerShard = 2)
       val stored = spark.read.parquet(dir)
@@ -64,12 +61,6 @@ class ProjLayoutSpec extends SparkTestBase {
       val recall = Similarity.meanRecall(ann, exactTop)
         .head().getAs[Double]("recall")
       assert(recall >= 0.5, s"projRerank recall $recall below contract")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(Paths.get(dir).toFile)
     }
   }
 

@@ -1,10 +1,8 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 
 /** Drift manifest + refit valve — the trigger half of the stored-ANN
   * lifecycle (build → append/delete → compact → REFIT):
@@ -29,16 +27,8 @@ class RefitValveSpec extends SparkTestBase {
     }).toDF("vec_id", "embedding")
   }
 
-  private def withTempDir(f: String => Unit): Unit = {
-    val dir = Files.createTempDirectory("refit_valve").toString
-    try f(dir) finally {
-      def rm(x: java.io.File): Unit = {
-        if (x.isDirectory) x.listFiles().foreach(rm)
-        x.delete()
-      }
-      rm(new java.io.File(dir))
-    }
-  }
+  private def withTempDir(f: String => Unit): Unit =
+    Materialize.withTempDir("refit_valve")(f)
 
   test("manifest tracks build/append/delete exactly; needsRefit flips at the bound") {
     val emb = clustered(4, 30, 16, seed = 3)

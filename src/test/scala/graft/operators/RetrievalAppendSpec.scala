@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 
 /** Incremental maintenance of the stored BM25 index
   * ([[Retrieval.appendIndex]]) — the lexical counterpart of
@@ -34,11 +34,6 @@ class RetrievalAppendSpec extends SparkTestBase {
     }.toDF("doc_id", "text")
   }
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rm)
-    f.delete()
-  }
-
   private def qtermsOf(docs: org.apache.spark.sql.DataFrame): Seq[String] =
     Retrieval.dfCounts(docs)
       .filter(!col("term").isin("the", "a", "of", "and", "in"))
@@ -49,43 +44,42 @@ class RetrievalAppendSpec extends SparkTestBase {
     val docs = corpus
     val old = docs.filter(col("doc_id") % 3 =!= 0)
     val batch = docs.filter(col("doc_id") % 3 === 0)
-    val dirA = Files.createTempDirectory("bm25_appendA").toString
-    val dirB = Files.createTempDirectory("bm25_appendB").toString
-    try {
-      Retrieval.buildIndex(docs, dirA, nBuckets = nBuckets, filesPerShard = 2)
-      Retrieval.buildIndex(old, dirB, nBuckets = nBuckets, filesPerShard = 2)
-      Retrieval.appendIndex(batch, dirB, nBuckets = nBuckets, filesPerShard = 2)
+    Materialize.withTempDir("bm25_appendA") { dirA =>
+      Materialize.withTempDir("bm25_appendB") { dirB =>
+        Retrieval.buildIndex(docs, dirA, nBuckets = nBuckets, filesPerShard = 2)
+        Retrieval.buildIndex(old, dirB, nBuckets = nBuckets, filesPerShard = 2)
+        Retrieval.appendIndex(batch, dirB, nBuckets = nBuckets, filesPerShard = 2)
 
-      // merged stats equal the full corpus's
-      val sA = spark.read.parquet(s"$dirA/stats").collect().head
-      val sB = spark.read.parquet(s"$dirB/stats").collect().head
-      assert(sA.getAs[Long]("n_docs") == sB.getAs[Long]("n_docs"))
-      assert(sA.getAs[Long]("sum_dl") == sB.getAs[Long]("sum_dl"))
+        // merged stats equal the full corpus's
+        val sA = spark.read.parquet(s"$dirA/stats").collect().head
+        val sB = spark.read.parquet(s"$dirB/stats").collect().head
+        assert(sA.getAs[Long]("n_docs") == sB.getAs[Long]("n_docs"))
+        assert(sA.getAs[Long]("sum_dl") == sB.getAs[Long]("sum_dl"))
 
-      // full postings row sets agree on everything except the
-      // segment-local df column
-      val pA = spark.read.parquet(s"$dirA/postings").drop("df")
-      val pB = spark.read.parquet(s"$dirB/postings").drop("df")
-      assert(pA.except(pB).isEmpty && pB.except(pA).isEmpty)
+        // full postings row sets agree on everything except the
+        // segment-local df column
+        val pA = spark.read.parquet(s"$dirA/postings").drop("df")
+        val pB = spark.read.parquet(s"$dirB/postings").drop("df")
+        assert(pA.except(pB).isEmpty && pB.except(pA).isEmpty)
 
-      // served top-k: rebuild == append == inline, bit for bit
-      val qterms = qtermsOf(docs)
-      val servedA = Retrieval.bm25TopKFromIndex(spark, dirA, qterms,
-        k = 10, nBuckets = nBuckets).collect().map(_.toSeq).toSeq
-      val servedB = Retrieval.bm25TopKFromIndex(spark, dirB, qterms,
-        k = 10, nBuckets = nBuckets).collect().map(_.toSeq).toSeq
-      val inline = Retrieval.bm25TopK(docs, nQueryTerms = 3, k = 10)
-        .collect().map(_.toSeq).toSeq
-      assert(servedA == inline, "rebuild serving drifted from inline")
-      assert(servedB == inline, "append serving drifted from rebuild/inline")
-    } finally { rm(Paths.get(dirA).toFile); rm(Paths.get(dirB).toFile) }
+        // served top-k: rebuild == append == inline, bit for bit
+        val qterms = qtermsOf(docs)
+        val servedA = Retrieval.bm25TopKFromIndex(spark, dirA, qterms,
+          k = 10, nBuckets = nBuckets).collect().map(_.toSeq).toSeq
+        val servedB = Retrieval.bm25TopKFromIndex(spark, dirB, qterms,
+          k = 10, nBuckets = nBuckets).collect().map(_.toSeq).toSeq
+        val inline = Retrieval.bm25TopK(docs, nQueryTerms = 3, k = 10)
+          .collect().map(_.toSeq).toSeq
+        assert(servedA == inline, "rebuild serving drifted from inline")
+        assert(servedB == inline, "append serving drifted from rebuild/inline")
+      }
+    }
   }
 
   test("append touches only its terms' buckets; existing files survive byte-identical") {
     import spark.implicits._
     val docs = corpus
-    val dir = Files.createTempDirectory("bm25_append_bytes").toString
-    try {
+    Materialize.withTempDir("bm25_append_bytes") { dir =>
       Retrieval.buildIndex(docs, dir, nBuckets = nBuckets, filesPerShard = 2)
 
       // pick batch terms hashing into exactly 2 buckets so the
@@ -132,13 +126,12 @@ class RetrievalAppendSpec extends SparkTestBase {
         Seq(batchTerms.head), k = 10, nBuckets = nBuckets)
         .select("doc_id").as[Long].collect().toSet
       assert(served == Set(1000L, 1001L), s"batch docs not served: $served")
-    } finally { rm(Paths.get(dir).toFile) }
+    }
   }
 
   test("serving read schema carries neither text nor df") {
     val docs = corpus
-    val dir = Files.createTempDirectory("bm25_readschema").toString
-    try {
+    Materialize.withTempDir("bm25_readschema") { dir =>
       Retrieval.buildIndex(docs, dir, nBuckets = nBuckets, filesPerShard = 2)
       val served = Retrieval.bm25TopKFromIndex(spark, dir, qtermsOf(docs),
         k = 10, nBuckets = nBuckets)
@@ -151,6 +144,6 @@ class RetrievalAppendSpec extends SparkTestBase {
         assert(!l.contains("text"), s"serving scan reads text: $l")
         assert(!l.contains("df"), s"serving scan reads stored df: $l")
       }
-    } finally { rm(Paths.get(dir).toFile) }
+    }
   }
 }

@@ -1,10 +1,8 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 
 /** The stored-BM25 scale claim made concrete (the lexical analogue
   * of `IvfqLayoutSpec`): build the term-bucketed postings index once
@@ -26,8 +24,7 @@ class RetrievalLayoutSpec extends SparkTestBase {
 
   test("a served query reads only its terms' buckets and never any text") {
     val docs = corpus
-    val dir = Files.createTempDirectory("bm25_index").toString
-    try {
+    Materialize.withTempDir("bm25_index") { dir =>
       Retrieval.buildIndex(docs, dir, nBuckets = nBuckets, filesPerShard = 2)
       val stored = spark.read.parquet(s"$dir/postings")
       // the index carries no text at all — nothing a serving scan
@@ -75,19 +72,12 @@ class RetrievalLayoutSpec extends SparkTestBase {
       val inline = Retrieval.bm25TopK(docs, nQueryTerms = 3, k = 10)
         .collect().map(_.toSeq).toSeq
       assert(served.collect().map(_.toSeq).toSeq == inline)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(Paths.get(dir).toFile)
     }
   }
 
   test("denormalized df/dl on the postings rows match the inline derivations") {
     val docs = corpus
-    val dir = Files.createTempDirectory("bm25_index2").toString
-    try {
+    Materialize.withTempDir("bm25_index2") { dir =>
       Retrieval.buildIndex(docs, dir, nBuckets = nBuckets, filesPerShard = 1)
       val stored = spark.read.parquet(s"$dir/postings")
       // df per term matches dfCounts over the corpus
@@ -99,12 +89,6 @@ class RetrievalLayoutSpec extends SparkTestBase {
       val dlInline = docs.select(col("doc_id"),
         size(TextOps.regexTokens(col("text"))).cast("long").as("dl"))
       assert(dlStored.except(dlInline).isEmpty && dlInline.except(dlStored).isEmpty)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(Paths.get(dir).toFile)
     }
   }
 }

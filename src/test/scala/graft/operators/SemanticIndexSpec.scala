@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 import org.apache.spark.sql.functions._
 
 /** Stored semantic-dedup index: layout (cid-partitioned vectors +
@@ -20,20 +20,8 @@ class SemanticIndexSpec extends SparkTestBase {
     }.toDF("vec_id", "embedding")
   }
 
-  private def tempDir() =
-    java.nio.file.Files.createTempDirectory("graft_sem_idx").toString
-
-  private def rm(dir: String): Unit = {
-    def go(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(go))
-      f.delete()
-    }
-    go(new java.io.File(dir))
-  }
-
   test("layout: cid partition dirs + sidecar round-trip, flat-as-hier") {
-    val dir = tempDir()
-    try {
+    Materialize.withTempDir("graft_sem_idx") { dir =>
       Dedup.buildSemanticIndex(corpusDF, nlist = 4, dir)
       val parts = new java.io.File(s"$dir/vectors").listFiles()
         .filter(_.getName.startsWith("cid=")).map(_.getName).sorted
@@ -49,13 +37,12 @@ class SemanticIndexSpec extends SparkTestBase {
       // every corpus row assigned exactly once
       val n = spark.read.parquet(s"$dir/vectors").count()
       assert(n === 60L)
-    } finally rm(dir)
+    }
   }
 
   test("admission: near-copies flagged with exact witness, far rows pass") {
     import spark.implicits._
-    val dir = tempDir()
-    try {
+    Materialize.withTempDir("graft_sem_idx") { dir =>
       val corpus = corpusDF
       Dedup.buildSemanticIndex(corpus, nlist = 4, dir)
       // batch: near-copy of vec 7 (tiny nudge), far vector
@@ -73,13 +60,12 @@ class SemanticIndexSpec extends SparkTestBase {
       // witness is a genuine >0.9 cosine partner (cluster of vec 7)
       assert(res(100L)._2 >= 0L)
       assert(res(200L) === (("novel", -1L, true)))
-    } finally rm(dir)
+    }
   }
 
   test("hier path builds and admits when nlist crosses the switch") {
     import spark.implicits._
-    val dir = tempDir()
-    try {
+    Materialize.withTempDir("graft_sem_idx") { dir =>
       // 600 vectors, nlist 300 >= HierNlist forces the two-level fit
       val corpus = (0 until 600).map { i =>
         val v = Array.tabulate(8)(j =>
@@ -97,12 +83,11 @@ class SemanticIndexSpec extends SparkTestBase {
         threshold = 0.9).collect()
       assert(res.length === 1)
       assert(res(0).status === "near_dup")
-    } finally rm(dir)
+    }
   }
 
   test("IndexCatalog reuse: vintage-matched reopen never rebuilds") {
-    val root = tempDir()
-    try {
+    Materialize.withTempDir("graft_sem_idx") { root =>
       val corpus = corpusDF
       val params = Map("family" -> "semdedup", "nlist" -> "4", "n" -> "60")
       var builds = 0
@@ -120,6 +105,6 @@ class SemanticIndexSpec extends SparkTestBase {
         builds += 1; Dedup.buildSemanticIndex(corpus, 4, stg)
       }
       assert(builds === 2 && !r3)
-    } finally rm(root)
+    }
   }
 }

@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 
 /** Corpus sink layout contract: partition dirs per shard, bounded
   * file fan-out, id-sorted rows inside every file, lossless
@@ -15,8 +13,7 @@ class CorpusSinkSpec extends SparkTestBase {
     import spark.implicits._
     val docs = (1L to 300L).map(i => (i, s"src${i % 3}", s"text $i"))
       .toDF("doc_id", "source", "text")
-    val dir = Files.createTempDirectory("corpus_sink").toString
-    try {
+    Materialize.withTempDir("corpus_sink") { dir =>
       CorpusSink.writeParquet(docs, dir, filesPerShard = 4)
 
       // one partition dir per shard value
@@ -46,13 +43,6 @@ class CorpusSinkSpec extends SparkTestBase {
       val orig = docs.collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
       assert(back == orig)
-    } finally {
-      // best-effort temp cleanup
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(Paths.get(dir).toFile)
     }
   }
 
@@ -60,8 +50,7 @@ class CorpusSinkSpec extends SparkTestBase {
     import spark.implicits._
     val docs = (1L to 200L).map(i => (i, s"src${i % 2}", s"text $i"))
       .toDF("doc_id", "source", "text")
-    val dir = Files.createTempDirectory("corpus_refresh").toString
-    try {
+    Materialize.withTempDir("corpus_refresh") { dir =>
       CorpusSink.writeParquet(docs, dir, filesPerShard = 2)
       def snapshot(shard: String) =
         new java.io.File(s"$dir/source=$shard").listFiles()
@@ -83,12 +72,6 @@ class CorpusSinkSpec extends SparkTestBase {
       assert(src1Ids == (1L to 40L).map(1000L + _).toSet)
       // src0 rows still read back in full
       assert(back.filter(col("source") === "src0").count() == 100L)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(Paths.get(dir).toFile)
     }
   }
 
@@ -96,8 +79,7 @@ class CorpusSinkSpec extends SparkTestBase {
     import spark.implicits._
     val docs = (1L to 200L).map(i => (i, s"src${i % 4}", s"text $i"))
       .toDF("doc_id", "source", "text")
-    val dir = Files.createTempDirectory("corpus_upsert").toString
-    try {
+    Materialize.withTempDir("corpus_upsert") { dir =>
       CorpusSink.writeParquet(docs, dir, filesPerShard = 2)
       def snapshot(shard: String) =
         new java.io.File(s"$dir/source=$shard").listFiles()
@@ -127,12 +109,6 @@ class CorpusSinkSpec extends SparkTestBase {
       CorpusSink.upsertShards(batch, dir, shardCol = "source",
         idCol = "doc_id", filesPerShard = 2)
       assert(spark.read.parquet(dir).count() == 202L)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(Paths.get(dir).toFile)
     }
   }
 }

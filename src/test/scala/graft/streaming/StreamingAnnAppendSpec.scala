@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 import graft.operators.{AnnIndex, Similarity}
 
 /** Streaming IVF-index maintenance: embeddings ingested through
@@ -26,11 +24,6 @@ class StreamingAnnAppendSpec extends SparkTestBase {
     }).toDF("vec_id", "embedding")
   }
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rm)
-    f.delete()
-  }
-
   test("stream-ingested ivfq index is row- and serving-identical to a batch append") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -38,49 +31,49 @@ class StreamingAnnAppendSpec extends SparkTestBase {
     val old = emb.filter(col("vec_id") % 3 === 0)
     val arriving = emb.filter(col("vec_id") % 3 =!= 0)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toSeq)).toSeq
-    val streamDir = Files.createTempDirectory("ann_stream").toString
-    val batchDir = Files.createTempDirectory("ann_batchref").toString
-    try {
-      // fit offline once — both dirs share the centroids, the
-      // production split StreamingAnnAppend's scaladoc describes
-      val centroids = AnnIndex.buildIvfqIndex(old, streamDir, nlist = 4,
-        seed = 11L)
-      AnnIndex.writeCentroids(spark, centroids, batchDir)
-      graft.sources.CorpusSink.writeParquet(
-        spark.read.parquet(s"$streamDir/vectors"), s"$batchDir/vectors",
-        shardCol = "cid", sortCol = "vec_id", filesPerShard = 2)
+    Materialize.withTempDir("ann_stream") { streamDir =>
+      Materialize.withTempDir("ann_batchref") { batchDir =>
+        // fit offline once — both dirs share the centroids, the
+        // production split StreamingAnnAppend's scaladoc describes
+        val centroids = AnnIndex.buildIvfqIndex(old, streamDir, nlist = 4,
+          seed = 11L)
+        AnnIndex.writeCentroids(spark, centroids, batchDir)
+        graft.sources.CorpusSink.writeParquet(
+          spark.read.parquet(s"$streamDir/vectors"), s"$batchDir/vectors",
+          shardCol = "cid", sortCol = "vec_id", filesPerShard = 2)
 
-      val stream = MemoryStream[(Long, Seq[Float])]
-      val q = StreamingAnnAppend.sink(
-          stream.toDS().toDF("vec_id", "embedding"), streamDir)
-        .start()
-      try {
-        // three uneven micro-batches
-        stream.addData(arriving.take(20): _*); q.processAllAvailable()
-        stream.addData(arriving.slice(20, 21): _*); q.processAllAvailable()
-        stream.addData(arriving.drop(21): _*); q.processAllAvailable()
-      } finally q.stop()
+        val stream = MemoryStream[(Long, Seq[Float])]
+        val q = StreamingAnnAppend.sink(
+            stream.toDS().toDF("vec_id", "embedding"), streamDir)
+          .start()
+        try {
+          // three uneven micro-batches
+          stream.addData(arriving.take(20): _*); q.processAllAvailable()
+          stream.addData(arriving.slice(20, 21): _*); q.processAllAvailable()
+          stream.addData(arriving.drop(21): _*); q.processAllAvailable()
+        } finally q.stop()
 
-      AnnIndex.appendIvfq(
-        arriving.toDF("vec_id", "embedding"), batchDir)
+        AnnIndex.appendIvfq(
+          arriving.toDF("vec_id", "embedding"), batchDir)
 
-      // stored rows identical (as multisets — file split differs)
-      def rows(dir: String) = spark.read.parquet(s"$dir/vectors")
-        .collect().map(_.toSeq).sortBy(_.toString).toSeq
-      assert(rows(streamDir) == rows(batchDir),
-        "stream-ingested rows diverge from the batch append")
+        // stored rows identical (as multisets — file split differs)
+        def rows(dir: String) = spark.read.parquet(s"$dir/vectors")
+          .collect().map(_.toSeq).sortBy(_.toString).toSeq
+        assert(rows(streamDir) == rows(batchDir),
+          "stream-ingested rows diverge from the batch append")
 
-      // served top-k identical, and the recall contract holds
-      val queries = emb.filter(col("vec_id").isin(5L, 35L, 65L, 95L, 4L))
-      def served(dir: String) = AnnIndex.ivfqTopKFromPath(spark, dir, emb,
-        queries, k = 3, nProbe = 2, rerank = 4)
-      val fromStream = served(streamDir)
-      assert(fromStream.collect().map(_.toSeq).toSeq ==
-        served(batchDir).collect().map(_.toSeq).toSeq)
-      val exact = Similarity.bruteForceTopK(emb, queries, k = 3)
-      val recall = Similarity.meanRecall(fromStream, exact)
-        .head().getAs[Double]("recall")
-      assert(recall >= 0.6, s"stream-ingested index recall $recall below contract")
-    } finally { rm(Paths.get(streamDir).toFile); rm(Paths.get(batchDir).toFile) }
+        // served top-k identical, and the recall contract holds
+        val queries = emb.filter(col("vec_id").isin(5L, 35L, 65L, 95L, 4L))
+        def served(dir: String) = AnnIndex.ivfqTopKFromPath(spark, dir, emb,
+          queries, k = 3, nProbe = 2, rerank = 4)
+        val fromStream = served(streamDir)
+        assert(fromStream.collect().map(_.toSeq).toSeq ==
+          served(batchDir).collect().map(_.toSeq).toSeq)
+        val exact = Similarity.bruteForceTopK(emb, queries, k = 3)
+        val recall = Similarity.meanRecall(fromStream, exact)
+          .head().getAs[Double]("recall")
+        assert(recall >= 0.6, s"stream-ingested index recall $recall below contract")
+      }
+    }
   }
 }

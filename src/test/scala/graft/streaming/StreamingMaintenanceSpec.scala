@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Materialize, SparkTestBase}
 import graft.operators.AnnIndex
 
 /** The maintenance valves IN the ingest loop
@@ -25,11 +25,6 @@ class StreamingMaintenanceSpec extends SparkTestBase {
     }).toDF("vec_id", "embedding")
   }
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rm)
-    f.delete()
-  }
-
   test("in-stream refit commits between micro-batches with serve parity across the cutover") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -38,65 +33,63 @@ class StreamingMaintenanceSpec extends SparkTestBase {
     val arriving = emb.filter(col("vec_id") % 2 =!= 0) // 80 rows stream in
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toSeq)).toSeq
     val queries = emb.filter(col("vec_id").isin(4L, 44L, 84L, 124L))
-    val indexDir = Files.createTempDirectory("maint_idx").toString
-    val corpusDir = Files.createTempDirectory("maint_corpus").toString + "/rows"
-    val freshDir = Files.createTempDirectory("maint_fresh").toString
-    try {
-      AnnIndex.buildIvfqIndex(base, indexDir, nlist = 4, seed = 11L)
-      base.write.mode("overwrite").parquet(corpusDir) // seed the row store
+    Materialize.withTempDir("maint_idx") { indexDir =>
+      Materialize.withTempDir("maint_corpus") { corpusRoot =>
+        Materialize.withTempDir("maint_fresh") { freshDir =>
+          val corpusDir = corpusRoot + "/rows"
+          AnnIndex.buildIvfqIndex(base, indexDir, nlist = 4, seed = 11L)
+          base.write.mode("overwrite").parquet(corpusDir) // seed the row store
 
-      val stream = MemoryStream[(Long, Seq[Float])]
-      // maxDrift = 0.30: batch 1 appends 40/80 → drift 0.5 → REFIT
-      // fires after the first micro-batch, mid-stream by construction
-      val q = StreamingAnnMaintain.sink(
-          stream.toDS().toDF("vec_id", "embedding"), indexDir, corpusDir,
-          nlist = 4, maxDrift = 0.30, seed = 11L)
-        .option("checkpointLocation",
-          Files.createTempDirectory("maint_ckpt").toString)
-        .start()
-      try {
-        stream.addData(arriving.take(40): _*); q.processAllAvailable()
-        assert(new java.io.File(s"$indexDir/v_1/vectors").isDirectory,
-          "drift crossed the bound but no refit committed mid-stream")
-        // serving right after the cutover: exactly a fresh build on
-        // everything ingested so far
-        AnnIndex.buildIvfqIndex(
-          spark.read.parquet(corpusDir), freshDir, nlist = 4, seed = 11L)
-        def serve(d: String) = AnnIndex.ivfqTopKFromPath(spark, d,
-          spark.read.parquet(corpusDir), queries, k = 3, nProbe = 2,
-          rerank = 4).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-          .sortBy(t => (t._1, t._2)).toList
-        assert(serve(indexDir) == serve(freshDir),
-          "post-cutover serving diverged from a fresh build")
+          val stream = MemoryStream[(Long, Seq[Float])]
+          // maxDrift = 0.30: batch 1 appends 40/80 → drift 0.5 → REFIT
+          // fires after the first micro-batch, mid-stream by construction
+          val q = StreamingAnnMaintain.sink(
+              stream.toDS().toDF("vec_id", "embedding"), indexDir, corpusDir,
+              nlist = 4, maxDrift = 0.30, seed = 11L)
+            .option("checkpointLocation",
+              Files.createTempDirectory("maint_ckpt").toString)
+            .start()
+          try {
+            stream.addData(arriving.take(40): _*); q.processAllAvailable()
+            assert(new java.io.File(s"$indexDir/v_1/vectors").isDirectory,
+              "drift crossed the bound but no refit committed mid-stream")
+            // serving right after the cutover: exactly a fresh build on
+            // everything ingested so far
+            AnnIndex.buildIvfqIndex(
+              spark.read.parquet(corpusDir), freshDir, nlist = 4, seed = 11L)
+            def serve(d: String) = AnnIndex.ivfqTopKFromPath(spark, d,
+              spark.read.parquet(corpusDir), queries, k = 3, nProbe = 2,
+              rerank = 4).collect()
+              .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+              .sortBy(t => (t._1, t._2)).toList
+            assert(serve(indexDir) == serve(freshDir),
+              "post-cutover serving diverged from a fresh build")
 
-        // keep streaming AFTER the refit: appends land inside the new
-        // version root and drift re-accumulates from zero
-        stream.addData(arriving.drop(40): _*); q.processAllAvailable()
-        val m = AnnIndex.manifestCounts(spark, s"$indexDir/v_1").get
-        assert(m._1 == 120 && m._2 == 40,
-          s"post-refit manifest off: $m")
-        // parity twin under the REFITTED centroids (append parity is
-        // rebuild-under-same-centroids, not fresh-fit)
-        import graft.functions.VectorOps
-        import graft.operators.Similarity
-        val centroids = AnnIndex.readCentroids(spark, indexDir)
-        val corpus = spark.read.parquet(corpusDir)
-        val exact = corpus.select(col("vec_id"),
-            VectorOps.asDoubleArray(col("embedding")).as("cv"))
-          .withColumn("cn", VectorOps.l2Norm(col("cv")))
-        val rebuilt = Similarity.ivfqRerank(
-            Similarity.quantizedCorpus(corpus), exact, queries, centroids,
-            k = 3, nProbe = 2, rerank = 4).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-          .sortBy(t => (t._1, t._2)).toList
-        assert(serve(indexDir) == rebuilt,
-          "serving diverged after post-refit appends")
-      } finally q.stop()
-    } finally {
-      rm(new java.io.File(indexDir))
-      rm(new java.io.File(corpusDir).getParentFile)
-      rm(new java.io.File(freshDir))
+            // keep streaming AFTER the refit: appends land inside the new
+            // version root and drift re-accumulates from zero
+            stream.addData(arriving.drop(40): _*); q.processAllAvailable()
+            val m = AnnIndex.manifestCounts(spark, s"$indexDir/v_1").get
+            assert(m._1 == 120 && m._2 == 40,
+              s"post-refit manifest off: $m")
+            // parity twin under the REFITTED centroids (append parity is
+            // rebuild-under-same-centroids, not fresh-fit)
+            import graft.functions.VectorOps
+            import graft.operators.Similarity
+            val centroids = AnnIndex.readCentroids(spark, indexDir)
+            val corpus = spark.read.parquet(corpusDir)
+            val exact = corpus.select(col("vec_id"),
+                VectorOps.asDoubleArray(col("embedding")).as("cv"))
+              .withColumn("cn", VectorOps.l2Norm(col("cv")))
+            val rebuilt = Similarity.ivfqRerank(
+                Similarity.quantizedCorpus(corpus), exact, queries, centroids,
+                k = 3, nProbe = 2, rerank = 4).collect()
+              .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+              .sortBy(t => (t._1, t._2)).toList
+            assert(serve(indexDir) == rebuilt,
+              "serving diverged after post-refit appends")
+          } finally q.stop()
+        }
+      }
     }
   }
 
@@ -113,56 +106,54 @@ class StreamingMaintenanceSpec extends SparkTestBase {
     val deleted = base.filter(col("vec_id") % 4 === 1) // 30 rows revoked
     val arriving = emb.filter(col("vec_id") >= 120) // 40 rows stream in
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toSeq)).toSeq
-    val indexDir = Files.createTempDirectory("maintd_idx").toString
-    val corpusDir = Files.createTempDirectory("maintd_corpus").toString + "/rows"
-    val freshDir = Files.createTempDirectory("maintd_fresh").toString
-    try {
-      AnnIndex.buildIvfqIndex(base, indexDir, nlist = 4, seed = 11L)
-      base.write.mode("overwrite").parquet(corpusDir)
-      AnnIndex.deleteVectors(deleted.select("vec_id"), indexDir)
-      // drift after batch 1 (20 rows): (20 + 30) / (120 + 20 - 30)
-      // = 0.45 > 0.30 → the refit fires BECAUSE of the deletes
-      val stream = MemoryStream[(Long, Seq[Float])]
-      val q = StreamingAnnMaintain.sink(
-          stream.toDS().toDF("vec_id", "embedding"), indexDir, corpusDir,
-          nlist = 4, maxDrift = 0.30, seed = 11L)
-        .option("checkpointLocation",
-          Files.createTempDirectory("maintd_ckpt").toString)
-        .start()
-      try {
-        stream.addData(arriving.take(20): _*); q.processAllAvailable()
-        assert(new java.io.File(s"$indexDir/v_1/vectors").isDirectory,
-          "delete-raised drift crossed the bound but no refit committed")
-        val deletedIds = deleted.select("vec_id").collect()
-          .map(_.getLong(0)).toSet
-        val delBox = deletedIds.toSeq.map(Long.box)
-        // the refitted index must NOT hold the deleted rows…
-        assert(spark.read.parquet(s"$indexDir/v_1/vectors")
-            .filter(col("vec_id").isin(delBox: _*)).count() == 0,
-          "in-stream refit resurrected deleted vectors into the index")
-        // …and the corpus store was folded, so NO future refit can
-        // resurrect them either (the ledger is gone after the cutover)
-        assert(spark.read.parquet(corpusDir)
-            .filter(col("vec_id").isin(delBox: _*)).count() == 0,
-          "tombstoned rows survived in the corpus store across the refit")
-        // serving parity: exactly a fresh build on the live corpus
-        val live = spark.read.parquet(corpusDir)
-        AnnIndex.buildIvfqIndex(live, freshDir, nlist = 4, seed = 11L)
-        val queries = emb.filter(col("vec_id").isin(0L, 44L, 84L, 124L))
-        def serve(d: String) = AnnIndex.ivfqTopKFromPath(spark, d, live,
-          queries, k = 3, nProbe = 2, rerank = 4).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-          .sortBy(t => (t._1, t._2)).toList
-        val served = serve(indexDir)
-        assert(served == serve(freshDir),
-          "post-refit serving diverged from a fresh build on the live corpus")
-        assert(served.forall(t => !deletedIds.contains(t._3)),
-          "a deleted vector appeared in post-refit served results")
-      } finally q.stop()
-    } finally {
-      rm(new java.io.File(indexDir))
-      rm(new java.io.File(corpusDir).getParentFile)
-      rm(new java.io.File(freshDir))
+    Materialize.withTempDir("maintd_idx") { indexDir =>
+      Materialize.withTempDir("maintd_corpus") { corpusRoot =>
+        Materialize.withTempDir("maintd_fresh") { freshDir =>
+          val corpusDir = corpusRoot + "/rows"
+          AnnIndex.buildIvfqIndex(base, indexDir, nlist = 4, seed = 11L)
+          base.write.mode("overwrite").parquet(corpusDir)
+          AnnIndex.deleteVectors(deleted.select("vec_id"), indexDir)
+          // drift after batch 1 (20 rows): (20 + 30) / (120 + 20 - 30)
+          // = 0.45 > 0.30 → the refit fires BECAUSE of the deletes
+          val stream = MemoryStream[(Long, Seq[Float])]
+          val q = StreamingAnnMaintain.sink(
+              stream.toDS().toDF("vec_id", "embedding"), indexDir, corpusDir,
+              nlist = 4, maxDrift = 0.30, seed = 11L)
+            .option("checkpointLocation",
+              Files.createTempDirectory("maintd_ckpt").toString)
+            .start()
+          try {
+            stream.addData(arriving.take(20): _*); q.processAllAvailable()
+            assert(new java.io.File(s"$indexDir/v_1/vectors").isDirectory,
+              "delete-raised drift crossed the bound but no refit committed")
+            val deletedIds = deleted.select("vec_id").collect()
+              .map(_.getLong(0)).toSet
+            val delBox = deletedIds.toSeq.map(Long.box)
+            // the refitted index must NOT hold the deleted rows…
+            assert(spark.read.parquet(s"$indexDir/v_1/vectors")
+                .filter(col("vec_id").isin(delBox: _*)).count() == 0,
+              "in-stream refit resurrected deleted vectors into the index")
+            // …and the corpus store was folded, so NO future refit can
+            // resurrect them either (the ledger is gone after the cutover)
+            assert(spark.read.parquet(corpusDir)
+                .filter(col("vec_id").isin(delBox: _*)).count() == 0,
+              "tombstoned rows survived in the corpus store across the refit")
+            // serving parity: exactly a fresh build on the live corpus
+            val live = spark.read.parquet(corpusDir)
+            AnnIndex.buildIvfqIndex(live, freshDir, nlist = 4, seed = 11L)
+            val queries = emb.filter(col("vec_id").isin(0L, 44L, 84L, 124L))
+            def serve(d: String) = AnnIndex.ivfqTopKFromPath(spark, d, live,
+              queries, k = 3, nProbe = 2, rerank = 4).collect()
+              .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+              .sortBy(t => (t._1, t._2)).toList
+            val served = serve(indexDir)
+            assert(served == serve(freshDir),
+              "post-refit serving diverged from a fresh build on the live corpus")
+            assert(served.forall(t => !deletedIds.contains(t._3)),
+              "a deleted vector appeared in post-refit served results")
+          } finally q.stop()
+        }
+      }
     }
   }
 
@@ -175,40 +166,37 @@ class StreamingMaintenanceSpec extends SparkTestBase {
     // destroying the corpus), then fold and refit normally.
     val emb = clustered(4, 30, 16, seed = 53)
     val deleted = emb.filter(col("vec_id") % 4 === 1) // 30 of 120 revoked
-    val indexDir = Files.createTempDirectory("maintc_idx").toString
-    val corpusRoot = Files.createTempDirectory("maintc_corpus").toString
-    val corpusDir = corpusRoot + "/rows"
-    try {
-      AnnIndex.buildIvfqIndex(emb, indexDir, nlist = 4, seed = 11L)
-      emb.write.mode("overwrite").parquet(corpusDir)
-      AnnIndex.deleteVectors(deleted.select("vec_id"), indexDir)
-      // fabricate the crash window exactly as the fold leaves it:
-      // staged folded copy present, store renamed aside, store gone
-      AnnIndex.liveRows(spark.read.parquet(corpusDir), indexDir)
-        .write.parquet(s"$corpusDir._live_tmp")
-      assert(new java.io.File(corpusDir)
-        .renameTo(new java.io.File(s"$corpusDir._old")))
-      assert(!new java.io.File(corpusDir).exists())
-      // drift = 30 deleted / 90 live = 0.33 > 0.30 → refit fires,
-      // which first recovers + folds the store
-      val refitted = StreamingAnnMaintain.maintain(spark, indexDir,
-        corpusDir, nlist = 4, maxDrift = 0.30, seed = 11L)
-      assert(refitted, "delete-raised drift crossed the bound but no refit ran")
-      val store = spark.read.parquet(corpusDir)
-      assert(store.count() == 90, "recovered store lost rows")
-      val delBox = deleted.select("vec_id").collect()
-        .map(r => Long.box(r.getLong(0))).toSeq
-      assert(store.filter(col("vec_id").isin(delBox: _*)).count() == 0,
-        "tombstoned rows survived the recovered fold")
-      assert(!new java.io.File(s"$corpusDir._live_tmp").exists()
-        && !new java.io.File(s"$corpusDir._old").exists(),
-        "fold leftovers survived the commit")
-      assert(spark.read.parquet(s"$indexDir/v_1/vectors")
-          .filter(col("vec_id").isin(delBox: _*)).count() == 0,
-        "refit resurrected deleted vectors")
-    } finally {
-      rm(new java.io.File(indexDir))
-      rm(new java.io.File(corpusRoot))
+    Materialize.withTempDir("maintc_idx") { indexDir =>
+      Materialize.withTempDir("maintc_corpus") { corpusRoot =>
+        val corpusDir = corpusRoot + "/rows"
+        AnnIndex.buildIvfqIndex(emb, indexDir, nlist = 4, seed = 11L)
+        emb.write.mode("overwrite").parquet(corpusDir)
+        AnnIndex.deleteVectors(deleted.select("vec_id"), indexDir)
+        // fabricate the crash window exactly as the fold leaves it:
+        // staged folded copy present, store renamed aside, store gone
+        AnnIndex.liveRows(spark.read.parquet(corpusDir), indexDir)
+          .write.parquet(s"$corpusDir._live_tmp")
+        assert(new java.io.File(corpusDir)
+          .renameTo(new java.io.File(s"$corpusDir._old")))
+        assert(!new java.io.File(corpusDir).exists())
+        // drift = 30 deleted / 90 live = 0.33 > 0.30 → refit fires,
+        // which first recovers + folds the store
+        val refitted = StreamingAnnMaintain.maintain(spark, indexDir,
+          corpusDir, nlist = 4, maxDrift = 0.30, seed = 11L)
+        assert(refitted, "delete-raised drift crossed the bound but no refit ran")
+        val store = spark.read.parquet(corpusDir)
+        assert(store.count() == 90, "recovered store lost rows")
+        val delBox = deleted.select("vec_id").collect()
+          .map(r => Long.box(r.getLong(0))).toSeq
+        assert(store.filter(col("vec_id").isin(delBox: _*)).count() == 0,
+          "tombstoned rows survived the recovered fold")
+        assert(!new java.io.File(s"$corpusDir._live_tmp").exists()
+          && !new java.io.File(s"$corpusDir._old").exists(),
+          "fold leftovers survived the commit")
+        assert(spark.read.parquet(s"$indexDir/v_1/vectors")
+            .filter(col("vec_id").isin(delBox: _*)).count() == 0,
+          "refit resurrected deleted vectors")
+      }
     }
   }
 }

@@ -8,10 +8,14 @@ import graft.sketch.GradientCodec
   * gradient sum + row count + loss sum (the loss pass of
   * `SketchGradientDescent.scala:371-383` fused into the same scan).
   *
-  * INPUT is a whole [[RowBlock]] per call: the cached partition's
-  * labels, CSR rows and sorted distinct keys. [[add]] walks the rows
-  * in order, and each row's margin → pointwise (scale, loss) → axpy
-  * goes into one of two targets:
+  * INPUT is the iteration's [[WeightFrame]] and a whole [[RowBlock]]
+  * per call: the cached partition's labels, CSR rows and sorted
+  * distinct keys. [[add]] reads the weights of the block's keys off
+  * the frame into a block-local array (one merge of two ascending
+  * runs), so no executor holds a `dim`-length weight array; the margin
+  * loop reads `wl(slots(j))`, the same double `w(cols(j))` is, in the
+  * same order. It then walks the rows in order, and each row's margin
+  * → pointwise (scale, loss) → axpy goes into one of two targets:
   *
   *  - a `dim`-length dense array, when dim ≤ [[GradientAccumulator.DenseDim]]
   *    (allocation and axpy beat anything sparse) or the block has more
@@ -19,6 +23,11 @@ import graft.sketch.GradientCodec
   *  - otherwise an array over the block's keys, addressed by the
   *    block's per-nonzero slots — no hashing, and the result is
   *    already key-ascending.
+  *
+  * `dim` comes from the first block added or merged in; a buffer that
+  * has seen neither (the zero value, an empty partition's partial)
+  * reports -1 and ships no frame, so the first aggregation of a fit is
+  * also its dimension probe.
   *
   * BUFFER SHAPE mirrors the reference's dense/sparse gradient split
   * (`SketchGradientDescent.scala:205-217` carries
@@ -53,9 +62,17 @@ import graft.sketch.GradientCodec
   * (`SketchGradientDescent.scala:274`): lossy error compounds along
   * the aggregation tree, as in the reference.
   */
-final class GradientAccumulator(val dim: Int, val codec: GradientCodec,
+final class GradientAccumulator(val codec: GradientCodec,
                                 val loss: PointLoss = SquaredPointLoss)
     extends Serializable {
+
+  private var _dim: Int = -1
+  /** The gradient's length, or -1 before any block was added or merged in. */
+  def dim: Int = _dim
+
+  private def takeDim(d: Int): Unit =
+    if (_dim < 0) _dim = d
+    else require(d == _dim, s"rows of sizes ${_dim} and $d in one dataset")
 
   // exactly one live representation: `dense` when non-null, else the
   // key-ascending sparse pair (empty for a zero gradient)
@@ -111,23 +128,26 @@ final class GradientAccumulator(val dim: Int, val codec: GradientCodec,
       if (keys.length > dim / GradientAccumulator.DensifyDenom) densify()
     }
 
-  /** Add every row of `blk` at weights (w, b), in row order: margin →
+  /** Add every row of `blk` at the weights of `weights` (a
+    * [[WeightFrame]]) and intercept b, in row order: margin →
     * pointwise (scale, loss) → axpy. For [[SquaredPointLoss]] this is
     * arithmetically identical to the fused residual form. */
-  def add(w: Array[Double], b: Double, blk: RowBlock): GradientAccumulator = {
+  def add(weights: Array[Byte], b: Double, blk: RowBlock): GradientAccumulator = {
+    takeDim(blk.dim)
+    val wl = WeightFrame.gather(weights, blk.keys)
     val sparse = dense == null && dim > GradientAccumulator.DenseDim &&
       blk.keys.length <= dim / GradientAccumulator.DensifyDenom
     if (!sparse) densify()
     val sums = if (sparse) new Array[Double](blk.keys.length) else dense
     val at = if (sparse) blk.slots else blk.cols
-    val cols = blk.cols; val xs = blk.values; val ends = blk.rowEnds
+    val slots = blk.slots; val xs = blk.values; val ends = blk.rowEnds
     var start = 0
     var r = 0
     while (r < blk.numRows) {
       val end = ends(r)
       var z = b
       var j = start
-      while (j < end) { z += w(cols(j)) * xs(j); j += 1 }
+      while (j < end) { z += wl(slots(j)) * xs(j); j += 1 }
       val gl = loss.scaleAndLoss(z, blk.labels(r))
       val g = gl._1
       j = start
@@ -146,6 +166,7 @@ final class GradientAccumulator(val dim: Int, val codec: GradientCodec,
     * consuming it. Sparse ∪ sparse stays sparse (until the density
     * bound); a dense side densifies the merge. */
   def merge(other: GradientAccumulator): GradientAccumulator = {
+    if (other.dim >= 0) takeDim(other.dim)
     if (other.dense == null) addSparse(other.keys, other.vals)
     else if (dense == null && keys.length == 0) dense = other.dense
     else {
@@ -168,22 +189,27 @@ final class GradientAccumulator(val dim: Int, val codec: GradientCodec,
   @throws[IOException]
   private def writeObject(out: ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    val bytes = frame
-    out.writeInt(bytes.length)
-    out.write(bytes)
+    if (dim < 0) out.writeInt(-1)
+    else {
+      val bytes = frame
+      out.writeInt(bytes.length)
+      out.write(bytes)
+    }
   }
 
   @throws[IOException]
   private def readObject(in: ObjectInputStream): Unit = {
     in.defaultReadObject()
-    val n = in.readInt()
-    val bytes = new Array[Byte](n)
-    in.readFully(bytes)
     keys = Array.emptyIntArray; vals = Array.emptyDoubleArray
-    if (dim <= GradientAccumulator.DenseDim) dense = codec.decode(bytes)
-    else {
-      val sg = codec.decodeSparse(bytes)
-      addSparse(sg.keys, sg.vals)
+    val n = in.readInt() // -1: no block seen, no frame
+    if (n >= 0) {
+      val bytes = new Array[Byte](n)
+      in.readFully(bytes)
+      if (dim <= GradientAccumulator.DenseDim) dense = codec.decode(bytes)
+      else {
+        val sg = codec.decodeSparse(bytes)
+        addSparse(sg.keys, sg.vals)
+      }
     }
   }
 }

@@ -53,13 +53,16 @@ object LearningRateMethod {
   }
 }
 
-/** Weight-update + regularized-loss strategy. `takeStep` mutates
-  * `weights` in place (the caller owns a fresh copy per iteration);
-  * the intercept is regularization-free per the reference
+/** Weight-update + regularized-loss strategy. `takeStep` steps
+  * `weights` in place by the mean gradient `gradSum(i) / count`,
+  * dividing and updating each entry in one pass; the quotient is
+  * taken first, so the weights are those of a separate division sweep
+  * followed by the step, bit for bit. The intercept is
+  * regularization-free per the reference
   * (`SketchGradientDescent.scala:310` updates it with the plain
   * gradient outside `takeStep`). */
 sealed trait RegularizationPenalty extends Serializable {
-  def takeStep(weights: Array[Double], gradient: Array[Double],
+  def takeStep(weights: Array[Double], gradSum: Array[Double], count: Double,
                regularizationConstant: Double, learningRate: Double): Unit
   /** Data loss → objective value (adds the penalty term). */
   def regLoss(loss: Double, weights: Array[Double],
@@ -78,9 +81,9 @@ object RegularizationPenalty {
 
 /** w ← w − η·g. */
 case object NoRegularization extends RegularizationPenalty {
-  def takeStep(w: Array[Double], g: Array[Double], lambda: Double, eta: Double): Unit = {
+  def takeStep(w: Array[Double], g: Array[Double], n: Double, lambda: Double, eta: Double): Unit = {
     var i = 0
-    while (i < w.length) { w(i) -= eta * g(i); i += 1 }
+    while (i < w.length) { w(i) -= eta * (g(i) / n); i += 1 }
   }
   def regLoss(loss: Double, w: Array[Double], lambda: Double): Double = loss
 }
@@ -88,9 +91,9 @@ case object NoRegularization extends RegularizationPenalty {
 /** Ridge: the λ·w gradient folds into the step, w ← w − η·(g + λ·w);
   * objective adds λ·‖w‖²/2. */
 case object L2Regularization extends RegularizationPenalty {
-  def takeStep(w: Array[Double], g: Array[Double], lambda: Double, eta: Double): Unit = {
+  def takeStep(w: Array[Double], g: Array[Double], n: Double, lambda: Double, eta: Double): Unit = {
     var i = 0
-    while (i < w.length) { w(i) -= eta * (g(i) + lambda * w(i)); i += 1 }
+    while (i < w.length) { w(i) -= eta * (g(i) / n + lambda * w(i)); i += 1 }
   }
   def regLoss(loss: Double, w: Array[Double], lambda: Double): Double = {
     var s = 0.0; var i = 0
@@ -104,11 +107,11 @@ case object L2Regularization extends RegularizationPenalty {
   * actually produces exact zeros, unlike subgradient descent;
   * objective adds λ·‖w‖₁. */
 case object L1Regularization extends RegularizationPenalty {
-  def takeStep(w: Array[Double], g: Array[Double], lambda: Double, eta: Double): Unit = {
+  def takeStep(w: Array[Double], g: Array[Double], n: Double, lambda: Double, eta: Double): Unit = {
     val shrink = lambda * eta
     var i = 0
     while (i < w.length) {
-      val v = w(i) - eta * g(i)
+      val v = w(i) - eta * (g(i) / n)
       w(i) = math.signum(v) * math.max(0.0, math.abs(v) - shrink)
       i += 1
     }

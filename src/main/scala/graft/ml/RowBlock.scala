@@ -63,15 +63,17 @@ object RowBlock {
     // one argsort of the column ids (non-negative, so their widened
     // longs sort as ints do); a sweep of the sorted order dedups them
     // into `keys` and hands every nonzero its slot
-    val sorted = new Array[Long](colArr.length)
+    val n = colArr.length
+    val sc = RadixArgsort.scratchFor(n)
+    val sorted = sc.keys
     var j = 0
-    while (j < colArr.length) { sorted(j) = colArr(j).toLong; j += 1 }
-    val perm = RadixArgsort.argsort(sorted, sorted.length)
+    while (j < n) { sorted(j) = colArr(j).toLong; j += 1 }
+    val perm = RadixArgsort.argsort(sc, n)
     val keys = new ArrayBuilder.ofInt
-    val slots = new Array[Int](colArr.length)
+    val slots = new Array[Int](n)
     var k = -1
     var p = 0
-    while (p < sorted.length) {
+    while (p < n) {
       if (p == 0 || sorted(p) != sorted(p - 1)) { keys += sorted(p).toInt; k += 1 }
       slots(perm(p)) = k
       p += 1

@@ -28,20 +28,24 @@ import graft.sketch.{GradientCodec, SketchCodec}
   * (`SketchGradientDescent.scala:159-169`) becomes a driver loop —
   * the idiomatic Spark form (same as MLlib `GradientDescent
   * .runMiniBatchSGD`): persist the training set once, then per
-  * iteration broadcast the weights and run one `treeAggregate`
-  * whose buffer serializes through the gradient codec
-  * ([[GradientAccumulator]]). Loss for the convergence test
-  * (`SketchGradientDescent.scala:85-146`) is fused into the same
-  * pass, so a converging run costs exactly one job per iteration.
+  * iteration broadcast the weights' nonzeros as one [[WeightFrame]]
+  * (the reference's `withBroadcastSet` downlink, in O(nnz(w)) bytes
+  * instead of O(dim)) and run one `treeAggregate` whose buffer
+  * serializes through the gradient codec ([[GradientAccumulator]]).
+  * Loss for the convergence test (`SketchGradientDescent.scala:85-146`)
+  * is fused into the same pass, so a fit of k iterations runs exactly
+  * k jobs.
   *
   * What is persisted is one [[RowBlock]] per non-empty partition —
   * labels, CSR rows, the partition's sorted distinct feature keys and
-  * a key slot per nonzero — not the (label, Vector) rows. The blocks
-  * are built inside the jobs the fit runs anyway (the dimension probe
-  * builds block 0, the first aggregation the rest), so a fit of k
-  * iterations runs k + 1 jobs. Each task adds its whole block in one
-  * [[GradientAccumulator.add]] call, and its partial comes out
-  * key-sorted, ready for the codec. The block cache and the live
+  * a key slot per nonzero — not the (label, Vector) rows. The first
+  * aggregation builds every block, in parallel, and is also the
+  * dimension probe: it needs no weights (the first frame is empty), and
+  * its aggregate carries the `dim` of the blocks it added. Each task
+  * adds its whole block in one [[GradientAccumulator.add]] call, and
+  * its partial comes out key-sorted, ready for the codec. The driver
+  * steps the weights in place, mean and penalty in one pass
+  * ([[RegularizationPenalty.takeStep]]). The block cache and the live
   * weight broadcast are released on every exit, exceptions included.
   */
 class SketchLinearRegression extends Serializable {
@@ -91,25 +95,27 @@ class SketchLinearRegression extends Serializable {
   private def train(blocks: RDD[RowBlock]): LinearModel = {
     val sc = blocks.sparkContext
     val codec: GradientCodec = SketchCodec.forName(compressionType)
-    // the dimension probe builds block 0; the first aggregation the rest
-    val dim = blocks.map(_.dim).take(1).headOption.getOrElse(
-      throw new IllegalArgumentException("cannot fit a linear model on an empty dataset"))
 
-    var weights = new Array[Double](dim) // zeros init (SketchGradientDescent.scala:55)
+    // zeros init (SketchGradientDescent.scala:55), at the dim the first
+    // aggregation reads off the blocks; until then the frame is empty
+    var weights = Array.emptyDoubleArray
     var intercept = 0.0
     var prevLoss = Double.NaN
     val lossHistory = Array.newBuilder[Double]
     var t = 1
     var converged = false
     while (t <= iterations && !converged) {
-      val bcW = sc.broadcast(weights)
+      val bcW = sc.broadcast(WeightFrame.encode(weights))
       val bcB = intercept
       val agg =
-        try blocks.treeAggregate(new GradientAccumulator(dim, codec, pointLoss))(
+        try blocks.treeAggregate(new GradientAccumulator(codec, pointLoss))(
           seqOp = (acc, blk) => acc.add(bcW.value, bcB, blk),
           combOp = (a, b) => a.merge(b),
           depth = treeDepth)
         finally bcW.destroy()
+      if (agg.count == 0)
+        throw new IllegalArgumentException("cannot fit a linear model on an empty dataset")
+      if (t == 1) weights = new Array[Double](agg.dim)
       val n = agg.count.toDouble
       // mean data loss + penalty term (SketchGradientDescent.scala:371-383;
       // convergence tracks the regularized objective so an L1/L2 run
@@ -118,12 +124,9 @@ class SketchLinearRegression extends Serializable {
         agg.lossSum / n, weights, regularizationConstant)
       lossHistory += curLoss
       val eta = learningRateMethod.rate(stepSize, t, regularizationConstant)
-      val meanGrad = agg.grad // densifies a sparse aggregate once, driver-side
-      var i = 0
-      while (i < dim) { meanGrad(i) /= n; i += 1 }
-      val w2 = weights.clone()
-      regularizationPenalty.takeStep(w2, meanGrad, regularizationConstant, eta)
-      weights = w2
+      // agg.grad densifies a sparse aggregate once, driver-side; the
+      // step divides by n and updates the weights in the same pass
+      regularizationPenalty.takeStep(weights, agg.grad, n, regularizationConstant, eta)
       // intercept is regularization-free (SketchGradientDescent.scala:310)
       intercept -= eta * agg.interceptGrad / n
       // relative-loss-change termination (SketchGradientDescent.scala:129-137).

@@ -1847,6 +1847,7 @@ object PipelineQueries {
           qterms, k = 51)
         .filter(col("doc_id") =!= qid)
         .orderBy(col("bm25_e6").desc, col("doc_id")).limit(50)
+        // rank the 50-row cut (the window runs on a bounded frame)
         .withColumn("rank", row_number().over(
           Window.orderBy(col("bm25_e6").desc, col("doc_id"))).cast("long"))
       Materialize.withCached(sparseStored) {

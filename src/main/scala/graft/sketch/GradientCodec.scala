@@ -198,7 +198,11 @@ object IdentityCodec extends GradientCodec {
   *     marker (`SketchGradientDescent.scala:203,213,261-271`).
   *
   * The encode kernel sorts once: one [[RadixArgsort]] of the values'
-  * order-preserving keys, O(nnz). The `binNum − 1` quantile edges are
+  * order-preserving keys, O(nnz), in the thread's grow-only
+  * [[RadixArgsort.Scratch]], the bins too, so `encodeNonzeros`
+  * allocates only the frame, the sketch tables and per-bin and
+  * per-group arrays. The
+  * `binNum − 1` quantile edges are
   * read off the sorted values by position, and one monotone sweep of
   * the sorted order gives every value its bin — the number of edges
   * below it, the answer a binary search over the edges would give.
@@ -273,11 +277,13 @@ final class SketchCodec(
     * ascending, `vals` aligned, all |v| > eps. */
   private def encodeNonzeros(dim: Int, nnz: Int, keys: Array[Int],
                              vals: Array[Double]): Array[Byte] = {
-    // 1. one argsort of the values: edges by position, bins by a sweep
-    val sorted = new Array[Long](nnz)
+    // 1. one argsort of the values: edges by position, bins by a sweep;
+    // the sort buffers and the bins are the thread's scratch
+    val sc = RadixArgsort.scratchFor(nnz)
+    val sorted = sc.keys
     var k = 0
     while (k < nnz) { sorted(k) = RadixArgsort.doubleKey(vals(k)); k += 1 }
-    val perm = RadixArgsort.argsort(sorted, nnz)
+    val perm = RadixArgsort.argsort(sc, nnz)
     val edges = new Array[Double](binNum - 1)
     var b = 0
     while (b < binNum - 1) {
@@ -289,7 +295,7 @@ final class SketchCodec(
     // A magnitude-descending re-index (shrink-toward-zero bias) was
     // measured strictly worse here — adjacent bins alternate sign and
     // collisions become sign flips (relL2 0.37 → 0.81 at 3×0.5).
-    val bins = new Array[Int](nnz)
+    val bins = sc.ints
     b = 0
     var p = 0
     while (p < nnz) {

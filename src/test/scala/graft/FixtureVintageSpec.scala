@@ -52,7 +52,7 @@ class FixtureVintageSpec extends SparkTestBase {
   test("normalizer handles vintages that have not shipped yet (date32, LTZ, nanos-long)") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("vintage").toString
+    val dir = suiteDir("vintage")
 
     // vintage A: o_orderdate written as DATE
     Tables.orders(s, sfDir).limit(100)

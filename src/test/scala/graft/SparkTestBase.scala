@@ -1,11 +1,34 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{Args, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession per suite (spark_guide.md pattern). */
+/** Shared local SparkSession per suite (spark_guide.md pattern), and
+  * one temp root per suite run that [[Materialize.withTempDir]] deletes
+  * when the suite ends, pass or fail. */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  @volatile private var suiteRoot: String = _
+  private val suiteDirs = new AtomicInteger()
+
+  /** A fresh empty directory under this suite's temp root. */
+  protected def suiteDir(prefix: String): String = {
+    val d = new java.io.File(suiteRoot, s"${prefix}_${suiteDirs.incrementAndGet()}")
+    require(d.mkdirs(), s"cannot create $d")
+    d.getAbsolutePath
+  }
+
+  override def run(testName: Option[String], args: Args): Status =
+    Materialize.withTempDir(s"graft_${getClass.getSimpleName}") { root =>
+      suiteRoot = root
+      val status = super.run(testName, args)
+      status.waitUntilCompleted()
+      status
+    }
 
   /** Jobs the body launches from this thread. Listener delivery is
     * async, so a marker job submitted last flushes it: events arrive

@@ -294,8 +294,8 @@ class SgdSpec extends SparkTestBase {
     // buffer-level contract: the accumulator stays sparse through a
     // block add, a serialization round-trip, and sparse∪sparse merges —
     // and densifies when a dense row arrives, with equal sums
-    val acc = new GradientAccumulator(dim, graft.sketch.IdentityCodec)
-    val w0 = new Array[Double](dim)
+    val acc = new GradientAccumulator(graft.sketch.IdentityCodec)
+    val w0 = WeightFrame.encode(new Array[Double](dim))
     acc.add(w0, 0.0, RowBlock(rows.take(20).iterator))
     assert(acc.isSparse, "sparse rows densified the buffer")
     val ser = new java.io.ByteArrayOutputStream()
@@ -306,18 +306,18 @@ class SgdSpec extends SparkTestBase {
       new java.io.ByteArrayInputStream(ser.toByteArray))
       .readObject().asInstanceOf[GradientAccumulator]
     assert(back.isSparse, "deserialization densified the buffer")
-    val other = new GradientAccumulator(dim, graft.sketch.IdentityCodec)
+    val other = new GradientAccumulator(graft.sketch.IdentityCodec)
     other.add(w0, 0.0, RowBlock(rows.drop(20).iterator))
     back.merge(other)
     assert(back.isSparse, "sparse ∪ sparse merge densified")
-    val direct = new GradientAccumulator(dim, graft.sketch.IdentityCodec)
+    val direct = new GradientAccumulator(graft.sketch.IdentityCodec)
     direct.add(w0, 0.0, RowBlock(rows.iterator))
     active.foreach { i =>
       assert(math.abs(back.grad(i) - direct.grad(i)) < 1e-12,
         s"merged sparse sum diverged at $i")
     }
     val denseRow = (1.0, Vectors.dense(Array.fill(dim)(0.0).updated(5, 1.0)))
-    val forced = new GradientAccumulator(dim, graft.sketch.IdentityCodec)
+    val forced = new GradientAccumulator(graft.sketch.IdentityCodec)
     forced.add(w0, 0.0, RowBlock(Iterator(denseRow)))
     assert(!forced.isSparse, "a dense row should densify the buffer")
   }
@@ -381,8 +381,8 @@ class SgdSpec extends SparkTestBase {
       val ks = ref.keys.toArray.sorted
       val vs = ks.map(ref)
       for (codec <- Seq(new graft.sketch.SketchCodec(), graft.sketch.IdentityCodec)) {
-        val acc = new GradientAccumulator(dim, codec)
-          .add(w, b, RowBlock(rows.iterator))
+        val acc = new GradientAccumulator(codec)
+          .add(WeightFrame.encode(w), b, RowBlock(rows.iterator))
         assert(acc.isSparse == (dim > GradientAccumulator.DenseDim))
         assert(acc.interceptGrad == interceptRef)
         codec match {
@@ -398,14 +398,157 @@ class SgdSpec extends SparkTestBase {
     }
   }
 
-  test("a fit of k iterations runs k + 1 jobs: the dimension probe and one per iteration") {
+  // --- the weight downlink: one WeightFrame of the nonzeros per iteration
+
+  private def bitsOf(xs: Array[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+
+  /** The loop the frame downlink replaced, kept here as the reference:
+    * a dimension probe; every iteration the dense weights broadcast and
+    * read by column, each partition's per-key sums added in row order
+    * and shipped as one codec frame, the frames summed on the driver;
+    * then a separate mean sweep, a clone, and the step. */
+  private def denseDownlinkFit(data: org.apache.spark.rdd.RDD[(Double, org.apache.spark.ml.linalg.Vector)],
+      iterations: Int, stepSize: Double, codec: graft.sketch.GradientCodec,
+      penalty: RegularizationPenalty, lambda: Double): LinearModel = {
+    val sc = data.sparkContext
+    val dim = data.map(_._2.size).first()
+    var weights = new Array[Double](dim)
+    var intercept = 0.0
+    val losses = Array.newBuilder[Double]
+    for (t <- 1 to iterations) {
+      val bcW = sc.broadcast(weights)
+      val b = intercept
+      val partials = data.mapPartitions { rows =>
+        val w = bcW.value
+        val sums = scala.collection.mutable.HashMap.empty[Int, Double]
+        var gb = 0.0; var loss = 0.0; var n = 0L
+        rows.foreach { case (y, x) =>
+          val (g, l) = SquaredPointLoss.scaleAndLoss(LinearLoss.predict(w, b, x), y)
+          x.foreachActive((i, v) => sums(i) = sums.getOrElse(i, 0.0) + g * v)
+          gb += g; loss += l; n += 1
+        }
+        val ks = sums.keys.toArray.sorted
+        if (n == 0) Iterator.empty
+        else Iterator((codec.encodeSparse(dim, ks.length, ks, ks.map(sums)), gb, loss, n))
+      }.collect()
+      bcW.destroy()
+      val grad = new Array[Double](dim)
+      partials.foreach { p =>
+        val sg = codec.decodeSparse(p._1)
+        sg.keys.indices.foreach(j => grad(sg.keys(j)) += sg.vals(j))
+      }
+      val n = partials.map(_._4).sum.toDouble
+      losses += penalty.regLoss(partials.map(_._3).sum / n, weights, lambda)
+      val eta = LearningRateMethod.Default.rate(stepSize, t, lambda)
+      var i = 0
+      while (i < dim) { grad(i) /= n; i += 1 }
+      val w2 = weights.clone()
+      i = 0
+      while (i < dim) {
+        penalty match {
+          case NoRegularization => w2(i) -= eta * grad(i)
+          case L2Regularization => w2(i) -= eta * (grad(i) + lambda * w2(i))
+          case L1Regularization =>
+            val v = w2(i) - eta * grad(i)
+            w2(i) = math.signum(v) * math.max(0.0, math.abs(v) - lambda * eta)
+        }
+        i += 1
+      }
+      weights = w2
+      intercept -= eta * partials.map(_._2).sum / n
+    }
+    LinearModel(weights, intercept, losses.result())
+  }
+
+  test("the frame downlink fits bit-identically to the dense-broadcast loop") {
+    // two partitions: the driver adds the two partials in either order,
+    // and a + b == b + a, so both loops are deterministic
+    val rnd = new scala.util.Random(17)
+    val sparseDim = 1 << 20 // above DenseDim: the sparse slot-array path
+    val features = Array.fill(300)(rnd.nextInt(sparseDim)).distinct.sorted
+    val sparseRows = (0 until 240).map { _ =>
+      val idx = Array.fill(15)(features(rnd.nextInt(features.length))).distinct.sorted
+      val xs = idx.map(_ => rnd.nextGaussian())
+      (xs.sum * 0.3 + rnd.nextGaussian() * 0.1, Vectors.sparse(sparseDim, idx, xs))
+    }
+    val denseRows = (0 until 120).map { _ =>
+      val x = Array.fill(12)(rnd.nextGaussian())
+      (x.take(6).zipWithIndex.map { case (v, i) => v * (i % 4 - 1.5) }.sum, Vectors.dense(x))
+    }
+    for ((rows, name) <- Seq(sparseRows -> "sparse", denseRows -> "dense")) {
+      val data = spark.sparkContext.parallelize(rows, 2)
+      data.cache()
+      val touched = rows.flatMap(_._2.toSparse.indices).distinct
+      for (codecName <- Seq("None", "Sketch");
+           (penalty, lambda) <- Seq(NoRegularization -> 0.0, L1Regularization -> 0.05,
+                                    L2Regularization -> 0.5)) {
+        val fit = new SketchLinearRegression().setIterations(5).setStepsize(0.5)
+          .setCompressionType(codecName).setRegularizationPenalty(penalty)
+          .setRegularizationConstant(lambda).fitRDD(data)
+        val ref = denseDownlinkFit(data, 5, 0.5, graft.sketch.SketchCodec.forName(codecName),
+          penalty, lambda)
+        val tag = s"$name rows, $codecName codec, $penalty"
+        assert(bitsOf(fit.weights).sameElements(bitsOf(ref.weights)), s"$tag: weights differ")
+        assert(java.lang.Double.doubleToRawLongBits(fit.intercept) ==
+          java.lang.Double.doubleToRawLongBits(ref.intercept), s"$tag: intercept differs")
+        assert(bitsOf(fit.lossHistory).sameElements(bitsOf(ref.lossHistory)),
+          s"$tag: loss history ${fit.lossHistory.toSeq} vs ${ref.lossHistory.toSeq}")
+        if (penalty == L1Regularization) // the soft threshold's exact (and signed) zeros
+          assert(touched.exists(fit.weights(_) == 0.0), s"$tag: no weight was shrunk to zero")
+      }
+      data.unpersist()
+    }
+  }
+
+  test("the weight frame round-trips −0.0, NaN and an all-zero model bit for bit") {
+    def roundTrip(w: Array[Double]): Array[Double] =
+      WeightFrame.gather(WeightFrame.encode(w), Array.range(0, w.length)).take(w.length)
+    val w = new Array[Double](40000)
+    // one- to three-byte key gaps, signed zeros, NaNs with payloads
+    Seq(0 -> -0.0, 1 -> Double.NaN, 2 -> 1.5, 130 -> -0.0, 131 -> -2.25,
+        20000 -> java.lang.Double.longBitsToDouble(0x7ff8000000000123L),
+        20001 -> java.lang.Double.longBitsToDouble(0xfff0000000000001L),
+        30000 -> Double.NegativeInfinity, 39999 -> Double.MinPositiveValue)
+      .foreach { case (i, v) => w(i) = v }
+    val frame = WeightFrame.encode(w)
+    assert(bitsOf(roundTrip(w)).sameElements(bitsOf(w)))
+    // +0.0 is the only value left out
+    assert(frame.length == 4 + 9 * 5 + 10 + 11 + 10 + 10,
+      s"frame of 9 entries is ${frame.length} B")
+    // a block's keys read the same bits, absent keys +0.0
+    val keys = Array(0, 1, 5, 130, 20001, 39998, 39999)
+    assert(bitsOf(WeightFrame.gather(frame, keys).take(keys.length))
+      .sameElements(bitsOf(keys.map(w))))
+    // the all-zero model is the header alone and reads back as +0.0,
+    // even on a thread whose last gather held nonzeros
+    val zeros = new Array[Double](1 << 20)
+    assert(WeightFrame.encode(zeros).length == 4)
+    assert(roundTrip(zeros).forall(java.lang.Double.doubleToRawLongBits(_) == 0L))
+    assert(WeightFrame.encode(Array.emptyDoubleArray).length == 4)
+  }
+
+  test("at dim 2^24 the weight frame is exactly a varint gap and 8 B per nonzero") {
+    val dim = 1 << 24
+    val rnd = new scala.util.Random(21)
+    val keys = (Array(0, dim - 1) ++ Array.fill(400)(rnd.nextInt(dim))).distinct.sorted
+    val w = new Array[Double](dim)
+    keys.foreach(k => w(k) = rnd.nextGaussian())
+    val frame = WeightFrame.encode(w)
+    def varIntBytes(v: Int) = if (v < (1 << 7)) 1 else if (v < (1 << 14)) 2 else if (v < (1 << 21)) 3 else 4
+    val exact = 4 + keys.indices.map(i => varIntBytes(keys(i) - (if (i == 0) 0 else keys(i - 1))) + 8).sum
+    assert(frame.length == exact, s"frame ${frame.length} B, expected $exact B")
+    assert(frame.length <= 13 * keys.length + 4, s"frame ${frame.length} B for ${keys.length} nonzeros")
+    assert(bitsOf(WeightFrame.gather(frame, keys).take(keys.length)).sameElements(bitsOf(keys.map(w))))
+  }
+
+  test("a fit of k iterations runs k jobs: one aggregation per iteration") {
     val (data, _, _) = planted(400, 6, seed = 3)
     for (k <- Seq(1, 4)) {
       val jobs = jobsLaunchedBy {
         new SketchLinearRegression().setIterations(k).setStepsize(0.1)
           .setCompressionType("Sketch").fitRDD(data)
       }
-      assert(jobs == k + 1, s"$k iterations ran $jobs jobs")
+      assert(jobs == k, s"$k iterations ran $jobs jobs")
     }
   }
 

@@ -14,8 +14,7 @@ class AudioIndexSpec extends SparkTestBase {
   private def docsDF(ids: Seq[Long]) =
     ids.map(id => (id, s"text $id")).toDF("doc_id", "text")
 
-  private def tempDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_audidx_$tag").toString
+  private def tempDir(tag: String): String = suiteDir(s"graft_audidx_$tag")
 
   test("index stores one print per exact family, sharded buckets") {
     val docs = docsDF(0L to 99L)

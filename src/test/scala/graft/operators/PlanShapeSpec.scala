@@ -258,7 +258,7 @@ class PlanShapeSpec extends SparkTestBase {
   private lazy val vecBatch = vecCorpus.filter(col("vec_id") % 15 === 0)
     .select((col("vec_id") + 1000).as("vec_id"), col("embedding"))
   private lazy val semDir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_sem_plan").toString
+    val d = suiteDir("graft_sem_plan")
     Dedup.buildSemanticIndex(vecCorpus, nlist = 4, d)
     d
   }
@@ -304,7 +304,7 @@ class PlanShapeSpec extends SparkTestBase {
         AudioDedup.plantedRecrawlBatch),
       (VideoDedup, VideoDedup.withPlantedTwins, VideoDedup.withPlantedStreams,
         VideoDedup.plantedRecrawlBatch)).map { case (m, twins, stored, recrawl) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_media_plan").toString
+      val dir = suiteDir("graft_media_plan")
       m.buildIndex(stored(docs), dir)
       (m, twins(docs), recrawl(docs), dir)
     }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -27,7 +25,7 @@ class CheckpointRecoverySpec extends SparkTestBase {
   test("windowed agg restarted from checkpoint emits each window exactly once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("ckpt-recovery").toFile
+    val dir = new java.io.File(suiteDir("ckpt-recovery"))
     val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
     val out = new java.io.File(dir, "out").getAbsolutePath
     val stream = MemoryStream[Event]

@@ -38,7 +38,7 @@ abstract class MediaAdmissionBehaviour(m: MediaDedup, tag: String,
 
   private lazy val docs = (0L to 59L).map(id => (id, s"text $id")).toDF("doc_id", "text")
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_${tag}_twin").toString
+    val d = suiteDir(s"graft_${tag}_twin")
     m.buildIndex(stored(docs), d)
     d
   }
@@ -83,7 +83,7 @@ abstract class MediaAdmissionBehaviour(m: MediaDedup, tag: String,
 
   test("checkpointed restart resumes admission without re-emitting verdicts") {
     import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
-    val root = java.nio.file.Files.createTempDirectory(s"graft_${tag}_ckpt").toFile.getAbsolutePath
+    val root = suiteDir(s"graft_${tag}_ckpt")
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     new java.io.File(in).mkdirs()
     val schema = StructType(Seq(StructField("doc_id", LongType), StructField("media", BinaryType)))
@@ -115,7 +115,7 @@ abstract class MediaAdmissionBehaviour(m: MediaDedup, tag: String,
       assert(v(500L) == (("", None, true)) && v.size == 11)
     } finally res.unpersist(blocking = false)
     // buildIndex skips it
-    val d = java.nio.file.Files.createTempDirectory(s"graft_${tag}_null").toString
+    val d = suiteDir(s"graft_${tag}_null")
     m.buildIndex(corpus, d)
     val reps = spark.read.parquet(s"$d/reps").select(col("doc_id")).as[Long].collect().toSet
     assert(!reps.contains(500L) && reps.nonEmpty)

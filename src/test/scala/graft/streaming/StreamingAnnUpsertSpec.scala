@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -59,7 +57,7 @@ class StreamingAnnUpsertSpec extends SparkTestBase {
               stream.toDS().toDF("vec_id", "embedding"), indexDir, corpusDir,
               nBuckets = 8)
             .option("checkpointLocation",
-              Files.createTempDirectory("up_ckpt").toString)
+              suiteDir("up_ckpt"))
             .start()
           try {
             stream.addData(b1: _*); q.processAllAvailable()

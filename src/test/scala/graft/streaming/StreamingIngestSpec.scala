@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,7 +15,7 @@ class StreamingIngestSpec extends SparkTestBase {
 
   test("parquet-file stream admits documents against the index across batches") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_ingest").toFile.getAbsolutePath
+    val root = suiteDir("graft_ingest")
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     new java.io.File(in).mkdirs()
 

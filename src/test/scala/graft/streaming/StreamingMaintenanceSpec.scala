@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -47,7 +45,7 @@ class StreamingMaintenanceSpec extends SparkTestBase {
               stream.toDS().toDF("vec_id", "embedding"), indexDir, corpusDir,
               nlist = 4, maxDrift = 0.30, seed = 11L)
             .option("checkpointLocation",
-              Files.createTempDirectory("maint_ckpt").toString)
+              suiteDir("maint_ckpt"))
             .start()
           try {
             stream.addData(arriving.take(40): _*); q.processAllAvailable()
@@ -120,7 +118,7 @@ class StreamingMaintenanceSpec extends SparkTestBase {
               stream.toDS().toDF("vec_id", "embedding"), indexDir, corpusDir,
               nlist = 4, maxDrift = 0.30, seed = 11L)
             .option("checkpointLocation",
-              Files.createTempDirectory("maintd_ckpt").toString)
+              suiteDir("maintd_ckpt"))
             .start()
           try {
             stream.addData(arriving.take(20): _*); q.processAllAvailable()

@@ -135,7 +135,7 @@ class StreamingNearDupSpec extends SparkTestBase {
 
   test("checkpointed restart resumes fuzzy admission without re-emitting verdicts") {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val root = java.nio.file.Files.createTempDirectory("graft_neardup").toFile.getAbsolutePath
+    val root = suiteDir("graft_neardup")
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     new java.io.File(in).mkdirs()
     val schema = StructType(Seq(

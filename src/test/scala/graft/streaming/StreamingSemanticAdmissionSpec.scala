@@ -22,7 +22,7 @@ class StreamingSemanticAdmissionSpec extends VectorAdmissionBehaviour {
   }
 
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_sem_adm").toString
+    val d = suiteDir("graft_sem_adm")
     Dedup.buildSemanticIndex(corpusDF, nlist = 4, d)
     d
   }

@@ -66,7 +66,7 @@ trait VectorAdmissionBehaviour extends SparkTestBase {
     * verdict of `expected` exactly once. */
   def assertRestart(tag: String, admit: DataFrame => Dataset[VecVerdict],
                     rows: Rows, elem: String, expected: Verdicts, first: Int = 3): Unit = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft_${tag}_ckpt").toFile.getAbsolutePath
+    val root = suiteDir(s"graft_${tag}_ckpt")
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     new java.io.File(in).mkdirs()
     def run(): Unit = {

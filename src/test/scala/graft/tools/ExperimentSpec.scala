@@ -15,7 +15,7 @@ class ExperimentSpec extends SparkTestBase {
 
   test("experiment main runs sketch and baseline paths, logs CSV") {
     spark // ensure shared session exists before main() getOrCreate()
-    val dir = Files.createTempDirectory("graft-exp")
+    val dir = java.nio.file.Paths.get(suiteDir("graft-exp"))
     val libsvm = dir.resolve("train.libsvm")
     val rnd = new scala.util.Random(42)
     val w = Array(1.5, -2.0, 0.5)
@@ -46,7 +46,7 @@ class ExperimentSpec extends SparkTestBase {
 
   test("empty test split logs zero error instead of NPE") {
     spark
-    val dir = Files.createTempDirectory("graft-exp-empty")
+    val dir = java.nio.file.Paths.get(suiteDir("graft-exp-empty"))
     // find candidate lines whose split-hash lands in the TRAIN bucket,
     // so the written input yields an empty 25% test split
     val candidates = (1 to 40).map(i => s"$i.0 1:${i * 0.5}")

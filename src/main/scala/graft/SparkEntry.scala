@@ -2,36 +2,45 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{PipelineQueries, RefQueries, RelationalQueries, SketchQueries, SparkSqlTwins}
+import graft.queries._
+import graft.queries.QuerySpec.Sql
 
-/** Driver contract — see /root/repo/SURVEY.md §2.5/§7 + the builder
-  * prompt. Queries are assembled from three catalogs:
-  *  - [[RefQueries]]       Group A: reference-surface (scan/parse/
-  *                         broadcast/split/gradient/loss/SGD/sketch)
-  *  - [[RelationalQueries]] Group B: relational core + event-time
-  *  - [[PipelineQueries]]  Group B: LLM-pipeline (dedup/similarity/
-  *                         text/multimodal)
-  */
+/** Driver contract — see SURVEY.md §2.5/§7. Every key is one
+  * [[QuerySpec]] (builder, oracle, plan note) in the family file of
+  * `graft.queries` that shares its helpers: [[RefQueries]] (the
+  * reference's scan/parse/gradient/SGD/sketch surface),
+  * [[RelationalQueries]], [[SketchQueries]], [[TextQueries]],
+  * [[CurationQueries]], [[DedupQueries]], [[MediaQueries]],
+  * [[VectorQueries]], [[AnnQueries]], [[RetrievalQueries]] and
+  * [[TokenizeQueries]]. To add a key, append a spec to its family's
+  * `specs`; the maps below, Verify, Bench and Plans pick it up, and a
+  * key declared twice fails the catalog. */
 object SparkEntry {
+
+  /** Every key's spec, in family order. */
+  lazy val specs: Seq[QuerySpec] = QuerySpec.catalog(
+    RefQueries.specs, RelationalQueries.specs, SketchQueries.specs,
+    TextQueries.specs, CurationQueries.specs, DedupQueries.specs,
+    MediaQueries.specs, VectorQueries.specs, AnnQueries.specs,
+    RetrievalQueries.specs, TokenizeQueries.specs)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    RelationalQueries.queries("q_join_agg")(spark, "/root/testdata/sf0.001")
+    queries("q_join_agg")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RefQueries.queries ++ RelationalQueries.queries ++
-      PipelineQueries.queries ++ SketchQueries.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.key -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys (lossy sketch, engine-hash
     * MinHash/SimHash) get the rows-only check. */
-  def oracleSql: Map[String, String] =
-    RefQueries.oracleSql ++ RelationalQueries.oracleSql ++
-      PipelineQueries.oracleSql ++ SketchQueries.oracleSql
+  lazy val oracleSql: Map[String, String] =
+    specs.collect { case QuerySpec(k, _, Sql(sql, _), _) => k -> sql }.toMap
 
   /** Spark-dialect SQL twins for the oracle statements that are
     * DuckDB-only dialect. Used by SqlParitySpec to prove the whole
     * catalog through `spark.sql` text as well. */
-  def sparkSql: Map[String, String] = SparkSqlTwins.map
+  lazy val sparkSql: Map[String, String] =
+    specs.collect { case QuerySpec(k, _, Sql(_, Some(twin)), _) => k -> twin }.toMap
 }

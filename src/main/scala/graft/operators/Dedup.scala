@@ -906,10 +906,11 @@ object Dedup {
     * vs exact is gated as a checked contract in `q_dedup_embedding`.
     * Probes with zero candidates surface as (n_near = 0, max_cos
     * null) through the left join — silently dropping them would make
-    * the report lie about coverage. */
+    * the report lie about coverage. `dim` as in
+    * [[Similarity.lshCandidates]]. */
   def embeddingNearDupLsh(corpus: DataFrame, probes: DataFrame, threshold: Double,
                           bits: Int = 2, seed: Long = 42L, numTables: Int = 8,
-                          dim: Int = 0): DataFrame = {
+                          dim: Int): DataFrame = {
     val cand = Similarity.lshCandidates(corpus, probes, bits, seed, numTables, dim)
     val c = corpus.select(col("vec_id"),
         VectorOps.asDoubleArray(col("embedding")).as("cv"))

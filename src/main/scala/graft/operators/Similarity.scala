@@ -922,15 +922,13 @@ object Similarity {
     * front-end for [[lshTopK]] and ANN-candidate near-dup
     * ([[Dedup.embeddingNearDupLsh]]).
     *
-    * `dim` is the embedding dimensionality (pipeline config in any
-    * real deployment); 0 falls back to probing the first corpus row —
-    * one extra tiny job per call, avoid in hot paths. */
+    * `dim` is the embedding dimensionality (pipeline config), required
+    * so that building the frame runs no job. */
   def lshCandidates(corpus: DataFrame, queries: DataFrame,
                     bits: Int = 8, seed: Long = 42L, numTables: Int = 8,
-                    dim: Int = 0): DataFrame = {
-    val d = if (dim > 0) dim
-      else corpus.select(size(col("embedding"))).head().getInt(0)
-    val planes = hyperplanes(d, bits * numTables, seed)
+                    dim: Int): DataFrame = {
+    require(dim > 0, s"lsh: dim must be the positive embedding dimension, got $dim")
+    val planes = hyperplanes(dim, bits * numTables, seed)
     def tableBuckets(vecCol: org.apache.spark.sql.Column) =
       array((0 until numTables).map(t =>
         lshBucket(vecCol, planes.slice(t * bits, (t + 1) * bits))): _*)
@@ -951,10 +949,10 @@ object Similarity {
     * L independent tables lift it to 1−(1−p^bits)^L while the
     * per-table candidate fraction stays ~1/2^bits. Candidate *pairs*
     * are deduped before scoring so a pair colliding in several tables
-    * is scored once. */
+    * is scored once. `dim` as in [[lshCandidates]]. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               bits: Int = 8, seed: Long = 42L, numTables: Int = 8,
-              dim: Int = 0): DataFrame = {
+              dim: Int): DataFrame = {
     val c = corpus.select(col("vec_id"),
         VectorOps.asDoubleArray(col("embedding")).as("cv"))
       .withColumn("cn", VectorOps.l2Norm(col("cv")))

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   *    replicates the decode subtree per reference);
   *  - the three media admission plans against a freshly built index,
   *    as the `q_dedup_incr_*` keys run them;
-  *  - `q_dedup_substring`'s span chain and `q_curate_hosts`.
+  *  - `q_dedup_substring`'s span chain and the `q_curate_hosts` key's
+  *    frame.
   * Usage: `runMain graft.tools.PlanDump <sfDir> <outDir> <tag>`. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -34,7 +35,7 @@ object PlanDump {
         println(s"[plandump] $name ($tag): ${Plans.exchangeCount(plan)} Exchange lines")
       }
 
-      import graft.operators.{AudioDedup, Curation, Dedup, ImageDedup, MediaDedup, VideoDedup}
+      import graft.operators.{AudioDedup, Dedup, ImageDedup, MediaDedup, VideoDedup}
       val docs = graft.Tables.documents(spark, sfDir)
       val modalities: Seq[(String, MediaDedup, DataFrame => DataFrame,
           DataFrame => DataFrame, DataFrame => DataFrame)] = Seq(
@@ -60,20 +61,9 @@ object PlanDump {
       // q_dedup_substring's span chain
       dump("q_dedup_substring_spans", Dedup.duplicatedSpans(docs, 8, 2))
 
-      // q_curate_hosts exactly as the key composes it
-      val id = col("doc_id")
-      val even = pmod(id, lit(2)) === 0
-      val url = concat(lit("https://"), col("source"),
-        when(even, lit("-a")).otherwise(lit("-b")), lit(".example.com"),
-        when(even, lit("/art/0"))
-          .otherwise(concat(lit("/art/"), pmod(id, lit(100000)).cast("string"))),
-        when(even, lit("?id=0"))
-          .otherwise(concat(lit("?id="), pmod(id, lit(7)).cast("string"))),
-        when(pmod(id, lit(3)) === 0, lit("&utm_source=feed")).otherwise(lit("")))
-      dump("q_curate_hosts", Curation.curateWithHostGate(docs,
-        urls = docs.select(id, url.as("url")),
-        evalDocs = docs.filter(pmod(id, lit(10)) === 0),
-        contamThresholdE6 = 700000L))
+      // the host-curation key's own frame
+      val hosts = "q_curate_hosts"
+      dump(hosts, graft.SparkEntry.queries(hosts)(spark, sfDir))
 
     }
   }

@@ -26,7 +26,7 @@ import graft.{Bench, Session, SparkEntry}
 object Prof {
 
   /** One job of a record. `site` is the call site of the action that
-    * ran it (`collect at PipelineQueries.scala:1632`): the SQL
+    * ran it (`collect at AnnQueries.scala:434`): the SQL
     * execution's, else the result stage's name (AQE runs a query's
     * stages from its own threads, whose stage names say nothing).
     * Times are epoch ms; `end` is `Long.MaxValue` for a job still

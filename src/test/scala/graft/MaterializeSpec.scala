@@ -252,7 +252,7 @@ class MaterializeSpec extends SparkTestBase {
   }
 
   test("q_sketch_bloom releases its distinct-key cache") {
-    val bloom = graft.queries.SketchQueries.queries("q_sketch_bloom")
+    val bloom = graft.SparkEntry.queries("q_sketch_bloom")
     // the key reads a table, so the poison is a second part file whose
     // l_orderkey is a string: the scan of one of the two files fails
     Materialize.withTempDir("materialize_bloom") { dir =>

@@ -96,7 +96,7 @@ class OperatorsSpec extends SparkTestBase {
     val q = emb.filter(col("vec_id") === 0)
     val bf = Similarity.bruteForceTopK(emb, q, k = 2).collect()
     assert(bf.map(_.getAs[Long]("neighbor_id")).toSeq == Seq(1L, 2L))
-    val lsh = Similarity.lshTopK(emb, q, k = 2, bits = 2)
+    val lsh = Similarity.lshTopK(emb, q, k = 2, bits = 2, dim = 16)
     // same-bucket candidates only; top hit must still rank first when present
     val lshIds = lsh.collect().map(_.getAs[Long]("neighbor_id")).toSeq
     assert(lshIds.isEmpty || lshIds.head == 1L || lshIds.head == 2L)

@@ -284,6 +284,22 @@ class PlanShapeSpec extends SparkTestBase {
     assert(n == 0, s"building the plan ran $n jobs")
   }
 
+  test("building the LSH top-k and LSH near-dup frames runs no job") {
+    val n = jobsLaunchedBy {
+      Similarity.lshTopK(vecCorpus, vecBatch, k = 3, bits = 2, dim = 8)
+        .queryExecution.executedPlan
+      Dedup.embeddingNearDupLsh(vecCorpus, vecBatch, threshold = 0.5, dim = 8)
+        .queryExecution.executedPlan
+    }
+    assert(n == 0, s"building the LSH frames ran $n jobs")
+  }
+
+  test("the LSH frames require a positive dim") {
+    intercept[IllegalArgumentException](Similarity.lshTopK(vecCorpus, vecBatch, k = 3, dim = 0))
+    intercept[IllegalArgumentException](
+      Dedup.embeddingNearDupLsh(vecCorpus, vecBatch, threshold = 0.5, dim = 0))
+  }
+
   test("building the semantic admission plan runs only the sidecar collects") {
     semDir // the index is built before the counted block
     // one collect each of dir/cells_coarse and dir/cells_fine; the

@@ -56,7 +56,8 @@ class SimilarityIvfSpec extends SparkTestBase {
     import spark.implicits._
     val emb = clustered(6, 40, 16, seed = 31)
     val queries = emb.filter(col("vec_id") % 37 === 0)
-    val ann = Similarity.lshTopK(emb, queries, k = 5, bits = 4, numTables = 8)
+    val ann = Similarity.lshTopK(emb, queries, k = 5, bits = 4, numTables = 8,
+      dim = 16)
     val exact = Similarity.bruteForceTopK(emb, queries, k = 5)
     val r = Similarity.meanRecall(ann, exact).head()
     assert(r.getDouble(1) >= 0.6, s"lsh recall ${r.getDouble(1)} < 0.6")

@@ -1,7 +1,8 @@
 package graft.tools
 
 import java.io.PrintWriter
-import java.util.regex.{Matcher, Pattern}
+
+import scala.util.matching.Regex
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
@@ -27,17 +28,11 @@ object Plans {
     * suffix and identity hash. */
   def normalize(plan: String, tmpDir: String): String = {
     def renumber(text: String, pattern: String): String = {
-      val ids = scala.collection.mutable.LinkedHashMap[String, Int]()
-      val m = Pattern.compile(pattern).matcher(text)
-      val sb = new StringBuffer
-      while (m.find()) {
-        val id = ids.getOrElseUpdate(m.group(2), ids.size + 1)
-        m.appendReplacement(sb, Matcher.quoteReplacement(m.group(1) + id))
-      }
-      m.appendTail(sb)
-      sb.toString
+      val ids = scala.collection.mutable.Map[String, Int]()
+      pattern.r.replaceAllIn(text, m =>
+        Regex.quoteReplacement(m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
     }
-    val scratch = Pattern.quote(tmpDir.stripSuffix("/")) + "/[A-Za-z_]+-?[0-9]+"
+    val scratch = Regex.quote(tmpDir.stripSuffix("/")) + "/[A-Za-z_]+-?[0-9]+"
     val stable = plan.replaceAll(scratch, "<scratch>")
       .replaceAll("\\$\\$Lambda\\$[0-9]+/0x[0-9a-f]+@[0-9a-f]+", "\\$\\$Lambda")
     Seq("(#)([0-9]+)", "(plan_id=)([0-9]+)", "(RDD\\[)([0-9]+)").foldLeft(stable)(renumber)

@@ -22,6 +22,9 @@ object Materialize {
 
   /** What holds blocks: a Dataset or an RDD (converted implicitly). */
   sealed trait Blocks {
+    /** Already cached — by a caller's pin, an outer scope, or an equal
+      * plan, since Spark keys a Dataset cache by its plan. */
+    private[Materialize] def cached: Boolean
     private[Materialize] def persist(): Unit
     private[Materialize] def fill(): Unit
     private[Materialize] def unpersist(): Unit
@@ -31,6 +34,7 @@ object Materialize {
 
   object Blocks {
     implicit def ofDataset(d: Dataset[_]): Blocks = new Blocks {
+      def cached: Boolean = d.storageLevel != StorageLevel.NONE
       def persist(): Unit = d.persist(Level)
       def fill(): Unit = d.count()
       def unpersist(): Unit = d.unpersist(blocking = false)
@@ -39,6 +43,7 @@ object Materialize {
         else rddLeaf(d.queryExecution.analyzed).foreach(_.unpersist(blocking = false))
     }
     implicit def ofRdd(r: RDD[_]): Blocks = new Blocks {
+      def cached: Boolean = r.getStorageLevel != StorageLevel.NONE
       def persist(): Unit = r.persist(Level)
       def fill(): Unit = r.count()
       def unpersist(): Unit = r.unpersist(blocking = false)
@@ -53,13 +58,15 @@ object Materialize {
     case _ => None
   }
 
-  /** Runs `use` with `xs` cached and drops the caches when it returns or
-    * throws. Runs no job: the first job that reads a cache fills it, so
-    * a caller whose first reads run concurrently fills it with an
-    * explicit `count()` inside `use`. */
+  /** Runs `use` with `xs` cached and drops the caches it made when it
+    * returns or throws; an input already cached (an outer scope's, a
+    * pin's) is used as is and left cached. Runs no job: the first job
+    * that reads a cache fills it, so a caller whose first reads run
+    * concurrently fills it with an explicit `count()` inside `use`. */
   def withCached[A](xs: Blocks*)(use: => A): A = {
-    xs.foreach(_.persist())
-    try use finally xs.foreach(_.unpersist())
+    val made = xs.filterNot(_.cached)
+    made.foreach(_.persist())
+    try use finally made.foreach(_.unpersist())
   }
 
   /** Caches `x` and fills it; the caller owns it and frees it with

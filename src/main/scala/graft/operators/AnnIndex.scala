@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Materialize
 import graft.functions.VectorOps
-import graft.sources.CorpusSink
 
 /** Stored-ANN-index LIFECYCLE — the maintenance half the serving
   * paths ([[Similarity.ivfqRerank]], [[Similarity.graphTopKFromIndex]])
@@ -39,7 +38,8 @@ import graft.sources.CorpusSink
   *    array_position so a loaded sidecar is drop-in for the fit.
   *  - `dir/manifest`: 1-row (n_built, n_appended, n_deleted) drift
   *    ledger feeding [[needsRefit]]; `dir/deletes`: the tombstone
-  *    sidecar ([[deleteVectors]]).
+  *    sidecar ([[deleteVectors]], kept by [[StoredShards]], which
+  *    owns every stored table's lifecycle and stated schema).
   *  - IVF×int8 `dir/vectors`: (vec_id, qv array<tinyint>, scale,
   *    cid) cid-partitioned, in-file sorted by vec_id (the
   *    `IvfqLayoutSpec` form).
@@ -47,7 +47,7 @@ import graft.sources.CorpusSink
   *    `bucket = pmod(hash(src), nBuckets)`, in-file sorted by src
   *    (the `GraphLayoutSpec` form; serving reads (src, dst) only);
   *    `dir/nodes`: the exact live-membership sidecar (see
-  *    [[writeNodes]]) — deletes probe it, because consolidation can
+  *    [[Nodes]]) — deletes probe it, because consolidation can
   *    erase a live node from `edges` entirely.
   *
   * At 100 TB: an append touches `filesPerShard` new files per
@@ -81,24 +81,14 @@ object AnnIndex {
 
   /** A fresh BUILD writes the flat layout and must not leave a higher
     * version root shadowing it. */
-  private def dropVersionRoots(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p))
-      fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.matches("v_\\d+"))
-        .foreach(s => fs.delete(s.getPath, true))
-  }
+  private def dropVersionRoots(spark: SparkSession, dir: String): Unit =
+    versionRoots(spark, dir).foreach(v => StoredShards.delete(spark, s"$dir/$v"))
 
-  private def currentVersion(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v_\\d+"))
-      .map(_.getPath.getName.stripPrefix("v_").toLong)
-      .foldLeft(0L)(math.max)
-  }
+  private def versionRoots(spark: SparkSession, dir: String): Seq[String] =
+    StoredShards.subdirs(spark, dir).filter(_.matches("v_\\d+"))
+
+  private def currentVersion(spark: SparkSession, dir: String): Long =
+    versionRoots(spark, dir).map(_.stripPrefix("v_").toLong).foldLeft(0L)(math.max)
 
   // ---- centroid sidecar ----
 
@@ -111,36 +101,23 @@ object AnnIndex {
     * at bench granularity that job was a fixed ~0.15 s tax on every
     * lifecycle call. */
   def writeCentroids(spark: SparkSession, centroids: Array[Array[Double]],
-                     dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/centroids")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true) // parquet-vintage dir or stale file
-    val out = new java.io.PrintWriter(
-      new java.io.OutputStreamWriter(fs.create(p, true), "UTF-8"))
-    try centroids.zipWithIndex.foreach { case (c, i) =>
-      out.println(s"${i + 1}\t" + c.iterator
-        .map(d => java.lang.Long.toHexString(
-          java.lang.Double.doubleToRawLongBits(d))).mkString(","))
-    } finally out.close()
-  }
+                     dir: String): Unit =
+    StoredShards.writeLines(spark, s"$dir/centroids",
+      centroids.toSeq.zipWithIndex.map { case (c, i) =>
+        s"${i + 1}\t" + c.iterator.map(d => java.lang.Long.toHexString(
+          java.lang.Double.doubleToRawLongBits(d))).mkString(",")
+      })
 
   /** Load the sidecar back into the in-memory form every serving path
     * takes (array index i ↔ cid i+1). */
-  def readCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"${resolveRoot(spark, dir)}/centroids")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(fs.open(p), "UTF-8"))
-    try Iterator.continually(in.readLine()).takeWhile(_ != null)
+  def readCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
+    StoredShards.readLines(spark, s"${resolveRoot(spark, dir)}/centroids")
       .filter(_.nonEmpty).map { line =>
         val Array(cid, vec) = line.split("\t", 2)
         cid.toInt -> vec.split(",").map(h =>
           java.lang.Double.longBitsToDouble(
             java.lang.Long.parseUnsignedLong(h, 16)))
       }.toArray.sortBy(_._1).map(_._2)
-    finally in.close()
-  }
 
   // ---- drift manifest ----
 
@@ -150,35 +127,22 @@ object AnnIndex {
     * delete adds its batch count (a 1-row read + overwrite, no
     * corpus scan). [[needsRefit]] reads it; [[refitIvfq]] folds the
     * drift back to zero. */
+  // 3 longs: plain driver FS IO, not a Spark job — the ledger is
+  // 1-row by design and every lifecycle op bumps it
   private def writeManifest(spark: SparkSession, dir: String,
                             built: Long, appended: Long,
-                            deleted: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/manifest")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true) // parquet-vintage dir or stale file
-    val out = new java.io.PrintWriter(
-      new java.io.OutputStreamWriter(fs.create(p, true), "UTF-8"))
-    // 3 longs: plain driver FS IO, not a Spark job — the ledger is
-    // 1-row by design and every lifecycle op bumps it
-    try out.println(s"""{"n_built":$built,"n_appended":$appended,"n_deleted":$deleted}""")
-    finally out.close()
-  }
+                            deleted: Long): Unit =
+    StoredShards.writeLines(spark, s"$dir/manifest",
+      Seq(s"""{"n_built":$built,"n_appended":$appended,"n_deleted":$deleted}"""))
+
+  private val Manifest = """\{"n_built":(-?\d+),"n_appended":(-?\d+),"n_deleted":(-?\d+)\}""".r
 
   private def readManifest(spark: SparkSession,
                            dir: String): Option[(Long, Long, Long)] = {
-    val root = resolveRoot(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$root/manifest")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = new java.io.BufferedReader(
-        new java.io.InputStreamReader(fs.open(p), "UTF-8"))
-      val line = try in.readLine() finally in.close()
-      val M = """\{"n_built":(-?\d+),"n_appended":(-?\d+),"n_deleted":(-?\d+)\}""".r
-      line match {
-        case M(b, a, d) => Some((b.toLong, a.toLong, d.toLong))
-        case _ => None
-      }
+    val p = s"${resolveRoot(spark, dir)}/manifest"
+    if (!StoredShards.exists(spark, p)) None
+    else StoredShards.readLines(spark, p).headOption.collect {
+      case Manifest(b, a, d) => (b.toLong, a.toLong, d.toLong)
     }
   }
 
@@ -235,26 +199,26 @@ object AnnIndex {
                 sampleMod: Int = 1, maxIter: Int = 10,
                 filesPerShard: Int = 2): Array[Array[Double]] = {
     val spark = corpus.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val oldVersion = currentVersion(spark, dir)
     val oldRoot = resolveRoot(spark, dir)
     val tmp = s"$dir._refit_tmp"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // crashed-refit leftovers
+    StoredShards.delete(spark, tmp) // crashed-refit leftovers
     val centroids = buildIvfqIndex(corpus, tmp, nlist, seed, initMode,
       sampleMod, maxIter, filesPerShard)
-    val next = new org.apache.hadoop.fs.Path(dir, s"v_${oldVersion + 1}")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), next))
-      throw new java.io.IOException(s"refit commit failed for $next")
+    StoredShards.rename(spark, tmp, s"$dir/v_${oldVersion + 1}")
     // post-commit GC of the superseded version
     if (oldRoot == dir)
-      Seq("vectors", "centroids", "manifest", "deletes").foreach(part =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, part), true))
-    else fs.delete(new org.apache.hadoop.fs.Path(oldRoot), true)
+      Seq(Vectors.path(dir), s"$dir/centroids", s"$dir/manifest",
+        StoredShards.deletes(dir)).foreach(StoredShards.delete(spark, _))
+    else StoredShards.delete(spark, oldRoot)
     centroids
   }
 
   // ---- IVF × int8 stored index ----
+
+  /** `dir/vectors`: cid-partitioned int8 rows, in-file sorted by vec_id. */
+  private val Vectors = StoredShards.Table("vectors",
+    "vec_id BIGINT, qv ARRAY<TINYINT>, scale DOUBLE, cid INT", "cid", "vec_id", "vec_id")
 
   /** The stored row form: int8-quantize, then assign each vector's
     * cell from its QUANTIZED form (the `IvfqLayoutSpec` rule, and the
@@ -281,8 +245,7 @@ object AnnIndex {
     val centroids = Similarity.kmeansCentroids(corpus, nlist, seed,
       maxIter = maxIter, initMode = initMode, sampleMod = sampleMod)
     writeCentroids(corpus.sparkSession, centroids, dir)
-    CorpusSink.writeParquet(ivfqRows(corpus, centroids), s"$dir/vectors",
-      shardCol = "cid", sortCol = "vec_id", filesPerShard = filesPerShard)
+    Vectors.write(ivfqRows(corpus, centroids), dir, filesPerShard)
     writeManifest(corpus.sparkSession, dir, corpus.count(), 0L, 0L)
     centroids
   }
@@ -298,10 +261,8 @@ object AnnIndex {
     // the manifest's appended count rides the write job as an
     // observed metric — no second pass over the batch just to count
     val obs = org.apache.spark.sql.Observation()
-    CorpusSink.appendShards(
-      ivfqRows(batch, centroids).observe(obs, count(lit(1)).as("n")),
-      s"$root/vectors",
-      shardCol = "cid", sortCol = "vec_id", filesPerShard = filesPerShard)
+    Vectors.append(ivfqRows(batch, centroids).observe(obs, count(lit(1)).as("n")),
+      root, filesPerShard)
     bumpManifest(batch.sparkSession, root,
       appended = obs.get("n").asInstanceOf[Long], deleted = 0L)
   }
@@ -312,7 +273,7 @@ object AnnIndex {
     * files; this rewrites ONLY the cells whose file count exceeds
     * `maxFilesPerCell` (driver-side dir listing, no rows read),
     * staged to a sibling temp dir and swapped per-directory
-    * ([[CorpusSink.swapShards]]), leaving every below-threshold
+    * ([[StoredShards.compact]]), leaving every below-threshold
     * cell's files byte-identical. Rows are content-identical before
     * and after (same (vec_id, qv, scale, cid) rows, re-sorted by
     * vec_id in ≤`filesPerShard` files), so served results cannot
@@ -321,28 +282,15 @@ object AnnIndex {
     * counts never grow. Returns the compacted cids. */
   def compactIvfq(spark: SparkSession, dir: String,
                   filesPerShard: Int = 2,
-                  maxFilesPerCell: Int = 8): Seq[Int] = {
-    val root = resolveRoot(spark, dir)
-    val over = CorpusSink
-      .oversizedShards(spark, s"$root/vectors", "cid", maxFilesPerCell)
-      .map(_.toInt)
-    if (over.nonEmpty) {
-      val rows = spark.read.parquet(s"$root/vectors")
-        .filter(col("cid").isin(over: _*))
-        .select(col("vec_id"), col("qv"), col("scale"),
-          col("cid").cast("int").as("cid"))
-      CorpusSink.swapShards(rows, s"$root/vectors",
-        over.map(c => s"cid=$c"), shardCol = "cid", sortCol = "vec_id",
-        filesPerShard = filesPerShard)
-    }
-    over
-  }
+                  maxFilesPerCell: Int = 8): Seq[Int] =
+    StoredShards.compact(spark, Vectors, resolveRoot(spark, dir), filesPerShard,
+      maxFilesPerCell)
 
   /** Serve IVF×int8 top-k entirely from the stored index: int8 stage
     * 1 scans `dir/vectors` (pre-assigned cid → directory-pruned),
     * centroids come from the sidecar, and only the bounded re-rank
     * candidates touch `exactCorpus`'s float vectors. Tombstoned rows
-    * ([[deleteIvfq]]) are masked by a broadcast anti-join BEFORE
+    * ([[deleteVectors]]) are masked by an anti-join BEFORE
     * stage 1, so a deleted vector can neither be returned nor
     * displace a live candidate — served results are IDENTICAL to a
     * rebuild over the surviving corpus under the same centroids
@@ -355,8 +303,7 @@ object AnnIndex {
     // refit commits mid-call
     val root = resolveRoot(spark, dir)
     val centroids = readCentroids(spark, root)
-    val stored = antiJoinDeletes(
-      spark.read.parquet(s"$root/vectors"), root, "vec_id")
+    val stored = StoredShards.mask(Vectors.read(spark, root), root, "vec_id")
     val exact = exactCorpus.select(col("vec_id"),
         VectorOps.asDoubleArray(col("embedding")).as("cv"))
       .withColumn("cn", VectorOps.l2Norm(col("cv")))
@@ -365,15 +312,12 @@ object AnnIndex {
 
   // ---- tombstone deletes ----
 
-  /** The tombstone sidecar shared by both stored-index families:
-    * `dir/deletes` holds one `vec_id` row per deleted vector, each
-    * delete batch appended as its own small file — no index file is
-    * rewritten (one column-pruned id-membership scan verifies the
-    * batch against the stored rows). Serving masks tombstones with
-    * a broadcast anti-join; [[purgeIvfqDeletes]] folds them into a
-    * physical rewrite of only the cells that hold deleted rows.
-    * Family-agnostic: the same sidecar masks an IVF×int8 index's
-    * stored rows and a graph index's served results.
+  /** TOMBSTONE DELETE, shared by both stored-index families:
+    * `dir/deletes` gains one small file of `vec_id` rows per batch
+    * ([[StoredShards.tombstone]]) and no index file is rewritten.
+    * Serving masks tombstones with an anti-join;
+    * [[purgeIvfqDeletes]] / [[purgeGraphDeletes]] fold them into a
+    * physical rewrite of only the shards that hold deleted rows.
     *
     * Membership exactness (a nonexistent id, or a replay of a batch
     * whose tombstones a purge has since drained, must not bump
@@ -387,90 +331,16 @@ object AnnIndex {
     * it would keep serving a vector the caller revoked), at the cost
     * of possible drift over-count on a replay-after-purge.
     *
-    * Batches up to `bulkThreshold` take the isin-pushed driver probe
-    * (revocation traffic — bounded by design, same shape as
-    * Retrieval.deleteIndex); larger batches (bulk erasure, GDPR-style
-    * sweeps) switch to a distributed semi-join with an on-disk
-    * staging localization, so no id list ever rides the driver or
-    * the plan as a literal. */
-  def deleteVectors(ids: DataFrame, dir: String,
-                    bulkThreshold: Int = 10000): Unit = {
+    * Revocation-sized batches take a driver-localized probe; bulk
+    * erasures past [[StoredShards.BulkThreshold]] ids a distributed
+    * semi-join staged on disk, so no id list ever rides the driver. */
+  def deleteVectors(ids: DataFrame, dir: String): Unit = {
     val spark = ids.sparkSession
     val root = resolveRoot(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def part(name: String): Option[String] = {
-      val p = new org.apache.hadoop.fs.Path(s"$root/$name")
-      if (fs.exists(p)) Some(s"$root/$name") else None
-    }
-    val batch = ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
-    // limit probe instead of count-then-collect: one job decides the
-    // path AND (on the small path) yields the full distinct id set,
-    // driver-bounded at bulkThreshold+1 rows by construction
-    val probe = batch.limit(bulkThreshold + 1).collect().map(_.getLong(0))
-    if (probe.isEmpty) return
-    val membership: Option[DataFrame] =
-      part("vectors").map(p => spark.read.parquet(p).select(col("vec_id")))
-        .orElse(part("nodes").map(p => spark.read.parquet(p).select(col("vec_id"))))
-    if (probe.length <= bulkThreshold) {
-      // small path: the fresh set is LOCALIZED on the driver before
-      // the append — the lazy plan reads the very file the write
-      // extends, so a recompute-after-write would see its own output
-      import spark.implicits._
-      val wanted = deletesPath(spark, root) match {
-        case None => probe // no tombstones yet: nothing to anti-join
-        case Some(_) =>
-          antiJoinDeletes(probe.toSeq.toDF("vec_id"), root, "vec_id")
-            .collect().map(_.getLong(0))
-      }
-      val fresh: Array[Long] =
-        if (wanted.isEmpty) Array.empty
-        else membership match {
-          case Some(m) =>
-            val lits = wanted.toSeq.map(Long.box)
-            m.filter(col("vec_id").isin(lits: _*))
-              .distinct().collect().map(_.getLong(0))
-          case None =>
-            // legacy graph (edges, no nodes) or pre-build: tombstone
-            // the whole fresh batch — see the membership note above
-            wanted
-        }
-      if (fresh.nonEmpty) {
-        import spark.implicits._
-        fresh.toSeq.toDF("vec_id")
-          .coalesce(1).write.mode("append").parquet(s"$root/deletes")
-        bumpManifest(spark, root, appended = 0L, deleted = fresh.length.toLong)
-      }
-    } else {
-      // bulk path: anti-join away existing tombstones, semi-join the
-      // membership source (a hash semi-join on vec_id — both sides
-      // arbitrarily large), and localize ON DISK via a staging dir
-      // instead of the driver, then fold the staged files into the
-      // sidecar. Crash between stage and append leaves only an
-      // overwritten-next-time staging dir.
-      val wanted = antiJoinDeletes(batch, root, "vec_id")
-      val fresh = membership match {
-        case Some(m) => wanted.join(m, Seq("vec_id"), "left_semi")
-        case None    => wanted
-      }
-      val stage = s"$root/_delete_stage"
-      fresh.write.mode("overwrite").parquet(stage)
-      val staged = spark.read.parquet(stage)
-      val nFresh = staged.count()
-      if (nFresh > 0) {
-        staged.write.mode("append").parquet(s"$root/deletes")
-        bumpManifest(spark, root, appended = 0L, deleted = nFresh)
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    }
-  }
-
-  private def deletesPath(spark: SparkSession,
-                          dir: String): Option[String] = {
-    val root = resolveRoot(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$root/deletes")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(s"$root/deletes") else None
+    val members = Seq(Vectors, Nodes).find(t => StoredShards.exists(spark, t.path(root)))
+      .map(_.read(spark, root).select(col("vec_id"), lit(0L)))
+    val (n, _) = StoredShards.tombstone(ids, root, "vec_id", members)
+    if (n > 0) bumpManifest(spark, root, appended = 0L, deleted = n)
   }
 
   /** Whether the index currently carries any tombstones — the 1-RPC
@@ -478,7 +348,7 @@ object AnnIndex {
     * corpus needs masking ([[liveRows]]) and a row store needs a
     * physical fold before its tombstone ledger is dropped. */
   def hasDeletes(spark: SparkSession, dir: String): Boolean =
-    deletesPath(spark, dir).isDefined
+    StoredShards.hasDeletes(spark, resolveRoot(spark, dir))
 
   /** PUBLIC tombstone mask: `rows` minus the index's current
     * tombstones — what a refit must be fed so deleted vectors cannot
@@ -487,84 +357,18 @@ object AnnIndex {
     * refit's input IS the post-refit truth). */
   def liveRows(rows: DataFrame, dir: String,
                idCol: String = "vec_id"): DataFrame =
-    antiJoinDeletes(rows, dir, idCol)
+    StoredShards.mask(rows, resolveRoot(rows.sparkSession, dir), "vec_id", idCol)
 
-  /** LEFT ANTI mask against the tombstone sidecar (no-op when no
-    * delete has ever run). Revocation-sized tombstone sets broadcast
-    * (the hint sits between the scan and the cell-probe join,
-    * leaving cid partition pruning intact); a sidecar grown past
-    * `BroadcastDeletesBytes` by bulk erasures drops the hint and
-    * hash-anti-joins instead — the file-size poll is one driver RPC,
-    * and forcing a multi-GB broadcast would be the same 100 TB trap
-    * the bulk path's isin guard removed. */
-  private val BroadcastDeletesBytes = 32L << 20
-
-  /** A tombstone-derived join side, broadcast-hinted only while the
-    * sidecar's on-disk footprint is within `BroadcastDeletesBytes` —
-    * the same size poll [[antiJoinDeletes]] applies, shared with the
-    * PURGE paths so a bulk (GDPR-scale) delete set never rides the
-    * plan as a forced multi-GB broadcast; past the threshold the
-    * joins run as plain hash semi-/anti-joins. */
-  private def hintBySize(spark: SparkSession, sidecar: String,
-                         df: DataFrame): DataFrame = {
-    val hp = new org.apache.hadoop.fs.Path(sidecar)
-    val small = hp.getFileSystem(spark.sessionState.newHadoopConf())
-      .getContentSummary(hp).getLength <= BroadcastDeletesBytes
-    if (small) broadcast(df) else df
-  }
-
-  private[operators] def antiJoinDeletes(rows: DataFrame, dir: String,
-                                         idCol: String): DataFrame =
-    deletesPath(rows.sparkSession, dir) match {
-      case Some(p) =>
-        val dels = rows.sparkSession.read.parquet(p)
-          .select(col("vec_id").as(idCol)).distinct()
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val small = hp.getFileSystem(
-            rows.sparkSession.sessionState.newHadoopConf())
-          .getContentSummary(hp).getLength <= BroadcastDeletesBytes
-        rows.join(if (small) broadcast(dels) else dels, Seq(idCol),
-          "left_anti")
-      case None => rows
-    }
-
-  /** PHYSICAL PURGE of [[deleteIvfq]] tombstones — the delete half of
-    * the compaction valve. A column-pruned (vec_id, cid) scan finds
-    * the cells that hold tombstoned rows (cid is a partition value,
-    * so the scan reads one long column); ONLY those cells are
-    * rewritten minus the deleted rows ([[CorpusSink.swapShards]] —
-    * below-threshold untouched cells survive byte-identical), and the
-    * drained tombstone file is dropped last, so a crash between the
-    * two steps leaves a correct (still-masked) index. Served results
-    * cannot change: the anti-join was already hiding exactly these
-    * rows. Returns the purged cids. */
+  /** PHYSICAL PURGE of [[deleteVectors]] tombstones — the delete half
+    * of the compaction valve ([[StoredShards.purge]]): only the cells
+    * holding tombstoned rows are rewritten minus those rows (a cell
+    * left empty is removed), and the drained tombstone file is dropped
+    * last. Returns the purged cids. */
   def purgeIvfqDeletes(spark: SparkSession, dir: String,
                        filesPerShard: Int = 2): Seq[Int] = {
     val root = resolveRoot(spark, dir)
-    deletesPath(spark, root) match {
-      case None => Seq.empty
-      case Some(p) =>
-        val dels = hintBySize(spark, p,
-          spark.read.parquet(p).select(col("vec_id")).distinct())
-        val stored = spark.read.parquet(s"$root/vectors")
-        val touched = stored.join(dels, Seq("vec_id"))
-          .select(col("cid").cast("int")).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        if (touched.nonEmpty) {
-          val kept = stored.filter(col("cid").isin(touched: _*))
-            .join(dels, Seq("vec_id"), "left_anti")
-            .select(col("vec_id"), col("qv"), col("scale"),
-              col("cid").cast("int").as("cid"))
-          CorpusSink.swapShards(kept, s"$root/vectors",
-            touched.map(c => s"cid=$c"), shardCol = "cid",
-            sortCol = "vec_id", filesPerShard = filesPerShard,
-            dropDrained = true) // a fully-deleted cell's dir is removed
-        }
-        val delP = new org.apache.hadoop.fs.Path(p)
-        delP.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(delP, true)
-        touched
-    }
+    StoredShards.purge(spark, root, "vec_id")(
+      StoredShards.purgeShards(Vectors, root, _, filesPerShard))
   }
 
   /** UPSERT into the stored IVF×int8 index — replace-or-insert each
@@ -583,8 +387,9 @@ object AnnIndex {
     * cells that held replaced rows; batch vec_ids must be unique.
     * Returns the physically rewritten cids (empty = pure insert).
     *
-    * Execution: batches small enough to localize (≤ `bulkThreshold`
-    * ids, the [[deleteVectors]] small-path discipline) run FUSED —
+    * Execution: batches small enough to localize (≤
+    * [[StoredShards.BulkThreshold]] ids, the [[deleteVectors]]
+    * small-path discipline) run FUSED —
     * one id-pushed probe of the stored rows, then ONE staged swap
     * that writes (touched-cell survivors ∪ quantized batch) and
     * drains any live tombstones in the same pass. End state, the
@@ -597,20 +402,18 @@ object AnnIndex {
     * take the composed path unchanged: no id list ever rides the
     * driver. */
   def upsertIvfq(batch: DataFrame, dir: String,
-                 filesPerShard: Int = 2,
-                 bulkThreshold: Int = 10000): Seq[Int] = {
+                 filesPerShard: Int = 2): Seq[Int] = {
     val spark = batch.sparkSession
     val root = resolveRoot(spark, dir)
+    val bulk = StoredShards.BulkThreshold
     val ids = batch.select(col("vec_id").cast("long").as("vec_id"))
-      .distinct().limit(bulkThreshold + 1).collect().map(_.getLong(0))
+      .distinct().limit(bulk + 1).collect().map(_.getLong(0))
     val tombs: Array[Long] =
-      if (ids.length > bulkThreshold) Array(0L) // forced fallback below
-      else deletesPath(spark, root) match {
-        case Some(p) => spark.read.parquet(p).select(col("vec_id"))
-          .distinct().limit(bulkThreshold + 1).collect().map(_.getLong(0))
-        case None => Array.empty
-      }
-    if (ids.length > bulkThreshold || tombs.length > bulkThreshold) {
+      if (ids.length > bulk) Array(0L) // forced fallback below
+      else if (!StoredShards.hasDeletes(spark, root)) Array.empty
+      else StoredShards.tombstones(spark, root, "vec_id")("vec_id")
+        .limit(bulk + 1).collect().map(_.getLong(0))
+    if (ids.length > bulk || tombs.length > bulk) {
       deleteVectors(batch.select(col("vec_id")), dir)
       val purged = purgeIvfqDeletes(spark, dir, filesPerShard)
       appendIvfq(batch, dir, filesPerShard)
@@ -623,33 +426,23 @@ object AnnIndex {
     val idSet = ids.toSet
     val tombSet = tombs.toSet
     val deadLits = (ids ++ tombs).distinct.toSeq.map(Long.box)
-    val stored = spark.read.parquet(s"$root/vectors")
+    val stored = Vectors.read(spark, root)
     // one pushed probe: which cells hold a dead row, and which batch
     // ids are live members (the manifest's deleted counter — batch
     // ids under an existing tombstone were already counted by the
     // delete that wrote it)
     val deadRows = stored.filter(col("vec_id").isin(deadLits: _*))
-      .select(col("vec_id"), col("cid").cast("int").as("cid")).collect()
+      .select(col("vec_id"), col("cid")).collect()
     val touched = deadRows.map(_.getInt(1)).distinct.sorted
     val nReplaced = deadRows.iterator.map(_.getLong(0))
       .filter(id => idSet(id) && !tombSet(id)).toSet.size.toLong
     val allCells = (touched ++ bCids).distinct.sorted
     val kept = stored.filter(col("cid").isin(allCells.map(Int.box): _*))
       .filter(!col("vec_id").isin(deadLits: _*))
-      .select(col("vec_id"), col("qv"), col("scale"),
-        col("cid").cast("int").as("cid"))
     val obs = org.apache.spark.sql.Observation()
-    CorpusSink.swapShards(
-      kept.unionByName(batchRows
-        .observe(obs, count(lit(1)).as("n"))),
-      s"$root/vectors", allCells.map(c => s"cid=$c").toSeq,
-      shardCol = "cid", sortCol = "vec_id",
-      filesPerShard = filesPerShard, dropDrained = true)
-    deletesPath(spark, root).foreach { p =>
-      val delP = new org.apache.hadoop.fs.Path(p)
-      delP.getFileSystem(spark.sessionState.newHadoopConf())
-        .delete(delP, true)
-    }
+    Vectors.swap(kept.unionByName(batchRows.observe(obs, count(lit(1)).as("n"))),
+      root, allCells.toSeq, filesPerShard, dropDrained = true)
+    StoredShards.delete(spark, StoredShards.deletes(root))
     bumpManifest(spark, root, appended = obs.get("n").asInstanceOf[Long],
       deleted = nReplaced)
     touched.toSeq
@@ -657,54 +450,31 @@ object AnnIndex {
 
   // ---- graph stored index ----
 
-  /** The graph family's exact LIVE-NODE membership sidecar,
-    * `dir/nodes`: one `vec_id` row per live node, bucketed by
-    * `nbucket = pmod(hash(vec_id), nBuckets)` and in-file sorted —
-    * the same bounded layout as `edges`, so every maintenance touch
-    * is per-bucket, never O(corpus). The edge table CANNOT serve as
-    * a membership source: [[purgeGraphDeletes]] consolidation can
-    * leave a still-servable node (it seeds from the corpus at serve
-    * time) with no edge at all, and a delete of such a node must
-    * still tombstone it. Build resets the sidecar; [[appendGraph]]
-    * appends the batch's ids as new bucket files;
-    * [[purgeGraphDeletes]] rewrites only the buckets that held a
-    * deleted id ([[CorpusSink.swapShards]], drained buckets
-    * dropped). */
-  private def writeNodes(ids: DataFrame, dir: String, nBuckets: Int,
-                         append: Boolean): Unit = {
-    val rows = ids.select(col("vec_id"))
-      .withColumn("nbucket", pmod(hash(col("vec_id")), lit(nBuckets)))
-    if (append)
-      CorpusSink.appendShards(rows, s"$dir/nodes", shardCol = "nbucket",
-        sortCol = "vec_id", filesPerShard = 1)
-    else
-      CorpusSink.writeParquet(rows, s"$dir/nodes", shardCol = "nbucket",
-        sortCol = "vec_id", filesPerShard = 1)
-  }
+  /** `dir/edges`: (src, dst, score) partitioned by
+    * `bucket = pmod(hash(src), nBuckets)`, in-file sorted by src; a
+    * tombstone on either end kills an edge. */
+  private val Edges = StoredShards.Table("edges",
+    "src BIGINT, dst BIGINT, score DOUBLE, bucket INT", "bucket", "src", "src", "dst")
 
-  /** Drop tombstoned ids from the `nodes` sidecar — only the buckets
-    * holding a deleted id are rewritten; a bucket whose every node
-    * died is removed. */
-  private def purgeNodes(spark: SparkSession, root: String,
-                         dels: DataFrame): Unit = {
-    // `dels` arrives broadcast-hinted or not per the caller's
-    // sidecar-size poll (hintBySize) — no unconditional broadcast here
-    val p = new org.apache.hadoop.fs.Path(s"$root/nodes")
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-      return // legacy index without the sidecar
-    val nodes = spark.read.parquet(s"$root/nodes")
-    val touched = nodes.join(dels, Seq("vec_id"), "left_semi")
-      .select(col("nbucket").cast("int")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.nonEmpty) {
-      val kept = nodes.filter(col("nbucket").isin(touched: _*))
-        .join(dels, Seq("vec_id"), "left_anti")
-        .select(col("vec_id"), col("nbucket").cast("int").as("nbucket"))
-      CorpusSink.swapShards(kept, s"$root/nodes",
-        touched.map(b => s"nbucket=$b"), shardCol = "nbucket",
-        sortCol = "vec_id", filesPerShard = 1, dropDrained = true)
-    }
-  }
+  /** The graph family's exact LIVE-NODE membership sidecar,
+    * `dir/nodes` ([[StoredShards.members]]), bucketed like `edges` so
+    * every maintenance touch is per-bucket, never O(corpus). The edge
+    * table CANNOT serve as a membership source: [[purgeGraphDeletes]]
+    * consolidation can leave a still-servable node (it seeds from the
+    * corpus at serve time) with no edge at all, and a delete of such
+    * a node must still tombstone it. Build resets the sidecar;
+    * [[appendGraph]] appends the batch's ids; [[purgeGraphDeletes]]
+    * rewrites only the buckets that held a deleted id. */
+  private val Nodes = StoredShards.members("nodes", "vec_id")
+
+  /** Per-src top-g over candidate edges; max(score) per (src, dst)
+    * keeps the merge deterministic when an edge arrives twice. */
+  private def rerank(g: Int)(edges: DataFrame): DataFrame =
+    edges.groupBy(col("bucket"), col("src"), col("dst"))
+      .agg(max(col("score")).as("score"))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("src")).orderBy(desc("score"), col("dst"))))
+      .filter(col("rank") <= g)
 
   /** Fit + k-NN-graph build + store: `dir/edges` (src-hash-bucketed)
     * + `dir/nodes` (exact live-membership sidecar) + `dir/centroids`
@@ -725,11 +495,10 @@ object AnnIndex {
     Similarity.withGraph(corpus, centroids, n, spillCells, g, refineRounds,
         randPerVec, seed) { (_, edges) =>
       try {
-        CorpusSink.writeParquet(
-          edges.withColumn("bucket", pmod(hash(col("src")), lit(nBuckets))),
-          s"$dir/edges", shardCol = "bucket", sortCol = "src",
-          filesPerShard = filesPerShard)
-        writeNodes(corpus.select(col("vec_id")), dir, nBuckets, append = false)
+        Edges.write(edges.withColumn("bucket", pmod(hash(col("src")), lit(nBuckets))),
+          dir, filesPerShard)
+        StoredShards.writeMembers(Nodes, corpus.select(col("vec_id")), dir, nBuckets,
+          append = false)
         writeManifest(corpus.sparkSession, dir, n, 0L, 0L)
         centroids
       } finally Materialize.release(edges)
@@ -751,11 +520,9 @@ object AnnIndex {
                         seedProbe: Int = 2): DataFrame = {
     val root = resolveRoot(spark, dir)
     val centroids = readCentroids(spark, root)
-    val edges = antiJoinDeletes(antiJoinDeletes(
-        spark.read.parquet(s"$root/edges").select(col("src"), col("dst")),
-        root, "src").withColumnRenamed("dst", "vec_id"), root, "vec_id")
-      .withColumnRenamed("vec_id", "dst")
-    val live = antiJoinDeletes(corpus, root, "vec_id")
+    val edges = StoredShards.mask(Edges.read(spark, root).select(col("src"), col("dst")),
+      root, "vec_id", "src", "dst")
+    val live = StoredShards.mask(corpus, root, "vec_id")
     Similarity.graphTopKFromIndex(edges, live, queries, k, centroids,
       beam, hops, seedProbe)
   }
@@ -775,76 +542,37 @@ object AnnIndex {
                         g: Int = 8, nBuckets: Int = 16,
                         filesPerShard: Int = 2): Seq[Int] = {
     val root = resolveRoot(spark, dir)
-    deletesPath(spark, root) match {
-      case None => Seq.empty
-      case Some(p) =>
-        val dels = hintBySize(spark, p,
-          spark.read.parquet(p).select(col("vec_id")).distinct())
-        val stored = spark.read.parquet(s"$root/edges")
-        val delKeys = dels.withColumnRenamed("vec_id", "__del")
-        // stitch: in-neighbors of a deleted node adopt its out-edges
-        val into = stored
-          .join(delKeys, col("dst") === col("__del"))
-          .select(col("src"), col("dst").as("mid"))
-          .join(delKeys, col("src") === col("__del"), "left_anti")
-        val outof = stored
-          .join(delKeys, col("src") === col("__del"))
-          .select(col("src").as("mid"), col("dst"))
-          .join(delKeys, col("dst") === col("__del"), "left_anti")
-        val v = corpus.select(col("vec_id"),
-            VectorOps.asDoubleArray(col("embedding")).as("cv"))
-          .withColumn("cn", VectorOps.l2Norm(col("cv")))
-        val stitched = into.join(outof, Seq("mid"))
-          .filter(col("src") =!= col("dst"))
-          .select(col("src"), col("dst")).distinct()
-          .join(v.select(col("vec_id").as("src"), col("cv").as("sv"),
-            col("cn").as("sn")), Seq("src"))
-          .join(v.select(col("vec_id").as("dst"), col("cv").as("dv"),
-            col("cn").as("dn")), Seq("dst"))
-          .select(col("src"), col("dst"),
-            when(col("sn") * col("dn") > 0,
-              VectorOps.dotArr(col("sv"), col("dv")) / (col("sn") * col("dn")))
-              .otherwise(lit(-1.0)).as("score"))
-          .withColumn("bucket", pmod(hash(col("src")), lit(nBuckets)))
-        // touched buckets: any edge touching a tombstone, plus every
-        // stitched edge's src bucket. Two broadcast HASH semi-joins,
-        // not one OR-condition join — an OR predicate can't hash and
-        // would run as a broadcast nested loop (n·g × |dels|
-        // comparisons at scale).
-        val touchedDf = stored
-          .join(delKeys, col("src") === col("__del"), "left_semi")
-          .select(col("bucket").cast("int"))
-          .union(stored
-            .join(delKeys, col("dst") === col("__del"), "left_semi")
-            .select(col("bucket").cast("int")))
-          .union(stitched.select(col("bucket").cast("int")))
-          .distinct()
-        val touched = touchedDf.collect().map(_.getInt(0)).toSeq.sorted
-        if (touched.nonEmpty) {
-          val survivors = stored.filter(col("bucket").isin(touched: _*))
-            .join(delKeys, col("src") === col("__del"), "left_anti")
-            .join(delKeys, col("dst") === col("__del"), "left_anti")
-            .select(col("src"), col("dst"), col("score"),
-              col("bucket").cast("int").as("bucket"))
-          val merged = survivors
-            .unionByName(stitched.filter(col("bucket").isin(touched: _*)))
-            .groupBy(col("bucket"), col("src"), col("dst"))
-            .agg(max(col("score")).as("score"))
-            .withColumn("rank", row_number().over(
-              Window.partitionBy(col("src")).orderBy(desc("score"), col("dst"))))
-            .filter(col("rank") <= g)
-            .select(col("src"), col("dst"), col("score"), col("bucket"))
-          CorpusSink.swapShards(merged, s"$root/edges",
-            touched.map(b => s"bucket=$b"), shardCol = "bucket",
-            sortCol = "src", filesPerShard = filesPerShard,
-            dropDrained = true) // a bucket whose every edge died is removed
-        }
-        purgeNodes(spark, root, dels) // membership sidecar loses the ids too
-        val delP = new org.apache.hadoop.fs.Path(p)
-        delP.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(delP, true)
-        touched
-    }
+    StoredShards.purge(spark, root, "vec_id", Nodes)(dels =>
+      StoredShards.purgeShards(Edges, root, dels, filesPerShard,
+        Some(stitch(Edges.read(spark, root), dels, corpus, nBuckets)), rerank(g)))
+  }
+
+  /** The DiskANN stitch: each in-neighbor of a deleted node adopts
+    * its surviving out-neighbors as candidate edges, scored exactly
+    * against `corpus`, in the src's bucket. */
+  private def stitch(stored: DataFrame, dels: StoredShards.Dels, corpus: DataFrame,
+                     nBuckets: Int): DataFrame = {
+    val into = stored.join(dels("dst"), Seq("dst"))
+      .select(col("src"), col("dst").as("mid"))
+      .join(dels("src"), Seq("src"), "left_anti")
+    val outof = stored.join(dels("src"), Seq("src"))
+      .select(col("src").as("mid"), col("dst"))
+      .join(dels("dst"), Seq("dst"), "left_anti")
+    val v = corpus.select(col("vec_id"),
+        VectorOps.asDoubleArray(col("embedding")).as("cv"))
+      .withColumn("cn", VectorOps.l2Norm(col("cv")))
+    into.join(outof, Seq("mid"))
+      .filter(col("src") =!= col("dst"))
+      .select(col("src"), col("dst")).distinct()
+      .join(v.select(col("vec_id").as("src"), col("cv").as("sv"),
+        col("cn").as("sn")), Seq("src"))
+      .join(v.select(col("vec_id").as("dst"), col("cv").as("dv"),
+        col("cn").as("dn")), Seq("dst"))
+      .select(col("src"), col("dst"),
+        when(col("sn") * col("dn") > 0,
+          VectorOps.dotArr(col("sv"), col("dv")) / (col("sn") * col("dn")))
+          .otherwise(lit(-1.0)).as("score"))
+      .withColumn("bucket", pmod(hash(col("src")), lit(nBuckets)))
   }
 
   /** UPSERT into the stored graph index — the [[upsertIvfq]] twin,
@@ -893,7 +621,7 @@ object AnnIndex {
     * centroids semantics (`AnnAppendSpec` gates the served recall
     * against the full-rebuild contract). The corpus rows themselves
     * live outside the index (callers append them with
-    * [[CorpusSink.appendShards]] like any table). */
+    * [[graft.sources.CorpusSink.appendShards]] like any table). */
   def appendGraph(batch: DataFrame, oldCorpus: DataFrame, dir: String,
                   g: Int = 8, beam: Int = 24, hops: Int = 2,
                   seedProbe: Int = 2, nBuckets: Int = 16,
@@ -901,7 +629,7 @@ object AnnIndex {
     val spark = batch.sparkSession
     val root = resolveRoot(spark, dir)
     val centroids = readCentroids(spark, root)
-    val stored = spark.read.parquet(s"$root/edges")
+    val stored = Edges.read(spark, root)
     // 1. insert-as-search: top-g of each batch vector over the stored
     //    graph (eager inside, bounded |batch|·g output)
     val newFwd = Similarity.graphTopKFromIndex(
@@ -920,22 +648,12 @@ object AnnIndex {
     //    deterministic when an added edge already exists.
     val touched = added.select(col("bucket")).distinct()
     val cur = stored.join(broadcast(touched), Seq("bucket"))
-      .select(col("src"), col("dst"), col("score"),
-        col("bucket").cast("int").as("bucket"))
-    val merged = cur.unionByName(added)
-      .groupBy(col("bucket"), col("src"), col("dst"))
-      .agg(max(col("score")).as("score"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("src")).orderBy(desc("score"), col("dst"))))
-      .filter(col("rank") <= g)
-      .select(col("src"), col("dst"), col("score"), col("bucket"))
-    CorpusSink.refreshShards(merged, s"$root/edges", shardCol = "bucket",
-      sortCol = "src", filesPerShard = filesPerShard)
+    Edges.refresh(rerank(g)(cur.unionByName(added)), root, filesPerShard)
     // membership sidecar gains the batch (legacy indexes without one
     // stay legacy — deleteVectors falls back to tombstone-all there)
-    val fsRoot = new org.apache.hadoop.fs.Path(s"$root/nodes")
-    if (fsRoot.getFileSystem(spark.sessionState.newHadoopConf()).exists(fsRoot))
-      writeNodes(batch.select(col("vec_id")), root, nBuckets, append = true)
+    if (StoredShards.exists(spark, Nodes.path(root)))
+      StoredShards.writeMembers(Nodes, batch.select(col("vec_id")), root, nBuckets,
+        append = true)
     bumpManifest(spark, root, appended = batch.count(), deleted = 0L)
   }
 }

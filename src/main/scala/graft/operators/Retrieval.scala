@@ -150,11 +150,45 @@ object Retrieval {
       .limit(k)
   }
 
+  /** `dir/postings`: one row per (term, doc), partitioned by
+    * `term_bucket`, in-file sorted by term (see [[buildIndex]]). */
+  private val Postings = StoredShards.Table("postings",
+    "term STRING, doc_id BIGINT, dl BIGINT, tf BIGINT, df BIGINT, term_bucket INT",
+    "term_bucket", "term", "doc_id")
+
+  /** `dir/emptydocs`: the zero-token documents' membership (see
+    * [[emptyDocs]]). */
+  private val EmptyDocs = StoredShards.members("emptydocs", "doc_id")
+
+  /** `dir/stats`: the 1-row (n_docs, sum_dl) scalar table. */
+  private val Stats = "n_docs BIGINT, sum_dl BIGINT"
+
+  private def readStats(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(Stats).parquet(s"$dir/stats")
+
+  private def writeStats(spark: SparkSession, dir: String, nDocs: Long,
+                         sumDl: Long): Unit = {
+    import spark.implicits._
+    Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+  }
+
+  /** Adds (n_docs, sum_dl) deltas to the stats — a 1-row read on the
+    * driver and an overwrite, never a read-and-overwrite of the same
+    * path in one plan; an absent table counts as (0, 0). */
+  private def bumpStats(spark: SparkSession, dir: String, nDocs: Long,
+                        sumDl: Long): Unit = {
+    val (oDocs, oSumDl) =
+      if (!StoredShards.exists(spark, s"$dir/stats")) (0L, 0L)
+      else { val r = readStats(spark, dir).head(); (r.getLong(0), r.getLong(1)) }
+    writeStats(spark, dir, oDocs + nDocs, oSumDl + sumDl)
+  }
+
   /** Materialized inverted-index build — the serving layout the
     * 100 TB deployment reads instead of re-deriving stats per query:
     *
-    *  - `dir/postings`: one row per (term, doc) — (term, df, doc_id,
-    *    dl, tf, term_bucket) — PARTITIONED BY `term_bucket =
+    *  - `dir/postings`: one row per (term, doc) — (term, doc_id, dl,
+    *    tf, df, term_bucket) — PARTITIONED BY `term_bucket =
     *    pmod(hash(term), nBuckets)` through
     *    [[graft.sources.CorpusSink.writeParquet]], in-file sorted by
     *    term, so a query prunes every non-queried bucket's files at
@@ -166,7 +200,7 @@ object Retrieval {
     *    the exact value from the scan so appends can't stale it.
     *  - `dir/stats`: the 1-row (n_docs, sum_dl) scalar table.
     *  - `dir/emptydocs`: doc_ids of zero-token documents (usually
-    *    empty — see [[emptyDocs]]; they have no postings but DO count
+    *    absent — see [[emptyDocs]]; they have no postings but DO count
     *    in the stats, and [[deleteIndex]] needs their membership).
     *
     * The text column never enters the index, so no serving scan can
@@ -175,22 +209,15 @@ object Retrieval {
   def buildIndex(docs: DataFrame, dir: String, nBuckets: Int = 16,
                  filesPerShard: Int = 2): Unit = {
     val spark = docs.sparkSession
-    graft.sources.CorpusSink.writeParquet(postings(docs, nBuckets),
-      s"$dir/postings",
-      shardCol = "term_bucket", sortCol = "term", filesPerShard = filesPerShard)
+    Postings.write(postings(docs, nBuckets), dir, filesPerShard)
     val (nDocs, sumDl, nEmpty) = docStats(docs)
-    import spark.implicits._
-    Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+    writeStats(spark, dir, nDocs, sumDl)
     // the empties scan runs only when the stats pass saw a zero-token
     // doc (rare by construction); an index without the sidecar means
-    // "no empty docs" to every consumer ([[deleteIndex]] exists-checks)
+    // "no empty docs" to every consumer
     if (nEmpty > 0)
-      emptyDocs(docs).write.mode("overwrite").parquet(s"$dir/emptydocs")
-    else {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/emptydocs")
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    }
+      StoredShards.writeMembers(EmptyDocs, emptyDocs(docs), dir, nBuckets, append = false)
+    else StoredShards.delete(spark, EmptyDocs.path(dir))
   }
 
   /** One light pass over `docs` for the sidecar scalars: (n_docs,
@@ -210,19 +237,28 @@ object Retrieval {
       r.getAs[Long]("n_empty"))
   }
 
-  /** `dir/emptydocs`: doc_ids of ZERO-TOKEN documents. They are
-    * counted in the stats (n_docs, dl = 0 → they move avgdl, so they
-    * shift every served score) but own no postings row — without
-    * this sidecar, [[deleteIndex]]'s postings-based dl recovery could
-    * never see them, leaving n_docs one high versus a rebuild on the
-    * survivors. Almost always empty (rows only for genuinely token-
-    * free texts); the filter's survivors are repartition(1)-folded so
-    * the corpus scan stays parallel. */
+  /** The doc_ids of ZERO-TOKEN documents. They are counted in the
+    * stats (n_docs, dl = 0 → they move avgdl, so they shift every
+    * served score) but own no postings row — without the `emptydocs`
+    * sidecar, [[deleteIndex]]'s membership probe could never see
+    * them, leaving n_docs one high versus a rebuild on the survivors.
+    * Almost always empty (rows only for genuinely token-free texts). */
   private def emptyDocs(docs: DataFrame): DataFrame =
-    docs.filter(size(TextOps.regexTokens(col("text"))) === 0)
-      .select(col("doc_id")).repartition(1)
+    docs.filter(size(TextOps.regexTokens(col("text"))) === 0).select(col("doc_id"))
 
-  /** The (term, df, doc_id, dl, tf, term_bucket) postings rows for one
+  /** An `emptydocs` sidecar written before it was bucketed holds its
+    * files directly, and its rows read with a null `nbucket`: rewrite
+    * it into one bucket before an append or a purge works on it by
+    * buckets. Zero-token docs are rare, so the ids pass the driver. */
+  private def bucketFlatEmptyDocs(spark: SparkSession, dir: String): Unit =
+    if (StoredShards.flat(spark, EmptyDocs.path(dir))) {
+      import spark.implicits._
+      val ids = EmptyDocs.read(spark, dir).select(col("doc_id")).as[Long].collect()
+      StoredShards.writeMembers(EmptyDocs, ids.toSeq.toDF("doc_id"), dir, nBuckets = 1,
+        append = false)
+    }
+
+  /** The (term, doc_id, dl, tf, df, term_bucket) postings rows for one
     * document set — `df` is SEGMENT-LOCAL (the df among `docs` only).
     * For a one-shot [[buildIndex]] that equals global df; after an
     * [[appendIndex]] the stored column is advisory (query-term
@@ -239,6 +275,14 @@ object Retrieval {
     tf.join(dfTab, Seq("term"))
       .withColumn("term_bucket", pmod(hash(col("term")), lit(nBuckets)))
   }
+
+  /** `df` as the count of each term's rows in hand. A term's postings
+    * live entirely inside one bucket (bucket = hash(term)), so over a
+    * rewritten bucket the recount is bucket-local and restores the
+    * stored column to the exact value; over a query's masked postings
+    * it is the df the serving path scores with. */
+  private def recountDf(rows: DataFrame): DataFrame =
+    rows.drop("df").withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
 
   /** INCREMENTAL MAINTENANCE of the stored index — the lexical
     * counterpart of `AnnIndex.appendIvfq`: ingest a new document
@@ -268,178 +312,67 @@ object Retrieval {
     * call — see `streaming.StreamingIndexAppend`). */
   def appendIndex(newDocs: DataFrame, dir: String, nBuckets: Int = 16,
                   filesPerShard: Int = 2): Unit = {
-    val spark = newDocs.sparkSession
-    graft.sources.CorpusSink.appendShards(postings(newDocs, nBuckets),
-      s"$dir/postings",
-      shardCol = "term_bucket", sortCol = "term", filesPerShard = filesPerShard)
-    // additive stats merge: one light batch fold ([[docStats]]), the
-    // old 1-row side collected, summed on the driver, overwrite —
-    // never a read-and-overwrite of the same path in one plan
-    val statsPath = new org.apache.hadoop.fs.Path(s"$dir/stats")
-    val fs = statsPath.getFileSystem(spark.sessionState.newHadoopConf())
+    Postings.append(postings(newDocs, nBuckets), dir, filesPerShard)
     val (bDocs, bSumDl, bEmpty) = docStats(newDocs)
-    val (oDocs, oSumDl) =
-      if (fs.exists(statsPath)) {
-        val r = spark.read.parquet(s"$dir/stats").head()
-        (r.getAs[Long]("n_docs"), r.getAs[Long]("sum_dl"))
-      } else (0L, 0L)
-    import spark.implicits._
-    Seq((oDocs + bDocs, oSumDl + bSumDl)).toDF("n_docs", "sum_dl")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    if (bEmpty > 0)
-      emptyDocs(newDocs).write.mode("append").parquet(s"$dir/emptydocs")
+    bumpStats(newDocs.sparkSession, dir, bDocs, bSumDl)
+    if (bEmpty > 0) {
+      bucketFlatEmptyDocs(newDocs.sparkSession, dir)
+      StoredShards.writeMembers(EmptyDocs, emptyDocs(newDocs), dir, nBuckets, append = true)
+    }
   }
 
   /** TOMBSTONE DELETE for the stored index — the retrieval twin of
     * `AnnIndex.deleteVectors`: removing documents without rewriting a
-    * single postings file. A (doc_id, dl)-pruned scan recovers each
-    * deleted doc's length (any one of its postings carries it — the
-    * only two columns read; zero-token docs come from the emptydocs
-    * sidecar with dl = 0), the tombstones land as one small
-    * appended file under `dir/deletes`, and the 1-row stats table is
-    * decremented by the batch's (count, Σdl) — the additive inverse
-    * of [[appendIndex]]'s merge. Serving then masks tombstoned
-    * postings BEFORE the df window ([[bm25TopKFromIndex]]), so df,
-    * norms, and stats all reflect the surviving corpus: served
-    * scores are BIT-IDENTICAL to a full rebuild on corpus-minus-
-    * deleted. The call is IDEMPOTENT: ids absent from the index and
-    * ids already tombstoned are filtered out before the decrement
-    * (the existing tombstone set is delete-traffic-sized and
-    * broadcast), so a replayed micro-batch cannot double-count —
-    * `StreamingIndexDelete.bm25Sink` relies on this.
-    * [[purgeIndexDeletes]] later folds the tombstones into a
-    * physical rewrite. */
+    * single postings file. The batch is probed against the index's
+    * membership — the (doc_id, dl) columns of the postings (any one
+    * posting of a doc carries its length) plus the emptydocs sidecar
+    * with dl = 0 — through [[StoredShards.tombstone]], which drops ids
+    * absent from the index or already tombstoned, appends the fresh
+    * ones as one small file under `dir/deletes` and returns their
+    * (count, Σdl); the 1-row stats table is decremented by exactly
+    * that, the additive inverse of [[appendIndex]]'s merge. Serving
+    * then masks tombstoned postings BEFORE the df window
+    * ([[bm25TopKFromIndex]]), so df, norms, and stats all reflect the
+    * surviving corpus: served scores are BIT-IDENTICAL to a full
+    * rebuild on corpus-minus-deleted. Idempotent, so a replayed
+    * micro-batch cannot double-count — `StreamingIndexDelete.bm25Sink`
+    * relies on this. [[purgeIndexDeletes]] later folds the tombstones
+    * into a physical rewrite. */
   def deleteIndex(ids: DataFrame, dir: String): Unit = {
     val spark = ids.sparkSession
-    val fresh = deletesPath(spark, dir) match {
-      case Some(p) =>
-        ids.select(col("doc_id")).distinct()
-          .join(broadcast(spark.read.parquet(p).select(col("doc_id"))),
-            Seq("doc_id"), "left_anti")
-      case None => ids.select(col("doc_id")).distinct()
-    }
-    val dl = spark.read.parquet(s"$dir/postings")
-      .select(col("doc_id"), col("dl"))
-      .join(broadcast(fresh), Seq("doc_id"))
-      .groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-    // zero-token documents own no postings row but are counted in the
-    // stats (dl = 0 still moves avgdl via n_docs) — recover them from
-    // the emptydocs sidecar so their delete decrements n_docs exactly
-    // like the rebuild-on-survivors would
-    val emptiesP = new org.apache.hadoop.fs.Path(s"$dir/emptydocs")
-    val withEmpties =
-      if (emptiesP.getFileSystem(spark.sessionState.newHadoopConf())
-          .exists(emptiesP))
-        dl.unionByName(spark.read.parquet(s"$dir/emptydocs")
-          .join(broadcast(fresh), Seq("doc_id"))
-          .distinct().withColumn("dl", lit(0L)))
-      else dl
-    val batch = withEmpties.collect() // delete-batch-sized
-    if (batch.nonEmpty) {
-      import spark.implicits._
-      batch.map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("dl"))).toSeq
-        .toDF("doc_id", "dl")
-        .coalesce(1).write.mode("append").parquet(s"$dir/deletes")
-      val old = spark.read.parquet(s"$dir/stats").head()
-      Seq((old.getAs[Long]("n_docs") - batch.length,
-          old.getAs[Long]("sum_dl") - batch.map(_.getAs[Long]("dl")).sum))
-        .toDF("n_docs", "sum_dl")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    }
+    val worded = Postings.read(spark, dir).select(col("doc_id"), col("dl"))
+    val members =
+      if (!StoredShards.exists(spark, EmptyDocs.path(dir))) worded
+      else worded.unionByName(EmptyDocs.read(spark, dir)
+        .select(col("doc_id"), lit(0L).as("dl")))
+    val (n, sumDl) = StoredShards.tombstone(ids, dir, "doc_id", Some(members))
+    if (n > 0) bumpStats(spark, dir, -n, -sumDl)
   }
-
-  private def deletesPath(spark: SparkSession,
-                          dir: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/deletes")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(s"$dir/deletes") else None
-  }
-
-  /** Broadcast anti-join mask against [[deleteIndex]] tombstones
-    * (no-op when no delete has ever run). */
-  private def antiJoinDeletes(post: DataFrame, dir: String): DataFrame =
-    deletesPath(post.sparkSession, dir) match {
-      case Some(p) =>
-        val dels = post.sparkSession.read.parquet(p)
-          .select(col("doc_id")).distinct()
-        post.join(broadcast(dels), Seq("doc_id"), "left_anti")
-      case None => post
-    }
 
   /** PHYSICAL PURGE of [[deleteIndex]] tombstones: a deleted doc's
     * postings are spread across every bucket its terms hash to, so
     * the purge rewrites exactly the buckets that still hold a
-    * tombstoned row (found by a (doc_id, term_bucket)-pruned scan) —
-    * dropping those rows and restoring the stored `df` column to the
-    * post-delete exact value bucket-locally, the [[compactIndex]]
-    * invariant. Stats were already adjusted at delete time and the
-    * serving path already masked these rows, so served results
-    * cannot change; the drained tombstone file is dropped last
-    * (crash between the steps leaves a correct, still-masked index).
-    * Returns the purged bucket ids. */
+    * tombstoned row — dropping those rows and restoring the stored
+    * `df` column bucket-locally ([[recountDf]]). The emptydocs sidecar
+    * loses the deleted ids too, so a replayed delete finds no
+    * membership anywhere and cannot re-decrement n_docs. Stats were
+    * already adjusted at delete time and serving already masked these
+    * rows, so served results cannot change. Returns the purged bucket
+    * ids. */
   def purgeIndexDeletes(spark: SparkSession, dir: String,
                         filesPerShard: Int = 2): Seq[Int] = {
-    deletesPath(spark, dir) match {
-      case None => Seq.empty
-      case Some(p) =>
-        val dels = spark.read.parquet(p).select(col("doc_id")).distinct()
-        val stored = spark.read.parquet(s"$dir/postings")
-        val touched = stored.join(broadcast(dels), Seq("doc_id"))
-          .select(col("term_bucket").cast("int")).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        if (touched.nonEmpty) {
-          val kept = stored.filter(col("term_bucket").isin(touched: _*))
-            .join(broadcast(dels), Seq("doc_id"), "left_anti")
-            .drop("df")
-            .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
-            .select(col("term"), col("doc_id"), col("dl"), col("tf"),
-              col("df"), col("term_bucket").cast("int").as("term_bucket"))
-          graft.sources.CorpusSink.swapShards(kept, s"$dir/postings",
-            touched.map(b => s"term_bucket=$b"), shardCol = "term_bucket",
-            sortCol = "term", filesPerShard = filesPerShard,
-            dropDrained = true) // a bucket whose every posting died is removed
-        }
-        // fold tombstoned ZERO-TOKEN docs out of the emptydocs sidecar
-        // as well: after the tombstones drain, a replayed delete must
-        // find no membership anywhere — postings are physically gone
-        // for worded docs, and this keeps the same invariant for empty
-        // ones (else the replay would re-decrement n_docs)
-        val ep = s"$dir/emptydocs"
-        val epPath = new org.apache.hadoop.fs.Path(ep)
-        val fs = epPath.getFileSystem(spark.sessionState.newHadoopConf())
-        if (fs.exists(epPath) &&
-            spark.read.parquet(ep)
-              .join(broadcast(dels), Seq("doc_id"), "left_semi")
-              .limit(1).count() > 0) {
-          spark.read.parquet(ep)
-            .join(broadcast(dels), Seq("doc_id"), "left_anti")
-            .repartition(1)
-            .write.mode("overwrite").parquet(s"$ep._tmp")
-          fs.delete(epPath, true)
-          if (!fs.rename(new org.apache.hadoop.fs.Path(s"$ep._tmp"), epPath))
-            throw new java.io.IOException("emptydocs sidecar swap failed")
-        }
-        val delP = new org.apache.hadoop.fs.Path(p)
-        delP.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(delP, true)
-        touched
-    }
+    bucketFlatEmptyDocs(spark, dir)
+    StoredShards.purge(spark, dir, "doc_id", EmptyDocs)(dels =>
+      StoredShards.purgeShards(Postings, dir, dels, filesPerShard, fixUp = recountDf))
   }
 
   /** COMPACTION — the maintenance valve for [[appendIndex]]'s file
     * growth (each append adds ≤`filesPerShard` files per touched
     * bucket, so a long ingest run accumulates small files). Rewrites
-    * ONLY the buckets whose file count exceeds `maxFilesPerBucket` —
-    * staged to a sibling temp dir and swapped per-directory
-    * ([[graft.sources.CorpusSink.swapShards]]), so every
-    * below-threshold bucket's files survive byte-identical and the
-    * driver-side dir listing that picks the candidates reads no rows
-    * at all.
-    *
-    * Compaction also RESTORES the stored `df` column to the exact
-    * global value: a term's postings live entirely inside one bucket
-    * (bucket = hash(term)), so the recount is bucket-local — the same
-    * window count the serving path derives, now persisted. Serving is
+    * ONLY the buckets whose file count exceeds `maxFilesPerBucket`,
+    * staged and swapped per directory, so every below-threshold
+    * bucket's files survive byte-identical, and restores their stored
+    * `df` column to the exact global value ([[recountDf]]). Serving is
     * unaffected either way (it always derives df from the scan), so a
     * compact can run any time without coordinating with readers of
     * consistent snapshots beyond parquet's usual file-listing caveat.
@@ -448,26 +381,8 @@ object Retrieval {
     * threshold). O(oversized buckets' rows) — never O(corpus). */
   def compactIndex(spark: SparkSession, dir: String,
                    filesPerShard: Int = 2,
-                   maxFilesPerBucket: Int = 8): Seq[Int] = {
-    val over = graft.sources.CorpusSink
-      .oversizedShards(spark, s"$dir/postings", "term_bucket", maxFilesPerBucket)
-      .map(_.toInt)
-    if (over.nonEmpty) {
-      val post = spark.read.parquet(s"$dir/postings")
-        .filter(col("term_bucket").isin(over: _*))
-        .drop("df")
-        .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
-        .select(col("term"), col("doc_id"), col("dl"), col("tf"), col("df"),
-          col("term_bucket").cast("int").as("term_bucket"))
-      // write compacted buckets to a sibling temp dir, then swap each
-      // bucket's directory — never an overwrite of a path the plan is
-      // also reading (Spark rejects that, and rightly so)
-      graft.sources.CorpusSink.swapShards(post, s"$dir/postings",
-        over.map(b => s"term_bucket=$b"), shardCol = "term_bucket",
-        sortCol = "term", filesPerShard = filesPerShard)
-    }
-    over
-  }
+                   maxFilesPerBucket: Int = 8): Seq[Int] =
+    StoredShards.compact(spark, Postings, dir, filesPerShard, maxFilesPerBucket, recountDf)
 
   /** The partition predicate a query pushes at the stored postings:
     * every queried term's bucket id is a FOLDABLE expression
@@ -504,14 +419,12 @@ object Retrieval {
                         k1: Double = 1.2, b: Double = 0.75,
                         nBuckets: Int = 16): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    val post = antiJoinDeletes(
-        spark.read.parquet(s"$dir/postings").drop("df")
-          .filter(termBucketPredicate(queryTerms, nBuckets)
-            && col("term").isin(queryTerms: _*)),
-        dir)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
-    val stats = spark.read.parquet(s"$dir/stats")
-    post.crossJoin(broadcast(stats))
+    val post = recountDf(StoredShards.mask(
+      Postings.read(spark, dir)
+        .filter(termBucketPredicate(queryTerms, nBuckets)
+          && col("term").isin(queryTerms: _*)),
+      dir, "doc_id"))
+    post.crossJoin(broadcast(readStats(spark, dir)))
       .select(col("doc_id"),
         floor(idfExpr * normExpr(k1, b) * lit(1e6)).cast("long").as("score_e6"))
       .groupBy(col("doc_id"))

@@ -513,7 +513,7 @@ object AnnQueries {
           !served.exists(r => delIds(r.getAs[Long]("neighbor_id")))
         val parityOk = sameResults(served, await(fRebuilt))
         val purgeOk = sameResults(after, served) &&
-          !new java.io.File(s"$dir/deletes").exists()
+          !AnnIndex.hasDeletes(s, dir)
         import s.implicits._
         Seq((queries.count(), noDeleted, parityOk, purgeOk))
           .toDF("n_queries", "no_deleted_ok", "parity_ok", "purge_ok")

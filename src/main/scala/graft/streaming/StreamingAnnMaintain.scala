@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.AnnIndex
+import graft.operators.{AnnIndex, StoredShards}
 
 /** Streaming ingest WITH the maintenance valves in the loop — the
   * closing piece of the stored-ANN lifecycle under continuous
@@ -89,10 +89,8 @@ object StreamingAnnMaintain {
       // mask stays active until the refit commits, so every crash
       // window serves correctly.
       if (AnnIndex.hasDeletes(spark, indexDir)) {
-        val cp = new org.apache.hadoop.fs.Path(corpusDir)
-        val fs = cp.getFileSystem(spark.sessionState.newHadoopConf())
-        val stage = new org.apache.hadoop.fs.Path(s"$corpusDir._live_tmp")
-        val old = new org.apache.hadoop.fs.Path(s"$corpusDir._old")
+        val stage = s"$corpusDir._live_tmp"
+        val old = s"$corpusDir._old"
         // RECOVER before deleting anything: a crash between the two
         // renames below leaves corpusDir ABSENT with the only
         // complete copies in stage (the folded store — rename 1 only
@@ -102,27 +100,22 @@ object StreamingAnnMaintain {
         // post-fold state; fall back to the pre-fold store (the
         // tombstone ledger is still live, so serving stays correct
         // and the fold below simply redoes the work).
-        if (!fs.exists(cp)) {
+        if (!StoredShards.exists(spark, corpusDir)) {
           val survivor =
-            if (fs.exists(stage)) stage
-            else if (fs.exists(old)) old
+            if (StoredShards.exists(spark, stage)) stage
+            else if (StoredShards.exists(spark, old)) old
             else throw new java.io.IOException(
               s"corpus store $corpusDir missing with no fold leftovers")
-          if (!fs.rename(survivor, cp))
-            throw new java.io.IOException(
-              s"tombstone fold recovery failed for $corpusDir")
+          StoredShards.rename(spark, survivor, corpusDir)
         }
         // corpusDir exists now — leftovers really are leftovers
-        fs.delete(stage, true); fs.delete(old, true)
+        StoredShards.delete(spark, stage)
+        StoredShards.delete(spark, old)
         AnnIndex.liveRows(spark.read.parquet(corpusDir), indexDir)
-          .write.mode("overwrite").parquet(stage.toString)
-        if (!fs.rename(cp, old))
-          throw new java.io.IOException(
-            s"tombstone fold set-aside failed for $corpusDir")
-        if (!fs.rename(stage, cp))
-          throw new java.io.IOException(
-            s"tombstone fold swap failed for $corpusDir")
-        fs.delete(old, true)
+          .write.mode("overwrite").parquet(stage)
+        StoredShards.rename(spark, corpusDir, old)
+        StoredShards.rename(spark, stage, corpusDir)
+        StoredShards.delete(spark, old)
       }
       AnnIndex.refitIvfq(spark.read.parquet(corpusDir), indexDir, nlist,
         seed, initMode, sampleMod, filesPerShard = filesPerShard)

@@ -24,9 +24,13 @@ import graft.operators.{AnnIndex, Retrieval}
   * tombstone files and dedups, so splitting the set across batches
   * cannot change the mask. `StreamingIndexDeleteSpec` proves it.
   *
-  * Per-batch work: BM25 — one (doc_id, dl)-pruned postings scan for
-  * the stats decrement; ANN — none at all (ids land verbatim).
-  * Nothing existing is listed or rewritten on either path. */
+  * Per-batch work, both families: one membership probe of the batch
+  * ids against the stored rows (BM25: the (doc_id, dl) postings
+  * columns plus the emptydocs sidecar, for the stats decrement; ANN:
+  * the `vec_id` column of `vectors`, or of the graph's `nodes`
+  * sidecar, for the manifest), minus the ids already tombstoned
+  * (`graft.operators.StoredShards.tombstone`). Nothing existing is
+  * listed or rewritten on either path. */
 object StreamingIndexDelete {
 
   /** Attach the BM25 tombstone sink to a streaming frame of deleted

@@ -70,6 +70,34 @@ class MaterializeSpec extends SparkTestBase {
     }
   }
 
+  test("an inner scope and a scope around a pin leave the outer cache in place") {
+    val df = spark.range(0, 100, 1, 4).toDF("id")
+    leavesNothing("nested scopes") {
+      Materialize.withCached(df) {
+        Materialize.withCached(df)(df.count())
+        // an equal plan is the same cache entry
+        Materialize.withCached(spark.range(0, 100, 1, 4).toDF("id"))(())
+        assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK,
+          "an inner scope dropped the outer cache")
+      }
+    }
+    val rdd = spark.sparkContext.parallelize(1 to 10, 2)
+    leavesNothing("a scope around a pin") {
+      val p = Materialize.pin(df)
+      val r = Materialize.pin(rdd)
+      try {
+        Materialize.withCached(p, r)(p.count() + r.count())
+        assert(p.storageLevel == StorageLevel.MEMORY_AND_DISK,
+          "a scope dropped the caller's pinned Dataset")
+        assert(r.getStorageLevel == StorageLevel.MEMORY_AND_DISK,
+          "a scope dropped the caller's pinned RDD")
+      } finally {
+        Materialize.release(p)
+        Materialize.release(r)
+      }
+    }
+  }
+
   test("withCached runs no job") {
     val df = spark.range(0, 100, 1, 4).toDF("id")
     assert(jobsLaunchedBy(Materialize.withCached(df)(())) == 0)

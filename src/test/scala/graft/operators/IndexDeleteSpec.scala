@@ -259,6 +259,30 @@ class IndexDeleteSpec extends SparkTestBase {
     }
   }
 
+  test("bm25 purge and append take an emptydocs sidecar written before it was bucketed") {
+    import spark.implicits._
+    val docs = (0 until 20).map(i => (i.toLong, s"alpha beta w$i"))
+      .toDF("doc_id", "text")
+      .unionByName(Seq((100L, "???"), (101L, "...")).toDF("doc_id", "text"))
+    withTempDir { dir =>
+      withTempDir { rebuiltDir =>
+        Retrieval.buildIndex(docs, dir, nBuckets = 8)
+        // the earlier layout: the zero-token ids as flat files, no buckets
+        Seq(100L, 101L).toDF("doc_id").write.mode("overwrite").parquet(s"$dir/emptydocs")
+        Retrieval.deleteIndex(Seq(100L, 3L).toDF("doc_id"), dir)
+        Retrieval.purgeIndexDeletes(spark, dir)
+        assert(!new java.io.File(s"$dir/deletes").exists(), "the purge did not finish")
+        Retrieval.appendIndex(Seq((102L, "!!!")).toDF("doc_id", "text"), dir, nBuckets = 8)
+        Retrieval.buildIndex(docs.filter(!col("doc_id").isin(100L, 3L))
+          .unionByName(Seq((102L, "!!!")).toDF("doc_id", "text")), rebuiltDir, nBuckets = 8)
+        def stats(d: String) = spark.read.parquet(s"$d/stats").head()
+        assert(stats(dir) == stats(rebuiltDir))
+        assert(spark.read.parquet(s"$dir/emptydocs").select("doc_id").as[Long]
+          .collect().toSet == Set(101L, 102L))
+      }
+    }
+  }
+
   test("bm25 and graph purges survive a total drain") {
     import spark.implicits._
     withTempDir { dir =>
@@ -270,6 +294,9 @@ class IndexDeleteSpec extends SparkTestBase {
         .filter(_.getName.startsWith("term_bucket="))
       assert(left.isEmpty, s"${left.length} drained buckets survived the purge")
       assert(spark.read.parquet(s"$dir/stats").head().getAs[Long]("n_docs") == 0L)
+      // a drained index still serves: an empty top-k, not a schema error
+      assert(Retrieval.bm25TopKFromIndex(spark, dir, Seq("alpha", "beta"),
+        nBuckets = 8).count() == 0L, "the drained BM25 index served rows")
     }
     withTempDir { dir =>
       val emb = clustered(3, 20, 16, seed = 59)
@@ -281,6 +308,19 @@ class IndexDeleteSpec extends SparkTestBase {
         .filter(_.getName.startsWith("bucket="))
       assert(left.isEmpty, s"${left.length} drained edge buckets survived the purge")
       assert(!new java.io.File(s"$dir/deletes").exists())
+      assert(AnnIndex.graphTopKFromPath(spark, dir, emb.limit(0), emb.limit(3),
+        k = 3).count() == 0L, "the drained graph index served rows")
+    }
+    withTempDir { dir =>
+      val emb = clustered(3, 20, 16, seed = 59)
+      AnnIndex.buildIvfqIndex(emb, dir, nlist = 4, seed = 11L)
+      AnnIndex.deleteVectors(emb.select("vec_id"), dir)
+      AnnIndex.purgeIvfqDeletes(spark, dir)
+      val left = new java.io.File(s"$dir/vectors").listFiles()
+        .filter(_.getName.startsWith("cid="))
+      assert(left.isEmpty, s"${left.length} drained cells survived the purge")
+      assert(AnnIndex.ivfqTopKFromPath(spark, dir, emb, emb.limit(3), k = 3)
+        .count() == 0L, "the drained IVF×int8 index served rows")
     }
   }
 
@@ -341,7 +381,7 @@ class IndexDeleteSpec extends SparkTestBase {
     withTempDir { dir =>
       AnnIndex.buildIvfqIndex(emb, dir, nlist = 4, seed = 11L)
       // 100k-id erasure batch, of which exactly 70 exist (50..119):
-      // far past bulkThreshold, so no isin literal list and no driver
+      // far past StoredShards.BulkThreshold, so no isin literal list and no driver
       // localization — the fresh set goes through the staging dir
       val batch = spark.range(50L, 100050L).select(col("id").as("vec_id"))
       AnnIndex.deleteVectors(batch, dir)
@@ -361,6 +401,47 @@ class IndexDeleteSpec extends SparkTestBase {
         k = 3, nProbe = 4, rerank = 4).collect()
       assert(served.nonEmpty && served.forall(_.getLong(2) < 50L),
         "a bulk-deleted vector appeared in served results")
+    }
+  }
+
+  test("bm25 bulk delete takes the semi-join path and decrements stats exactly") {
+    import spark.implicits._
+    // ids 0..119; 100 and 101 tokenize to nothing, so the emptydocs
+    // sidecar is part of the membership the bulk path probes
+    val docs = (0 until 120).map(i => (i.toLong,
+        if (i == 100 || i == 101) "???" else s"alpha${i % 5} shared w$i term${i % 4}"))
+      .toDF("doc_id", "text")
+    val survivors = docs.filter(col("doc_id") < 50)
+    withTempDir { dir =>
+      withTempDir { rebuiltDir =>
+        Retrieval.buildIndex(docs, dir, nBuckets = 8, filesPerShard = 2)
+        Retrieval.buildIndex(survivors, rebuiltDir, nBuckets = 8, filesPerShard = 2)
+        // 100k-id erasure batch, of which exactly 70 exist (50..119)
+        val batch = spark.range(50L, 100050L).select(col("id").as("doc_id"))
+        Retrieval.deleteIndex(batch, dir)
+        def stats(d: String) = {
+          val r = spark.read.parquet(s"$d/stats").head()
+          (r.getAs[Long]("n_docs"), r.getAs[Long]("sum_dl"))
+        }
+        assert(stats(dir) == stats(rebuiltDir),
+          s"bulk delete stats ${stats(dir)} differ from the rebuild's ${stats(rebuiltDir)}")
+        assert(spark.read.parquet(s"$dir/deletes").count() == 70L)
+        assert(!new java.io.File(s"$dir/_delete_stage").exists(),
+          "bulk staging dir survived")
+        // replay of the whole batch: every member is already tombstoned
+        Retrieval.deleteIndex(batch, dir)
+        assert(stats(dir) == stats(rebuiltDir), "bulk replay changed the stats")
+        assert(spark.read.parquet(s"$dir/deletes").count() == 70L,
+          "bulk replay added tombstones")
+        // serving masks the bulk tombstones like any other delete
+        def serve(d: String) = Retrieval.bm25TopKFromIndex(spark, d,
+          Seq("shared", "alpha1"), k = 20, nBuckets = 8).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toList
+        val served = serve(dir)
+        assert(served.nonEmpty && served.forall(_._1 < 50L),
+          "a bulk-deleted document appeared in served results")
+        assert(served == serve(rebuiltDir))
+      }
     }
   }
 

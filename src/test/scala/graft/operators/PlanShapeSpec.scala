@@ -294,6 +294,28 @@ class PlanShapeSpec extends SparkTestBase {
     assert(n == 0, s"building the LSH frames ran $n jobs")
   }
 
+  test("building the stored BM25 and IVF×int8 serving frames runs no job") {
+    val docs = (0 until 40).map(i => (i.toLong, s"alpha${i % 3} beta w$i"))
+      .toDF("doc_id", "text")
+    val emb = (0 until 40).map(i =>
+      (i.toLong, Seq.tabulate(8)(j => ((i * 7 + j * 3) % 11 - 5).toFloat)))
+      .toDF("vec_id", "embedding")
+    val bm25 = suiteDir("bm25")
+    val ivfq = suiteDir("ivfq")
+    Retrieval.buildIndex(docs, bm25, nBuckets = 4)
+    AnnIndex.buildIvfqIndex(emb, ivfq, nlist = 2, seed = 11L)
+    def frames(): Int = jobsLaunchedBy {
+      Retrieval.bm25TopKFromIndex(spark, bm25, Seq("beta", "alpha1"), nBuckets = 4)
+        .queryExecution.executedPlan
+      AnnIndex.ivfqTopKFromPath(spark, ivfq, emb, emb.filter(col("vec_id") < 3), k = 3)
+        .queryExecution.executedPlan
+    }
+    assert(frames() == 0, "building the serving frames ran a job")
+    Retrieval.deleteIndex(docs.filter(col("doc_id") < 5).select("doc_id"), bm25)
+    AnnIndex.deleteVectors(emb.filter(col("vec_id") > 35).select("vec_id"), ivfq)
+    assert(frames() == 0, "building the serving frames over tombstones ran a job")
+  }
+
   test("the LSH frames require a positive dim") {
     intercept[IllegalArgumentException](Similarity.lshTopK(vecCorpus, vecBatch, k = 3, dim = 0))
     intercept[IllegalArgumentException](
